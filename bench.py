@@ -5,10 +5,19 @@
 
 Each query materializes fully via the no-op sink (no driver collect, no disk
 write — pure engine throughput).
+
+Regression guard: a run at sf0.1 fails when a min-of-5 total, or one key's
+min-of-5, exceeds 2x its anchor. Every anchor is derived at import time
+from the committed quiet-box records ``artifacts/bench_quiet_*_run*.json``
+(see :func:`derive_anchors`): per key, the best min across records started
+below ``LOAD_WARN_THRESHOLD``; per total, the best total among those whose
+key set equals today's HEADLINE / EXTENDED set. Committing a quiet record is
+the only way to move an anchor — there is no hand-kept copy.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -17,78 +26,103 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Round-1 recorded headline total at sf0.1, local[32] (BENCH_r01.json) —
-#: kept as the HISTORICAL judge comparator (its single-run timing also
-#: charged DataFrame construction, so cross-round ratios against it remain
-#: meaningful).
-R1_ANCHOR_SEC = 8.525
-#: Round-2 recorded extended-set total (BENCH_r02.json), historical.
-R2_EXTENDED_ANCHOR_SEC = 3.955
-#: Regression-guard anchors RE-DERIVED under the r4 methodology (1 untimed
-#: warmup + median-of-5, construction charged — BENCH_r04.json), so the 2×
-#: guard measures real regressions rather than methodology drift: the r4
-#: advisor flagged that guarding new-methodology totals against
-#: old-methodology anchors silently shrinks headroom for
-#: construction-heavy queries (e.g. corpus_shuffle 0.08 → 0.347 s was
-#: honest charging, not a regression). HISTORICAL RECORD ONLY as of r8:
-#: the enforced guard reads the *_MIN_SEC anchors below — these two
-#: median-basis values are kept so cross-round artifact comparisons can
-#: still cite the r4 medians, but nothing reads them at runtime.
-GUARD_ANCHOR_SEC = 8.061
-GUARD_EXTENDED_ANCHOR_SEC = 5.028
-#: r8: the guard BASIS moved from the median total to the min-of-5 total.
-#: Three rounds in a row (r5 artifact 9.161, r6 recorded at loadavg 4.4,
-#: r7 artifact 9.688 at loadavg 3.7→7.1) recorded 10–25% phantom
-#: regressions that re-ran flat on a quiet box: the median absorbs
-#: co-tenant load poorly, while the min-of-5 is the best available
-#: estimate of the engine's true cost on this box. Anchors re-derived
-#: from the SAME r4 artifact's min_total_sec fields, so the 2× criterion
-#: is unchanged in spirit — only its noise floor moved.
-GUARD_ANCHOR_MIN_SEC = 7.739  # BENCH_r04.json parsed.min_total_sec
-#: r12: the EXTENDED anchor is re-derived (r11 judge order #6) for two
-#: reasons at once: (a) the extended set itself grew — the four r11
-#: format-tier keys joined it so they carry per-key anchors — and (b)
-#: the r4-derived 4.610 had drifted to 1.13×→1.46× across three rounds
-#: with the code untouched (box degradation), putting honest keys on a
-#: path to spurious 2× trips. New basis: the BEST extended min-of-5
-#: total across three same-day quiet-box runs, committed verbatim as
-#: artifacts/bench_quiet_r12_run{1,2,3}.json (test-pinned — the anchor
-#: cannot be edited without committing a new artifact). The r4 value is
-#: kept below for cross-round artifact comparisons only.
-#: Phase-consistency (r12, second derivation): the FIRST quiet-box trio
-#: kept one run from a transiently ~2x-faster box phase; minning anchors
-#: across DIFFERENT phases plants spurious trips (that run's own code
-#: state re-timed scan_warc_http_payloads at 2.35 s hours after
-#: recording 0.99 s). All three committed runs now come from the same
-#: phase, verified by re-timing — an anchor is only meaningful relative
-#: to a box state the driver can actually reproduce.
-#: r13: re-derived DOWN to the best of the committed r13 quiet trio —
-#: the round's decode-path optimizations (windowed zstd bit reader,
-#: vectorized level/bit unpack, bulk LZ copies) made the old basis
-#: slack (extended ran 0.77× of it on a loaded box). Tightening after
-#: a real speedup keeps the 2× guard meaningful for the faster code.
-#: r13b: the extended set grew by the five r12/r13 format-tier keys
-#: (they now carry per-key anchors), so the TOTAL anchor re-bases to
-#: the best of the committed 18-key r13b quiet trio; the 13-key 8.876
-#: basis is kept below for cross-era artifact comparisons.
-#: r13d: the two index-audit keys (scan_parquet_raw_pageindex /
-#: scan_orc_raw_rowindex) joined the set — re-based to the best of the
-#: committed 20-key r13d quiet trio (same rule: the total anchor only
-#: compares runs of the same set; per-key anchors stay
-#: best-recorded-wins across ALL quiet artifacts).
-#: r13e: the parquet bloom audit completed the pruning-metadata triad
-#: — re-based to the best of the committed 21-key r13e quiet trio.
-GUARD_EXTENDED_ANCHOR_MIN_SEC = 13.954
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13D_20KEY = 12.21  # historical (20-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13B_18KEY = 10.192  # historical (18-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R13_13KEY = 8.876  # historical (13-key set)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R12 = 11.656  # historical (r12 trio basis)
-GUARD_EXTENDED_ANCHOR_MIN_SEC_R4 = 4.610  # historical (old 9-key set, r4 box)
+#: headline mix: scan+agg, joins, windows, explode, and the llmops suite
+HEADLINE = [
+    "agg_groupby_multi",
+    "join_inner",
+    "join_asof",
+    "win_rank",
+    "topk_per_group",
+    "explode_split",
+    "stream_window_tumbling",
+    "dedup_exact",
+    "dedup_minhash",
+    "sim_topk",
+    "sim_topk_ivf",
+    "text_tokens",
+    "text_pii_scrub",
+    "llm_data_prep",
+    "tpch_q9_product_profit",
+    "text_decontaminate",
+]
+
+#: marquee ops and the raw-format decode tier, timed alongside but summed
+#: into their own total so the headline total keeps a stable key set
+EXTENDED = [
+    "dedup_passage_rewrite",
+    "dedup_containment",
+    "join_spatial_radius",
+    "dedup_semantic",
+    "text_url_canonicalize",
+    "agg_bitmap_distinct",
+    "sessionize_capped",
+    "join_interval_overlap",
+    "corpus_shuffle",
+    "scan_parquet_raw_numeric",
+    "scan_orc_column",
+    "scan_orc_raw_table",
+    "scan_warc_http_payloads",
+    "scan_parquet_raw_nested",
+    "scan_parquet_raw_temporal",
+    "scan_orc_raw_nested",
+    "scan_warc_http_charsets",
+    "scan_orc_raw_struct",
+    "scan_parquet_raw_pageindex",
+    "scan_orc_raw_rowindex",
+    "scan_parquet_raw_bloom",
+]
+
 ANCHOR_SF = 0.1
-#: 1-min load average above which the recorded totals are known (r5–r7)
-#: to drift up to ~1.2–1.4×; the artifact records the warning so readers
-#: adjudicate from the JSON alone instead of rerunning.
+#: 1-min load average above which the recorded totals are known to drift
+#: up to ~1.2–1.4×; the artifact records the warning so readers
+#: adjudicate from the JSON alone instead of rerunning. A run started at
+#: or above it never mints an anchor.
 LOAD_WARN_THRESHOLD = 2.0
+
+#: The committed quiet-box bench records every guard anchor derives from.
+QUIET_ARTIFACT_GLOB = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "artifacts", "bench_quiet_*_run*.json",
+)
+
+
+def derive_anchors(
+    paths,
+) -> tuple[float | None, float | None, dict[str, float]]:
+    """The 2× guard's anchors, derived from recorded bench artifacts:
+    ``(headline total, extended total, per-key)``. Only runs whose
+    ``loadavg_before`` starts below LOAD_WARN_THRESHOLD count. A per-key
+    anchor is the key's best min across them; a total anchor is the best
+    min total among them whose key set equals the current HEADLINE /
+    EXTENDED set (None when no such run exists). Committing a quiet
+    artifact is therefore the only way an anchor moves."""
+    runs = []
+    for path in paths:
+        with open(path) as fh:
+            art = json.load(fh)
+        if art["loadavg_before"][0] < LOAD_WARN_THRESHOLD:
+            runs.append(art)
+    per_key: dict[str, float] = {}
+    for art in runs:
+        for k, v in {**art["queries_min"], **art["extended_queries_min"]}.items():
+            per_key[k] = min(v, per_key.get(k, v))
+
+    def best_total(mins_field: str, total_field: str, keys: list[str]):
+        return min(
+            (a[total_field] for a in runs if set(a[mins_field]) == set(keys)),
+            default=None,
+        )
+
+    return (
+        best_total("queries_min", "min_total_sec", HEADLINE),
+        best_total("extended_queries_min", "extended_min_total_sec", EXTENDED),
+        per_key,
+    )
+
+
+GUARD_ANCHOR_MIN_SEC, GUARD_EXTENDED_ANCHOR_MIN_SEC, PER_KEY_ANCHOR_MIN_SEC = (
+    derive_anchors(sorted(glob.glob(QUIET_ARTIFACT_GLOB)))
+)
 
 #: Where the FULL bench record (per-key table, guard block, methodology)
 #: is written. stdout carries only a compact one-line summary: the driver
@@ -110,9 +144,8 @@ def calibration_workload() -> float:
     timed min-of-3 (r12 judge, "What's wrong #3").
 
     The box has multi-hour speed phases (~1.6–2×: identical code timed
-    scan_warc_http_payloads at 0.99 s in one phase and 2.35 s in another,
-    bench.py r12 notes), which forced two anchor re-derivations in round
-    12 alone. Timing a deterministic zlib+sha256 loop alongside the real
+    scan_warc_http_payloads at 0.99 s in one phase and 2.35 s in another).
+    Timing a deterministic zlib+sha256 loop alongside the real
     queries makes phase drift mechanically separable from regression: if
     calibration_sec moved with the query times, it's the box; if the
     queries moved and calibration_sec didn't, it's the code. Pure
@@ -276,93 +309,23 @@ def guard_verdict(
     msgs: list[str] = []
     if sf != ANCHOR_SF:
         return msgs
-    if min_total_sec > 2 * GUARD_ANCHOR_MIN_SEC:
-        msgs.append(
-            f"BENCH REGRESSION: headline min-of-5 total {min_total_sec}s "
-            f"exceeds 2x the methodology-matched r4 min anchor "
-            f"({GUARD_ANCHOR_MIN_SEC}s at sf{ANCHOR_SF})"
-        )
-    if extended_min_total_sec > 2 * GUARD_EXTENDED_ANCHOR_MIN_SEC:
-        msgs.append(
-            f"BENCH REGRESSION: extended min-of-5 total "
-            f"{extended_min_total_sec}s exceeds 2x the methodology-matched "
-            f"r4 min anchor ({GUARD_EXTENDED_ANCHOR_MIN_SEC}s at "
-            f"sf{ANCHOR_SF})"
-        )
+    for label, got, anchor in (
+        ("headline", min_total_sec, GUARD_ANCHOR_MIN_SEC),
+        ("extended", extended_min_total_sec, GUARD_EXTENDED_ANCHOR_MIN_SEC),
+    ):
+        if anchor is not None and got > 2 * anchor:
+            msgs.append(
+                f"BENCH REGRESSION: {label} min-of-5 total {got}s exceeds "
+                f"2x its best quiet-box anchor ({anchor}s at sf{ANCHOR_SF})"
+            )
     return msgs
-
-#: Per-key regression anchors (r10 judge order #4, re-derived r12 per
-#: r11 judge order #6): each key's BEST min-of-5 across three same-day
-#: QUIET-BOX runs (artifacts/bench_quiet_r12_run{1,2,3}.json, committed
-#: verbatim and test-pinned). The previous r4–r6-sourced bests had
-#: drifted 1.1–1.5× with the code untouched — box degradation, proven
-#: in-round by timing round-11 code side by side with HEAD (identical
-#: numbers) — so keys like sim_topk (old anchor 0.428, today's quiet
-#: best 0.492, one in-bench run at 1.03) were on a path to spurious 2×
-#: trips. Re-basing to today's quiet box restores the headroom the 2×
-#: criterion was designed to give; a real regression still trips
-#: because anchors can only change by committing a new quiet-box
-#: artifact. The four r11 format-tier keys get first anchors here.
-#: r13: the basis is the UNION of the r12 and r13 quiet trios
-#: (artifacts/bench_quiet_r1{2,3}_run*.json) — best-recorded-wins, so
-#: new artifacts can only TIGHTEN anchors (two did: sim_topk,
-#: topk_per_group). The r13 trio additionally carries the
-#: calibration_sec box-phase fingerprint and passes the stronger
-#: quietness gate (loadavg<1, calibration + per-key cross-run spread
-#: bands — tests/test_bench_guard.py).
-PER_KEY_ANCHOR_MIN_SEC = {
-    "agg_groupby_multi": 0.439,
-    "join_inner": 0.358,
-    "join_asof": 0.29,
-    "win_rank": 0.397,
-    "topk_per_group": 0.293,
-    "explode_split": 0.196,
-    "stream_window_tumbling": 0.24,
-    "dedup_exact": 0.174,
-    "dedup_minhash": 0.72,
-    "sim_topk": 0.4,
-    "sim_topk_ivf": 0.955,
-    "text_tokens": 0.235,
-    "text_pii_scrub": 0.191,
-    "llm_data_prep": 0.4,
-    "tpch_q9_product_profit": 0.608,
-    "text_decontaminate": 0.661,
-    "dedup_passage_rewrite": 0.841,
-    "dedup_containment": 0.941,
-    "join_spatial_radius": 0.414,
-    "dedup_semantic": 0.686,
-    "text_url_canonicalize": 0.221,
-    "agg_bitmap_distinct": 0.186,
-    "sessionize_capped": 0.437,
-    "join_interval_overlap": 0.275,
-    "corpus_shuffle": 0.269,
-    # the format-tier keys carry the round's decode-path speedups:
-    # scan_orc_raw_table 1.9 -> 0.53 (windowed zstd bit reader),
-    # scan_parquet_raw_numeric 2.102 -> 1.191 (bulk LZ copies +
-    # vectorized level unpack)
-    "scan_parquet_raw_numeric": 1.191,
-    "scan_orc_column": 0.193,
-    "scan_orc_raw_table": 0.53,
-    "scan_warc_http_payloads": 1.771,
-    # first anchors for the five keys the r13b trio added to EXTENDED
-    "scan_parquet_raw_nested": 0.312,
-    "scan_parquet_raw_temporal": 0.963,
-    "scan_orc_raw_nested": 0.385,
-    "scan_warc_http_charsets": 0.273,
-    "scan_orc_raw_struct": 0.228,
-    # first anchors for the two r13d index-audit keys
-    "scan_parquet_raw_pageindex": 0.269,
-    "scan_orc_raw_rowindex": 0.243,
-    # ... and the r13e bloom-audit key
-    "scan_parquet_raw_bloom": 0.332,
-}
 
 
 def per_key_verdict(mins: dict[str, float]) -> tuple[list[str], dict]:
     """Per-key regression decision: (violation messages, artifact
-    table). A key with no recorded anchor (first round in the mix)
-    reports ``anchor_min_sec: None`` and cannot violate — its first
-    recorded min becomes the anchor next round."""
+    table). A key with no quiet artifact yet reports
+    ``anchor_min_sec: None`` and cannot violate — the first committed
+    quiet artifact that times it mints its anchor."""
     msgs: list[str] = []
     table: dict[str, dict] = {}
     for name, got in mins.items():
@@ -385,62 +348,6 @@ def per_key_verdict(mins: dict[str, float]) -> tuple[list[str], dict]:
                 f"exceeds 2x its best-recorded anchor ({anchor}s)"
             )
     return msgs, table
-
-
-#: headline mix: scan+agg, joins, windows, explode, and the llmops suite
-HEADLINE = [
-    "agg_groupby_multi",
-    "join_inner",
-    "join_asof",
-    "win_rank",
-    "topk_per_group",
-    "explode_split",
-    "stream_window_tumbling",
-    "dedup_exact",
-    "dedup_minhash",
-    "sim_topk",
-    "sim_topk_ivf",
-    "text_tokens",
-    "text_pii_scrub",
-    "llm_data_prep",
-    "tpch_q9_product_profit",
-    "text_decontaminate",
-]
-
-#: round-2 marquee ops, timed alongside but excluded from the anchor total;
-#: r12 adds the four round-11 format-tier keys so they carry per-key
-#: anchors (r11 judge order #6)
-EXTENDED = [
-    "dedup_passage_rewrite",
-    "dedup_containment",
-    "join_spatial_radius",
-    "dedup_semantic",
-    "text_url_canonicalize",
-    "agg_bitmap_distinct",
-    "sessionize_capped",
-    "join_interval_overlap",
-    "corpus_shuffle",
-    "scan_parquet_raw_numeric",
-    "scan_orc_column",
-    "scan_orc_raw_table",
-    "scan_warc_http_payloads",
-    # r13: the r12/r13 format-tier keys join the mix (same move r11
-    # judge order #6 made for the r11 keys) so they carry per-key
-    # regression anchors — first anchors minted by the r13b quiet trio
-    "scan_parquet_raw_nested",
-    "scan_parquet_raw_temporal",
-    "scan_orc_raw_nested",
-    "scan_warc_http_charsets",
-    "scan_orc_raw_struct",
-    # r13 continuation: the index-audit twins join the mix so they
-    # carry per-key regression anchors — first anchors minted by the
-    # r13d quiet trio
-    "scan_parquet_raw_pageindex",
-    "scan_orc_raw_rowindex",
-    # ... and the parquet bloom audit completes the pruning-metadata
-    # triad (first anchor: the r13e quiet trio)
-    "scan_parquet_raw_bloom",
-]
 
 
 def main() -> None:
@@ -506,8 +413,7 @@ def _run_bench(probe_pool, load_before) -> None:
     # source hadn't changed). The timer starts BEFORE the queries[name]()
     # call: operators that eagerly materialize work at DataFrame-construction
     # time (k-means training, checkpointed range shuffles) are charged for
-    # it, keeping the measurement comparable with the r1/r2 anchors that
-    # were recorded when all such work ran lazily inside the action.
+    # it, like work that runs lazily inside the action.
     def timed(name: str, n_runs: int = 5) -> tuple[float, float, float]:
         t0 = time.perf_counter()
         queries[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
@@ -531,8 +437,8 @@ def _run_bench(probe_pool, load_before) -> None:
         probe_tail[name] = mc_probe(probe_pool)
         jvm_tail[name] = jvm_probe(spark)
 
-    # round-2 marquee additions, timed identically but reported OUTSIDE the
-    # headline total so the anchor comparison stays apples-to-apples with r1
+    # timed identically but summed OUTSIDE the headline total, which keeps
+    # a stable key set for its anchor
     extended: dict[str, float] = {}
     extended_min: dict[str, float] = {}
     for name in EXTENDED:

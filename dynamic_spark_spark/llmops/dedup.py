@@ -17,6 +17,7 @@ in the hot path.
 
 from __future__ import annotations
 
+import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,9 +35,30 @@ SHINGLE_N = 5  # character shingles
 #: quadratic hot buckets at scale (the cap keeps candidate counts linear).
 MAX_SHINGLE_DF = 100
 
+
+def _posting_salts(raw: str | None) -> int:
+    """Parse ``DSS_POSTING_SALTS``. A malformed value, or one below 1 (0
+    makes ``pmod(..., 0)`` NULL, which silently drops the skew bound), falls
+    back to 64 with a warning."""
+    if raw is None:
+        return 64
+    try:
+        salts = int(raw)
+    except ValueError:
+        salts = 0
+    if salts < 1:
+        warnings.warn(
+            f"DSS_POSTING_SALTS={raw!r} is not a positive integer; using 64",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return 64
+    return salts
+
+
 #: salt fan-out for the skew-bounded posting-list cascade (env-tunable for
 #: cluster deployments; the per-buffer bound below scales as 1/salts).
-POSTING_SALTS = int(__import__("os").environ.get("DSS_POSTING_SALTS", "64"))
+POSTING_SALTS = _posting_salts(os.environ.get("DSS_POSTING_SALTS"))
 
 
 def _posting_partials(exploded: DataFrame, key: str, cap: int) -> DataFrame:

@@ -73,9 +73,12 @@ def _batched_pair_cos():
     def pair_cos(
         a: pd.Series, b: pd.Series, na: pd.Series, nb: pd.Series
     ) -> pd.Series:
-        # norms arrive precomputed per VECTOR, not per pair
+        # norms arrive precomputed per VECTOR, not per pair; a zero norm
+        # divides by 1.0 (score 0.0) rather than yielding NaN
         num = np.einsum("ij,ij->i", np.stack(a.to_numpy()), np.stack(b.to_numpy()))
-        return pd.Series(num / (na.to_numpy() * nb.to_numpy()))
+        den = na.to_numpy() * nb.to_numpy()
+        den[den == 0.0] = 1.0
+        return pd.Series(num / den)
 
     return pair_cos
 
@@ -441,7 +444,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import math
 
-    c_nrms = [math.sqrt(_seq_dot(r["c_emb"], r["c_emb"])) for r in refined_rows]
+    # zero norms divide by 1.0 instead (score 0.0), as assign() does
+    c_nrms = [math.sqrt(_seq_dot(r["c_emb"], r["c_emb"])) or 1.0 for r in refined_rows]
     q_rows = (
         e.where(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
@@ -449,7 +453,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_recs = []
     for qr in q_rows:
-        q_nrm = math.sqrt(_seq_dot(qr["q_emb"], qr["q_emb"]))
+        q_nrm = math.sqrt(_seq_dot(qr["q_emb"], qr["q_emb"])) or 1.0
         scores = [
             (
                 _seq_dot(qr["q_emb"], r["c_emb"]) / (q_nrm * c_nrm),

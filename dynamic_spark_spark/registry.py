@@ -11,7 +11,11 @@ operator is proven by a differential oracle.
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,287 +129,46 @@ def query(name: str, oracle: str | None = None, tag: str = "") -> Callable[[Quer
     return deco
 
 
-def _driver_verified_keys() -> frozenset[str]:
-    """Keys ANY past round's driver gate already checked (green or
-    rows-only-by-contract), read from the ``CORRECTNESS_r*.json`` files the
-    driver drops in the repo root. The gate only samples a prefix of
-    ``queries()`` (r1 stopped at entry #50 of 134), so verification order
-    IS registration order: never-driver-verified keys must sort first each
-    round, and a key verified in any earlier round yields its slot
-    automatically. Falls back to the static r1 list if no files parse."""
-    import glob
-    import json
-    import os
+#: Where the driver drops its per-round ``CORRECTNESS_rNN.json`` records.
+_RECORDS_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+
+def _last_verified_round() -> dict[str, int]:
+    """Key -> the latest driver round whose ``CORRECTNESS_rNN.json``
+    verified it: hash-green, or rows-only by contract (the driver marks
+    those ``err="no_oracle"`` with a row count)."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_RECORDS_DIR, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
         try:
             with open(path) as f:
-                data = json.load(f)
+                rows = json.load(f)
         except (OSError, ValueError):
             continue
-        for key, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            # verified = hash-green, or ran rows-only by contract (the
-            # driver marks those err="no_oracle" with a row count)
-            if row.get("hash_match") or row.get("rows_match"):
-                seen.add(key)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                seen.add(key)
-    return frozenset(seen) if seen else _R1_VERIFIED
-
-
-def _oracle_upgrade_pending() -> frozenset[str]:
-    """Keys the driver has only ever seen WITHOUT a hash-green result (the
-    r1/r2 rows-only era) that now carry a registered oracle. The ordering
-    re-fronts these behind every never-driver-seen key so their oracle
-    status becomes driver-proven too — the plain verified/unverified split
-    would never re-surface them, because the driver gate only samples a
-    prefix and a once-seen key otherwise yields its slot forever (r5
-    verdict, next-round order #4). As of r6 this set is the five format
-    roundtrips ``scan_{csv,json,orc,text,jdbc}_roundtrip``; it is computed,
-    not hard-coded, so it drains itself the round after the driver
-    hash-checks them."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    hash_green: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
+        if not m or not isinstance(rows, dict):
             continue
-        for key, row in data.items():
-            if isinstance(row, dict):
-                seen.add(key)
-                if row.get("hash_match"):
-                    hash_green.add(key)
-    return frozenset(k for k in seen - hash_green if k in ORACLE)
-
-
-_R1_VERIFIED = frozenset({
-    "scan_parquet", "scan_table", "values_source", "sql_view_query",
-    "sink_parquet_roundtrip", "sample_split", "scan_csv_roundtrip",
-    "scan_json_roundtrip", "sample_stratified", "scan_orc_roundtrip",
-    "scan_text_roundtrip", "scan_jdbc_roundtrip", "scan_partition_pruned",
-    "project_select", "filter_pred", "filter_null", "fn_conditional",
-    "distinct_rows", "fn_cast", "explode_split",
-    "join_inner", "join_left", "join_full", "join_semi", "join_anti",
-    "join_cross", "join_range", "join_asof", "join_range_banded",
-    "agg_groupby_multi", "agg_groupby_count", "agg_global", "agg_distinct",
-    "agg_approx_distinct", "agg_rollup", "agg_cube", "agg_stats",
-    "agg_percentile", "agg_grouping_sets", "agg_pivot", "agg_mode_median",
-    "agg_hll_sketch", "agg_bool", "agg_histogram",
-    "win_rank", "win_lag_lead", "win_running_sum", "topk_per_group",
-    "win_distribution",
-})
-
-# Round-3 driver window: the 50 never-driver-verified keys the round-2 judge
-# named as the top backlog to drain (VERDICT.md "Next round" #1) — SURVEY-core
-# stragglers (multimodal meta, win_range_interval, the six remaining TPC-H
-# composites), the llm-text oracle block, then core oracle stragglers in
-# registration-family order. All oracle-checkable (rows-only keys yield their
-# slots to hash-checkable ones and queue immediately after the window).
-_R3_WINDOW = [
-    "multimodal_image_meta", "multimodal_meta", "win_range_interval",
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_parts",
-    "tpch_q12_ship_latency", "tpch_q16_supplier_count",
-    "tpch_q20_promotion_suppliers", "tpch_q21_waiting_orders",
-    "text_langid", "text_pii_scrub", "text_unigram_logprob",
-    "text_repetition", "text_vocab_topk", "text_ngram_counts",
-    "text_decontaminate", "text_tfidf_topk", "text_bm25_search",
-    "text_chunk_overlap", "text_pmi_bigrams", "text_gopher_quality",
-    "text_utf8_quality", "text_oov_rate", "text_char_entropy",
-    "text_fim_split", "text_ppl_band", "text_bigram_lm", "text_novelty",
-    "text_url_canonicalize",
-    "dedup_incremental", "embed_normalize", "embed_quantize_int8",
-    "cdc_scd2", "scan_merge_schema", "stream_rollup_live", "join_bucketed",
-    "fn_array_predicates", "sample_holdout_split", "ts_gapfill_locf",
-    "agg_regression", "ml_zscore_standardize", "llm_data_prep",
-    "cap_per_source", "sample_mixture", "pack_token_budget",
-    "pipeline_wordcount", "subquery_scalar", "subquery_in",
-    "subquery_correlated", "join_salted",
-]
-
-# Explicit driver-verification priority for round 2+. Front of the list =
-# first keys the driver's prefix-limited gate will check: the r1 red row
-# (agg_collect), the new r2 keys, then one SURVEY §2 family after another of
-# the 84 keys that had no driver signal in round 1.
-_PRIORITY = [
-    "agg_collect", "join_right", "sink_table_roundtrip", "tpch_q9_product_profit",
-    "sort_multi", "limit_n", "sort_within_partitions",
-    "set_union", "set_intersect", "set_except", "set_intersect_all", "set_except_all",
-    "udf_pandas", "udf_python", "udaf_grouped", "udtf_split",
-    "fn_date", "fn_date_events",
-    "fn_string_concat", "fn_string_regex", "fn_string_distance",
-    "fn_math", "fn_bitwise",
-    "fn_array_transform", "fn_array_embedding", "fn_map", "fn_struct",
-    "fn_posexplode", "fn_array_setops", "fn_json", "fn_hash", "fn_hash_engine",
-    "stream_window_tumbling", "stream_window_sliding", "stream_window_session",
-    "stream_stateful_totals", "rollup_hypertable", "stream_dedup_live",
-    "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "sim_topk", "sim_topk_lsh", "sim_topk_ivf", "dedup_embedding",
-    "text_stats", "text_tokens", "text_quality", "text_langid",
-    # -- entries past the r1 window size; covered if the cap is time-based --
-    "text_fingerprint", "text_pii_scrub", "text_unigram_logprob",
-    "text_repetition", "dedup_incremental",
-    "embed_normalize", "embed_quantize_int8", "sim_join_lsh",
-    "cdc_scd2", "scan_merge_schema", "stream_rollup_live", "join_bucketed",
-    "fn_array_predicates",
-    "text_vocab_topk", "text_ngram_counts", "sample_holdout_split",
-    "ts_gapfill_locf", "agg_regression", "ml_zscore_standardize",
-    "llm_data_prep", "text_decontaminate", "cap_per_source",
-    "sample_mixture", "pack_token_budget",
-    "multimodal_image_meta", "multimodal_meta", "multimodal_decode",
-    "multimodal_resize", "multimodal_frame_sample",
-    "ml_train_predict", "ml_kmeans_cluster", "pipeline_wordcount",
-    "subquery_scalar", "subquery_in", "subquery_correlated", "join_salted",
-    "reshape_unpivot", "cdc_latest_by_key",
-    "funnel_click_purchase", "cohort_retention",
-    "tpch_q3_shipping_priority", "tpch_q5_region_revenue",
-    "tpch_q6_forecast_revenue", "tpch_q10_returned_items",
-    "tpch_q14_promo_effect", "tpch_q4_priority_check",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share", "tpch_q13_custdist",
-    "tpch_q15_top_supplier", "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume", "tpch_q19_disjunctive",
-    "tpch_q22_sales_opportunity",
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_parts",
-    "tpch_q12_ship_latency", "tpch_q16_supplier_count",
-    "tpch_q20_promotion_suppliers", "tpch_q21_waiting_orders",
-    # -- round-2 additions (never driver-verified) --
-    "text_tfidf_topk", "text_bm25_search", "text_chunk_overlap",
-    "text_pmi_bigrams",
-    "sessionize_gap", "ts_moving_avg", "ts_resample_5min", "ts_anomaly_mad",
-    "graph_trade_edges", "graph_degree_stats", "graph_triangle_count",
-    "graph_pagerank", "join_null_safe", "fn_map_higher_order",
-    "profile_columns", "quality_range_checks", "quality_fk_orphans",
-    "ml_confusion_matrix", "embed_pca_project",
-    "sink_jsonl_sharded", "ml_quantile_bucketize", "sample_reservoir_per_group",
-    "win_first_last_ignore_nulls", "agg_weighted_avg", "fn_url_parse",
-    "ts_ewma_window", "stream_stream_join_live", "stream_foreachbatch_upsert",
-    "win_range_interval", "fn_sequence_dates", "text_gopher_quality",
-    "agg_countmin_estimate", "multimodal_audio_meta", "pack_sequences_ffd",
-    "ts_merge_intervals", "agg_bloom_membership", "fn_zorder_curve",
-    "fn_variant", "join_lateral", "dedup_passage_chunks",
-    "fn_explode_outer", "fn_try_arithmetic", "udf_arrow",
-    "merge_upsert_batch", "sink_dynamic_overwrite",
-    "udf_map_in_arrow", "scan_python_datasource",
-    # -- round-2 third wave --
-    "sample_weighted", "mix_kl_divergence", "agg_heavy_hitters",
-    "text_utf8_quality", "agg_winsorize", "win_distribution",
-    "join_fuzzy", "diff_snapshots", "sink_compaction",
-    "fn_regexp_extract_all", "sql_recursive_cte", "fn_timezone_offset",
-    "scan_binaryfile", "agg_percentile_approx", "dedup_apply_canonical",
-    "agg_hll_union", "scan_csv_malformed", "stream_python_datasource",
-    # -- round-2 fourth wave --
-    "stat_corr_matrix", "stat_ttest_welch", "quality_benford",
-    "quality_psi_drift", "mix_temperature_weights", "curriculum_quality_budget",
-    "text_oov_rate", "text_char_entropy", "scan_xml_roundtrip",
-    "agg_approx_top_k", "agg_collect_array",
-    "stream_static_join_live", "text_compression_ratio",
-    "sql_parameterized", "sql_tvf_range", "sql_group_by_all",
-    "set_union_by_name", "sim_hard_negatives", "text_fim_split",
-    "join_asof_tolerance", "agg_listagg", "stat_moments", "fn_aes_roundtrip",
-    "text_ppl_band", "text_bigram_lm", "embed_label_centroids",
-    "scan_tablesample", "stat_chi2_independence", "quality_ks_statistic",
-    "stat_mannwhitney_u", "udf_pandas_iter", "win_pandas_udf",
-    "dedup_threshold_curve", "fn_xpath", "fn_phonetic", "sink_zorder_layout",
-    "multimodal_video_meta", "sink_parquet_zstd",
-    "stream_dedup_groups_live", "agg_percentile_exact",
-    "ml_roc_points", "ml_auc_exact", "ml_calibration_bins", "text_novelty",
-    "scan_file_metadata",
-    # -- round-2 fifth wave --
-    "dedup_passage_rewrite", "sim_recall_at_k", "stream_session_live",
-    "fn_collation", "stat_crosstab", "dedup_minhash_ml",
-    "join_spatial_radius", "dedup_containment", "sql_pivot_stmt",
-    "sql_unpivot_stmt", "agg_bitmap_distinct", "stream_dedup_within_watermark",
-    "text_url_canonicalize", "sink_python_datasource", "ml_ndcg_at_k",
-    "join_interval_overlap", "dedup_semantic",
-    "udf_cogroup", "embed_truncate_recall", "sessionize_capped",
-    "pipeline_curation", "stat_anova_f", "graph_bfs_hops",
-    "udtf_dynamic_schema", "scan_json_malformed", "corpus_shuffle",
-    "mix_upsample_epochs", "text_bpe_apply",
-    # -- round-3 additions (registry otherwise frozen per the r2 verdict;
-    # this is the verdict's own ask #5: live arbitrary-state sessions) --
-    "stream_custom_session_live",
-    # -- round-5 addition, deliberately LAST: registered mid-round, so it
-    # must rank behind every pre-flighted backlog key and never shift a
-    # frozen driver window --
-    "dedup_threshold_curve_lsh",
-    # -- round-8 additions (crawl-ingest + SFT tiers): never driver-seen,
-    # so the class-0 rule fronts them in r9's window regardless of rank;
-    # listed here so every key holds an explicit rank --
-    "scan_warc_records", "scan_warc_stream",
-    "text_html_extract", "text_html_links",
-    "chat_template_flatten", "chat_turns_explode",
-    # -- round-9 additions --
-    "scan_warc_gzip", "scan_text_gzip",
-    "chat_preference_pairs", "chat_rejection_sample",
-    "dedup_boilerplate_strip", "multimodal_flac_decode",
-    "multimodal_gif_decode", "multimodal_png_decode",
-    "pipeline_crawl_wet", "text_unicode_nfc", "scan_zip_members",
-    "scan_tar_members", "sim_topk_pq", "scan_tgz_members",
-    "stream_warc_ingest", "multimodal_wav_decode",
-    "multimodal_bmp_decode",
-    # -- round-10 additions --
-    "scan_zip64_members", "scan_tar_longnames",
-    "scan_tbz_members", "scan_txz_members", "scan_text_bz2",
-    "multimodal_g711_decode", "ts_gapfill_interp",
-    "scan_csv_multiline", "fn_binary_codecs", "scan_tfrecord",
-    "scan_pdf_text", "scan_csv_utf16", "scan_xlsx_cells",
-    "stream_tfrecord_ingest", "join_asof_nearest", "scan_parquet_footer",
-    "scan_avro_records", "scan_protobuf_stream",
-    "scan_text_lz4", "sink_text_lz4", "scan_parquet_raw_column",
-    "scan_parquet_raw_dict", "sink_txn_log_replay",
-    "scan_text_zst", "scan_tzst_members", "scan_orc_footer",
-    "fn_xxhash64_pure", "scan_parquet_raw_table",
-    "scan_parquet_raw_numeric", "scan_orc_column", "scan_orc_raw_table",
-    "scan_warc_http_payloads",
-    # round 12
-    "scan_parquet_raw_nested", "scan_parquet_raw_temporal",
-    "scan_orc_raw_nested", "scan_warc_http_charsets",
-    # round 13
-    "scan_orc_raw_struct", "scan_parquet_raw_pageindex",
-    "scan_orc_raw_rowindex", "scan_parquet_raw_bloom",
-]
-
-# Final priority: the explicit round-3 window first, then everything else in
-# the long-standing family order (minus window members, so ranks stay unique).
-_PRIORITY = _R3_WINDOW + [k for k in _PRIORITY if k not in set(_R3_WINDOW)]
+        for key, row in rows.items():
+            if isinstance(row, dict) and (
+                row.get("hash_match")
+                or (row.get("err") == "no_oracle" and row.get("spark_rows") is not None)
+            ):
+                last[key] = max(last.get(key, 0), int(m.group(1)))
+    return last
 
 
 def verification_order(keys) -> list[str]:
-    """Order ``keys`` so the driver's prefix-limited correctness gate spends
-    its budget on never-verified keys: unverified keys first (explicit
-    priority list, then any unlisted ones), then the already-driver-verified
-    tail. "Verified" is read from every past round's CORRECTNESS file, so
-    each round's gate window slides to fresh keys without manual edits."""
-    verified = _driver_verified_keys()
-    upgrade = _oracle_upgrade_pending()
-    rank = {k: i for i, k in enumerate(_PRIORITY)}
-    original = {k: i for i, k in enumerate(keys)}
-
-    def cls(k: str) -> int:
-        # 0 = never driver-seen; 1 = driver-seen rows-only but oracle since
-        # registered (re-front BEHIND every never-seen key so a pre-flighted
-        # window is never displaced); 2 = driver-verified tail
-        if k not in verified:
-            return 0
-        return 1 if k in upgrade else 2
-
-    return sorted(keys, key=lambda k: (cls(k), rank.get(k, len(_PRIORITY)), original[k]))
+    """Order ``keys`` stalest-first for the driver's prefix-limited
+    correctness gate: by the last round that verified each key, oldest
+    first (never-verified keys count as round 0), ties in the given
+    (registration) order. A key that went red keeps its older green round,
+    so it moves forward; each round's window covers a fresh slice."""
+    last = _last_verified_round()
+    return sorted(keys, key=lambda k: last.get(k, 0))
 
 
 def load_all_queries() -> dict[str, QueryFn]:
     """Import every operator module (populating the registry) and return it
-    in driver-verification priority order. Idempotent: duplicate module
+    in driver-verification order (stalest-first). Idempotent: duplicate module
     names are imported once, and re-running a module's decorators (reload,
     dual-name import) re-binds rather than double-registers (r6 verdict
     order #3)."""

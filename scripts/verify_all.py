@@ -19,8 +19,9 @@ wall time changes (r10 judge order #5: gate wall <= 180 s). --workers 1
 preserves the original single-session run.
 
 With BENCH_GUARD=1 in the environment, bench.py runs afterwards at sf0.1
-with the regression anchor enforced (exit non-zero past 2x the round-1
-headline total) — the refactor-safety combo: correctness + throughput.
+with the regression guard enforced (exit non-zero past 2x an anchor derived
+from the committed quiet-box records) — the refactor-safety combo:
+correctness + throughput.
 """
 
 from __future__ import annotations
@@ -201,8 +202,8 @@ def main() -> int:
     if failed:
         return 1
     if os.environ.get("BENCH_GUARD"):
-        # throughput leg: rerun the headline bench at sf0.1 with the round-1
-        # anchor enforced (bench.py exits non-zero past 2x the anchor)
+        # throughput leg: rerun the headline bench at sf0.1 with the guard
+        # enforced (bench.py exits non-zero past 2x an anchor)
         env = dict(os.environ, SPARK_GRAFT_BENCH_GUARD="1")
         env.pop("SPARK_GRAFT_SF_DIR", None)
         return subprocess.call([sys.executable, "bench.py"], env=env)

@@ -11,6 +11,7 @@ load-sensitive basis.
 
 from __future__ import annotations
 
+import glob
 import importlib.util
 import json
 import os
@@ -70,49 +71,142 @@ def test_guard_verdict_is_load_invariant():
         assert loaded == base == []
 
 
-def _quiet_artifacts(pattern="bench_quiet_r1*_run*.json"):
-    import glob
-
+def _quiet_artifacts(pattern=os.path.basename(bench.QUIET_ARTIFACT_GLOB)):
     paths = sorted(
-        glob.glob(os.path.join(_ROOT, "artifacts", pattern))
+        glob.glob(os.path.join(os.path.dirname(bench.QUIET_ARTIFACT_GLOB), pattern))
     )
     assert paths, f"quiet-box anchor artifacts missing: {pattern}"
     return [(os.path.basename(p), json.load(open(p))) for p in paths]
 
 
-def _quiet_r12_artifacts():
-    return [a for _, a in _quiet_artifacts("bench_quiet_r12_run*.json")]
+def _record(load: float, mins: dict, ext_mins: dict) -> dict:
+    """The fields of a bench artifact that anchor derivation reads."""
+    return {
+        "loadavg_before": [load, load, load],
+        "queries_min": mins,
+        "extended_queries_min": ext_mins,
+        "min_total_sec": round(sum(mins.values()), 3),
+        "extended_min_total_sec": round(sum(ext_mins.values()), 3),
+    }
 
 
-def test_guard_anchors_match_recorded_artifacts():
-    """The total anchors must stay pinned to the artifacts they cite —
-    a drive-by edit to a constant without committing a re-derivation
-    artifact is a guard weakening, not a tune. Headline: the r4
-    artifact (unchanged set, no drift trips). Extended: the BEST
-    extended min total across the committed r12 quiet-box runs (r11
-    judge order #6 — the set grew by four keys and the r4 basis had
-    drifted)."""
-    path = os.path.join(_ROOT, "BENCH_r04.json")
-    parsed = json.load(open(path))["parsed"]
-    assert bench.GUARD_ANCHOR_MIN_SEC == parsed["min_total_sec"]
-    assert bench.GUARD_EXTENDED_ANCHOR_MIN_SEC_R4 == parsed[
-        "extended_min_total_sec"
-    ]
-    quiet = [a for _, a in _quiet_artifacts()]
-    # the extended TOTAL anchor is only comparable between runs of the
-    # SAME extended set — r13 grew the set by five format-tier keys, so
-    # the basis is the artifacts matching the current set; earlier-era
-    # artifacts must hold a strict subset (sets only grow)
-    current = [
-        a for a in quiet
-        if sorted(a["extended_queries_min"]) == sorted(bench.EXTENDED)
-    ]
-    assert len(current) >= 3, "need a committed trio for the current set"
-    assert bench.GUARD_EXTENDED_ANCHOR_MIN_SEC == min(
-        a["extended_min_total_sec"] for a in current
+def _write(tmp_path, name: str, record: dict) -> str:
+    path = os.path.join(str(tmp_path), name)
+    with open(path, "w") as fh:
+        json.dump(record, fh)
+    return path
+
+
+def _full_set(sec: float) -> tuple[dict, dict]:
+    return (
+        {k: sec for k in bench.HEADLINE},
+        {k: sec for k in bench.EXTENDED},
     )
-    for a in quiet:
-        assert set(a["extended_queries_min"]) <= set(bench.EXTENDED)
+
+
+def test_committed_anchors_derive_from_the_quiet_artifacts():
+    """The module's anchors are exactly what the committed records give,
+    and both totals have a record of the current key set behind them."""
+    head, ext, per_key = bench.derive_anchors(
+        sorted(glob.glob(bench.QUIET_ARTIFACT_GLOB))
+    )
+    assert (head, ext, per_key) == (
+        bench.GUARD_ANCHOR_MIN_SEC,
+        bench.GUARD_EXTENDED_ANCHOR_MIN_SEC,
+        bench.PER_KEY_ANCHOR_MIN_SEC,
+    )
+    assert head is not None and ext is not None
+
+
+def test_loaded_artifact_changes_no_anchor(tmp_path):
+    """A record started at or above LOAD_WARN_THRESHOLD never mints an
+    anchor, however fast it looks."""
+    quiet = _write(tmp_path, "q.json", _record(0.3, *_full_set(1.0)))
+    base = bench.derive_anchors([quiet])
+    for load in (bench.LOAD_WARN_THRESHOLD, 5.34, 11.09):
+        loaded = _write(tmp_path, "l.json", _record(load, *_full_set(0.1)))
+        assert bench.derive_anchors([quiet, loaded]) == base, load
+
+
+def test_per_key_anchor_is_best_min_across_quiet_artifacts(tmp_path):
+    mins, ext = _full_set(1.0)
+    faster = dict(mins, dedup_exact=0.4)
+    a = _write(tmp_path, "a.json", _record(0.5, mins, ext))
+    b = _write(tmp_path, "b.json", _record(1.9, faster, {}))
+    _, _, per_key = bench.derive_anchors([a, b])
+    assert per_key["dedup_exact"] == 0.4
+    assert per_key["join_inner"] == 1.0
+    assert per_key[bench.EXTENDED[0]] == 1.0
+
+
+def test_total_anchor_uses_only_current_key_set(tmp_path, monkeypatch):
+    """Totals of different key sets are not comparable: a faster record
+    that timed fewer keys leaves the total anchors alone."""
+    mins, ext = _full_set(1.0)
+    full = _write(tmp_path, "full.json", _record(0.2, mins, ext))
+    subset = _write(
+        tmp_path, "sub.json",
+        _record(0.2, dict(list(mins.items())[:-1]), dict(list(ext.items())[:-1])),
+    )
+    head, ext_total, _ = bench.derive_anchors([full, subset])
+    assert head == float(len(bench.HEADLINE))
+    assert ext_total == float(len(bench.EXTENDED))
+    # with no record of the current set, the totals are unanchored and an
+    # unanchored total cannot violate
+    head, ext_total, _ = bench.derive_anchors([subset])
+    assert head is None and ext_total is None
+    monkeypatch.setattr(bench, "GUARD_ANCHOR_MIN_SEC", None)
+    msgs = bench.guard_verdict(0.1, 1e9, 1e9)
+    assert len(msgs) == 1 and "extended" in msgs[0]
+
+
+def test_key_without_artifact_is_unanchored(tmp_path):
+    mins, ext = _full_set(1.0)
+    _, _, per_key = bench.derive_anchors(
+        [_write(tmp_path, "a.json", _record(0.1, mins, ext))]
+    )
+    assert "brand_new_key" not in per_key
+    assert bench.derive_anchors([]) == (None, None, {})
+
+
+def test_new_quiet_artifact_moves_anchors_without_code_edit(tmp_path):
+    """Committing a record is the whole act: a copy of bench.py beside a
+    copy of the committed records picks up a new quiet run's tighter
+    per-key and total anchors on import, and ignores a loaded one."""
+    import shutil
+
+    art_dir = tmp_path / "artifacts"
+    art_dir.mkdir()
+    shutil.copy(os.path.join(_ROOT, "bench.py"), tmp_path / "bench.py")
+    for name, record in _quiet_artifacts():
+        _write(art_dir, name, record)
+
+    def load_copy():
+        spec = importlib.util.spec_from_file_location(
+            "bench_copy", str(tmp_path / "bench.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod
+
+    before = load_copy()
+    assert before.PER_KEY_ANCHOR_MIN_SEC == bench.PER_KEY_ANCHOR_MIN_SEC
+    assert before.GUARD_ANCHOR_MIN_SEC == bench.GUARD_ANCHOR_MIN_SEC
+    # a loaded record, however fast, changes nothing
+    _write(art_dir, "bench_quiet_r99_run1.json", _record(7.5, *_full_set(0.001)))
+    loaded = load_copy()
+    assert loaded.PER_KEY_ANCHOR_MIN_SEC == bench.PER_KEY_ANCHOR_MIN_SEC
+    assert loaded.GUARD_EXTENDED_ANCHOR_MIN_SEC == bench.GUARD_EXTENDED_ANCHOR_MIN_SEC
+    # a quiet record 10% under every current anchor tightens all of them
+    mins = {k: round(bench.PER_KEY_ANCHOR_MIN_SEC[k] * 0.9, 3) for k in bench.HEADLINE}
+    ext = {k: round(bench.PER_KEY_ANCHOR_MIN_SEC[k] * 0.9, 3) for k in bench.EXTENDED}
+    _write(art_dir, "bench_quiet_r99_run2.json", _record(0.4, mins, ext))
+    after = load_copy()
+    for k in bench.HEADLINE + bench.EXTENDED:
+        assert after.PER_KEY_ANCHOR_MIN_SEC[k] == {**mins, **ext}[k], k
+    assert after.GUARD_ANCHOR_MIN_SEC == round(sum(mins.values()), 3)
+    assert after.GUARD_ANCHOR_MIN_SEC < bench.GUARD_ANCHOR_MIN_SEC
+    assert after.GUARD_EXTENDED_ANCHOR_MIN_SEC < bench.GUARD_EXTENDED_ANCHOR_MIN_SEC
 
 
 def test_artifact_guard_block_fields():
@@ -449,33 +543,3 @@ def test_anchor_artifacts_quietness_and_calibration_band():
         for k, vs in per_key.items():
             assert len(vs) == len(runs), (era, k)
             assert max(vs) / min(vs) <= 1.6, (era, k, vs)
-
-
-def test_per_key_anchors_match_recorded_artifacts():
-    """Every per-key anchor must equal the BEST min across the
-    committed r12 quiet-box artifacts (the r12 re-derivation basis,
-    r11 judge order #6) — a drive-by loosening of one anchor (which
-    would widen that key's 2x budget) fails here: anchors can only
-    change by committing a new quiet-box artifact. Through r11 the
-    basis was the best min across driver BENCH_r*.json artifacts;
-    those r4–r6 bests had drifted 1.1–1.5x with code untouched. r13
-    widened the basis to the union of the committed r12 AND r13 quiet
-    trios — still best-recorded-wins, so adding artifacts can only
-    TIGHTEN anchors, never loosen them."""
-    best = {}
-    for _, artifact in _quiet_artifacts():
-        for k, v in {
-            **artifact["queries_min"],
-            **artifact["extended_queries_min"],
-        }.items():
-            if k not in best or v < best[k]:
-                best[k] = v
-    for key, anchor in bench.PER_KEY_ANCHOR_MIN_SEC.items():
-        assert key in best, key
-        assert anchor == best[key], (key, anchor, best[key])
-    # and EVERY anchor artifact was actually quiet when its timers
-    # started — anchors are the min ACROSS the artifacts, so one loaded
-    # run slipped into the set could inflate an anchor unchallenged
-    # (r12 review finding: the first cut asserted run1 only)
-    for _, artifact in _quiet_artifacts():
-        assert artifact["loadavg_before"][0] < 2.0, artifact["loadavg_before"]

@@ -346,6 +346,60 @@ def test_posting_list_cascade_bounded_on_hot_keys(spark):
         assert r["n_rows"] <= POSTING_SALTS, (r["g"], r["n_rows"])
 
 
+def test_posting_salts_env_is_validated():
+    """DSS_POSTING_SALTS: a malformed value must not crash the import, and
+    a value below 1 must not reach pmod(..., 0) (NULL salt = no skew
+    bound); both fall back to the default with a warning."""
+    import subprocess
+    import sys
+
+    import pytest
+
+    from dynamic_spark_spark.llmops.dedup import _posting_salts
+
+    assert _posting_salts(None) == 64
+    assert _posting_salts("16") == 16
+    for bad in ("0", "-3", "abc", "", "1.5"):
+        with pytest.warns(RuntimeWarning, match="DSS_POSTING_SALTS"):
+            assert _posting_salts(bad) == 64, bad
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from dynamic_spark_spark.llmops import dedup; print(dedup.POSTING_SALTS)"],
+        env={**os.environ, "DSS_POSTING_SALTS": "zero"},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split()[-1] == "64"
+
+
+def test_sim_topk_ivf_scores_zero_norm_vectors(spark, tmp_path):
+    """Zero vectors must score 0.0, not raise ZeroDivisionError in the
+    driver-side probe. Every training vector (vec_id % 4 == 0) is zero,
+    so the refined centroid is zero too, and query 0 is itself zero."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops.similarity import N_QUERIES, sim_topk_ivf
+
+    n = 40
+    emb = [
+        [0.0] * 4 if i % 4 == 0 else [float((i * k) % 7 + 1) for k in (1, 2, 3, 5)]
+        for i in range(n)
+    ]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(emb, pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(n)], pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    rows = sim_topk_ivf(spark, str(tmp_path)).collect()
+    assert {r["q_id"] for r in rows} == set(range(N_QUERIES))
+    assert all(r["cos_sim"] == r["cos_sim"] for r in rows)  # no NaN
+    assert {r["cos_sim"] for r in rows if r["q_id"] == 0} == {0.0}
+
+
 def test_dedup_clusters_transitive(spark, sf_dir):
     """Connected components must agree with the candidate-pair graph: both
     endpoints of every LSH pair share a component, and each component id is
@@ -415,50 +469,47 @@ def test_text_repetition_crafted(spark):
     assert out[3]["dup_bigram_frac"] is None
 
 
-def test_verification_order_integrity():
+def test_verification_order_integrity(tmp_path, monkeypatch):
     """The driver's correctness gate samples a PREFIX of queries(), so the
-    priority machinery is load-bearing. This test must stay ARTIFACT-ROBUST:
-    it asserts the three-class invariant the registry actually implements
-    (never-driver-seen first, then oracle-upgrade-pending rows-only-era keys,
-    then the verified tail) rather than pinning window composition against
-    the moving set of CORRECTNESS_r*.json files — a fixed "no verified keys
-    in the first 50" rule re-fires every time the driver drops a new file
-    (it did exactly that when CORRECTNESS_r06.json landed: the r5-ordered
-    re-front of the five oracle-upgraded scan_*_roundtrip keys is deliberate,
-    r5 verdict order #4)."""
+    order is load-bearing: stalest-first by the last CORRECTNESS_rNN.json
+    round that verified each key (hash-green, or rows-only by contract),
+    never-verified keys first, ties in registration order. Pinned on
+    synthetic records, then on the committed ones."""
+    import json
+
     from dynamic_spark_spark import registry
 
+    green = {"hash_match": True, "rows_match": True, "spark_rows": 3, "err": None}
+    red = {"hash_match": False, "rows_match": True, "spark_rows": 3, "err": None}
+    rows_only = {"hash_match": None, "spark_rows": 3, "err": "no_oracle"}
+    records = {
+        "CORRECTNESS_r01.json": {"a": green, "b": green, "c": green,
+                                 "d": rows_only, "e": red},
+        "CORRECTNESS_r02.json": {"b": green, "c": green},
+        "CORRECTNESS_r03.json": {"c": red, "g": green},
+        "CORRECTNESS_r04.json": "not a record",
+    }
+    for name, rows in records.items():
+        (tmp_path / name).write_text(json.dumps(rows))
+    monkeypatch.setattr(registry, "_RECORDS_DIR", str(tmp_path))
+    assert registry._last_verified_round() == {
+        "a": 1, "b": 2, "c": 2, "d": 1, "g": 3,
+    }
+    # e (red only) and f (never seen) count as round 0 and keep their
+    # registration order; c went red in r03, so it keeps r02 and sits
+    # ahead of g, which r03 verified
+    keys = ["g", "f", "e", "d", "c", "b", "a"]
+    assert registry.verification_order(keys) == ["f", "e", "d", "a", "c", "b", "g"]
+    monkeypatch.undo()
+
     qs = registry.load_all_queries()
-    missing = [k for k in registry._PRIORITY if k not in qs]
-    assert not missing, f"_PRIORITY names not in registry: {missing}"
-    # every registered key must be orderable without KeyError
     order = registry.verification_order(list(qs))
-    assert len(order) == len(qs)
     assert list(qs) == order, "load_all_queries must return verification order"
-    # three-class invariant: class ids must be non-decreasing along the order
-    verified = registry._driver_verified_keys()
-    upgrade = registry._oracle_upgrade_pending()
-
-    def cls(k: str) -> int:
-        if k not in verified:
-            return 0
-        return 1 if k in upgrade else 2
-
-    classes = [cls(k) for k in order]
-    assert classes == sorted(classes), (
-        "verification_order violates never-seen -> oracle-upgrade-pending -> "
-        f"verified-tail: {[k for k, c, s in zip(order, classes, sorted(classes)) if c != s]}"
-    )
-    # upgrade-pending keys must actually carry oracles (that's the point of
-    # re-fronting them: the driver can hash-prove them this time)
-    assert all(k in registry.ORACLE for k in upgrade)
-    # and every key must hold an explicit rank: an unlisted key falls to the
-    # back of the unverified block, quietly starving it of a driver slot
-    unlisted = [
-        k for k in qs
-        if k not in registry._PRIORITY and k not in registry._R1_VERIFIED
-    ]
-    assert not unlisted, f"registered keys missing from _PRIORITY: {unlisted}"
+    # the committed records: the next 50-key window holds none of the keys
+    # the latest round verified
+    last = registry._last_verified_round()
+    latest = max(last.values())
+    assert all(last.get(k, 0) < latest for k in order[:50])
 
 
 def test_registry_load_idempotent():
