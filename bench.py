@@ -279,7 +279,6 @@ def compact_from_full(full: dict) -> dict:
         "jvm_probe_minmax": full["jvm_probe"]["minmax"],
         "loadavg_before": full["loadavg_before"],
         "loaded_box": guard["loaded_box"],
-        "zstd_synthesis": full["zstd_synthesis"],
         "guard_basis": guard["basis"],
         "anchor_min_sec": guard["anchor_min_sec"],
         "extended_anchor_min_sec": guard["extended_anchor_min_sec"],
@@ -446,10 +445,6 @@ def _run_bench(probe_pool, load_before) -> None:
         probe_tail[name] = mc_probe(probe_pool)
         jvm_tail[name] = jvm_probe(spark)
 
-    from dynamic_spark_spark.llmops.zstd import zstd_synthesis_mode
-
-    zstd_synthesis = zstd_synthesis_mode()
-
     m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
 
@@ -565,11 +560,6 @@ def _run_bench(probe_pool, load_before) -> None:
             "retried_keys": retried,
             "first_pass_min_sec": first_pass_min,
         },
-        # which encoder wrote the zstd fixtures this run (r11
-        # verdict: a silent CLI→pure fallback let "proves real
-        # libzstd output" wear the wrong label) — "cli" = real
-        # libzstd frames, "pure" = this repo's own encoder
-        "zstd_synthesis": zstd_synthesis,
         "artifact_path": ARTIFACT_PATH,
         # self-adjudicating guard block: the artifact carries its own
         # verdict (min-of-5 basis) and noise context, so a reader

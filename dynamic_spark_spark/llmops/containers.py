@@ -990,14 +990,10 @@ def scan_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tzst_archive_bytes(doc_id: int, text: str) -> bytes:
-    """``.tar.zst``: the tar archive as one zstd frame. Written by the
-    REAL ``zstd`` CLI when one exists on the box (r11: the walk then
-    proves this repo's decoder against genuine libzstd output —
-    predefined tables, FSE weights and all — and synthesis stops paying
-    for pure-Python entropy ENCODE, the r10 scale probes'
-    synthesis-bound cost); falls back to the hand-rolled encoder
-    (:mod:`llmops.zstd`, real Huffman/FSE compression, not store mode)
-    when no CLI is installed."""
+    """``.tar.zst``: the tar archive as one zstd frame, written by the
+    in-process libzstd (:func:`llmops.zstd.zstd_compress_real`), so the
+    walk proves this repo's decoder against genuine libzstd output —
+    predefined tables, FSE weights and all."""
     from dynamic_spark_spark.llmops.zstd import zstd_compress_real
 
     return zstd_compress_real(tar_archive_bytes(doc_id, text), level=3)
@@ -1023,11 +1019,10 @@ def scan_tzst_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shared oracle, and the one modern mirrors are converging on.
     Unlike the gzip/bz2/xz twins (stdlib codecs), the DECODER here is
     the repo's own zstd implementation, and the frames come from the
-    real ``zstd`` CLI when one is installed (own encoder otherwise), so
-    the hash match proves the full entropy pipeline — against genuine
-    libzstd output where possible — composed with the checksum-verified
-    ustar walk. Same split-unit caveat as .tgz: one frame per archive,
-    archive-per-task."""
+    in-process libzstd, so the hash match proves the full entropy
+    pipeline against genuine libzstd output, composed with the
+    checksum-verified ustar walk. Same split-unit caveat as .tgz: one
+    frame per archive, archive-per-task."""
     import pandas as pd
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")

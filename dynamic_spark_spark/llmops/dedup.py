@@ -17,13 +17,13 @@ in the hot path.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynamic_spark_spark.registry import query
+from dynamic_spark_spark.session import positive_int_env
 from dynamic_spark_spark.sources.readers import load_table, rebalance_for_fanout
 
 #: minhash permutations and LSH banding (b bands × r rows = k hashes).
@@ -36,29 +36,11 @@ SHINGLE_N = 5  # character shingles
 MAX_SHINGLE_DF = 100
 
 
-def _posting_salts(raw: str | None) -> int:
-    """Parse ``DSS_POSTING_SALTS``. A malformed value, or one below 1 (0
-    makes ``pmod(..., 0)`` NULL, which silently drops the skew bound), falls
-    back to 64 with a warning."""
-    if raw is None:
-        return 64
-    try:
-        salts = int(raw)
-    except ValueError:
-        salts = 0
-    if salts < 1:
-        warnings.warn(
-            f"DSS_POSTING_SALTS={raw!r} is not a positive integer; using 64",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return 64
-    return salts
-
-
 #: salt fan-out for the skew-bounded posting-list cascade (env-tunable for
-#: cluster deployments; the per-buffer bound below scales as 1/salts).
-POSTING_SALTS = _posting_salts(os.environ.get("DSS_POSTING_SALTS"))
+#: cluster deployments; the per-buffer bound below scales as 1/salts). A
+#: value below 1 falls back to 64: 0 would make ``pmod(..., 0)`` NULL,
+#: which silently drops the skew bound.
+POSTING_SALTS = positive_int_env("DSS_POSTING_SALTS", 64)
 
 
 def _posting_partials(exploded: DataFrame, key: str, cap: int) -> DataFrame:

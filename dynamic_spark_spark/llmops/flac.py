@@ -529,84 +529,10 @@ def decode_flac(payload: bytes):
     """REAL FLAC decode to an ``(n_samples, channels)`` int32 numpy array,
     or None for anything malformed (bad magic, CRC mismatch, reserved
     codes, truncation, resource bombs). Frames are CRC-16-verified; the
-    STREAMINFO total-sample count bounds every allocation. With
-    SPARK_GRAFT_FLAC_NATIVE=1 and ``soundfile`` installed, the native
-    tier is consulted first and must agree exactly (FLAC is lossless);
-    it falls through here when it declines."""
-    if _native_enabled():
-        samples = decode_flac_native(payload)
-        if samples is not None:
-            return samples
+    STREAMINFO total-sample count bounds every allocation."""
     try:
         return _decode_flac_inner(payload)
     except (EOFError, ValueError, struct.error, OverflowError):
-        return None
-
-
-# ---------------------------------------------------------------------------
-# native-codec seam (r10 — the FLAC extension of jpeg.py's r7 pattern)
-# ---------------------------------------------------------------------------
-# The pure-Python entropy decoder below is the DEFAULT TRUTH (CRC-verified,
-# oracle-proven round trips, hostile-stream clamps). Its honest cost is the
-# per-bit Python loop — ~44 s at the 100× probe (SCALE.md), linear and
-# shuffle-free but ~500× slower per byte than libFLAC. The swap point is
-# real code: import-gated discovery of ``soundfile`` (→ libsndfile →
-# libFLAC), opt-in SPARK_GRAFT_FLAC_NATIVE, fall-through to pure Python
-# whenever the native path declines. FLAC is LOSSLESS, so when both tiers
-# decode, the cross-validation test demands exact sample equality.
-
-import os as _os
-
-_NATIVE_UNPROBED = object()
-_native_sf_mod: object = _NATIVE_UNPROBED
-
-
-def native_backend():
-    """The optional native FLAC backend (``soundfile``), or None — probed
-    once per interpreter; absence is a supported state (same import
-    gating as jpeg.py's seam)."""
-    global _native_sf_mod
-    if _native_sf_mod is _NATIVE_UNPROBED:
-        try:
-            import soundfile as _sf_mod
-
-            _native_sf_mod = _sf_mod
-        except Exception:
-            _native_sf_mod = None
-    return _native_sf_mod
-
-
-def _native_enabled() -> bool:
-    """Opt-in flag: the pure-Python tier stays the truth unless the
-    operator explicitly enables the native swap."""
-    return _os.environ.get("SPARK_GRAFT_FLAC_NATIVE", "").lower() not in (
-        "", "0", "false",
-    )
-
-
-def decode_flac_native(payload: bytes):
-    """Decode via ``soundfile`` when installed: the same
-    ``(n_samples, channels)`` int32 contract as :func:`decode_flac`,
-    None when the backend is absent, the payload is malformed, the
-    stream is not 16-bit PCM (libsndfile left-justifies other depths
-    into int32, which would disagree with the pure tier's raw-sample
-    contract — decline, don't guess), or the sample count exceeds the
-    MAX_DECODE_SAMPLES envelope. Never raises."""
-    sf = native_backend()
-    if sf is None:
-        return None
-    import io as _io
-
-    try:
-        buf = _io.BytesIO(payload)
-        with sf.SoundFile(buf) as f:
-            if f.format != "FLAC" or f.subtype != "PCM_16":
-                return None
-            if f.frames * f.channels > MAX_DECODE_SAMPLES:
-                return None
-            data = f.read(dtype="int16", always_2d=True)
-        return data.astype(np.int32)
-    except Exception:
         return None
 
 

@@ -285,13 +285,7 @@ def decode_gif_pixels(payload: bytes):
     the palette. Returns ``height×width×3`` nested lists (the shared
     raster contract) or None for anything malformed — including indices
     outside the palette and dimension/LZW resource bombs, which are
-    refused before allocation. With SPARK_GRAFT_GIF_NATIVE=1 and Pillow
-    installed, the native tier is consulted first and must agree exactly
-    (GIF is lossless); it falls through here when it declines."""
-    if _native_enabled():
-        px = decode_gif_native(payload)
-        if px is not None:
-            return px
+    refused before allocation."""
     if not payload or len(payload) < 14 or payload[:6] not in (b"GIF87a", b"GIF89a"):
         return None
     screen_w, screen_h, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
@@ -377,71 +371,3 @@ def decode_gif_pixels(payload: bytes):
             px = ordered
         return px.astype(int).tolist()
     return None
-
-
-# ---------------------------------------------------------------------------
-# native-codec seam (r10 — the GIF extension of jpeg.py's r7 pattern)
-# ---------------------------------------------------------------------------
-# The pure-Python LZW tier above is the DEFAULT TRUTH (oracle-proven round
-# trips, byte-exact palette mapping, 4-pass de-interlace). A native binding
-# (Pillow → its C GIF decoder) removes the per-byte Python cost that makes
-# the mixed-decode key CPU-bound at the 100× probe (SCALE.md), so the swap
-# point is real code: import-gated discovery, opt-in SPARK_GRAFT_GIF_NATIVE,
-# fall-through to pure Python whenever the native path declines. Unlike
-# JPEG (where T.83 allows IDCT variation), GIF is LOSSLESS — when both
-# tiers decode, they must agree EXACTLY, and the cross-validation test
-# demands equality, not tolerance.
-
-import os as _os
-
-_NATIVE_UNPROBED = object()
-_native_image_mod: object = _NATIVE_UNPROBED
-
-
-def native_backend():
-    """The optional native GIF backend (``PIL.Image``), or None — probed
-    once per interpreter; absence is a supported state (same import
-    gating as jpeg.py's seam)."""
-    global _native_image_mod
-    if _native_image_mod is _NATIVE_UNPROBED:
-        try:
-            from PIL import Image as _image_mod
-
-            _native_image_mod = _image_mod
-        except Exception:
-            _native_image_mod = None
-    return _native_image_mod
-
-
-def _native_enabled() -> bool:
-    """Opt-in flag: the pure-Python tier stays the truth unless the
-    operator explicitly enables the native swap."""
-    return _os.environ.get("SPARK_GRAFT_GIF_NATIVE", "").lower() not in (
-        "", "0", "false",
-    )
-
-
-def decode_gif_native(payload: bytes):
-    """Decode the first frame via Pillow when installed: the same
-    ``height×width×3`` nested-list contract as
-    :func:`decode_gif_pixels`, None when the backend is absent, the
-    payload is malformed, or the image exceeds the pure tier's resource
-    envelope. Never raises."""
-    image_mod = native_backend()
-    if image_mod is None:
-        return None
-    import io as _io
-
-    import numpy as np
-
-    try:
-        with image_mod.open(_io.BytesIO(payload)) as im:
-            if im.format != "GIF":
-                return None
-            w, h = im.size
-            if not w or not h or w * h > MAX_DECODE_PIXELS:
-                return None
-            im.seek(0)  # first frame: the curation convention
-            return np.asarray(im.convert("RGB"), dtype=np.uint8).astype(int).tolist()
-    except Exception:
-        return None

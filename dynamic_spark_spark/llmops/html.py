@@ -864,11 +864,10 @@ def http_payload_decode(raw: bytes, cap: int = HTTP_BODY_CAP):
             if body is None:
                 return None
         elif enc == "br":
-            # native seam (r12, same pattern as the jpeg/zstd codecs):
-            # brotli has NO pure-Python tier in this repo — RFC 7932 is
-            # a from-scratch project of its own — so `br` decodes ONLY
-            # when a binding is installed and REFUSES otherwise; it
-            # never guesses
+            # native seam (r12): brotli has NO pure-Python tier in this
+            # repo — RFC 7932 is a from-scratch project of its own — so
+            # `br` decodes ONLY when a binding is installed and REFUSES
+            # otherwise; it never guesses
             body = brotli_decode_native(body, cap)
             if body is None:
                 return None
@@ -963,9 +962,7 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bodies.append((int(doc_id), body))
                 if int(doc_id) % 3 == 2:
                     zstd_in.append(body)
-            # ONE CLI spawn per Arrow batch for all zstd-coded rows
-            # (per-row spawns made synthesis the 100x probe's dominant
-            # cost — the r11 review finding)
+            # one libzstd batch call per Arrow batch for all zstd-coded rows
             zstd_out = iter(zstd_compress_real_many(zstd_in, level=3))
             rows = []
             for doc_id, body in bodies:
@@ -1000,7 +997,7 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# brotli native seam (r12): same import-gated pattern as jpeg/zstd
+# brotli native seam (r12): import-gated, the only ``br`` path
 # ---------------------------------------------------------------------------
 
 _BROTLI_UNPROBED = object()

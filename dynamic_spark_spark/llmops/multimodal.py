@@ -801,65 +801,6 @@ def encode_png_gray_alpha(rows) -> bytes:
     )
 
 
-def _png_native_enabled() -> bool:
-    """Opt-in flag for the native PNG fast path — the PNG half of the r7
-    judge's 'seam behind decode_jpeg/decode_png' order (the JPEG half lives
-    in :mod:`dynamic_spark_spark.llmops.jpeg`). Default OFF: the pure
-    stdlib tier stays the truth unless the operator explicitly enables the
-    swap (and the binding is importable — absence falls through)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_PNG_NATIVE", "").lower() not in (
-        "",
-        "0",
-        "false",
-    )
-
-
-def decode_png_rgb_native(payload: bytes):
-    """Decode via the native backend (Pillow → libpng/zlib-ng) when
-    installed, returning the SAME ``height×width×3`` nested-list shape as
-    :func:`decode_png_rgb`, or None to fall through. Deliberately
-    NARROWER than the pure tier: only 8-bit color-type-2 non-interlaced
-    streams (enforced from the IHDR bytes BEFORE Pillow runs) — the one
-    form whose native output is bit-identical by construction, so the
-    cross-validation can demand exact pixel equality. The r8 gray/palette/
-    alpha types decode through the pure tier only (palette + alpha
-    normalization conventions vary across binding versions; a seam that
-    might disagree with the truth is worse than no seam). Never raises."""
-    from dynamic_spark_spark.llmops.jpeg import native_backend
-
-    image_mod = native_backend()
-    if image_mod is None:
-        return None
-    if (
-        not payload
-        or payload[:8] != _PNG_SIG
-        or len(payload) < 29
-        or payload[12:16] != b"IHDR"  # IHDR must be first (PNG §11.2.2)
-    ):
-        return None
-    w, h, depth, color, _comp, _filt, interlace = _struct.unpack(
-        ">II5B", payload[16:29]
-    )
-    if depth != 8 or color != 2 or interlace != 0 or not w or not h:
-        return None
-    import io as _io
-
-    try:
-        with image_mod.open(_io.BytesIO(payload)) as im:
-            if im.format != "PNG" or im.mode != "RGB":
-                return None
-            import numpy as _np
-
-            arr = _np.asarray(im)
-            if arr.shape != (h, w, 3):
-                return None
-            return arr.tolist()
-    except Exception:
-        return None
-
-
 def decode_png_rgb(payload: bytes):
     """REAL PNG pixel decode with the standard library only: walk the chunk
     list, concatenate IDAT segments, ``zlib`` inflate, then reverse the
@@ -873,14 +814,7 @@ def decode_png_rgb(payload: bytes):
 
     This closed round-2's "real media decode" gap for one format end-to-end;
     r5 closed the other (baseline JPEG entropy decode,
-    :mod:`dynamic_spark_spark.llmops.jpeg`). r8 adds the import-gated
-    native fast path (``SPARK_GRAFT_PNG_NATIVE=1``, decline-falls-through,
-    exact-equality cross-validation — PNG is lossless so the tiers must
-    agree bit-for-bit)."""
-    if _png_native_enabled():
-        px = decode_png_rgb_native(payload)
-        if px is not None:
-            return px
+    :mod:`dynamic_spark_spark.llmops.jpeg`)."""
     if not payload or payload[:8] != _PNG_SIG:
         return None
     i, width, height, color, idat, plte = 8, None, None, None, bytearray(), None

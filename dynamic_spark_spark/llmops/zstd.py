@@ -3,9 +3,8 @@
 zstd (RFC 8878, public) is what today's training corpora actually ship
 in: HuggingFace dumps are ``.jsonl.zst``, archived crawls move to
 ``.tar.zst``, and every lakehouse offers it as a parquet codec. Python's
-stdlib has no zstd (pre-3.14) and this container carries no binding, so
-the engine implements the format itself — the same posture as the FLAC
-and GIF tiers:
+stdlib has no zstd (pre-3.14), so the engine implements the format
+itself — the same posture as the FLAC and GIF tiers:
 
 - **decoder**: frame header → block walk (Raw / RLE / Compressed) →
   literals section (Raw / RLE / Huffman-compressed with a direct weight
@@ -39,8 +38,9 @@ truncation/mutation sweeps). Cross-implementation proof: the sandbox's
 real ``zstd`` CLI (v1.5.7) is used BOTH directions in pytest —
 CLI-written frames decode here bit-exactly at several levels, and this
 encoder's frames decode under the CLI — closing the two-independent-
-implementations loop the LZ4 keys established. The import-gated
-native-seam pattern (jpeg.py r7) remains the in-process swap point.
+implementations loop the LZ4 keys established. Fixture frames for the
+registered keys come from the in-process libzstd
+(:func:`zstd_compress_real_many`), checksum bit set.
 """
 
 from __future__ import annotations
@@ -925,14 +925,7 @@ def zstd_decompress(raw: bytes, cap: int = ZSTD_FRAME_CAP):
     anything malformed (bad magic, reserved block types, lying sizes,
     bomb declarations, broken entropy streams, nonzero dictionary IDs
     — frames naming a dictionary ID are refused by THIS entry point;
-    use :func:`zstd_decompress_dict` to decode them). Never raises. With
-    SPARK_GRAFT_ZSTD_NATIVE=1 and a binding installed the native tier is
-    consulted first (exact-equality contract — zstd is lossless) and
-    falls through here when it declines."""
-    if _native_enabled():
-        out = decode_zstd_native(raw, cap)
-        if out is not None:
-            return out
+    use :func:`zstd_decompress_dict` to decode them). Never raises."""
     try:
         got = _zstd_inner(raw, cap, _FrameCtx())
         return None if got is None else got[0]
@@ -1337,16 +1330,6 @@ SELECT doc_id, text FROM documents WHERE text NOT LIKE '%|%'
 """
 
 
-def _zstd_cli_path():
-    """The real libzstd CLI, when one exists on this box — used to write
-    fixtures so the pure-Python decoder is exercised against a second,
-    independent implementation's output. Absence is a supported state
-    (the key falls back to this module's own encoder)."""
-    import shutil
-
-    return shutil.which("zstd")
-
-
 _LIBZSTD_UNPROBED = object()
 _libzstd_handle_obj: object = _LIBZSTD_UNPROBED
 #: ZSTD_cParameter enum values (zstd.h, stable public API since v1.4.0)
@@ -1357,9 +1340,7 @@ _ZSTD_C_CHECKSUM_FLAG = 201
 def libzstd_handle():
     """ctypes handle to the real libzstd shared library, prototyped for
     the one-shot compression entry points, or None. Probed once per
-    interpreter (same import-gated posture as the native decode seam and
-    the jpeg/brotli backends); absence is a supported state — synthesis
-    falls back to the CLI, then to this module's own encoder.
+    interpreter; :func:`zstd_compress_real_many` raises when it is None.
 
     Only the stable public API is bound (ZSTD_createCCtx /
     ZSTD_CCtx_setParameter / ZSTD_compress2 / ZSTD_compressBound /
@@ -1400,35 +1381,39 @@ def libzstd_handle():
     return _libzstd_handle_obj
 
 
-def _libzstd_compress_many(payloads: list[bytes], level: int):
-    """Compress each payload into its own frame via the in-process
-    libzstd, or None when the library is absent or errors. Frames carry
-    the content checksum (the CLI's default), so the decode side does
-    the same verification work regardless of which real-libzstd writer
-    produced the fixture. One CCtx serves the whole batch — created and
-    freed per call, so concurrent callers never share mutable state."""
+def zstd_compress_real_many(payloads: list[bytes], level: int = 3) -> list[bytes]:
+    """Compress each payload into its own frame with the in-process
+    libzstd: the one writer for every key/probe that wants genuine
+    libzstd streams. Frames carry the content checksum (the CLI's
+    default), so the decode side always runs its XXH64 check. One CCtx
+    serves the whole batch — created and freed per call, so concurrent
+    callers never share mutable state. Raises ``RuntimeError`` when
+    libzstd cannot be loaded or reports an error: a fixture that is not
+    real libzstd output must not pass as one."""
+    if not payloads:
+        return []
     lib = libzstd_handle()
     if lib is None:
-        return None
+        raise RuntimeError("libzstd shared library not found")
     import ctypes
 
     cctx = lib.ZSTD_createCCtx()
     if not cctx:
-        return None
+        raise RuntimeError("libzstd: ZSTD_createCCtx failed")
     try:
         if lib.ZSTD_isError(
             lib.ZSTD_CCtx_setParameter(cctx, _ZSTD_C_COMPRESSION_LEVEL, level)
         ) or lib.ZSTD_isError(
             lib.ZSTD_CCtx_setParameter(cctx, _ZSTD_C_CHECKSUM_FLAG, 1)
         ):
-            return None
+            raise RuntimeError(f"libzstd rejected level={level} or checksum flag")
         out = []
         for p in payloads:
             bound = lib.ZSTD_compressBound(len(p))
             buf = ctypes.create_string_buffer(bound)
             n = lib.ZSTD_compress2(cctx, buf, bound, p, len(p))
             if lib.ZSTD_isError(n):
-                return None
+                raise RuntimeError("libzstd: ZSTD_compress2 failed")
             out.append(buf.raw[:n])
         return out
     finally:
@@ -1436,38 +1421,20 @@ def _libzstd_compress_many(payloads: list[bytes], level: int):
 
 
 def zstd_compress_real(data: bytes, level: int = 3) -> bytes:
-    """Compress with REAL libzstd when available — in-process via the
-    ctypes seam first (zero spawn/file overhead), the CLI second — and
-    this module's own encoder otherwise: the one shared writer path for
-    every key/probe that wants genuine libzstd streams."""
-    got = _libzstd_compress_many([data], level)
-    if got is not None:
-        return got[0]
-    cli = _zstd_cli_path()
-    if cli is not None:
-        import subprocess
-
-        try:
-            return subprocess.run(
-                [cli, f"-{level}", "-c"], input=data,
-                capture_output=True, check=True,
-            ).stdout
-        except (OSError, subprocess.SubprocessError):
-            pass  # real CLI failure modes only — anything else propagates
-    return zstd_compress(data)
+    """One frame of :func:`zstd_compress_real_many`."""
+    return zstd_compress_real_many([data], level)[0]
 
 
 @query("scan_text_zst", _ZST_TEXT_ORACLE, tag="scan")
 def scan_text_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``.zst`` text-shard round trip against REAL libzstd output: each
     Arrow batch of documents becomes one newline-framed shard which is
-    compressed by the actual ``zstd`` CLI (level 9 — exercises
-    predefined/FSE/repeat sequence tables, FSE-compressed Huffman
-    weights, and treeless literals, the forms libzstd routinely emits)
-    and decoded back by this module's pure-Python frame walker before
-    re-parsing. When no CLI is installed the shard comes from
-    :func:`zstd_compress` instead, so the key degrades to a self-stream
-    round trip rather than failing. The closed-form oracle hash-proves
+    compressed by the in-process libzstd (:func:`zstd_compress_real`,
+    level 9 — exercises predefined/FSE/repeat sequence tables,
+    FSE-compressed Huffman weights, and treeless literals, the forms
+    libzstd routinely emits) and decoded back by this module's
+    pure-Python frame walker, checksum included, before re-parsing.
+    The closed-form oracle hash-proves
     the entire entropy pipeline per shard. This is the format modern
     corpora actually ship in (`.jsonl.zst`); the scale caveat matches
     gzip — one frame is one decode unit, so corpora shard by file,
@@ -1498,62 +1465,6 @@ def scan_text_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["doc_id", "text"])
 
     return d.mapInPandas(roundtrip, "doc_id long, text string")
-
-
-# ---------------------------------------------------------------------------
-# native-codec seam (same pattern as jpeg/gif/flac)
-# ---------------------------------------------------------------------------
-
-import os as _os  # noqa: E402
-
-_NATIVE_UNPROBED = object()
-_native_zstd_mod: object = _NATIVE_UNPROBED
-
-
-def native_backend():
-    """The optional native zstd backend — stdlib ``compression.zstd``
-    (Python 3.14+) or the ``zstandard`` wheel — or None. Probed once per
-    interpreter; absence is a supported state."""
-    global _native_zstd_mod
-    if _native_zstd_mod is _NATIVE_UNPROBED:
-        mod = None
-        try:
-            from compression import zstd as mod  # Python 3.14+
-        except Exception:
-            try:
-                import zstandard as mod
-            except Exception:
-                mod = None
-        _native_zstd_mod = mod
-    return _native_zstd_mod
-
-
-def _native_enabled() -> bool:
-    return _os.environ.get("SPARK_GRAFT_ZSTD_NATIVE", "").lower() not in (
-        "", "0", "false",
-    )
-
-
-def decode_zstd_native(raw: bytes, cap: int = ZSTD_FRAME_CAP):
-    """Decode via the native backend when installed: same bytes-or-None
-    contract as :func:`zstd_decompress`. zstd is lossless, so when both
-    tiers decode they must agree EXACTLY (cross-validated in tests when
-    a binding is present). Never raises."""
-    mod = native_backend()
-    if mod is None:
-        return None
-    try:
-        if hasattr(mod, "ZstdDecompressor"):  # zstandard wheel API
-            out = mod.ZstdDecompressor().decompress(
-                raw, max_output_size=cap
-            )
-        else:  # stdlib compression.zstd API
-            out = mod.decompress(raw)
-        if len(out) > cap:
-            return None
-        return out
-    except Exception:
-        return None
 
 
 # ---------------------------------------------------------------------------
@@ -1732,79 +1643,3 @@ def zstd_decompress_dict(frame: bytes, dictionary: bytes,
         return None if got is None else got[0]
     except Exception:
         return None
-
-
-def zstd_compress_real_many_tagged(
-    payloads: list[bytes], level: int = 3
-) -> tuple[str, list[bytes]]:
-    """Batch form of :func:`zstd_compress_real` that also REPORTS which
-    encoder produced the frames: ``("lib", frames)`` when the in-process
-    libzstd (ctypes seam) wrote them, ``("cli", frames)`` when the real
-    zstd CLI did, ``("pure", frames)`` when this module's own encoder
-    did. ``lib`` and ``cli`` both mean genuine libzstd output — the lib
-    tier exists because one CLI spawn per batch still paid ~1.5 ms of
-    per-FILE process/VFS overhead (measured: 1,664 small payloads =
-    2.6 s CLI vs 0.02 s in-process, identical decode both ways), which
-    was the dominant cost of `scan_warc_http_payloads` (guide §4.2: do
-    the heavy lifting in native code, no per-call spawns). The marker
-    exists because lib/cli vs pure prove different claims — "the decoder
-    reads real libzstd output" vs "the decoder round-trips its own
-    encoder" — and a silent fallback (the r11 verdict finding) let the
-    weaker claim wear the stronger label. Only real failure modes
-    (library/binary absent, ZSTD error codes, spawn errors, nonzero
-    exit) trigger fallback; anything else propagates."""
-    if not payloads:
-        # prove the tier end-to-end even for an empty batch: a 1-byte
-        # compress through the lib seam, not just a successful dlopen —
-        # a loadable-but-broken library must fall through to cli/pure
-        # here exactly like it would with frames to write (r13 advice)
-        if _libzstd_compress_many([b"\x00"], 3) is not None:
-            return "lib", []
-        return ("cli" if _zstd_cli_path() else "pure"), []
-    got = _libzstd_compress_many(payloads, level)
-    if got is not None:
-        return "lib", got
-    cli = _zstd_cli_path()
-    if cli is not None:
-        import subprocess
-        import tempfile
-
-        try:
-            with tempfile.TemporaryDirectory(prefix="dss_zstdb_") as d:
-                paths = []
-                for i, p in enumerate(payloads):
-                    path = f"{d}/{i:06d}.bin"
-                    with open(path, "wb") as f:
-                        f.write(p)
-                    paths.append(path)
-                subprocess.run(
-                    [cli, f"-{level}", "-q", *paths],
-                    capture_output=True, check=True,
-                )
-                out = []
-                for path in paths:
-                    with open(path + ".zst", "rb") as f:
-                        out.append(f.read())
-                return "cli", out
-        except (OSError, subprocess.SubprocessError):
-            pass  # CLI broke mid-run: fall back, but SAY so via the marker
-    return "pure", [zstd_compress(p) for p in payloads]
-
-
-def zstd_compress_real_many(payloads: list[bytes], level: int = 3) -> list[bytes]:
-    """Frames-only form of :func:`zstd_compress_real_many_tagged` (one
-    in-process libzstd call per payload, or ONE CLI spawn for N payloads
-    when the library is absent — per-row spawns made fixture synthesis
-    the dominant cost of the 100× probes)."""
-    return zstd_compress_real_many_tagged(payloads, level)[1]
-
-
-def zstd_synthesis_mode(level: int = 3) -> str:
-    """One-shot probe of which encoder fixture synthesis would use RIGHT
-    NOW on this host: ``"lib"``, ``"cli"`` (both genuine libzstd) or
-    ``"pure"``. bench.py records it in the guard artifact so the
-    "proves real libzstd output" claim of
-    `scan_text_zst`/`scan_tzst_members`/`scan_warc_http_payloads` is
-    auditable from the artifact alone (local mode: driver and executors
-    share the host, so the probe's answer is the executors' answer)."""
-    return zstd_compress_real_many_tagged([b"probe"], level)[0]

@@ -14,6 +14,7 @@ but safe at cluster scale because AQE re-coalesces.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -86,13 +87,35 @@ def scoped_conf(spark: SparkSession, **confs: str):
                     pass
 
 
+def positive_int_env(name: str, default: int) -> int:
+    """``$name`` as a positive integer, or ``default`` when it is unset.
+    A malformed value, or one below 1, also gives ``default``, with a
+    ``RuntimeWarning`` naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        warnings.warn(
+            f"{name}={raw!r} is not a positive integer; using {default}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return default
+    return value
+
+
 def get_spark(app_name: str = "dynamic-spark-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a tuned local session.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else all cores.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else all
+    cores; a malformed value, or one below 1, warns and uses all cores.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = positive_int_env("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -91,6 +91,12 @@ def rebalance_for_fanout(df: DataFrame, floor: int = 0) -> DataFrame:
     round-robin shuffle of every row (token arrays, embeddings) just to
     rediscover the parallelism the scan already had.
 
+    The gate is the partition COUNT, not how rows are spread across the
+    partitions. An input with enough partitions whose rows sit in a few of
+    them (a selective upstream filter, skewed splits) is returned as is, so
+    its fan-out can still run on one task; a caller that knows it follows
+    such a filter should call ``repartition`` itself.
+
     ``floor`` keeps a minimum spread on tiny sessions (the multimodal
     decode sites historically used ``max(defaultParallelism, 4)``)."""
     sc = df.sparkSession.sparkContext

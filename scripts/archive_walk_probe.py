@@ -7,7 +7,7 @@ separates the two the way a real corpus is shaped:
 
 1. STAGE (timed separately): build shard-sized archives — ~1000 documents
    per ``.tar`` (stdlib tarfile, an independent writer), compressed with the
-   real ``zstd`` CLI / stdlib lzma — once per scale, stored as a binary
+   in-process libzstd / stdlib lzma — once per scale, stored as a binary
    column in parquet.
 2. WALK (the headline number): a Spark mapInPandas pass runs the repo's
    walkers (zstd frame decode + checksum-verified ustar walk) over every
@@ -53,10 +53,7 @@ def main() -> None:
         txz_member_walk,
         tzst_member_walk,
     )
-    from dynamic_spark_spark.llmops.zstd import (
-        _zstd_cli_path,
-        zstd_compress_real,
-    )
+    from dynamic_spark_spark.llmops.zstd import zstd_compress_real
     from dynamic_spark_spark.session import get_spark
 
     spark = get_spark("dss-archive-probe")
@@ -74,8 +71,6 @@ def main() -> None:
         )
     n_docs = docs.count()
     n_shards = max(1, n_docs // DOCS_PER_SHARD)
-
-    cli = _zstd_cli_path()
 
     def stage(batches):
         import pandas as pd
@@ -146,7 +141,6 @@ def main() -> None:
             "replicas": replicas,
             "docs": n_docs,
             "docs_per_shard": DOCS_PER_SHARD,
-            "zstd_writer": "cli" if cli else "pure-python",
             "formats": results,
         }))
     finally:

@@ -343,7 +343,6 @@ def _synthetic_full(violating: bool = False) -> dict:
                 k: 12.345 for k in bench.HEADLINE + bench.EXTENDED
             },
         },
-        "zstd_synthesis": "cli",
         "artifact_path": bench.ARTIFACT_PATH,
         "guard": {
             "basis": "min_total_sec",

@@ -302,55 +302,3 @@ def test_lpc_encoder_never_worse_on_noise():
     lp = encode_flac(samples, 44100, block_size=128, mid_side=True, lpc_order=8)
     assert len(lp) <= len(plain)
     assert np.array_equal(decode_flac(lp), samples)
-
-
-def test_native_seam_dispatch(monkeypatch):
-    """The FLAC native-codec seam (r10, extending jpeg.py's r7 pattern),
-    pinned WITHOUT the binding installed: default-off flag, native-wins
-    when it decodes, pure-Python fallback when it declines."""
-    import numpy as np
-
-    import dynamic_spark_spark.llmops.flac as fl
-
-    samples = np.arange(-50, 50, dtype=np.int64).reshape(50, 2)
-    stream = fl.encode_flac(samples, 8000, block_size=32)
-    truth = fl.decode_flac(stream)
-    fake = np.zeros((2, 2), dtype=np.int32)
-
-    monkeypatch.delenv("SPARK_GRAFT_FLAC_NATIVE", raising=False)
-    monkeypatch.setattr(fl, "decode_flac_native", lambda p: fake)
-    assert np.array_equal(fl.decode_flac(stream), truth)
-
-    monkeypatch.setenv("SPARK_GRAFT_FLAC_NATIVE", "1")
-    assert fl.decode_flac(stream) is fake
-
-    monkeypatch.setattr(fl, "decode_flac_native", lambda p: None)
-    assert np.array_equal(fl.decode_flac(stream), truth)
-
-
-def test_native_cross_validation_flac():
-    """When soundfile IS installed, FLAC is lossless, so the native and
-    pure tiers must agree EXACTLY (16-bit streams; other depths decline
-    by contract)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from dynamic_spark_spark.llmops.flac import (
-        decode_flac,
-        decode_flac_native,
-        encode_flac,
-        native_backend,
-    )
-
-    if native_backend() is None:
-        _pytest.skip(
-            "named dep missing: soundfile (native FLAC backend) — "
-            "pure-Python tier remains the truth"
-        )
-    rng = np.random.default_rng(11)
-    for n, ch, bs, ms in [(200, 1, 64, False), (150, 2, 32, True)]:
-        samples = rng.integers(-32768, 32768, (n, ch), dtype=np.int64)
-        stream = encode_flac(samples, 8000, block_size=bs, mid_side=ms and ch == 2)
-        native = decode_flac_native(stream)
-        assert native is not None
-        assert np.array_equal(native, decode_flac(stream))

@@ -157,47 +157,3 @@ def test_property_roundtrip(width, height, n_colors, seed, interlace):
     pal = gif_palette(n_colors, seed % 97)
     payload = encode_gif(rows, pal, interlace=interlace)
     assert decode_gif_pixels(payload) == _rgb(rows, pal)
-
-
-def test_native_seam_dispatch(monkeypatch):
-    """The GIF native-codec seam (r10, extending jpeg.py's r7 pattern),
-    pinned WITHOUT the binding installed: default-off flag, native-wins
-    when it decodes, pure-Python fallback when it declines."""
-    import dynamic_spark_spark.llmops.gif as g
-
-    stream = g.gif_rgb_bytes(8, 6, 5)
-    truth = g.decode_gif_pixels(stream)
-    fake = [[[1, 2, 3]] * 8 for _ in range(6)]
-
-    monkeypatch.delenv("SPARK_GRAFT_GIF_NATIVE", raising=False)
-    monkeypatch.setattr(g, "decode_gif_native", lambda p: fake)
-    assert g.decode_gif_pixels(stream) == truth
-
-    monkeypatch.setenv("SPARK_GRAFT_GIF_NATIVE", "1")
-    assert g.decode_gif_pixels(stream) is fake
-
-    monkeypatch.setattr(g, "decode_gif_native", lambda p: None)
-    assert g.decode_gif_pixels(stream) == truth
-
-
-def test_native_cross_validation_gif():
-    """When Pillow IS installed, GIF is lossless, so the native and pure
-    tiers must agree EXACTLY on the roundtrip corpus (interlaced and
-    non-interlaced, local and global palettes)."""
-    import pytest as _pytest
-
-    from dynamic_spark_spark.llmops.gif import (
-        decode_gif_native,
-        decode_gif_pixels,
-        gif_rgb_bytes,
-        native_backend,
-    )
-
-    if native_backend() is None:
-        _pytest.skip(
-            "named dep missing: pillow (native GIF backend) — "
-            "pure-Python tier remains the truth"
-        )
-    for w, h, seed in [(8, 6, 1), (16, 16, 2), (33, 7, 3), (5, 40, 4)]:
-        stream = gif_rgb_bytes(w, h, seed)
-        assert decode_gif_native(stream) == decode_gif_pixels(stream)

@@ -502,79 +502,6 @@ def test_duplicate_component_ids_rejected():
         reconstruct_color(_color_img(8, 8), sampling=(4, 4))
 
 
-def test_native_seam_dispatch(monkeypatch):
-    """The import-gated native-codec seam (r7 judge order #2), pinned
-    WITHOUT the binding installed: default-off flag, gray-contract
-    enforcement, and pure-Python fallback when the native tier declines.
-    Cross-validation against a real binding lives in
-    test_native_cross_validation (named-dep skip when Pillow is absent)."""
-    import dynamic_spark_spark.llmops.jpeg as j
-
-    img = np.arange(256).reshape(16, 16) % 256
-    stream = j.encode_jpeg_gray(img)
-    truth = j.decode_jpeg_gray(stream)
-    fake_gray = np.zeros((2, 2), dtype=np.uint8)
-    fake_color = np.zeros((2, 2, 3), dtype=np.uint8)
-
-    # flag OFF (default): native path never consulted, even if "installed"
-    monkeypatch.delenv("SPARK_GRAFT_JPEG_NATIVE", raising=False)
-    monkeypatch.setattr(j, "decode_jpeg_native", lambda p: fake_gray)
-    assert np.array_equal(j.decode_jpeg_gray(stream), truth)
-    assert np.array_equal(j.decode_jpeg(stream), truth)
-
-    # flag ON: native result wins when it decodes
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_NATIVE", "1")
-    assert j.decode_jpeg(stream) is fake_gray
-    assert j.decode_jpeg_gray(stream) is fake_gray
-    # gray-only contract survives the swap: a color decode is rejected,
-    # not returned, through the gray API
-    monkeypatch.setattr(j, "decode_jpeg_native", lambda p: fake_color)
-    assert j.decode_jpeg_gray(stream) is None
-    assert j.decode_jpeg(stream) is fake_color
-    # native tier declining (None: backend absent or payload unsupported)
-    # falls through to the pure tier — flag on, binding missing is a
-    # supported state, not an error
-    monkeypatch.setattr(j, "decode_jpeg_native", lambda p: None)
-    assert np.array_equal(j.decode_jpeg_gray(stream), truth)
-    assert np.array_equal(j.decode_jpeg(stream), truth)
-
-
-@pytest.mark.skipif(
-    __import__("dynamic_spark_spark.llmops.jpeg", fromlist=["native_backend"]).native_backend()
-    is None,
-    reason="named dep missing: pillow (native JPEG backend) — pure-Python tier remains the truth",
-)
-def test_native_cross_validation():
-    """When the native binding IS installed, both tiers must agree within
-    ITU T.83 conformance tolerance on the roundtrip corpus. The pure tier
-    stays bit-exact vs the encoder's reconstruction (pinned elsewhere);
-    this bounds |native − pure|: tight where no chroma resampling is
-    involved (gray, 4:4:4), mean-bounded where upsampling filters may
-    legitimately differ (libjpeg fancy upsampling vs this tier's NN)."""
-    from dynamic_spark_spark.llmops.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg_color,
-    )
-
-    rng = np.random.RandomState(8)
-    gray = encode_jpeg_gray(rng.randint(0, 256, size=(33, 29)))
-    pure, native = decode_jpeg(gray), decode_jpeg_native(gray)
-    assert native is not None and native.shape == pure.shape
-    assert np.max(np.abs(native.astype(int) - pure.astype(int))) <= 2
-
-    img = _color_img(32, 24, seed=8)
-    full = encode_jpeg_color(img, sampling=(1, 1))
-    pure, native = decode_jpeg(full), decode_jpeg_native(full)
-    assert native is not None and native.shape == pure.shape
-    assert np.max(np.abs(native.astype(int) - pure.astype(int))) <= 3
-
-    sub = encode_jpeg_color(img, sampling=(2, 2))
-    pure, native = decode_jpeg(sub), decode_jpeg_native(sub)
-    assert native is not None and native.shape == pure.shape
-    assert np.mean(np.abs(native.astype(float) - pure.astype(float))) <= 4.0
-
-
 def test_zero_dimension_sof_degrades_to_none():
     """A crafted SOF declaring h==0 or w==0 must return None, not an empty
     pixel array (r7 advice): an empty decode would ship NaN feature vectors

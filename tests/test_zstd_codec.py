@@ -34,6 +34,7 @@ from dynamic_spark_spark.llmops.zstd import (
     huf_encode_1stream,
     huf_read_weights,
     huf_weights_bytes,
+    libzstd_handle,
     zstd_compress,
     zstd_decompress,
 )
@@ -265,43 +266,6 @@ def test_zstd_random_roundtrip(data):
 def test_zstd_periodic_roundtrip(unit, reps):
     data = (unit * reps)[:50_000]
     assert zstd_decompress(zstd_compress(data)) == data
-
-
-def test_native_seam_dispatch(monkeypatch):
-    """The zstd native seam, pinned without a binding: default-off flag,
-    native-wins when it decodes, pure-Python fallback on decline."""
-    import dynamic_spark_spark.llmops.zstd as z
-
-    frame = z.zstd_compress(b"seam dispatch payload " * 20)
-    truth = z.zstd_decompress(frame)
-    fake = b"native says hi"
-
-    monkeypatch.delenv("SPARK_GRAFT_ZSTD_NATIVE", raising=False)
-    monkeypatch.setattr(z, "decode_zstd_native", lambda r, cap=0: fake)
-    assert z.zstd_decompress(frame) == truth
-
-    monkeypatch.setenv("SPARK_GRAFT_ZSTD_NATIVE", "1")
-    assert z.zstd_decompress(frame) is fake
-
-    monkeypatch.setattr(z, "decode_zstd_native", lambda r, cap=0: None)
-    assert z.zstd_decompress(frame) == truth
-
-
-def test_native_cross_validation_zstd():
-    """When a zstd binding IS installed, our frames must decode to the
-    same bytes through it (the interop proof the container lacks)."""
-    import pytest as _pytest
-
-    import dynamic_spark_spark.llmops.zstd as z
-
-    if z.native_backend() is None:
-        _pytest.skip(
-            "named dep missing: compression.zstd / zstandard "
-            "(native backend) — pure-Python tier remains the truth"
-        )
-    for data in [b"", b"abc" * 500, bytes(range(256)) * 7]:
-        frame = z.zstd_compress(data)
-        assert z.decode_zstd_native(frame) == data
 
 
 def test_xxh64_reference_vectors_and_checksum():
@@ -558,90 +522,56 @@ def test_dictionary_frames_decode(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# synthesis marker (r11 verdict: the CLI→pure fallback was silent, so
-# "proves real libzstd output" could wear the wrong label)
+# the fixture writer: in-process libzstd, one tier
 # ---------------------------------------------------------------------------
 
+needs_libzstd = pytest.mark.skipif(
+    libzstd_handle() is None,
+    reason="named dep missing: libzstd shared library",
+)
 
-def test_synthesis_marker_lib_when_library_present():
-    """The in-process libzstd tier wins when the shared library loads;
-    its frames are genuine libzstd output — the CLI itself must decode
-    them, and they carry the content checksum like CLI-written frames."""
+
+@needs_libzstd
+def test_writer_frames_carry_checksum_bit():
+    """Both writer entry points emit the content checksum on every frame
+    (FHD bit 2), so every fixture exercises the decoder's XXH64 check, and
+    the frames decode under the pure decoder and the CLI alike."""
     from dynamic_spark_spark.llmops import zstd as z
 
-    if z.libzstd_handle() is None:
-        pytest.skip("no libzstd shared library on this box")
-    mode, frames = z.zstd_compress_real_many_tagged([b"alpha", b"beta"])
-    assert mode == "lib"
-    assert [z.zstd_decompress_concat(f) for f in frames] == [b"alpha", b"beta"]
-    assert frames[0][4] & 0x4  # frame-header descriptor: checksum bit
-    assert z.zstd_synthesis_mode() == "lib"
-    if z._zstd_cli_path() is not None:
-        got = subprocess.run(
-            [z._zstd_cli_path(), "-d", "-c"], input=frames[0],
-            capture_output=True, check=True,
-        ).stdout
-        assert got == b"alpha"
+    payloads = [b"", b"alpha", b"beta" * 4000]
+    expected = payloads + payloads[2:]
+    for level in (1, 3, 9, 19):
+        frames = z.zstd_compress_real_many(payloads, level)
+        frames.append(z.zstd_compress_real(payloads[2], level))
+        assert len(frames) == 4
+        for frame in frames:
+            assert frame[:4] == z.ZSTD_MAGIC
+            assert frame[4] & 0x4
+        assert [z.zstd_decompress(f) for f in frames] == expected
+        if _ZSTD_CLI is not None:
+            assert [_cli_decompress(f) for f in frames] == expected
+    assert z.zstd_compress_real_many([]) == []
 
 
-def test_synthesis_marker_cli_when_library_absent(monkeypatch):
-    from dynamic_spark_spark.llmops import zstd as z
-
-    if z._zstd_cli_path() is None:
-        pytest.skip("no zstd CLI on this box")
-    monkeypatch.setattr(z, "libzstd_handle", lambda: None)
-    mode, frames = z.zstd_compress_real_many_tagged([b"alpha", b"beta"])
-    assert mode == "cli"
-    assert [z.zstd_decompress_concat(f) for f in frames] == [b"alpha", b"beta"]
-    assert z.zstd_synthesis_mode() == "cli"
-
-
-def test_synthesis_marker_flips_without_cli(monkeypatch):
+def test_writer_raises_without_libzstd(monkeypatch):
+    """No silent fallback: without libzstd the writer fails loudly and
+    names the library."""
     from dynamic_spark_spark.llmops import zstd as z
 
     monkeypatch.setattr(z, "libzstd_handle", lambda: None)
-    monkeypatch.setattr(z, "_zstd_cli_path", lambda: None)
-    mode, frames = z.zstd_compress_real_many_tagged([b"alpha"])
-    assert mode == "pure"
-    assert z.zstd_decompress(frames[0]) == b"alpha"
-    assert z.zstd_synthesis_mode() == "pure"
+    with pytest.raises(RuntimeError, match="libzstd"):
+        z.zstd_compress_real_many([b"alpha"])
+    with pytest.raises(RuntimeError, match="libzstd"):
+        z.zstd_compress_real(b"alpha")
 
 
-def test_synthesis_marker_flips_on_cli_failure(monkeypatch):
-    """A BROKEN CLI (spawn error / nonzero exit) falls back with the
-    marker flipped; any non-subprocess exception propagates instead of
-    being silently swallowed (the narrowed except)."""
-    from dynamic_spark_spark.llmops import zstd as z
-
-    if z._zstd_cli_path() is None:
-        pytest.skip("no zstd CLI on this box")
-
-    monkeypatch.setattr(z, "libzstd_handle", lambda: None)
-
-    def boom(*a, **k):
-        raise OSError("spawn failed")
-
-    monkeypatch.setattr(subprocess, "run", boom)
-    mode, frames = z.zstd_compress_real_many_tagged([b"alpha"])
-    assert mode == "pure"
-    assert z.zstd_decompress(frames[0]) == b"alpha"
-
-    def logic_bug(*a, **k):
-        raise ValueError("not a CLI failure")
-
-    monkeypatch.setattr(subprocess, "run", logic_bug)
-    with pytest.raises(ValueError):
-        z.zstd_compress_real_many_tagged([b"alpha"])
-
-
+@needs_libzstd
 def test_lib_tier_agrees_with_cli_and_pure_decoder():
     """Lib-tier frames at several levels decode bit-exactly under BOTH
     the pure-Python walker and the CLI — the same cross-implementation
     triangle the CLI fixtures pin, now for the in-process writer."""
     from dynamic_spark_spark.llmops import zstd as z
 
-    if z.libzstd_handle() is None:
-        pytest.skip("no libzstd shared library on this box")
     rng = random.Random(13)
     payloads = [
         b"",
@@ -650,23 +580,8 @@ def test_lib_tier_agrees_with_cli_and_pure_decoder():
         ("unicode éü text, repeated. " * 500).encode(),
     ]
     for level in (1, 3, 9, 19):
-        got = z._libzstd_compress_many(payloads, level)
-        assert got is not None
+        got = z.zstd_compress_real_many(payloads, level)
         for raw, frame in zip(payloads, got):
             assert z.zstd_decompress_concat(frame, 1 << 22) == raw
-            if z._zstd_cli_path() is not None:
-                back = subprocess.run(
-                    [z._zstd_cli_path(), "-d", "-c"], input=frame,
-                    capture_output=True, check=True,
-                ).stdout
-                assert back == raw
-
-
-def test_bench_artifact_carries_synthesis_marker():
-    import os as _os
-
-    src = open(
-        _os.path.join(_os.path.dirname(__file__), "..", "bench.py")
-    ).read()
-    assert '"zstd_synthesis": zstd_synthesis' in src
-    assert "zstd_synthesis_mode()" in src
+            if _ZSTD_CLI is not None:
+                assert _cli_decompress(frame) == raw
