@@ -36,6 +36,7 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dynamic_spark_spark.llmops.protowire import _uvarint_enc, _zigzag_dec
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -56,30 +57,7 @@ _SCHEMA = {
 
 
 def _zigzag_encode(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _zigzag_decode(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data) or shift > 63:
-            raise ValueError("varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (out >> 1) ^ -(out & 1), pos
-        shift += 7
+    return _uvarint_enc((v << 1) ^ (v >> 63) if v < 0 else v << 1)
 
 
 def _encode_record(doc_id: int, text: str) -> bytes:
@@ -135,18 +113,18 @@ def _walk_inner(raw: bytes, cap: int):
     pos = 4
     meta: dict[str, bytes] = {}
     while True:
-        count, pos = _zigzag_decode(raw, pos)
+        count, pos = _zigzag_dec(raw, pos)
         if count == 0:
             break
         if count < 0 or count > 64:
             return []
         for _ in range(count):
-            klen, pos = _zigzag_decode(raw, pos)
+            klen, pos = _zigzag_dec(raw, pos)
             if klen < 0 or pos + klen > len(raw):
                 return []
             key = raw[pos : pos + klen].decode("utf-8")
             pos += klen
-            vlen, pos = _zigzag_decode(raw, pos)
+            vlen, pos = _zigzag_dec(raw, pos)
             if vlen < 0 or pos + vlen > len(raw):
                 return []
             meta[key] = raw[pos : pos + vlen]
@@ -175,8 +153,8 @@ def _walk_inner(raw: bytes, cap: int):
 
     out = []
     while pos < len(raw):
-        n_rec, pos = _zigzag_decode(raw, pos)
-        blen, pos = _zigzag_decode(raw, pos)
+        n_rec, pos = _zigzag_dec(raw, pos)
+        blen, pos = _zigzag_dec(raw, pos)
         if n_rec < 0 or n_rec > AVRO_COUNT_CAP or blen < 0 or blen > cap:
             return out  # bomb: keep what already verified
         if pos + blen + 16 > len(raw):
@@ -194,8 +172,8 @@ def _walk_inner(raw: bytes, cap: int):
         bpos = 0
         block_rows = []
         for _ in range(n_rec):
-            doc_id, bpos = _zigzag_decode(body, bpos)
-            slen, bpos = _zigzag_decode(body, bpos)
+            doc_id, bpos = _zigzag_dec(body, bpos)
+            slen, bpos = _zigzag_dec(body, bpos)
             if slen < 0 or bpos + slen > len(body):
                 return out
             block_rows.append(

@@ -29,6 +29,8 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.fixtures import scan_files
+from dynamic_spark_spark.operators.scans import _tmpdir
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -229,9 +231,7 @@ def scan_text_lz4(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable (no sync marks), so like gzip the parallelism unit is the
     file — lz4's role at 100 TB is shuffle/intermediate speed, not
     archival layout."""
-    import pandas as pd
-
-    out = _tmp("dss_textlz4_")
+    out = _tmpdir("dss_textlz4_")
     docs = load_table(spark, sf_dir, "documents").where(
         ~F.col("text").contains("|")
         & ~F.col("text").contains("\n")
@@ -241,23 +241,19 @@ def scan_text_lz4(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("|", F.col("doc_id").cast("string"), "text")
     ).write.mode("overwrite").option("compression", "lz4").text(out)
 
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.lz4"
-    ).select("content")
+    return scan_files(spark, "textlz4", out, "*.lz4",
+                      "doc_id long, text string", _decode_text_lz4)
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                data = hadoop_lz4_decompress(bytes(content))
-                if data is None:
-                    continue  # a corrupt shard drops out; the hash catches it
-                for line in data.decode("utf-8").splitlines():
-                    did, _, text = line.partition("|")
-                    rows.append((int(did), text))
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
 
-    return files.mapInPandas(decode, "doc_id long, text string")
+def _decode_text_lz4(raw: bytes):
+    import pandas as pd
+
+    data = hadoop_lz4_decompress(raw)
+    if data is None:
+        return None
+    rows = [line.partition("|") for line in data.decode("utf-8").splitlines()]
+    return pd.DataFrame({"doc_id": [int(did) for did, _, _ in rows],
+                         "text": [text for _, _, text in rows]})
 
 
 @query("sink_text_lz4", _LZ4_TEXT_ORACLE, tag="sink")
@@ -271,7 +267,7 @@ def sink_text_lz4(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FLAC/GIF codec tiers get from their closed-form oracles."""
     import os
 
-    out = _tmp("dss_sinklz4_")
+    out = _tmpdir("dss_sinklz4_")
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(
@@ -319,8 +315,3 @@ def sink_text_lz4(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.getItem(1).alias("text"),
     )
 
-
-def _tmp(prefix: str) -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix=prefix)

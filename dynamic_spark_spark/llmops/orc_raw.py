@@ -84,10 +84,20 @@ from __future__ import annotations
 
 import struct
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dynamic_spark_spark.llmops.protowire import proto_fields
+from dynamic_spark_spark.llmops.fixtures import (
+    fixture_parallelism,
+    scan_files,
+    staged_fixture_dir,
+)
+from dynamic_spark_spark.llmops.protowire import (
+    _uvarint_dec,
+    _zigzag_dec,
+    proto_fields,
+)
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -104,25 +114,6 @@ def _closest_fixed_bits(n: int) -> int:
         if n <= w:
             return w
     return 64
-
-
-def _uvarint(data: bytes, pos: int):
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data) or shift > 63:
-            raise ValueError("varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-
-
-def _svarint(data: bytes, pos: int):
-    u, pos = _uvarint(data, pos)
-    return (u >> 1) ^ -(u & 1), pos
 
 
 _POW2_DESC = None
@@ -207,13 +198,13 @@ def rlev2_decode(data: bytes, count: int, signed: bool = True):
                 ln = (((h & 1) << 8) | data[pos + 1]) + 1
                 pos += 2
                 if signed:
-                    base, pos = _svarint(data, pos)
+                    base, pos = _zigzag_dec(data, pos)
                 else:
-                    base, pos = _uvarint(data, pos)
+                    base, pos = _uvarint_dec(data, pos)
                 if ln == 1:
                     out.append(base)
                     continue
-                delta0, pos = _svarint(data, pos)
+                delta0, pos = _zigzag_dec(data, pos)
                 seq = [base, base + delta0]
                 if w:
                     deltas, pos = _bits_be(data, pos, ln - 2, w)
@@ -299,16 +290,16 @@ def rlev1_decode(data: bytes, count: int, signed: bool = True):
                 if delta >= 128:
                     delta -= 256
                 if signed:
-                    base, pos = _svarint(data, pos)
+                    base, pos = _zigzag_dec(data, pos)
                 else:
-                    base, pos = _uvarint(data, pos)
+                    base, pos = _uvarint_dec(data, pos)
                 out.extend(base + i * delta for i in range(run))
             else:  # literals
                 for _ in range(256 - h):
                     if signed:
-                        v, pos = _svarint(data, pos)
+                        v, pos = _zigzag_dec(data, pos)
                     else:
-                        v, pos = _uvarint(data, pos)
+                        v, pos = _uvarint_dec(data, pos)
                     out.append(v)
         return out[:count]
     except (ValueError, IndexError):
@@ -477,7 +468,7 @@ def _packed_uvarints(blob: bytes):
     out = []
     pos = 0
     while pos < len(blob):
-        v, pos = _uvarint(blob, pos)
+        v, pos = _uvarint_dec(blob, pos)
         out.append(v)
     return out
 
@@ -1752,11 +1743,7 @@ def scan_orc_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     The identity oracle hash-proves postscript/footer/stripe walks and
     all exercised RLEv2 sub-encodings at once; pytest pins the decoder
     on the ORC spec's published vectors and pyarrow-written files
-    (liborc, a second writer). Per-file mapInPandas, zero shuffle;
-    session-staged fixture (:mod:`fixtures`), lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import staged_fixture_dir
+    (liborc, a second writer)."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select(
@@ -1773,23 +1760,16 @@ def scan_orc_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.write.mode("overwrite").option("compression", "none").orc(path)
 
     out = staged_fixture_dir(spark, sf_dir, "orccol", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.orc"
-    ).select("content")
+    return scan_files(spark, "orccol", out, "*.orc", "doc_id long, val long",
+                      _decode_orc_column)
 
-    def read_cols(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_orc_int_column(raw, "doc_id")
-                vals = read_orc_int_column(raw, "val")
-                if ids is None or vals is None or len(ids) != len(vals):
-                    continue
-                rows.extend(zip(ids, vals))
-            yield pd.DataFrame(rows, columns=["doc_id", "val"])
 
-    return files.mapInPandas(read_cols, "doc_id long, val long")
+def _decode_orc_column(raw: bytes):
+    ids = read_orc_int_column(raw, "doc_id")
+    vals = read_orc_int_column(raw, "val")
+    if ids is None or vals is None or len(ids) != len(vals):
+        return None
+    return pd.DataFrame({"doc_id": ids, "val": vals})
 
 
 _ORC_TABLE_ORACLE = """
@@ -1809,14 +1789,7 @@ def scan_orc_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     second way, inside another container format, against orc-core's
     writer. doc_id comes through RLEv2, text through the DIRECT_V2 or
     DICTIONARY_V2 string layout (whichever orc-core picks per stripe).
-    Identity oracle; per-file mapInPandas, zero shuffle; session-staged
-    fixture, lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    Identity oracle."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1825,25 +1798,17 @@ def scan_orc_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orc(path)  # DEFAULT codec (zstd in Spark 4)
 
     out = staged_fixture_dir(spark, sf_dir, "orctable", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.orc"
-    ).select("content")
+    return scan_files(spark, "orctable", out, "*.orc",
+                      "doc_id long, text string", _decode_orc_table)
 
-    def read_table(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_orc_int_column(raw, "doc_id")
-                texts = read_orc_string_column(raw, "text")
-                if ids is None or texts is None or len(ids) != len(texts):
-                    continue
-                rows.extend(
-                    (i, t.decode("utf-8")) for i, t in zip(ids, texts)
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
 
-    return files.mapInPandas(read_table, "doc_id long, text string")
+def _decode_orc_table(raw: bytes):
+    ids = read_orc_int_column(raw, "doc_id")
+    texts = read_orc_string_column(raw, "text")
+    if ids is None or texts is None or len(ids) != len(texts):
+        return None
+    return pd.DataFrame({"doc_id": ids,
+                         "text": [t.decode("utf-8") for t in texts]})
 
 
 #: ORC's timestamp epoch: 2015-01-01 00:00:00 UTC
@@ -1958,14 +1923,7 @@ def scan_orc_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(vec_id, pos, component)`` under the same DuckDB
     unnest/generate_subscripts identity oracle as the parquet twin —
     the audit tier's tie-breaker claim now covers the ANN/dedup
-    corpus in BOTH columnar formats. Per-file mapInPandas, zero
-    shuffle; session-staged fixture, lazy plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    corpus in BOTH columnar formats."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "embeddings").select(
@@ -1976,28 +1934,17 @@ def scan_orc_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orc(path)  # DEFAULT codec (zstd, Spark 4)
 
     out = staged_fixture_dir(spark, sf_dir, "orcnested", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.orc"
-    ).select("content")
+    return scan_files(spark, "orcnested", out, "*.orc",
+                      "vec_id long, pos int, component double",
+                      _decode_orc_nested)
 
-    def read_nested(batches):
-        for pdf in batches:
-            frames = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_orc_int_column(raw, "vec_id")
-                lists = read_orc_list_column(raw, "embedding")
-                if ids is None or lists is None or len(ids) != len(lists):
-                    continue  # vec_id nulls would misalign the zip
-                frames.append(explode_list_rows(ids, lists))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield explode_list_rows([], [])
 
-    return files.mapInPandas(
-        read_nested, "vec_id long, pos int, component double"
-    )
+def _decode_orc_nested(raw: bytes):
+    ids = read_orc_int_column(raw, "vec_id")
+    lists = read_orc_list_column(raw, "embedding")
+    if ids is None or lists is None or len(ids) != len(lists):
+        return None  # vec_id nulls would misalign the zip
+    return explode_list_rows(ids, lists)
 
 
 #: DuckDB recomputation of the struct/map fixture straight from the
@@ -2056,14 +2003,7 @@ def scan_orc_raw_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything from the documents source (0.11 rows counted twice).
     Completes the audit-tier parity claim of this module's header
     (reference delegates all scans to Spark —
-    docs/ScalaSparkCompute-sparkcompute.md:5-6). Per-file mapInPandas
-    over binaryFile, zero shuffle; session-staged fixture, lazy plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    docs/ScalaSparkCompute-sparkcompute.md:5-6)."""
 
     def write(path: str) -> None:
         doc_id = F.col("doc_id")
@@ -2113,47 +2053,40 @@ def scan_orc_raw_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
                        file_version="0.11")
 
     out = staged_fixture_dir(spark, sf_dir, "orcstructmap", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.orc"
-    ).select("content")
-
-    def read_struct_map(batches):
-        cols = ["doc_id", "s_state", "lang", "nchars", "mkey", "mval"]
-        for pdf in batches:
-            rows: list = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_orc_int_column(raw, "doc_id")
-                structs = read_orc_nested_column(raw, "s")
-                maps = read_orc_nested_column(raw, "m")
-                if (ids is None or structs is None or maps is None
-                        or not (len(ids) == len(structs) == len(maps))):
-                    continue  # degrade-don't-die: skip unreadable files
-                for i, s, m in zip(ids, structs, maps):
-                    if s is None:
-                        s_state, lang, nchars = "null", None, None
-                    else:
-                        s_state = "ok"
-                        lv = s.get("lang")
-                        lang = lv.decode("utf-8") if isinstance(
-                            lv, bytes) else lv
-                        nchars = s.get("nchars")
-                    if m is None:
-                        ents = [("<null-map>", None)]
-                    elif not m:
-                        ents = [("<empty-map>", None)]
-                    else:
-                        ents = [(e["key"].decode("utf-8"), e["value"])
-                                for e in m]
-                    for mkey, mval in ents:
-                        rows.append((i, s_state, lang, nchars, mkey, mval))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        read_struct_map,
+    return scan_files(
+        spark, "orcstructmap", out, "*.orc",
         "doc_id long, s_state string, lang string, nchars long, "
         "mkey string, mval double",
+        _decode_orc_struct_map,
     )
+
+
+def _decode_orc_struct_map(raw: bytes):
+    ids = read_orc_int_column(raw, "doc_id")
+    structs = read_orc_nested_column(raw, "s")
+    maps = read_orc_nested_column(raw, "m")
+    if (ids is None or structs is None or maps is None
+            or not (len(ids) == len(structs) == len(maps))):
+        return None
+    rows: list = []
+    for i, s, m in zip(ids, structs, maps):
+        if s is None:
+            s_state, lang, nchars = "null", None, None
+        else:
+            s_state = "ok"
+            lv = s.get("lang")
+            lang = lv.decode("utf-8") if isinstance(lv, bytes) else lv
+            nchars = s.get("nchars")
+        if m is None:
+            ents = [("<null-map>", None)]
+        elif not m:
+            ents = [("<empty-map>", None)]
+        else:
+            ents = [(e["key"].decode("utf-8"), e["value"]) for e in m]
+        for mkey, mval in ents:
+            rows.append((i, s_state, lang, nchars, mkey, mval))
+    return pd.DataFrame(rows, columns=["doc_id", "s_state", "lang",
+                                       "nchars", "mkey", "mval"])
 
 
 _ORC_ROWINDEX_ORACLE = """
@@ -2182,17 +2115,10 @@ def scan_orc_raw_rowindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     then held to the zero-false-negative property under orc-java's
     exact hash scheme — the arithmetic-shift Hive variant of Thomas
     Wang's mix (:func:`read_orc_bloom_filter`); a single lying filter
-    drops the file and fails the hash. The key answers MIN/MAX/COUNT
+    stops the scan with the file named. The key answers MIN/MAX/COUNT
     per partition FROM THE INDEX ALONE; matching the oracle's
-    full-scan answer proves the pruning metadata tells the truth.
-    Per-file mapInPandas; the only exchange carries 8 partition
-    aggregates; lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    full-scan answer proves the pruning metadata tells the truth. The
+    only exchange carries 8 partition aggregates."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select(
@@ -2206,34 +2132,29 @@ def scan_orc_raw_rowindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = staged_fixture_dir(spark, sf_dir, "orcrowidx", write)
-    files = spark.read.format("binaryFile").load(
-        out + "/p=*/", pathGlobFilter="*.orc"
-    ).select("path", "content")
-
-    def audit(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                both = read_orc_index_and_bloom(bytes(content), "doc_id")
-                if both is None:
-                    continue  # degrade: a dropped file fails the hash
-                idx, bloom = both
-                if len(bloom) != len(idx) or any(
-                    b["filters"] != d["entries"] for b, d in zip(bloom, idx)
-                ):
-                    continue
-                pval = int(path.split("p=")[1].split("/")[0])
-                for d in idx:
-                    rows.append((pval, d["min"], d["max"], d["rows"]))
-            yield pd.DataFrame(
-                rows, columns=["p", "idx_min", "idx_max", "idx_rows"]
-            )
-
-    per_stripe = files.mapInPandas(
-        audit, "p long, idx_min long, idx_max long, idx_rows long"
+    per_stripe = scan_files(
+        spark, "orcrowidx", out, "*.orc",
+        "p long, idx_min long, idx_max long, idx_rows long",
+        _decode_orc_rowindex, partitioned=True,
     )
     return per_stripe.groupBy("p").agg(
         F.min("idx_min").alias("idx_min"),
         F.max("idx_max").alias("idx_max"),
         F.sum("idx_rows").alias("idx_rows"),
     )
+
+
+def _decode_orc_rowindex(raw: bytes, p: int):
+    cols = ["p", "idx_min", "idx_max", "idx_rows"]
+    both = read_orc_index_and_bloom(raw, "doc_id")
+    if both is None:
+        # a file with no rows has no index to audit
+        return pd.DataFrame(columns=cols) if read_orc_int_column(
+            raw, "doc_id") == [] else None
+    idx, bloom = both
+    if len(bloom) != len(idx) or any(
+        b["filters"] != d["entries"] for b, d in zip(bloom, idx)
+    ):
+        return None
+    return pd.DataFrame([(p, d["min"], d["max"], d["rows"]) for d in idx],
+                        columns=cols)

@@ -24,6 +24,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.protowire import _uvarint_dec
 from dynamic_spark_spark.registry import query
 
 _MAX_DEPTH = 24
@@ -39,17 +40,8 @@ class _Compact:
         self.pos = pos
 
     def varint(self) -> int:
-        out = 0
-        shift = 0
-        while True:
-            if self.pos >= len(self.data) or shift > 63:
-                raise ValueError("varint")
-            b = self.data[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
+        out, self.pos = _uvarint_dec(self.data, self.pos)
+        return out
 
     def zigzag(self) -> int:
         v = self.varint()
@@ -200,12 +192,10 @@ def scan_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout Spark's writer produced, independent of any parquet library.
     This is the 100-TB audit tool: when a shard is suspect, the footer
     is what you read first, and the reader that reads it must not be the
-    reader under suspicion. Per-file mapInPandas work; the only shuffle
-    carries 8 partition aggregates. The fixture is session-staged
-    (:mod:`fixtures`), so the returned plan stays lazy."""
-    import pandas as pd
-
+    reader under suspicion. The only shuffle carries 8 partition
+    aggregates."""
     from dynamic_spark_spark.llmops.fixtures import (
+        scan_files,
         staged_fixture_dir,
         write_documents_by_p8_parquet,
     )
@@ -214,28 +204,20 @@ def scan_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "footer",
         lambda path: write_documents_by_p8_parquet(spark, sf_dir, path),
     )
-    files = spark.read.format("binaryFile").load(
-        out + "/p=*/", pathGlobFilter="*.parquet"
-    ).select("path", "content")
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                parsed = parse_parquet_footer(bytes(content))
-                if parsed is None:
-                    continue  # degrade: a bad file drops out (hash catches it)
-                num_rows, rg = parsed
-                pval = int(path.split("p=")[1].split("/")[0])
-                rows.append((pval, num_rows, sum(rg)))
-            yield pd.DataFrame(
-                rows, columns=["p", "footer_rows", "rg_rows"]
-            )
-
-    per_file = files.mapInPandas(
-        parse, "p long, footer_rows long, rg_rows long"
-    )
+    per_file = scan_files(spark, "footer", out, "*.parquet",
+                          "p long, footer_rows long, rg_rows long",
+                          _decode_footer, partitioned=True)
     return per_file.groupBy("p").agg(
         F.sum("footer_rows").alias("footer_rows"),
         F.sum("rg_rows").alias("rg_rows"),
     )
+
+
+def _decode_footer(raw: bytes, p: int):
+    import pandas as pd
+
+    parsed = parse_parquet_footer(raw)
+    if parsed is None:
+        return None
+    return pd.DataFrame({"p": [p], "footer_rows": [parsed[0]],
+                         "rg_rows": [sum(parsed[1])]})

@@ -89,10 +89,21 @@ from __future__ import annotations
 import struct
 import zlib
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dynamic_spark_spark.llmops.parquet_footer import _Compact
+from dynamic_spark_spark.llmops.fixtures import (
+    fixture_parallelism,
+    scan_files,
+    staged_fixture_dir,
+    write_documents_by_p8_parquet,
+)
+from dynamic_spark_spark.llmops.parquet_footer import (
+    _Compact,
+    parse_parquet_footer,
+)
+from dynamic_spark_spark.llmops.protowire import _uvarint_dec, _zigzag_dec
 from dynamic_spark_spark.llmops.zstd import xxh64
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
@@ -728,25 +739,6 @@ def _parse_page_header(raw: bytes, pos: int):
 _I64_MASK = (1 << 64) - 1
 
 
-def _uleb(data: bytes, pos: int):
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data) or shift > 63:
-            raise ValueError("uleb")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-
-
-def _zigzag_uleb(data: bytes, pos: int):
-    u, pos = _uleb(data, pos)
-    return (u >> 1) ^ -(u & 1), pos
-
-
 def _wrap_signed(v: int, bits: int) -> int:
     v &= (1 << bits) - 1
     return v - (1 << bits) if v >= 1 << (bits - 1) else v
@@ -767,10 +759,10 @@ def _delta_binary_packed(buf: bytes, pos: int, bits: int = 64,
     encodes ~800 values per header byte at block size 4096).
     Returns (values, end_pos) or None."""
     try:
-        block_size, pos = _uleb(buf, pos)
-        n_mini, pos = _uleb(buf, pos)
-        total, pos = _uleb(buf, pos)
-        first, pos = _zigzag_uleb(buf, pos)
+        block_size, pos = _uvarint_dec(buf, pos)
+        n_mini, pos = _uvarint_dec(buf, pos)
+        total, pos = _uvarint_dec(buf, pos)
+        first, pos = _zigzag_dec(buf, pos)
         if n_mini <= 0 or block_size <= 0 or block_size % n_mini:
             return None
         per_mini = block_size // n_mini
@@ -782,7 +774,7 @@ def _delta_binary_packed(buf: bytes, pos: int, bits: int = 64,
             return [], pos
         out = [first]
         while len(out) < total:
-            min_delta, pos = _zigzag_uleb(buf, pos)
+            min_delta, pos = _zigzag_dec(buf, pos)
             widths = buf[pos : pos + n_mini]
             if len(widths) < n_mini:
                 return None
@@ -2671,16 +2663,7 @@ def scan_parquet_raw_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets, pure-Python SNAPPY, RLE/bit-packed definition levels,
     little-endian PLAIN. The identity oracle hash-proves all the layers
     at once against what parquet-mr actually wrote; pytest repeats the
-    chain against pyarrow-written files (a third writer). Per-file
-    mapInPandas, zero shuffle; the fixture is session-staged
-    (:mod:`fixtures`) so the returned plan is the LAZY binaryFile →
-    mapInPandas pipeline, streamed by the caller's action."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    chain against pyarrow-written files (a third writer)."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2693,20 +2676,13 @@ def scan_parquet_raw_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = staged_fixture_dir(spark, sf_dir, "rawcol", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
+    return scan_files(spark, "rawcol", out, "*.parquet", "doc_id long",
+                      _decode_raw_column)
 
-    def read_col(batches):
-        for pdf in batches:
-            vals: list[int] = []
-            for content in pdf["content"]:
-                got = read_parquet_int64_column(bytes(content), "doc_id")
-                if got is not None:
-                    vals.extend(got)
-            yield pd.DataFrame({"doc_id": vals})
 
-    return files.mapInPandas(read_col, "doc_id long")
+def _decode_raw_column(raw: bytes):
+    vals = read_parquet_int64_column(raw, "doc_id")
+    return None if vals is None else pd.DataFrame({"doc_id": vals})
 
 
 _RAW_DICT_ORACLE = """
@@ -2729,42 +2705,26 @@ def scan_parquet_raw_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately fall back to PLAIN mid-chunk past the dictionary size
     threshold; the reader routes each page by its declared values
     encoding, which is the point — a raw reader that only handles the
-    happy path cannot audit real files. Per-file mapInPandas, zero
-    shuffle; session-staged fixture, lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    happy path cannot audit real files."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         d.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
     out = staged_fixture_dir(spark, sf_dir, "rawdict", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
+    return scan_files(spark, "rawdict", out, "*.parquet",
+                      "doc_id long, stats_min long, stats_max long",
+                      _decode_raw_dict)
 
-    def read_col(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                vals = read_parquet_int64_column_dict(raw, "doc_id")
-                stats = read_parquet_footer_minmax(raw, "doc_id")
-                if vals is None or stats is None:
-                    continue
-                for v in vals:
-                    rows.append((v, stats[0], stats[1]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "stats_min", "stats_max"]
-            )
 
-    return files.mapInPandas(
-        read_col, "doc_id long, stats_min long, stats_max long"
-    )
+def _decode_raw_dict(raw: bytes):
+    vals = read_parquet_int64_column_dict(raw, "doc_id")
+    # a file with no rows may carry no min/max at all
+    stats = read_parquet_footer_minmax(raw, "doc_id") if vals else (0, 0)
+    if vals is None or stats is None:
+        return None
+    return pd.DataFrame({"doc_id": vals, "stats_min": stats[0],
+                         "stats_max": stats[1]})
 
 
 _RAW_TABLE_ORACLE = """
@@ -2781,14 +2741,7 @@ def scan_parquet_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     recover this table with no parquet library at all, which is the
     final form of the audit story: metadata, statistics, and now every
     byte of data, all independently re-readable. Default Spark write
-    settings (dictionary on, snappy), per-file mapInPandas, zero
-    shuffle; session-staged fixture, lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    settings (dictionary on, snappy)."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2800,32 +2753,29 @@ def scan_parquet_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = staged_fixture_dir(spark, sf_dir, "rawtable", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
+    return scan_files(spark, "rawtable", out, "*.parquet",
+                      "doc_id long, text string", _decode_raw_table)
 
-    def read_table(batches):
-        from dynamic_spark_spark.llmops.parquet_footer import (
-            parse_parquet_footer,
-        )
 
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_parquet_int64_column_dict(raw, "doc_id")
-                texts = read_parquet_binary_column(raw, "text")
-                footer = parse_parquet_footer(raw)
-                if (ids is None or texts is None or footer is None
-                        or len(ids) != footer[0]
-                        or len(texts) != footer[0]):
-                    continue  # nulls anywhere would misalign the zip
-                rows.extend(
-                    (i, t.decode("utf-8")) for i, t in zip(ids, texts)
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+def _decode_raw_table(raw: bytes):
+    ids = read_parquet_int64_column_dict(raw, "doc_id")
+    texts = read_parquet_binary_column(raw, "text")
+    if not _row_aligned(raw, ids, texts):
+        return None  # nulls anywhere would misalign the zip
+    return pd.DataFrame({"doc_id": ids,
+                         "text": [t.decode("utf-8") for t in texts]})
 
-    return files.mapInPandas(read_table, "doc_id long, text string")
+
+def _row_aligned(raw: bytes, *columns) -> bool:
+    """Alignment guard of the multi-column keys: the flat readers return
+    NON-NULL values only, so zipping columns is row-faithful iff every
+    column decoded and its length equals the footer's row count — not
+    just each other's (equal null COUNTS in different rows would
+    otherwise zip values from different source rows)."""
+    footer = parse_parquet_footer(raw)
+    return footer is not None and all(
+        c is not None and len(c) == footer[0] for c in columns
+    )
 
 
 _RAW_NUMERIC_ORACLE = """
@@ -2851,14 +2801,7 @@ def scan_parquet_raw_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     column surfaces as its exact float64 upcast so the DuckDB identity
     oracle (same CAST chain) hash-proves bit-equality. pytest covers the
     same lattice on pyarrow-written files including REQUIRED columns and
-    v2 data pages. Per-file mapInPandas, zero shuffle; session-staged
-    fixture, lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    v2 data pages."""
 
     def write(path: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -2876,45 +2819,23 @@ def scan_parquet_raw_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = staged_fixture_dir(spark, sf_dir, "rawnum", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
-
-    cols = ["l_orderkey", "l_linenumber", "l_quantity", "price_f32",
-            "is_return"]
-
-    def read_cols(batches):
-        from dynamic_spark_spark.llmops.parquet_footer import (
-            parse_parquet_footer,
-        )
-
-        for pdf in batches:
-            frames = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                got = [read_parquet_column(raw, c) for c in cols]
-                footer = parse_parquet_footer(raw)
-                if any(g is None for g in got) or footer is None:
-                    continue
-                # alignment guard: the readers return NON-NULL values
-                # only, so zipping columns is row-faithful iff every
-                # column is null-free — anchor each length to the
-                # footer's row count, not just to each other (equal
-                # null COUNTS in different rows would otherwise zip
-                # values from different source rows)
-                if any(len(g) != footer[0] for g in got):
-                    continue
-                frames.append(pd.DataFrame(dict(zip(cols, got))))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame({c: [] for c in cols})
-
-    return files.mapInPandas(
-        read_cols,
+    return scan_files(
+        spark, "rawnum", out, "*.parquet",
         "l_orderkey long, l_linenumber int, l_quantity double, "
         "price_f32 double, is_return boolean",
+        _decode_raw_numeric,
     )
+
+
+_RAW_NUMERIC_COLUMNS = ("l_orderkey", "l_linenumber", "l_quantity",
+                        "price_f32", "is_return")
+
+
+def _decode_raw_numeric(raw: bytes):
+    got = [read_parquet_column(raw, c) for c in _RAW_NUMERIC_COLUMNS]
+    if not _row_aligned(raw, *got):
+        return None
+    return pd.DataFrame(dict(zip(_RAW_NUMERIC_COLUMNS, got)))
 
 
 #: long-form identity oracle shared by the parquet and ORC nested keys
@@ -2940,8 +2861,6 @@ def explode_list_rows(ids, lists):
     hands Spark a NaN where the oracle has NULL (the r12 review
     finding) — object dtype preserves ``None`` so Arrow emits a null
     slot instead."""
-    import pandas as pd
-
     out_ids: list = []
     out_pos: list = []
     out_comp: list = []
@@ -2975,14 +2894,7 @@ def scan_parquet_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity oracle express the same bytes. The float components
     surface as their exact float64 upcast on both engines. This closes
     the r11 audit-tier gap: the one table the entire ANN/dedup tier
-    runs on is now byte-auditable end to end. Per-file mapInPandas,
-    zero shuffle; session-staged fixture, lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    runs on is now byte-auditable end to end."""
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "embeddings").select(
@@ -2996,38 +2908,20 @@ def scan_parquet_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = staged_fixture_dir(spark, sf_dir, "rawnested", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
+    return scan_files(spark, "rawnested", out, "*.parquet",
+                      "vec_id long, pos int, component double",
+                      _decode_raw_nested)
 
-    def read_nested(batches):
-        from dynamic_spark_spark.llmops.parquet_footer import (
-            parse_parquet_footer,
-        )
 
-        for pdf in batches:
-            frames = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_parquet_column(raw, "vec_id")
-                lists = read_parquet_list_column(raw, "embedding")
-                footer = parse_parquet_footer(raw)
-                if ids is None or lists is None or footer is None:
-                    continue
-                # the list reader returns one entry PER ROW (nulls
-                # included), so its length always equals the footer row
-                # count; vec_id is non-null-only and needs the anchor
-                if len(ids) != footer[0] or len(lists) != footer[0]:
-                    continue
-                frames.append(explode_list_rows(ids, lists))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield explode_list_rows([], [])
-
-    return files.mapInPandas(
-        read_nested, "vec_id long, pos int, component double"
-    )
+def _decode_raw_nested(raw: bytes):
+    ids = read_parquet_column(raw, "vec_id")
+    # the list reader returns one entry PER ROW (nulls included), so
+    # its length always equals the footer row count; vec_id is
+    # non-null-only and needs the anchor
+    lists = read_parquet_list_column(raw, "embedding")
+    if not _row_aligned(raw, ids, lists):
+        return None
+    return explode_list_rows(ids, lists)
 
 
 _RAW_TEMPORAL_ORACLE = """
@@ -3057,14 +2951,7 @@ def scan_parquet_raw_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     other writer convention
     (TIMESTAMP_MICROS/MILLIS INT64) on both Spark- and pyarrow-written
     files. With the nested tier this makes a full-lineitem raw audit
-    real — no column type in the corpus is out of scope. Per-file
-    mapInPandas, zero shuffle; session-staged fixture, lazy plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        fixture_parallelism,
-        staged_fixture_dir,
-    )
+    real — no column type in the corpus is out of scope."""
 
     def write(path: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -3083,51 +2970,24 @@ def scan_parquet_raw_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(conf, prev)
 
     out = staged_fixture_dir(spark, sf_dir, "rawtemporal", write)
-    files = spark.read.format("binaryFile").load(
-        out, pathGlobFilter="*.parquet"
-    ).select("content")
+    return scan_files(spark, "rawtemporal", out, "*.parquet",
+                      "l_orderkey long, ship_ts timestamp, ship_days int",
+                      _decode_raw_temporal)
 
-    def read_temporal(batches):
-        from dynamic_spark_spark.llmops.parquet_footer import (
-            parse_parquet_footer,
-        )
 
-        for pdf in batches:
-            frames = []
-            for content in pdf["content"]:
-                raw = bytes(content)
-                ids = read_parquet_column(raw, "l_orderkey")
-                ts_us = read_parquet_timestamp_column(raw, "ship_ts")
-                days = read_parquet_date_column(raw, "ship_date")
-                footer = parse_parquet_footer(raw)
-                if (ids is None or ts_us is None or days is None
-                        or footer is None):
-                    continue
-                # non-null-only readers: anchor every length to the
-                # footer row count so the zip stays row-faithful
-                if any(len(g) != footer[0] for g in (ids, ts_us, days)):
-                    continue
-                frames.append(pd.DataFrame({
-                    "l_orderkey": pd.Series(ids, dtype="int64"),
-                    # session tz is UTC (session.py), so naive
-                    # epoch-anchored timestamps are exact
-                    "ship_ts": pd.to_datetime(
-                        pd.Series(ts_us, dtype="int64"), unit="us"
-                    ),
-                    "ship_days": pd.Series(days, dtype="int32"),
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame({
-                    "l_orderkey": pd.Series([], dtype="int64"),
-                    "ship_ts": pd.Series([], dtype="datetime64[us]"),
-                    "ship_days": pd.Series([], dtype="int32"),
-                })
-
-    return files.mapInPandas(
-        read_temporal, "l_orderkey long, ship_ts timestamp, ship_days int"
-    )
+def _decode_raw_temporal(raw: bytes):
+    ids = read_parquet_column(raw, "l_orderkey")
+    ts_us = read_parquet_timestamp_column(raw, "ship_ts")
+    days = read_parquet_date_column(raw, "ship_date")
+    if not _row_aligned(raw, ids, ts_us, days):
+        return None
+    return pd.DataFrame({
+        "l_orderkey": pd.Series(ids, dtype="int64"),
+        # session tz is UTC (session.py), so naive epoch-anchored
+        # timestamps are exact
+        "ship_ts": pd.Series(ts_us, dtype="int64").astype("datetime64[us]"),
+        "ship_days": pd.Series(days, dtype="int32"),
+    })
 
 
 _RAW_PAGEINDEX_ORACLE = """
@@ -3156,46 +3016,41 @@ def scan_parquet_raw_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning metadata tells the truth, which is exactly what a 100-TB
     operator needs to know before trusting page skipping on a suspect
     shard. parquet-mr also writes a CRC-32 per page; the reader
-    verifies it on every page it touches (PARQUET-1539). Per-file
-    mapInPandas, zero shuffle; the only exchange carries 8 partition
-    aggregates; lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        staged_fixture_dir,
-        write_documents_by_p8_parquet,
-    )
-
+    verifies it on every page it touches (PARQUET-1539). The only
+    exchange carries 8 partition aggregates."""
     out = staged_fixture_dir(
         spark, sf_dir, "footer",
         lambda path: write_documents_by_p8_parquet(spark, sf_dir, path),
     )
-    files = spark.read.format("binaryFile").load(
-        out + "/p=*/", pathGlobFilter="*.parquet"
-    ).select("path", "content")
-
-    def audit(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                chunks = read_parquet_page_index(bytes(content), "doc_id")
-                if chunks is None:
-                    continue  # degrade: a dropped file fails the hash
-                pval = int(path.split("p=")[1].split("/")[0])
-                for ch in chunks:
-                    rows.append((pval, ch["min"], ch["max"], ch["rows"]))
-            yield pd.DataFrame(
-                rows, columns=["p", "idx_min", "idx_max", "idx_rows"]
-            )
-
-    per_chunk = files.mapInPandas(
-        audit, "p long, idx_min long, idx_max long, idx_rows long"
+    per_chunk = scan_files(
+        spark, "footer", out, "*.parquet",
+        "p long, idx_min long, idx_max long, idx_rows long",
+        _decode_pageindex, partitioned=True,
     )
     return per_chunk.groupBy("p").agg(
         F.min("idx_min").alias("idx_min"),
         F.max("idx_max").alias("idx_max"),
         F.sum("idx_rows").alias("idx_rows"),
     )
+
+
+def _decode_pageindex(raw: bytes, p: int):
+    chunks = read_parquet_page_index(raw, "doc_id")
+    if chunks is None:
+        return _no_rows(raw, ["p", "idx_min", "idx_max", "idx_rows"])
+    return pd.DataFrame(
+        [(p, ch["min"], ch["max"], ch["rows"]) for ch in chunks],
+        columns=["p", "idx_min", "idx_max", "idx_rows"],
+    )
+
+
+def _no_rows(raw: bytes, columns: list):
+    """The empty frame for a file whose footer reports 0 rows (it has
+    no index or filter to audit), else None."""
+    footer = parse_parquet_footer(raw)
+    if footer is None or footer[0]:
+        return None
+    return pd.DataFrame(columns=columns)
 
 
 _RAW_BLOOM_ORACLE = """
@@ -3222,16 +3077,8 @@ def scan_parquet_raw_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLAIN encoding, multiply-shift block pick, eight salted 32-bit
     word probes (:func:`read_parquet_bloom_filter`). The key answers
     COUNT per partition by counting the values the filter admits — a
-    single lying bitset drops the file and fails the hash. Per-file
-    mapInPandas; the only exchange carries 8 partition aggregates;
-    lazy returned plan."""
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        staged_fixture_dir,
-        write_documents_by_p8_parquet,
-    )
-
+    single lying bitset stops the scan with the file named. The only
+    exchange carries 8 partition aggregates."""
     out = staged_fixture_dir(
         spark, sf_dir, "pqbloom",
         lambda path: write_documents_by_p8_parquet(spark, sf_dir, path, {
@@ -3240,22 +3087,17 @@ def scan_parquet_raw_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             "parquet.bloom.filter.expected.ndv#doc_id": "50000",
         }),
     )
-    files = spark.read.format("binaryFile").load(
-        out + "/p=*/", pathGlobFilter="*.parquet"
-    ).select("path", "content")
-
-    def audit(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                chunks = read_parquet_bloom_filter(bytes(content), "doc_id")
-                if chunks is None:
-                    continue  # degrade: a dropped file fails the hash
-                pval = int(path.split("p=")[1].split("/")[0])
-                rows.append((pval, sum(ch["checked"] for ch in chunks)))
-            yield pd.DataFrame(rows, columns=["p", "bloom_rows"])
-
-    per_file = files.mapInPandas(audit, "p long, bloom_rows long")
+    per_file = scan_files(spark, "pqbloom", out, "*.parquet",
+                          "p long, bloom_rows long", _decode_bloom,
+                          partitioned=True)
     return per_file.groupBy("p").agg(
         F.sum("bloom_rows").alias("bloom_rows"),
     )
+
+
+def _decode_bloom(raw: bytes, p: int):
+    chunks = read_parquet_bloom_filter(raw, "doc_id")
+    if chunks is None:
+        return _no_rows(raw, ["p", "bloom_rows"])
+    return pd.DataFrame({"p": [p],
+                         "bloom_rows": [sum(ch["checked"] for ch in chunks)]})

@@ -48,6 +48,9 @@ def _uvarint_enc(v: int) -> bytes:
 
 
 def _uvarint_dec(data: bytes, pos: int) -> tuple[int, int]:
+    """The one LEB128 varint decoder (protobuf, ORC, Avro, Thrift
+    compact, parquet DELTA_BINARY_PACKED): ``(value, next_pos)``.
+    Raises ValueError on a truncated varint or one past 10 bytes."""
     out = 0
     shift = 0
     while True:
@@ -59,6 +62,12 @@ def _uvarint_dec(data: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return out, pos
         shift += 7
+
+
+def _zigzag_dec(data: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag-signed form of :func:`_uvarint_dec`."""
+    u, pos = _uvarint_dec(data, pos)
+    return (u >> 1) ^ -(u & 1), pos
 
 
 def proto_doc_bytes(doc_id: int, text: str) -> bytes:
@@ -293,13 +302,14 @@ def scan_orc_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums both the footer ``numberOfRows`` and the per-stripe row counts
     per partition value against closed-form counts — one hash match
     proves the postscript walk, the magic/compression validation, and
-    the nested StripeInformation decode together. Per-file mapInPandas;
-    the only shuffle carries 8 partition aggregates. Session-staged
-    fixture (:mod:`fixtures`), lazy returned plan."""
-    import pandas as pd
+    the nested StripeInformation decode together. The only shuffle
+    carries 8 partition aggregates."""
     from pyspark.sql import functions as F
 
-    from dynamic_spark_spark.llmops.fixtures import staged_fixture_dir
+    from dynamic_spark_spark.llmops.fixtures import (
+        scan_files,
+        staged_fixture_dir,
+    )
 
     def write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select(
@@ -310,28 +320,20 @@ def scan_orc_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).partitionBy("p").orc(path)
 
     out = staged_fixture_dir(spark, sf_dir, "orcfooter", write)
-    files = spark.read.format("binaryFile").load(
-        out + "/p=*/", pathGlobFilter="*.orc"
-    ).select("path", "content")
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                parsed = parse_orc_tail(bytes(content))
-                if parsed is None:
-                    continue
-                nrows, stripes = parsed
-                pval = int(path.split("p=")[1].split("/")[0])
-                rows.append((pval, nrows, sum(stripes)))
-            yield pd.DataFrame(
-                rows, columns=["p", "footer_rows", "stripe_rows"]
-            )
-
-    per_file = files.mapInPandas(
-        parse, "p long, footer_rows long, stripe_rows long"
-    )
+    per_file = scan_files(spark, "orcfooter", out, "*.orc",
+                          "p long, footer_rows long, stripe_rows long",
+                          _decode_orc_footer, partitioned=True)
     return per_file.groupBy("p").agg(
         F.sum("footer_rows").alias("footer_rows"),
         F.sum("stripe_rows").alias("stripe_rows"),
     )
+
+
+def _decode_orc_footer(raw: bytes, p: int):
+    import pandas as pd
+
+    parsed = parse_orc_tail(raw)
+    if parsed is None:
+        return None
+    return pd.DataFrame({"p": [p], "footer_rows": [parsed[0]],
+                         "stripe_rows": [sum(parsed[1])]})

@@ -1856,3 +1856,35 @@ def test_cc_contraction_matches_union_find_on_pathological_graphs(spark):
             r["node"]: r["comp"] for r in _cc_labels_from_pairs(pairs).collect()
         }
         assert got == want, (name, sorted(got.items())[:5], sorted(want.items())[:5])
+
+
+def test_lz4_keys_register_their_dirs_for_removal(spark, sf_dir, monkeypatch):
+    """``scan_text_lz4`` and ``sink_text_lz4`` write a fresh directory on
+    every call; each one must be registered for removal at exit, or
+    repeated runs fill the temp directory."""
+    import atexit
+    import shutil
+    import tempfile
+
+    made, registered = [], []
+    real_mkdtemp, real_register = tempfile.mkdtemp, atexit.register
+
+    def mkdtemp(*args, **kwargs):
+        path = real_mkdtemp(*args, **kwargs)
+        made.append(path)
+        return path
+
+    def register(fn, *args, **kwargs):
+        if fn is shutil.rmtree:
+            registered.append(args[0])
+        return real_register(fn, *args, **kwargs)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(atexit, "register", register)
+    q = load_all_queries()
+    for key in ("scan_text_lz4", "sink_text_lz4"):
+        made.clear()
+        q[key](spark, sf_dir)
+        lz4_dirs = [p for p in made if "lz4" in os.path.basename(p)]
+        assert len(lz4_dirs) == 1, (key, made)
+        assert lz4_dirs[0] in registered, key

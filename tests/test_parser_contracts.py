@@ -1475,6 +1475,130 @@ def test_proto_stream_walk_contract():
     assert time.monotonic() - t0 < 0.5
 
 
+def test_varint_decoders_refuse_truncated_and_oversized():
+    """The one LEB128 decoder pair (protowire) round-trips the encoder
+    and raises ValueError on a truncated varint and on one past the
+    64-bit cap (more than 10 bytes)."""
+    from dynamic_spark_spark.llmops.avro_ocf import _zigzag_encode
+    from dynamic_spark_spark.llmops.protowire import (
+        _uvarint_dec,
+        _uvarint_enc,
+        _zigzag_dec,
+    )
+
+    for v in (0, 1, 127, 128, 300, 1 << 35, (1 << 64) - 1):
+        enc = _uvarint_enc(v)
+        assert _uvarint_dec(b"x" + enc + b"y", 1) == (v, 1 + len(enc))
+    for v in (0, -1, 1, -64, 64, -(1 << 40), (1 << 62), -(1 << 63)):
+        enc = _zigzag_encode(v)
+        assert _zigzag_dec(enc, 0) == (v, len(enc))
+    truncated = _uvarint_enc(1 << 40)[:-1]
+    oversized = b"\xff" * 10 + b"\x01"
+    for dec in (_uvarint_dec, _zigzag_dec):
+        for bad in (b"", truncated, oversized):
+            with pytest.raises(ValueError):
+                dec(bad, 0)
+
+
+def _parquet_bytes(columns: dict) -> bytes:
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table(columns), buf, write_page_index=True)
+    return buf.getvalue()
+
+
+def _one_file_batch(path: str, raw: bytes):
+    import pandas as pd
+
+    return iter([pd.DataFrame({"path": [path], "content": [raw]})])
+
+
+def test_raw_scan_never_drops_a_file():
+    """The one raw-file scan (``fixtures.decode_batches``): a truncated
+    file stops the scan with an error naming the fixture and the file,
+    a file with no rows decodes to an empty frame with the dtypes the
+    key emits for rows, and ``p=`` partition values reach the decode."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.orc as po
+
+    from dynamic_spark_spark.llmops import orc_raw
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableFileError,
+        decode_batches,
+    )
+
+    temporal = {"l_orderkey": pa.int64(), "ship_ts": pa.timestamp("us"),
+                "ship_date": pa.date32()}
+    nested = {"vec_id": pa.int64(), "embedding": pa.list_(pa.float32())}
+    numeric = {"l_orderkey": pa.int64(), "l_linenumber": pa.int32(),
+               "l_quantity": pa.float64(), "price_f32": pa.float32(),
+               "is_return": pa.bool_()}
+    # (fixture, decode, schema, values, output rows, pinned dtypes)
+    cases = [
+        ("rawtemporal", pr._decode_raw_temporal, temporal,
+         [[1, 2], [0, 86_400_000_000], [0, 1]], 2,
+         ["int64", "datetime64[us]", "int32"]),
+        ("rawnested", pr._decode_raw_nested, nested,
+         [[1, 2], [[0.5], [1.5, 2.5]]], 3, ["int64", "int32", "object"]),
+        ("rawnum", pr._decode_raw_numeric, numeric,
+         [[1, 2], [1, 2], [1.0, 2.0], [0.5, 1.5], [True, False]], 2, None),
+        # an empty file may carry no footer min/max
+        ("rawdict", pr._decode_raw_dict, {"doc_id": pa.int64()}, [[5, 9]],
+         2, None),
+    ]
+    for fixture, decode, schema, values, n_out, dtypes in cases:
+        def scan(path, raw):
+            return list(decode_batches(fixture, decode, False,
+                                       _one_file_batch(path, raw)))
+
+        empty = _parquet_bytes({c: pa.array([], t) for c, t in schema.items()})
+        full = _parquet_bytes({c: pa.array(v, t)
+                               for (c, t), v in zip(schema.items(), values)})
+        (got_empty,) = scan("file:/d/part-0.parquet", empty)
+        (got_full,) = scan("file:/d/part-0.parquet", full)
+        assert len(got_empty) == 0 and len(got_full) == n_out, fixture
+        if dtypes is not None:
+            for frame in (got_empty, got_full):
+                assert [str(d) for d in frame.dtypes] == dtypes, fixture
+        for cut in (len(full) // 2, len(full) - 3):
+            with pytest.raises(UndecodableFileError,
+                               match=rf"'{fixture}'.*part-1\.parquet"):
+                scan("file:/d/part-1.parquet", full[:cut])
+
+    ids = {"doc_id": pa.array([3, 11, 19], pa.int64())}
+    (frame,) = decode_batches(
+        "footer", pr._decode_pageindex, True,
+        _one_file_batch("file:/d/p=3/part-0.parquet", _parquet_bytes(ids)),
+    )
+    assert frame.to_dict("list") == {"p": [3], "idx_min": [3],
+                                     "idx_max": [19], "idx_rows": [3]}
+    # audit keys: a file with no rows has no index or filter to audit
+    empty_ids = {"doc_id": pa.array([], pa.int64())}
+    orc_buf = io.BytesIO()
+    po.write_table(pa.table(empty_ids), orc_buf)
+    for decode, raw in ((pr._decode_pageindex, _parquet_bytes(empty_ids)),
+                        (pr._decode_bloom, _parquet_bytes(empty_ids)),
+                        (orc_raw._decode_orc_rowindex, orc_buf.getvalue())):
+        (frame,) = decode_batches(
+            "fx", decode, True, _one_file_batch("file:/d/p=3/part-0", raw)
+        )
+        assert len(frame) == 0, decode
+
+    def boom(raw):
+        raise KeyError("inner")
+
+    with pytest.raises(UndecodableFileError, match=r"'fx'.*part-9.*inner"):
+        list(decode_batches("fx", boom, False,
+                            _one_file_batch("file:/d/part-9.bin", b"")))
+
+
 def test_lz4_block_roundtrip_and_degrades():
     import os
     import time

@@ -414,6 +414,10 @@ def test_raw_bytes_walkers_zero_exchange(spark, sf_dir):
         "scan_orc_raw_nested",
         "scan_warc_http_charsets",
         "scan_orc_raw_struct",
+        "scan_parquet_raw_column",
+        "scan_parquet_raw_dict",
+        "scan_parquet_raw_table",
+        "scan_text_lz4",
     ):
         plan = _plan(q[key](spark, sf_dir))
         assert "Exchange" not in plan, f"{key}: {plan}"
@@ -421,7 +425,7 @@ def test_raw_bytes_walkers_zero_exchange(spark, sf_dir):
         # r12 (verdict order #7): the fixture-staged raw readers return
         # the LAZY binaryFile → MapInPandas pipeline itself — no eager
         # localCheckpoint pinning the decoded table in executor storage
-        if key.startswith(("scan_parquet_raw", "scan_orc")):
+        if key.startswith(("scan_parquet_raw", "scan_orc", "scan_text_lz4")):
             assert "MapInPandas" in plan, f"{key}: {plan}"
             assert "Scan binaryFile" in plan, f"{key}: {plan}"
 
@@ -433,8 +437,31 @@ def test_pageindex_audit_single_aggregate_exchange(spark, sf_dir):
     constant-size no matter how many files the corpus has."""
     q = load_all_queries()
     for key in ("scan_parquet_raw_pageindex", "scan_orc_raw_rowindex",
-                "scan_parquet_raw_bloom"):
+                "scan_parquet_raw_bloom", "scan_parquet_footer",
+                "scan_orc_footer"):
         plan = _plan(q[key](spark, sf_dir))
         assert "MapInPandas" in plan and "binaryFile" in plan, (key, plan)
         assert plan.count("Exchange") <= 2, (key, plan)  # partial+final agg
         assert "BatchEvalPython" not in plan, key
+
+
+def test_binary_file_scan_has_one_site():
+    """Every raw-format key reads its files through the one scan helper
+    (``fixtures.scan_files``), so the skip policy and the Arrow/pandas
+    exchange are decided in one place: no other module under
+    ``llmops/`` may call ``.format("binaryFile")``."""
+    import ast
+    import pathlib
+
+    import dynamic_spark_spark.llmops as llmops
+
+    sites = []
+    for path in sorted(pathlib.Path(llmops.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "format" and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == "binaryFile"):
+                sites.append(path.name)
+    assert sites == ["fixtures.py"], sites
