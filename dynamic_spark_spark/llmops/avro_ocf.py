@@ -36,6 +36,7 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dynamic_spark_spark.llmops.fixtures import require_rows
 from dynamic_spark_spark.llmops.protowire import _uvarint_enc, _zigzag_dec
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
@@ -191,6 +192,22 @@ SELECT doc_id, coalesce(text, '') AS text FROM documents
 """
 
 
+def _avro_batches(batches):
+    """The per-batch body of ``scan_avro_records``: one container per
+    batch, walked back; a walk that stops short raises
+    :class:`~dynamic_spark_spark.llmops.fixtures.UndecodableInputError`."""
+    import pandas as pd
+
+    for pdf in batches:
+        records = [
+            (int(i), t if isinstance(t, str) else "")
+            for i, t in zip(pdf["doc_id"], pdf["text"])
+        ]
+        rows = avro_ocf_walk(avro_ocf_bytes(records)) if records else []
+        yield pd.DataFrame(require_rows("scan_avro_records", pdf, rows),
+                           columns=["doc_id", "text"])
+
+
 @query("scan_avro_records", _AVRO_ORACLE, tag="scan")
 def scan_avro_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro OCF ingest — the schema-embedded format stock PySpark cannot
@@ -202,17 +219,5 @@ def scan_avro_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the binary encoding, the raw-DEFLATE block round trip, and
     the schema validation lossless per row. Per-row mapInPandas, zero
     shuffle; container-per-task mirrors how avro corpora shard."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def roundtrip(batches):
-        for pdf in batches:
-            records = [
-                (int(i), t if isinstance(t, str) else "")
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            rows = avro_ocf_walk(avro_ocf_bytes(records)) if records else []
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
-
-    return d.mapInPandas(roundtrip, "doc_id long, text string")
+    return d.mapInPandas(_avro_batches, "doc_id long, text string")

@@ -33,9 +33,11 @@ from __future__ import annotations
 
 import struct
 import zlib
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dynamic_spark_spark.llmops.fixtures import map_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -298,6 +300,21 @@ SELECT doc_id, name, CAST(method AS INT) AS method,
 FROM members
 """
 
+_ZIP_SCHEMA = (
+    "doc_id long, name string, method int, uncomp_len long, crc_ok boolean"
+)
+
+
+def _zip_rows(archive, doc_id, text):
+    """One document's member inventory from the walk of its synthesized
+    ``archive``; None when the walk does not give back the three
+    members the writer put in (the walker skips what it refuses)."""
+    members = zip_member_walk(archive(int(doc_id), text))
+    if len(members) != 3:
+        return None
+    return [(doc_id, name, method, ulen, ok)
+            for name, method, ulen, ok, _content in members]
+
 
 @query("scan_zip_members", _ZIP_ORACLE, tag="scan")
 def scan_zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,26 +329,9 @@ def scan_zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — archive-per-task is how a real cluster reads ZIP shards
     (ZIP's index-at-end makes whole-archive-per-task the correct split,
     unlike WARC's member streaming)."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = zip_archive_bytes(int(doc_id), text)
-                for name, method, ulen, crc_ok, _content in zip_member_walk(raw):
-                    rows.append((doc_id, name, method, ulen, crc_ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "name", "method", "uncomp_len", "crc_ok"],
-            )
-
-    return d.mapInPandas(
-        walk,
-        "doc_id long, name string, method int, uncomp_len long, crc_ok boolean",
-    )
+    return map_rows(d, "scan_zip_members", _ZIP_SCHEMA,
+                    partial(_zip_rows, zip_archive_bytes))
 
 
 @query("scan_zip64_members", _ZIP_ORACLE, tag="scan")
@@ -346,26 +346,9 @@ def scan_zip64_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinels exactly where APPNOTE puts the real values; stdlib
     ``zipfile`` cross-reads the synthesized archives (tests), so this is
     interoperable ZIP64, not a dialect."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = zip64_archive_bytes(int(doc_id), text)
-                for name, method, ulen, crc_ok, _c in zip_member_walk(raw):
-                    rows.append((doc_id, name, method, ulen, crc_ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "name", "method", "uncomp_len", "crc_ok"],
-            )
-
-    return d.mapInPandas(
-        walk,
-        "doc_id long, name string, method int, uncomp_len long, crc_ok boolean",
-    )
+    return map_rows(d, "scan_zip64_members", _ZIP_SCHEMA,
+                    partial(_zip_rows, zip64_archive_bytes))
 
 
 # --- tar (ustar): the other archive framing datasets ship in ---------------
@@ -539,6 +522,18 @@ SELECT doc_id, name, CAST(size AS BIGINT) AS size, TRUE AS chksum_ok
 FROM members
 """
 
+_TAR_SCHEMA = "doc_id long, name string, size long, chksum_ok boolean"
+
+
+def _tar_rows(walk, archive, doc_id, text):
+    """The tar twin of :func:`_zip_rows`: ``walk`` is the key's
+    (decompress and) tar walk; None unless it gives back all three
+    members."""
+    members = walk(archive(int(doc_id), text))
+    if len(members) != 3:
+        return None
+    return [(doc_id, name, size, ok) for name, size, _tf, ok, _c in members]
+
 
 @query("scan_tar_members", _TAR_ORACLE, tag="scan")
 def scan_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,24 +545,9 @@ def scan_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZIP's index-at-end, tar streams — so on a real cluster it splits
     like WARC (sequential member walk per file slice), which is why both
     framings exist here. Per-row mapInPandas, no shuffle."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = tar_archive_bytes(int(doc_id), text)
-                for name, size, _tf, chksum_ok, _c in tar_member_walk(raw):
-                    rows.append((doc_id, name, size, chksum_ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, name string, size long, chksum_ok boolean"
-    )
+    return map_rows(d, "scan_tar_members", _TAR_SCHEMA,
+                    partial(_tar_rows, tar_member_walk, tar_archive_bytes))
 
 
 def longname_tar_bytes(doc_id: int, text: str, fmt: str) -> bytes:
@@ -602,6 +582,19 @@ CROSS JOIN (VALUES ('gnu'), ('pax')) AS f(fmt)
 """
 
 
+def _longname_rows(doc_id, text):
+    """Both long-name dialects of one document; None unless each walk
+    gives back its one member."""
+    rows = []
+    for fmt in ("gnu", "pax"):
+        members = tar_member_walk(longname_tar_bytes(int(doc_id), text, fmt))
+        if len(members) != 1:
+            return None
+        rows += [(doc_id, fmt, name, size, ok)
+                 for name, size, _tf, ok, _c in members]
+    return rows
+
+
 @query("scan_tar_longnames", _TAR_LONGNAME_ORACLE, tag="scan")
 def scan_tar_longnames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-path tar ingest — the archive long tail real dataset tarballs
@@ -614,25 +607,11 @@ def scan_tar_longnames(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs the 134-char path) that never touches tar. Per-row
     mapInPandas, no shuffle — same archive-per-task posture as the other
     container keys."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for fmt in ("gnu", "pax"):
-                    raw = longname_tar_bytes(int(doc_id), text, fmt)
-                    for name, size, _tf, ok, _c in tar_member_walk(raw):
-                        rows.append((doc_id, fmt, name, size, ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "fmt", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk,
+    return map_rows(
+        d, "scan_tar_longnames",
         "doc_id long, fmt string, name string, size long, chksum_ok boolean",
+        _longname_rows,
     )
 
 
@@ -674,24 +653,9 @@ def scan_tgz_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ARCHIVE (one file per task), unlike gzip-member WARC where tasks
     can start at member boundaries — the reason crawl corpora frame
     per-record and dataset bundles ship many shards."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = tgz_archive_bytes(int(doc_id), text)
-                for name, size, _tf, chksum_ok, _c in tgz_member_walk(raw):
-                    rows.append((doc_id, name, size, chksum_ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, name string, size long, chksum_ok boolean"
-    )
+    return map_rows(d, "scan_tgz_members", _TAR_SCHEMA,
+                    partial(_tar_rows, tgz_member_walk, tgz_archive_bytes))
 
 
 def tbz_archive_bytes(doc_id: int, text: str) -> bytes:
@@ -735,24 +699,9 @@ def scan_tbz_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     below file granularity while .gz never does (``scan_text_bz2`` proves
     that codec path on Spark's own text source; HERE the archive is
     walked per-task like every container key)."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = tbz_archive_bytes(int(doc_id), text)
-                for name, size, _tf, chksum_ok, _c in tbz_member_walk(raw):
-                    rows.append((doc_id, name, size, chksum_ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, name string, size long, chksum_ok boolean"
-    )
+    return map_rows(d, "scan_tbz_members", _TAR_SCHEMA,
+                    partial(_tar_rows, tbz_member_walk, tbz_archive_bytes))
 
 
 def txz_archive_bytes(doc_id: int, text: str) -> bytes:
@@ -794,24 +743,9 @@ def scan_txz_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     .tgz the parallelism unit is the archive — the key documents that the
     right 100-TB layout is many shard archives, and proves the stdlib
     lzma chain under the same bomb-cap discipline as gzip/bzip2."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = txz_archive_bytes(int(doc_id), text)
-                for name, size, _tf, chksum_ok, _c in txz_member_walk(raw):
-                    rows.append((doc_id, name, size, chksum_ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, name string, size long, chksum_ok boolean"
-    )
+    return map_rows(d, "scan_txz_members", _TAR_SCHEMA,
+                    partial(_tar_rows, txz_member_walk, txz_archive_bytes))
 
 
 # --- XLSX: the office-format composition (ZIP + XML) -----------------------
@@ -956,6 +890,15 @@ SELECT doc_id, cell_ref, kind, val FROM cells
 """
 
 
+def _xlsx_rows(doc_id, text):
+    """One workbook's cells; None unless the parse gives back the four
+    cells :func:`xlsx_bytes` writes."""
+    cells = xlsx_cells(xlsx_bytes(int(doc_id), text))
+    if len(cells) != 4:
+        return None
+    return [(doc_id, ref, kind, val) for ref, kind, val in cells]
+
+
 @query("scan_xlsx_cells", _XLSX_ORACLE, tag="scan")
 def scan_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XLSX ingest — the office format every enterprise data drop
@@ -969,23 +912,10 @@ def scan_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves deflate, CRC, XML escaping, and cell typing round-trip
     together. Per-row mapInPandas, workbook-per-task (ZIP index-at-end,
     same split unit as the archive keys)."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = xlsx_bytes(int(doc_id), text)
-                for ref, kind, val in xlsx_cells(raw):
-                    rows.append((doc_id, ref, kind, val))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "cell_ref", "kind", "val"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, cell_ref string, kind string, val string"
+    return map_rows(
+        d, "scan_xlsx_cells",
+        "doc_id long, cell_ref string, kind string, val string", _xlsx_rows,
     )
 
 
@@ -1023,21 +953,6 @@ def scan_tzst_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline against genuine libzstd output, composed with the
     checksum-verified ustar walk. Same split-unit caveat as .tgz: one
     frame per archive, archive-per-task."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = tzst_archive_bytes(int(doc_id), text)
-                for name, size, _tf, chksum_ok, _c in tzst_member_walk(raw):
-                    rows.append((doc_id, name, size, chksum_ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "name", "size", "chksum_ok"]
-            )
-
-    return d.mapInPandas(
-        walk, "doc_id long, name string, size long, chksum_ok boolean"
-    )
+    return map_rows(d, "scan_tzst_members", _TAR_SCHEMA,
+                    partial(_tar_rows, tzst_member_walk, tzst_archive_bytes))

@@ -1,5 +1,5 @@
-"""Session-scoped fixture staging and the one raw-file scan for the
-raw-format audit keys.
+"""Session-scoped fixture staging and the two row bridges every
+synthesizing key runs through.
 
 The raw byte-walk keys (parquet_raw, orc_raw, parquet_footer, protowire,
 lz4_hadoop) synthesize their own input: Spark writes a table in the
@@ -18,11 +18,22 @@ keeping the write out of the returned plan is also the honest cost model.
 every such key runs through. A key supplies only its per-file decode
 (bytes, plus the ``p=`` partition value for partitioned fixtures, to a
 pandas frame) and its output schema. Each batch's per-file frames are
-joined by one ``pd.concat``. A file the decode cannot read is never
-skipped: a decode that returns None (unreadable bytes, or column lengths
-that disagree with the file's row count) or raises stops the scan with
-:class:`UndecodableFileError`, naming the fixture and the file. A file
-with no rows decodes to an empty frame.
+joined by one ``pd.concat``. A file with no rows decodes to an empty
+frame.
+
+:func:`map_rows` is the one per-row ``mapInPandas`` shell for the keys
+that build their input row by row (archives, media, WARC captures, PDFs
+synthesized from ``documents``). A key supplies its input frame, its
+output schema and a row function from one input row to a list of output
+tuples (0..n rows per input row); the output columns come from the
+schema, one frame per Arrow batch.
+
+Neither helper ever drops input silently. A file or row the key cannot
+decode — ``decode_file`` or ``row_fn`` returns None, or raises — stops
+the job with :class:`UndecodableInputError`, naming the key or fixture
+and the file or the row's ``doc_id``; the original exception is chained.
+A key that deliberately emits a row of nulls for bad input keeps that
+row: it is not dropped.
 """
 
 from __future__ import annotations
@@ -108,8 +119,8 @@ def staged_fixture_dir(spark, sf_dir: str, name: str, write) -> str:
     return path
 
 
-class UndecodableFileError(ValueError):
-    """A raw scan met a file its decoder could not read."""
+class UndecodableInputError(ValueError):
+    """A scan or row map met input its decoder could not read."""
 
 
 def scan_files(spark, fixture: str, root: str, glob: str, schema: str,
@@ -130,7 +141,7 @@ def scan_files(spark, fixture: str, root: str, glob: str, schema: str,
 def decode_batches(fixture: str, decode_file, partitioned: bool, batches):
     """The per-batch body of :func:`scan_files`: decode every file of a
     ``(path, content)`` batch and yield one frame per batch. Raises
-    :class:`UndecodableFileError` for a file whose decode raises or
+    :class:`UndecodableInputError` for a file whose decode raises or
     returns None."""
     import pandas as pd
 
@@ -143,11 +154,11 @@ def decode_batches(fixture: str, decode_file, partitioned: bool, batches):
             try:
                 frame = decode_file(*args)
             except Exception as exc:
-                raise UndecodableFileError(
+                raise UndecodableInputError(
                     f"fixture {fixture!r}: {path}: {exc!r}"
                 ) from exc
             if frame is None:
-                raise UndecodableFileError(
+                raise UndecodableInputError(
                     f"fixture {fixture!r}: {path} did not decode, or its "
                     "columns disagree with its row count"
                 )
@@ -155,3 +166,73 @@ def decode_batches(fixture: str, decode_file, partitioned: bool, batches):
         # empty frames carry no rows, only possibly looser dtypes
         yield pd.concat([f for f in frames if len(f)] or frames[:1],
                         ignore_index=True)
+
+
+def schema_columns(schema: str) -> list[str]:
+    """The top-level field names of a DDL schema string, in order
+    (commas inside ``<...>`` or ``(...)`` belong to a field's type)."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            names.append(schema[start:i].split()[0])
+            start = i + 1
+    return names
+
+
+def map_rows(df, key: str, schema: str, row_fn):
+    """Lazy ``mapInPandas`` of ``df`` into frames of ``schema``: each
+    input row, passed as ``row_fn(*row)`` in ``df``'s column order,
+    becomes the list of output tuples ``row_fn`` returns. ``key`` names
+    the input in errors (see :func:`map_batches`) and the plan's
+    ``MapInPandas`` node."""
+    body = partial(map_batches, key, schema_columns(schema), row_fn)
+    body.__name__ = key
+    return df.mapInPandas(body, schema)
+
+
+def map_batches(key: str, columns: list[str], row_fn, batches):
+    """The per-batch body of :func:`map_rows`: yield one frame of
+    ``columns`` per input batch. Raises :class:`UndecodableInputError`
+    for a row whose ``row_fn`` raises or returns None."""
+    import pandas as pd
+
+    for pdf in batches:
+        rows = []
+        for i, row in enumerate(zip(*(pdf[c] for c in pdf.columns))):
+            try:
+                out = row_fn(*row)
+            except Exception as exc:
+                raise UndecodableInputError(
+                    f"key {key!r}: {_row_name(pdf, i)}: {exc!r}"
+                ) from exc
+            if out is None:
+                raise UndecodableInputError(
+                    f"key {key!r}: {_row_name(pdf, i)} did not decode"
+                )
+            rows.extend(out)
+        # object columns: a nullable long stays exact instead of
+        # widening to float64 NaN
+        yield pd.DataFrame(rows, columns=columns, dtype=object)
+
+
+def _row_name(pdf, i: int) -> str:
+    if "doc_id" in pdf.columns:
+        return f"doc_id {pdf['doc_id'].iloc[i]}"
+    return f"row {i} of its batch"
+
+
+def require_rows(key: str, pdf, rows: list) -> list:
+    """``rows``, when a batch-at-a-time round trip of the input batch
+    ``pdf`` gave back one row per input row; otherwise
+    :class:`UndecodableInputError`, naming the key and the batch's first
+    ``doc_id``."""
+    if len(rows) != len(pdf):
+        raise UndecodableInputError(
+            f"key {key!r}: a batch of {len(pdf)} rows from "
+            f"{_row_name(pdf, 0)} decoded to {len(rows)} rows"
+        )
+    return rows

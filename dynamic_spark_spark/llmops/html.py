@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.fixtures import UndecodableInputError, map_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -493,6 +494,25 @@ def gzip_member_walk(raw: bytes, cap: int = WARC_MEMBER_CAP) -> list[bytes]:
     return out
 
 
+_WARC_SCHEMA = (
+    "doc_id long, warc_type string, target_uri string,"
+    " declared_len long, payload_len long, length_ok boolean"
+)
+
+
+def _warc_gzip_rows(doc_id, text):
+    """One document's records, walked out of its gzip-member capture;
+    None when a member does not decode as UTF-8 (refuse, don't guess)."""
+    rows = []
+    for member in gzip_member_walk(warc_gzip_blob(int(doc_id), text)):
+        try:
+            rec = member.decode("utf-8")
+        except UnicodeDecodeError:
+            return None
+        rows += [(doc_id, *r) for r in warc_walk(rec)]
+    return rows
+
+
 @query("scan_warc_gzip", _WARC_ORACLE, tag="scan")
 def scan_warc_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPRESSED WARC ingest tier — the form 100-TB crawl corpora
@@ -510,39 +530,8 @@ def scan_warc_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     work inside one Arrow-batched ``mapInPandas`` over the scan — no
     shuffle; on a real cluster this is the one-WARC-file-per-task layout,
     and per-member framing is exactly what makes that split safe."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = warc_gzip_blob(int(doc_id), text)
-                for member in gzip_member_walk(raw):
-                    try:
-                        rec = member.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue  # undecodable member: refuse, don't guess
-                    for typ, uri, dec, plen, ok in warc_walk(rec):
-                        rows.append((doc_id, typ, uri, dec, plen, ok))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "warc_type",
-                    "target_uri",
-                    "declared_len",
-                    "payload_len",
-                    "length_ok",
-                ],
-            )
-
-    return d.mapInPandas(
-        walk,
-        "doc_id long, warc_type string, target_uri string,"
-        " declared_len long, payload_len long, length_ok boolean",
-    )
+    return map_rows(d, "scan_warc_gzip", _WARC_SCHEMA, _warc_gzip_rows)
 
 
 @query("scan_warc_stream", _WARC_ORACLE, tag="scan")
@@ -556,34 +545,12 @@ def scan_warc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB agree record-for-record. Scale shape: the walk is per-row work
     inside one mapInPandas over the scan — no shuffle; on a real cluster
     this is the one-WARC-file-per-task layout."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", _warc_blob().alias("blob")
     )
-
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                for typ, uri, dec, plen, ok in warc_walk(blob):
-                    rows.append((doc_id, typ, uri, dec, plen, ok))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "warc_type",
-                    "target_uri",
-                    "declared_len",
-                    "payload_len",
-                    "length_ok",
-                ],
-            )
-
-    return d.mapInPandas(
-        walk,
-        "doc_id long, warc_type string, target_uri string,"
-        " declared_len long, payload_len long, length_ok boolean",
+    return map_rows(
+        d, "scan_warc_stream", _WARC_SCHEMA,
+        lambda doc_id, blob: [(doc_id, *r) for r in warc_walk(blob)],
     )
 
 
@@ -639,35 +606,31 @@ def pipeline_crawl_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from Common Crawl WARCs. Scale shape: the ingest half is per-row
     mapInPandas (one WARC file per task on a real cluster); the
     extraction half stays whole-stage codegen; no shuffle anywhere."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def ingest(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                page = _page_py(int(doc_id), text)
-                raw = warc_gzip_blob(int(doc_id), text, response_body=page)
-                html = None
-                for member in gzip_member_walk(raw):
-                    try:
-                        rec = member.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    parsed = warc_walk(rec)
-                    if not parsed or parsed[0][0] != "response":
-                        continue
-                    hdr_end = rec.find("\r\n\r\n")
-                    payload = rec[hdr_end + 4 : -4]
-                    http_split = payload.split("\r\n\r\n", 1)
-                    if len(http_split) == 2 and http_split[0].startswith("HTTP/1.1 200"):
-                        html = http_split[1]
-                    break
-                rows.append((doc_id, text, html))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "html"])
+    def ingest(doc_id, text):
+        page = _page_py(int(doc_id), text)
+        raw = warc_gzip_blob(int(doc_id), text, response_body=page)
+        html = None  # no decodable 200 response: a null page, not a lost row
+        for member in gzip_member_walk(raw):
+            try:
+                rec = member.decode("utf-8")
+            except UnicodeDecodeError:
+                continue
+            parsed = warc_walk(rec)
+            if not parsed or parsed[0][0] != "response":
+                continue
+            hdr_end = rec.find("\r\n\r\n")
+            payload = rec[hdr_end + 4 : -4]
+            http_split = payload.split("\r\n\r\n", 1)
+            if len(http_split) == 2 and http_split[0].startswith("HTTP/1.1 200"):
+                html = http_split[1]
+            break
+        return [(doc_id, text, html)]
 
-    recovered = d.mapInPandas(ingest, "doc_id long, text string, html string")
+    recovered = map_rows(
+        d, "pipeline_crawl_wet", "doc_id long, text string, html string", ingest
+    )
     return extract_from_html(recovered, F.col("html"))
 
 
@@ -688,8 +651,6 @@ def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pandas as pd
-
     from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
 
     d = load_table(spark, sf_dir, "documents")
@@ -700,28 +661,12 @@ def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = d.select(_warc_blob().alias("value"))
         staged.write.mode("overwrite").parquet(src)
 
-        def parse(batches):
-            for pdf in batches:
-                rows = []
-                for blob in pdf["value"]:
-                    for typ, uri, dec, plen, ok in warc_walk(blob):
-                        rows.append((typ, uri, dec, plen, ok))
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "warc_type",
-                        "target_uri",
-                        "declared_len",
-                        "payload_len",
-                        "length_ok",
-                    ],
-                )
-
         stream = file_stream(spark, src, staged.schema)
-        parsed = stream.mapInPandas(
-            parse,
+        parsed = map_rows(
+            stream, "stream_warc_ingest",
             "warc_type string, target_uri string, declared_len long,"
             " payload_len long, length_ok boolean",
+            warc_walk,
         )
         with drain_parallelism(spark, src=src):
             q = (
@@ -922,6 +867,69 @@ def _staged_docs(spark: SparkSession, sf_dir: str):
     )
 
 
+def _http_payload_batches(batches):
+    """The per-batch body of ``scan_warc_http_payloads``: one libzstd
+    call per batch for the zstd-coded rows, then every row's chunked,
+    content-coded response decoded back. A response that does not decode
+    raises :class:`UndecodableInputError`."""
+    import gzip as _gzip
+
+    import pandas as pd
+
+    from dynamic_spark_spark.llmops.zstd import zstd_compress_real_many
+
+    def chunkify(b: bytes) -> bytes:
+        out = bytearray()
+        step = 700  # several chunks per document
+        for i in range(0, len(b), step):
+            part = b[i : i + step]
+            out += f"{len(part):x}".encode() + b"\r\n" + part + b"\r\n"
+        out += b"0\r\n\r\n"
+        return bytes(out)
+
+    for pdf in batches:
+        # (doc_id, body) TUPLES, not a dict: keying by doc_id would
+        # dedup, desynchronizing the zstd_out iterator below if a
+        # duplicate id ever appeared in a batch (r11 ADVICE)
+        bodies = []
+        zstd_in = []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            body = (text if isinstance(text, str) else "").encode("utf-8")
+            bodies.append((int(doc_id), body))
+            if int(doc_id) % 3 == 2:
+                zstd_in.append(body)
+        # one libzstd batch call per Arrow batch for all zstd-coded rows
+        zstd_out = iter(zstd_compress_real_many(zstd_in, level=3))
+        rows = []
+        for doc_id, body in bodies:
+            mode = doc_id % 3
+            if mode == 1:
+                wire, enc = _gzip.compress(body, 6), "gzip"
+            elif mode == 2:
+                wire, enc = next(zstd_out), "zstd"
+            else:
+                wire, enc = body, "identity"
+            payload = (
+                b"HTTP/1.1 200 OK\r\n"
+                b"Content-Type: text/plain\r\n"
+                + f"Content-Encoding: {enc}\r\n".encode()
+                + b"Transfer-Encoding: chunked\r\n\r\n"
+                + chunkify(wire)
+            )
+            got = http_payload_decode(payload)
+            if got is None:
+                raise UndecodableInputError(
+                    f"key 'scan_warc_http_payloads': doc_id {doc_id} did not decode"
+                )
+            status, _ctype, out_body = got
+            rows.append(
+                (doc_id, status, enc, out_body.decode("utf-8"))
+            )
+        yield pd.DataFrame(
+            rows, columns=["doc_id", "status", "encoding", "text"]
+        )
+
+
 @query("scan_warc_http_payloads", _WARC_HTTP_ORACLE, tag="llm-crawl")
 def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HTTP layer inside crawl records, decoded for real: each
@@ -933,66 +941,9 @@ def scan_warc_http_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     the content coding, and the identity oracle hash-proves status
     parse, header fold, de-chunking, and both decompressors per row.
     Per-batch mapInPandas, zero shuffle."""
-    import gzip as _gzip
-
-    import pandas as pd
-
-    from dynamic_spark_spark.llmops.zstd import zstd_compress_real_many
-
-    d = _staged_docs(spark, sf_dir)
-
-    def roundtrip(batches):
-        def chunkify(b: bytes) -> bytes:
-            out = bytearray()
-            step = 700  # several chunks per document
-            for i in range(0, len(b), step):
-                part = b[i : i + step]
-                out += f"{len(part):x}".encode() + b"\r\n" + part + b"\r\n"
-            out += b"0\r\n\r\n"
-            return bytes(out)
-
-        for pdf in batches:
-            # (doc_id, body) TUPLES, not a dict: keying by doc_id would
-            # dedup, desynchronizing the zstd_out iterator below if a
-            # duplicate id ever appeared in a batch (r11 ADVICE)
-            bodies = []
-            zstd_in = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = (text if isinstance(text, str) else "").encode("utf-8")
-                bodies.append((int(doc_id), body))
-                if int(doc_id) % 3 == 2:
-                    zstd_in.append(body)
-            # one libzstd batch call per Arrow batch for all zstd-coded rows
-            zstd_out = iter(zstd_compress_real_many(zstd_in, level=3))
-            rows = []
-            for doc_id, body in bodies:
-                mode = doc_id % 3
-                if mode == 1:
-                    wire, enc = _gzip.compress(body, 6), "gzip"
-                elif mode == 2:
-                    wire, enc = next(zstd_out), "zstd"
-                else:
-                    wire, enc = body, "identity"
-                payload = (
-                    b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/plain\r\n"
-                    + f"Content-Encoding: {enc}\r\n".encode()
-                    + b"Transfer-Encoding: chunked\r\n\r\n"
-                    + chunkify(wire)
-                )
-                got = http_payload_decode(payload)
-                if got is None:
-                    continue
-                status, _ctype, out_body = got
-                rows.append(
-                    (doc_id, status, enc, out_body.decode("utf-8"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "status", "encoding", "text"]
-            )
-
-    return d.mapInPandas(
-        roundtrip, "doc_id long, status int, encoding string, text string"
+    return _staged_docs(spark, sf_dir).mapInPandas(
+        _http_payload_batches,
+        "doc_id long, status int, encoding string, text string",
     )
 
 
@@ -1257,6 +1208,69 @@ FROM (
 """
 
 
+def _charset_rows(doc_id, text, ascii_text):
+    """One document as an HTTP response in its ``doc_id % 10`` charset
+    posture, decoded back; None when the payload or its charset does not
+    decode."""
+    doc_id = int(doc_id)
+    mode = doc_id % 10
+    if mode == 0:
+        wire = text.encode("utf-8")
+        ctype = "text/plain; charset=UTF-8"
+    elif mode == 1:
+        wire = (ascii_text + _LATIN1_SUFFIX).encode("latin-1")
+        ctype = 'text/plain; charset="Latin-1"'  # alias + quotes
+    elif mode == 2:
+        wire = (ascii_text + _CP1252_SUFFIX).encode("cp1252")
+        ctype = "text/plain; charset=cp1252"
+    elif mode == 3:
+        wire = b"\xff\xfe" + text.encode("utf-16-le")
+        # header says utf-8 — the BOM must win (WHATWG order)
+        ctype = "text/plain; charset=utf-8"
+    elif mode == 4:
+        wire = (
+            '<meta charset="windows-1252"><p>'
+            + ascii_text + _CP1252_SUFFIX
+        ).encode("cp1252")
+        ctype = "text/html"  # no charset param: meta sniff
+    elif mode == 5:
+        wire = (ascii_text + _SJIS_SUFFIX).encode("shift_jis")
+        ctype = "text/plain; charset=Shift_JIS"
+    elif mode == 6:
+        wire = (
+            '<meta charset="euc-jp"><p>'
+            + ascii_text + _EUCJP_SUFFIX
+        ).encode("euc_jp")
+        ctype = "text/html"  # meta sniff resolves euc-jp
+    elif mode == 7:
+        wire = (ascii_text + _EUCKR_SUFFIX).encode("euc_kr")
+        ctype = "text/plain; charset=EUC-KR"
+    elif mode == 8:
+        wire = (ascii_text + _GBK_SUFFIX).encode("gbk")
+        ctype = 'text/plain; charset="CP936"'  # gbk alias
+    else:
+        wire = (
+            '<meta http-equiv="Content-Type" content='
+            '"text/html; charset=Big5"><p>'
+            + ascii_text + _BIG5_SUFFIX
+        ).encode("big5")
+        ctype = "text/html"  # legacy http-equiv meta form
+    payload = (
+        b"HTTP/1.1 200 OK\r\n"
+        + f"Content-Type: {ctype}\r\n".encode()
+        + f"Content-Length: {len(wire)}\r\n\r\n".encode()
+        + wire
+    )
+    got = http_payload_decode(payload)
+    if got is None:
+        return None
+    _status, content_type, body = got
+    decoded = http_charset_decode(body, content_type)
+    if decoded is None:
+        return None
+    return [(doc_id, decoded[0], decoded[1])]
+
+
 @query("scan_warc_http_charsets", _WARC_CHARSET_ORACLE, tag="llm-crawl")
 def scan_warc_http_charsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The charset layer real crawl payloads carry (r11 verdict: decoded
@@ -1278,8 +1292,6 @@ def scan_warc_http_charsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity oracle hash-proves the alias table, BOM precedence, meta
     sniff, and both single-byte decode tables per row. Per-batch
     mapInPandas, zero shuffle."""
-    import pandas as pd
-
     d = _staged_docs(spark, sf_dir).select(
         "doc_id",
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
@@ -1287,72 +1299,7 @@ def scan_warc_http_charsets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("text"), F.lit("")), "[^ -~]", ""
         ).alias("ascii_text"),
     )
-
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text, ascii_text in zip(
-                pdf["doc_id"], pdf["text"], pdf["ascii_text"]
-            ):
-                doc_id = int(doc_id)
-                mode = doc_id % 10
-                if mode == 0:
-                    wire = text.encode("utf-8")
-                    ctype = "text/plain; charset=UTF-8"
-                elif mode == 1:
-                    wire = (ascii_text + _LATIN1_SUFFIX).encode("latin-1")
-                    ctype = 'text/plain; charset="Latin-1"'  # alias + quotes
-                elif mode == 2:
-                    wire = (ascii_text + _CP1252_SUFFIX).encode("cp1252")
-                    ctype = "text/plain; charset=cp1252"
-                elif mode == 3:
-                    wire = b"\xff\xfe" + text.encode("utf-16-le")
-                    # header says utf-8 — the BOM must win (WHATWG order)
-                    ctype = "text/plain; charset=utf-8"
-                elif mode == 4:
-                    wire = (
-                        '<meta charset="windows-1252"><p>'
-                        + ascii_text + _CP1252_SUFFIX
-                    ).encode("cp1252")
-                    ctype = "text/html"  # no charset param: meta sniff
-                elif mode == 5:
-                    wire = (ascii_text + _SJIS_SUFFIX).encode("shift_jis")
-                    ctype = "text/plain; charset=Shift_JIS"
-                elif mode == 6:
-                    wire = (
-                        '<meta charset="euc-jp"><p>'
-                        + ascii_text + _EUCJP_SUFFIX
-                    ).encode("euc_jp")
-                    ctype = "text/html"  # meta sniff resolves euc-jp
-                elif mode == 7:
-                    wire = (ascii_text + _EUCKR_SUFFIX).encode("euc_kr")
-                    ctype = "text/plain; charset=EUC-KR"
-                elif mode == 8:
-                    wire = (ascii_text + _GBK_SUFFIX).encode("gbk")
-                    ctype = 'text/plain; charset="CP936"'  # gbk alias
-                else:
-                    wire = (
-                        '<meta http-equiv="Content-Type" content='
-                        '"text/html; charset=Big5"><p>'
-                        + ascii_text + _BIG5_SUFFIX
-                    ).encode("big5")
-                    ctype = "text/html"  # legacy http-equiv meta form
-                payload = (
-                    b"HTTP/1.1 200 OK\r\n"
-                    + f"Content-Type: {ctype}\r\n".encode()
-                    + f"Content-Length: {len(wire)}\r\n\r\n".encode()
-                    + wire
-                )
-                got = http_payload_decode(payload)
-                if got is None:
-                    continue
-                _status, content_type, body = got
-                decoded = http_charset_decode(body, content_type)
-                if decoded is None:
-                    continue
-                rows.append((doc_id, decoded[0], decoded[1]))
-            yield pd.DataFrame(rows, columns=["doc_id", "charset", "text"])
-
-    return d.mapInPandas(
-        roundtrip, "doc_id long, charset string, text string"
+    return map_rows(
+        d, "scan_warc_http_charsets", "doc_id long, charset string, text string",
+        _charset_rows,
     )

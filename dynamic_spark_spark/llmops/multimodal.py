@@ -23,19 +23,14 @@ the operators run against driver testdata.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.fixtures import map_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table, rebalance_for_fanout
-
-#: Arrow batch size for mapInPandas media decode — bounds worker memory at
-#: (batch_size × max_payload) regardless of total corpus size.
-DECODE_BATCH_ROWS = 256
 
 
 def with_media_columns(docs: DataFrame) -> DataFrame:
@@ -589,25 +584,15 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ENCODERS = (png_bytes, jpeg_bytes, gif_bytes, bmp_bytes)
 
-    def synth_and_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _ENCODERS[d % 4](16 + d % 97, 16 + d % 89) for d in pdf["doc_id"]
-            ]
-            parsed = [parse_image_header(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": [m for m, _, _ in parsed],
-                    "width": [w for _, w, _ in parsed],
-                    "height": [h for _, _, h in parsed],
-                }
-            )
+    def synth_and_parse(d):
+        payload = _ENCODERS[d % 4](16 + d % 97, 16 + d % 89)
+        return [(d, *parse_image_header(payload))]
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_parse, schema="doc_id long, mime string, width int, height int"
+    return map_rows(
+        docs, "multimodal_image_meta",
+        "doc_id long, mime string, width int, height int", synth_and_parse,
     )
 
 
@@ -984,23 +969,15 @@ def decode_features(mdf: DataFrame) -> DataFrame:
     """mapInPandas media decode: Arrow-batched, bounded memory, schema-stable.
 
     This is the canonical shape for 100 TB media processing: each Python
-    worker sees ``DECODE_BATCH_ROWS`` rows at a time, produces fixed-width
-    features, and the exchange stays columnar end-to-end.
+    worker sees one Arrow batch of ``(doc_id, media)`` rows at a time (the
+    session's ``maxRecordsPerBatch``), produces fixed-width features, and
+    the exchange stays columnar end-to-end.
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "features": pdf["media"].map(lambda p: decode_stub(p)),
-                }
-            )
-
-    mdf = rebalance_for_fanout(mdf, floor=4)
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    mdf.sparkSession.conf.set(conf_key, str(DECODE_BATCH_ROWS))
-    return mdf.mapInPandas(decode, schema="doc_id long, features array<double>")
+    mdf = rebalance_for_fanout(mdf.select("doc_id", "media"), floor=4)
+    return map_rows(
+        mdf, "decode_features", "doc_id long, features array<double>",
+        lambda doc_id, media: [(doc_id, decode_stub(media))],
+    )
 
 
 @query(
@@ -1133,45 +1110,35 @@ def decode_features_mixed(docs: DataFrame) -> DataFrame:
     # text corpus, at one point) is dead I/O in the key's dominant path
     docs = docs.select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(DECODE_BATCH_ROWS))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_ids, out_dec, out_feat = [], [], []
-        for pdf in batches:
-            for d in pdf["doc_id"]:
-                if d % 8 == 6:  # LZW-coded GIF stream (r9)
-                    payload = gif_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    feats = gif_pixel_features(payload)
-                    dec = "gif-real"
-                elif d % 2 == 0:
-                    payload = png_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    feats = png_pixel_features(payload)
-                    dec = "png-real"
-                elif d % 4 == 1:
-                    payload = jpeg_gray_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    feats = jpeg_pixel_features(payload)
-                    dec = "jpeg-real"
-                elif d % 8 == 3:  # baseline YCbCr 4:2:0 color stream
-                    payload = jpeg_color_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    feats = jpeg_color_pixel_features(payload)
-                    dec = "jpeg-color-real"
-                else:  # d % 8 == 7: Adobe 4-component YCCK stream (r8)
-                    payload = jpeg_cmyk_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    feats = jpeg_color_pixel_features(payload)
-                    dec = "jpeg-cmyk-real"
-                if feats is None:  # malformed payload: degrade, don't die
-                    feats, dec = decode_stub(payload), "histogram-stub"
-                out_ids.append(d)
-                out_dec.append(dec)
-                out_feat.append(feats)
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "decoder": out_dec, "features": out_feat}
-            )
-            out_ids, out_dec, out_feat = [], [], []
+    def decode(d):
+        if d % 8 == 6:  # LZW-coded GIF stream (r9)
+            payload = gif_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
+            feats = gif_pixel_features(payload)
+            dec = "gif-real"
+        elif d % 2 == 0:
+            payload = png_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
+            feats = png_pixel_features(payload)
+            dec = "png-real"
+        elif d % 4 == 1:
+            payload = jpeg_gray_bytes(8 + d % 9, 5 + d % 7, int(d))
+            feats = jpeg_pixel_features(payload)
+            dec = "jpeg-real"
+        elif d % 8 == 3:  # baseline YCbCr 4:2:0 color stream
+            payload = jpeg_color_bytes(8 + d % 9, 5 + d % 7, int(d))
+            feats = jpeg_color_pixel_features(payload)
+            dec = "jpeg-color-real"
+        else:  # d % 8 == 7: Adobe 4-component YCCK stream (r8)
+            payload = jpeg_cmyk_bytes(8 + d % 9, 5 + d % 7, int(d))
+            feats = jpeg_color_pixel_features(payload)
+            dec = "jpeg-cmyk-real"
+        if feats is None:  # malformed payload: degrade, don't die
+            feats, dec = decode_stub(payload), "histogram-stub"
+        return [(d, dec, feats)]
 
-    return docs.mapInPandas(
-        decode, schema="doc_id long, decoder string, features array<double>"
+    return map_rows(
+        docs, "multimodal_decode",
+        "doc_id long, decoder string, features array<double>", decode,
     )
 
 
@@ -1247,28 +1214,19 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-shape thumbs regardless of input size either way."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, thumbs, sizes, kinds = [], [], [], []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                if d % 2 == 0:
-                    payload = png_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
-                    thumb = resize_png_real(payload)
-                    kind = "png-real"
-                else:
-                    payload = (text or "").encode("utf-8")
-                    thumb, kind = resize_stub(payload), "byte-stub"
-                ids.append(d)
-                thumbs.append(thumb)
-                sizes.append(len(payload))
-                kinds.append(kind)
-            yield pd.DataFrame(
-                {"doc_id": ids, "thumb": thumbs, "n_bytes": sizes, "resizer": kinds}
-            )
+    def resize(d, text):
+        if d % 2 == 0:
+            payload = png_rgb_bytes(8 + d % 9, 5 + d % 7, int(d))
+            thumb, kind = resize_png_real(payload), "png-real"
+        else:
+            payload = (text or "").encode("utf-8")
+            thumb, kind = resize_stub(payload), "byte-stub"
+        return [(d, thumb, len(payload), kind)]
 
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        resize, schema="doc_id long, thumb binary, n_bytes long, resizer string"
+    return map_rows(
+        docs, "multimodal_resize",
+        "doc_id long, thumb binary, n_bytes long, resizer string", resize,
     )
 
 
@@ -1644,31 +1602,17 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields arithmetically — a hash match proves the round trip through real
     bytes. Same bounded-memory batch shape as the image path."""
 
-    def synth_and_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                wav_bytes(_WAV_RATES[d % 4], 1 + d % 2, 16, 1000 + d % 881)
-                for d in pdf["doc_id"]
-            ]
-            parsed = [parse_wav_header(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": ["audio/wav"] * len(pdf),
-                    "sample_rate": [p[0] for p in parsed],
-                    "channels": [p[1] for p in parsed],
-                    "bits": [p[2] for p in parsed],
-                    "n_samples": [p[3] for p in parsed],
-                    "duration_ms": [p[4] for p in parsed],
-                }
-            )
+    def synth_and_parse(d):
+        payload = wav_bytes(_WAV_RATES[d % 4], 1 + d % 2, 16, 1000 + d % 881)
+        return [(d, "audio/wav", *parse_wav_header(payload))]
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_parse,
-        schema="doc_id long, mime string, sample_rate int, channels int,"
+    return map_rows(
+        docs, "multimodal_audio_meta",
+        "doc_id long, mime string, sample_rate int, channels int,"
         " bits int, n_samples long, duration_ms long",
+        synth_and_parse,
     )
 
 
@@ -1732,6 +1676,32 @@ def flac_audio_features(payload: bytes):
     ]
 
 
+def _pcm_stats(synth, parse_header, decode, d: int) -> list[tuple]:
+    """The shared row of the FLAC/WAV decode keys: synthesize the doc's
+    PCM pattern in the key's container (``synth``), re-parse its header
+    and decode it, and emit integer-exact statistics of the DECODED
+    samples. A payload that does not decode gives a row of nulls —
+    corrupt synthesis would hash-mismatch the oracle, which is exactly
+    what the gate is for; degrade, don't die."""
+    import numpy as np
+
+    d = int(d)
+    payload = synth(_WAV_RATES[d % 4], 1 + d % 2, 120 + d % 97, d % 97)
+    rate, ch, _bits, n, _dur = parse_header(payload)
+    dec = decode(payload)
+    if dec is None or not rate:
+        return [(d, None, None, None, None, None, None, None)]
+    v = dec.astype(np.int64)
+    return [(d, rate, ch, n, int(v.sum()), int(np.abs(v).sum()),
+             int(v.min()), int(v.max()))]
+
+
+_PCM_STATS_SCHEMA = (
+    "doc_id long, sample_rate int, channels int, n_samples long,"
+    " sum_v long, sum_abs long, v_min long, v_max long"
+)
+
+
 _FLAC_DECODE_ORACLE = """
 WITH params AS (
   SELECT doc_id,
@@ -1772,59 +1742,13 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the codec is lossless end-to-end on every row, not
     just in pytest fixtures. Scale shape: per-row work in one
     Arrow-batched ``mapInPandas`` over the scan, no shuffle."""
-
-    def synth_and_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from dynamic_spark_spark.llmops.flac import decode_flac
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payload = flac_pcm_bytes(
-                    _WAV_RATES[d % 4], 1 + d % 2, 120 + d % 97, d % 97
-                )
-                rate, ch, _bits, n, _dur = parse_flac_header(payload)
-                dec = decode_flac(payload)
-                if dec is None or rate is None:
-                    # corrupt synthesis would hash-mismatch the oracle —
-                    # exactly what the gate is for; degrade, don't die
-                    rows.append((d, None, None, None, None, None, None, None))
-                    continue
-                v = dec.astype(np.int64)
-                rows.append(
-                    (
-                        d,
-                        rate,
-                        ch,
-                        n,
-                        int(v.sum()),
-                        int(np.abs(v).sum()),
-                        int(v.min()),
-                        int(v.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "channels",
-                    "n_samples",
-                    "sum_v",
-                    "sum_abs",
-                    "v_min",
-                    "v_max",
-                ],
-            )
+    from dynamic_spark_spark.llmops.flac import decode_flac
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_decode,
-        schema="doc_id long, sample_rate int, channels int, n_samples long,"
-        " sum_v long, sum_abs long, v_min long, v_max long",
+    return map_rows(
+        docs, "multimodal_flac_decode", _PCM_STATS_SCHEMA,
+        partial(_pcm_stats, flac_pcm_bytes, parse_flac_header, decode_flac),
     )
 
 
@@ -1837,108 +1761,43 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     to what DuckDB computes from arithmetic. Together the two keys prove
     container-invariance driver-side: compressed and uncompressed audio
     decode to the same signal. Per-row mapInPandas, no shuffle."""
-
-    def synth_and_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payload = wav_pcm_bytes(
-                    _WAV_RATES[d % 4], 1 + d % 2, 120 + d % 97, d % 97
-                )
-                rate, ch, _bits, n, _dur = parse_wav_header(payload)
-                dec = decode_wav_pcm(payload)
-                if dec is None or not rate:
-                    rows.append((d, None, None, None, None, None, None, None))
-                    continue
-                v = dec.astype(np.int64)
-                rows.append(
-                    (
-                        d,
-                        rate,
-                        ch,
-                        n,
-                        int(v.sum()),
-                        int(np.abs(v).sum()),
-                        int(v.min()),
-                        int(v.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "channels",
-                    "n_samples",
-                    "sum_v",
-                    "sum_abs",
-                    "v_min",
-                    "v_max",
-                ],
-            )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_decode,
-        schema="doc_id long, sample_rate int, channels int, n_samples long,"
-        " sum_v long, sum_abs long, v_min long, v_max long",
+    return map_rows(
+        docs, "multimodal_wav_decode", _PCM_STATS_SCHEMA,
+        partial(_pcm_stats, wav_pcm_bytes, parse_wav_header, decode_wav_pcm),
     )
 
 
-def _raster_stats_rows(pdf: "pd.DataFrame", synth_decode) -> list[tuple]:
+def _raster_stats(synth_decode, d: int) -> list[tuple]:
     """Shared stat extraction for the oracle-proven raster keys: decode
-    each doc's synthesized image and emit integer-exact channel sums plus
+    the doc's synthesized image and emit integer-exact channel sums plus
     a position-weighted checksum (``Σ (y·w+x+1)·(r+2g+3b)``) — the term
     that catches a decoder returning the right pixel MULTISET in the
     wrong ORDER (e.g. a broken de-interlace)."""
     import numpy as np
 
-    rows = []
-    for d in pdf["doc_id"]:
-        d = int(d)
-        px = synth_decode(d)
-        if px is None:
-            rows.append((d, None, None, None, None, None, None))
-            continue
-        arr = np.asarray(px, dtype=np.int64)
-        h, w = arr.shape[:2]
-        weights = np.arange(1, h * w + 1, dtype=np.int64)
-        mix = (arr[..., 0] + 2 * arr[..., 1] + 3 * arr[..., 2]).reshape(-1)
-        rows.append(
-            (
-                d,
-                w,
-                h,
-                int(arr[..., 0].sum()),
-                int(arr[..., 1].sum()),
-                int(arr[..., 2].sum()),
-                int(np.dot(weights, mix)),
-            )
-        )
-    return rows
+    d = int(d)
+    px = synth_decode(d)
+    if px is None:
+        return [(d, None, None, None, None, None, None)]
+    arr = np.asarray(px, dtype=np.int64)
+    h, w = arr.shape[:2]
+    weights = np.arange(1, h * w + 1, dtype=np.int64)
+    mix = (arr[..., 0] + 2 * arr[..., 1] + 3 * arr[..., 2]).reshape(-1)
+    return [(d, w, h, int(arr[..., 0].sum()), int(arr[..., 1].sum()),
+             int(arr[..., 2].sum()), int(np.dot(weights, mix)))]
 
 
-_RASTER_SCHEMA = (
-    "doc_id long, width int, height int,"
-    " sum_r long, sum_g long, sum_b long, pos_checksum long"
-)
-_RASTER_COLS = ["doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "pos_checksum"]
-
-
-def _raster_key(docs: DataFrame, synth_decode) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                _raster_stats_rows(pdf, synth_decode), columns=_RASTER_COLS
-            )
-
-    docs = docs.select("doc_id")
+def _raster_key(spark: SparkSession, sf_dir: str, key: str, synth_decode):
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(run, schema=_RASTER_SCHEMA)
+    return map_rows(
+        docs, key,
+        "doc_id long, width int, height int,"
+        " sum_r long, sum_g long, sum_b long, pos_checksum long",
+        partial(_raster_stats, synth_decode),
+    )
 
 
 _GIF_DECODE_ORACLE = """
@@ -1986,7 +1845,7 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth_decode(d: int):
         return decode_gif_pixels(gif_rgb_bytes(8 + d % 9, 5 + d % 7, d))
 
-    return _raster_key(load_table(spark, sf_dir, "documents"), synth_decode)
+    return _raster_key(spark, sf_dir, "multimodal_gif_decode", synth_decode)
 
 
 _PNG_DECODE_ORACLE = """
@@ -2025,7 +1884,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth_decode(d: int):
         return decode_png_rgb(png_rgb_bytes(8 + d % 9, 5 + d % 7, d))
 
-    return _raster_key(load_table(spark, sf_dir, "documents"), synth_decode)
+    return _raster_key(spark, sf_dir, "multimodal_png_decode", synth_decode)
 
 
 _BMP_DECODE_ORACLE = _PNG_DECODE_ORACLE  # same closed-form pixel pattern
@@ -2049,7 +1908,7 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return decode_bmp_rgb(encode_bmp_rgb(rows, top_down=(d % 2 == 1)))
 
-    return _raster_key(load_table(spark, sf_dir, "documents"), synth_decode)
+    return _raster_key(spark, sf_dir, "multimodal_bmp_decode", synth_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -2373,35 +2232,20 @@ def demux_keyframes(docs_with_mp4: DataFrame, media_col: str = "media") -> DataF
     through a real Spark session on synthesized containers."""
     import hashlib
 
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, nk, kb, dg = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[media_col]):
-                samples = parse_mp4_samples(bytes(payload) if payload is not None else None)
-                ids.append(doc_id)
-                if samples is None:
-                    ns.append(None), nk.append(None), kb.append(None), dg.append(None)
-                    continue
-                keys = [payload[o : o + s] for o, s, k, _ in samples if k]
-                ns.append(len(samples))
-                nk.append(len(keys))
-                kb.append(sum(len(k) for k in keys))
-                h = hashlib.sha256(b"".join(keys)).digest()
-                dg.append(int.from_bytes(h[:8], "big", signed=True))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    "n_keyframes": pd.array(nk, dtype="Int64"),
-                    "keyframe_bytes": pd.array(kb, dtype="Int64"),
-                    "kf_digest": pd.array(dg, dtype="Int64"),
-                }
-            )
+    def demux(doc_id, payload):
+        samples = parse_mp4_samples(bytes(payload) if payload is not None else None)
+        if samples is None:
+            return [(doc_id, None, None, None, None)]
+        keys = [payload[o : o + s] for o, s, k, _ in samples if k]
+        h = hashlib.sha256(b"".join(keys)).digest()
+        return [(doc_id, len(samples), len(keys), sum(len(k) for k in keys),
+                 int.from_bytes(h[:8], "big", signed=True))]
 
-    return docs_with_mp4.select("doc_id", media_col).mapInPandas(
-        demux,
-        schema="doc_id long, n_samples long, n_keyframes long,"
+    return map_rows(
+        docs_with_mp4.select("doc_id", media_col), "demux_keyframes",
+        "doc_id long, n_samples long, n_keyframes long,"
         " keyframe_bytes long, kf_digest long",
+        demux,
     )
 
 
@@ -2427,30 +2271,21 @@ def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes each field arithmetically, so a hash match proves the full
     synthesize → serialize → parse round trip."""
 
-    def synth_and_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                ts = _MP4_TIMESCALES[d % 4]
-                payload = mp4_bytes(
-                    ts, 5 + d % 26, 320 + (d % 8) * 160, 180 + (d % 8) * 90
-                )
-                brand, timescale, _dur, dur_ms, w, h = parse_mp4_header(payload)
-                rows.append((d, "video/mp4", brand, timescale, dur_ms, w, h))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "brand", "timescale",
-                    "duration_ms", "width", "height",
-                ],
-            )
+    def synth_and_parse(d):
+        payload = mp4_bytes(
+            _MP4_TIMESCALES[d % 4], 5 + d % 26,
+            320 + (d % 8) * 160, 180 + (d % 8) * 90,
+        )
+        brand, timescale, _dur, dur_ms, w, h = parse_mp4_header(payload)
+        return [(d, "video/mp4", brand, timescale, dur_ms, w, h)]
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_parse,
-        schema="doc_id long, mime string, brand string, timescale int,"
+    return map_rows(
+        docs, "multimodal_video_meta",
+        "doc_id long, mime string, brand string, timescale int,"
         " duration_ms long, width int, height int",
+        synth_and_parse,
     )
 
 
@@ -2549,45 +2384,27 @@ def multimodal_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ulaw_encode,
     )
 
-    def synth_and_compand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n, seed = 120 + d % 97, d % 97
-                v = (
-                    (seed * 31 + np.arange(n, dtype=np.int64) * 7) % 65536
-                ) - 32768
-                v16 = v.astype(np.int16)
-                for law, enc, dec in (
-                    ("ulaw", ulaw_encode, ulaw_decode),
-                    ("alaw", alaw_encode, alaw_decode),
-                ):
-                    out = dec(enc(v16)).astype(np.int64)
-                    rows.append(
-                        (
-                            d,
-                            law,
-                            n,
-                            int(out.sum()),
-                            int(np.abs(out).sum()),
-                            int(out.min()),
-                            int(out.max()),
-                            int(np.abs(v - out).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "law", "n_samples", "sum_dec", "sum_abs_dec",
-                    "dec_min", "dec_max", "sum_abs_err",
-                ],
-            )
+    def synth_and_compand(d):
+        d = int(d)
+        n, seed = 120 + d % 97, d % 97
+        v = ((seed * 31 + np.arange(n, dtype=np.int64) * 7) % 65536) - 32768
+        v16 = v.astype(np.int16)
+        rows = []
+        for law, enc, dec in (
+            ("ulaw", ulaw_encode, ulaw_decode),
+            ("alaw", alaw_encode, alaw_decode),
+        ):
+            out = dec(enc(v16)).astype(np.int64)
+            rows.append((d, law, n, int(out.sum()), int(np.abs(out).sum()),
+                         int(out.min()), int(out.max()),
+                         int(np.abs(v - out).sum())))
+        return rows
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = rebalance_for_fanout(docs, floor=4)
-    return docs.mapInPandas(
-        synth_and_compand,
-        schema="doc_id long, law string, n_samples long, sum_dec long,"
+    return map_rows(
+        docs, "multimodal_g711_decode",
+        "doc_id long, law string, n_samples long, sum_dec long,"
         " sum_abs_dec long, dec_min long, dec_max long, sum_abs_err long",
+        synth_and_compand,
     )

@@ -34,6 +34,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.fixtures import map_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -545,28 +546,21 @@ def scan_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a non-ASCII corpus). Per-row mapInPandas, no shuffle;
     document-per-task is the natural 100-TB unit for PDF (self-contained
     object graph, like ZIP's index-at-end)."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text").where(
         ~F.coalesce(F.col("text"), F.lit("")).rlike("[^\\x00-\\xFF]")
     )
 
-    def synth_and_extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                try:
-                    raw = pdf_bytes(int(doc_id), text)
-                except (UnicodeEncodeError, ValueError):
-                    rows.append((doc_id, None, None))
-                    continue
-                res = pdf_text_extract(raw)
-                if res is None:
-                    rows.append((doc_id, None, None))
-                else:
-                    rows.append((doc_id, res[0], res[1]))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_pages", "text"])
+    def synth_and_extract(doc_id, text):
+        try:
+            raw = pdf_bytes(int(doc_id), text)
+        except (UnicodeEncodeError, ValueError):
+            return [(doc_id, None, None)]  # a null row, not a lost one
+        res = pdf_text_extract(raw)
+        if res is None:
+            return [(doc_id, None, None)]
+        return [(doc_id, res[0], res[1])]
 
-    return d.mapInPandas(
-        synth_and_extract, "doc_id long, n_pages int, text string"
+    return map_rows(
+        d, "scan_pdf_text", "doc_id long, n_pages int, text string",
+        synth_and_extract,
     )

@@ -28,6 +28,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dynamic_spark_spark.llmops.fixtures import require_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -166,6 +167,24 @@ FROM documents
 """
 
 
+def _proto_batches(batches):
+    """The per-batch body of ``scan_protobuf_stream``: one message
+    stream per batch, walked back; a walk that stops short raises
+    :class:`~dynamic_spark_spark.llmops.fixtures.UndecodableInputError`."""
+    import pandas as pd
+
+    for pdf in batches:
+        records = [
+            (int(i), t if isinstance(t, str) else "")
+            for i, t in zip(pdf["doc_id"], pdf["text"])
+        ]
+        rows = proto_stream_walk(proto_stream_bytes(records))
+        yield pd.DataFrame(
+            require_rows("scan_protobuf_stream", pdf, rows),
+            columns=["doc_id", "text", "n_chars", "score", "flag32"],
+        )
+
+
 @query("scan_protobuf_stream", _PROTO_ORACLE, tag="scan")
 def scan_protobuf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Protobuf wire-format ingest: each Arrow batch of documents is
@@ -178,23 +197,9 @@ def scan_protobuf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned separately in pytest (injected alien fields must not move
     any known value). Per-row mapInPandas, zero shuffle — the event-bus
     archive shape."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def roundtrip(batches):
-        for pdf in batches:
-            records = [
-                (int(i), t if isinstance(t, str) else "")
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            rows = proto_stream_walk(proto_stream_bytes(records))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "n_chars", "score", "flag32"]
-            )
-
     return d.mapInPandas(
-        roundtrip,
+        _proto_batches,
         "doc_id long, text string, n_chars long, score double, flag32 long",
     )
 

@@ -10,6 +10,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.fixtures import map_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -1113,29 +1114,18 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     native ``nfc_normalize`` — two INDEPENDENT Unicode implementations
     that must agree on the composed string, its codepoint length, and
     the composition count, row by row. Per-row map work, no shuffle."""
-    import pandas as pd
     import unicodedata
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def normalize(batches):
-        for pdf in batches:
-            raw = [
-                (t or "").replace("e", "e\u0301") for t in pdf["text"]
-            ]
-            nfc = [unicodedata.normalize("NFC", r) for r in raw]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "nfc_text": nfc,
-                    "raw_len": [len(r) for r in raw],
-                    "nfc_len": [len(n) for n in nfc],
-                    "n_composed": [len(r) - len(n) for r, n in zip(raw, nfc)],
-                }
-            )
+    def normalize(doc_id, text):
+        raw = (text or "").replace("e", "e\u0301")
+        nfc = unicodedata.normalize("NFC", raw)
+        return [(doc_id, nfc, len(raw), len(nfc), len(raw) - len(nfc))]
 
-    return d.mapInPandas(
-        normalize,
+    return map_rows(
+        d, "text_unicode_nfc",
         "doc_id long, nfc_text string, raw_len long, nfc_len long,"
         " n_composed long",
+        normalize,
     )

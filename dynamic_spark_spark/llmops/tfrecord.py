@@ -30,6 +30,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dynamic_spark_spark.llmops.fixtures import map_rows, require_rows
 from dynamic_spark_spark.registry import query
 from dynamic_spark_spark.sources.readers import load_table
 
@@ -115,6 +116,29 @@ SELECT doc_id,
 FROM documents
 """
 
+_TFRECORD_SCHEMA = "doc_id long, rec_len long, crc_ok boolean, text string"
+
+
+def _tfrecord_batches(batches):
+    """The per-batch body of ``scan_tfrecord``: one TFRecord stream per
+    batch, walked back; a walk that stops short raises
+    :class:`~dynamic_spark_spark.llmops.fixtures.UndecodableInputError`."""
+    import pandas as pd
+
+    for pdf in batches:
+        payloads = [
+            (t if isinstance(t, str) else "").encode("utf-8")
+            for t in pdf["text"]
+        ]
+        walk = require_rows(
+            "scan_tfrecord", pdf, tfrecord_walk(tfrecord_bytes(payloads))
+        )
+        rows = [
+            (int(doc_id), length, crc_ok, data.decode("utf-8"))
+            for (_off, length, crc_ok, data), doc_id in zip(walk, pdf["doc_id"])
+        ]
+        yield pd.DataFrame(rows, columns=["doc_id", "rec_len", "crc_ok", "text"])
+
 
 @query("scan_tfrecord", _TFRECORD_ORACLE, tag="scan")
 def scan_tfrecord(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,30 +155,8 @@ def scan_tfrecord(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``octet_length(encode(...))``), so a non-ASCII corpus stays green
     (r10 ADVICE). Per-row mapInPandas, no shuffle; shard-per-task is exactly
     how a cluster reads `.tfrecord-NNNNN-of-MMMMM` layouts."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def roundtrip(batches):
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            payloads = [
-                (t if isinstance(t, str) else "").encode("utf-8")
-                for t in pdf["text"]
-            ]
-            stream = tfrecord_bytes(payloads)
-            rows = []
-            for (off, length, crc_ok, data), doc_id in zip(
-                tfrecord_walk(stream), ids
-            ):
-                rows.append((doc_id, length, crc_ok, data.decode("utf-8")))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rec_len", "crc_ok", "text"]
-            )
-
-    return d.mapInPandas(
-        roundtrip, "doc_id long, rec_len long, crc_ok boolean, text string"
-    )
+    return d.mapInPandas(_tfrecord_batches, _TFRECORD_SCHEMA)
 
 
 _TFRECORD_STREAM_ORACLE = """
@@ -210,21 +212,16 @@ def stream_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = d.mapInPandas(stage, "value binary")
         staged.write.mode("overwrite").parquet(src)
 
-        def parse(batches):
-            for pdf in batches:
-                rows = []
-                for blob in pdf["value"]:
-                    for _off, length, crc_ok, data in tfrecord_walk(bytes(blob)):
-                        txt = data.decode("utf-8")
-                        did, _, body = txt.partition("|")
-                        rows.append((int(did), length, crc_ok, body))
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "rec_len", "crc_ok", "text"]
-                )
+        def parse(blob):
+            rows = []
+            for _off, length, crc_ok, data in tfrecord_walk(bytes(blob)):
+                did, _, body = data.decode("utf-8").partition("|")
+                rows.append((int(did), length, crc_ok, body))
+            return rows
 
         stream = file_stream(spark, src, staged.schema)
-        parsed = stream.mapInPandas(
-            parse, "doc_id long, rec_len long, crc_ok boolean, text string"
+        parsed = map_rows(
+            stream, "stream_tfrecord_ingest", _TFRECORD_SCHEMA, parse
         )
         with drain_parallelism(spark, src=src):
             q = (

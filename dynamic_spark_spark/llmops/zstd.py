@@ -1321,6 +1321,7 @@ def _decode_sequences(data: bytes, lits: bytes, out: bytearray,
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from dynamic_spark_spark.llmops.fixtures import require_rows  # noqa: E402
 from dynamic_spark_spark.registry import query  # noqa: E402
 from dynamic_spark_spark.sources.readers import load_table  # noqa: E402
 
@@ -1425,6 +1426,30 @@ def zstd_compress_real(data: bytes, level: int = 3) -> bytes:
     return zstd_compress_real_many([data], level)[0]
 
 
+def _zst_batches(batches):
+    """The per-batch body of ``scan_text_zst``: one newline-framed shard
+    per batch through libzstd and back. A shard that does not decode, or
+    decodes to a different number of lines than it was written with,
+    raises ``UndecodableInputError``."""
+    import pandas as pd
+
+    for pdf in batches:
+        lines = "".join(
+            f"{int(i)}|{t}\n" for i, t in zip(pdf["doc_id"], pdf["text"])
+        ).encode("utf-8")
+        frame = zstd_compress_real(lines, level=9)
+        # concat-aware decode: real .jsonl.zst shards are often
+        # MULTI-frame (pzstd splits input across frames)
+        back = zstd_decompress_concat(frame)
+        rows = []
+        if back is not None:
+            for line in back.decode("utf-8").splitlines():
+                did, _, text = line.partition("|")
+                rows.append((int(did), text))
+        yield pd.DataFrame(require_rows("scan_text_zst", pdf, rows),
+                           columns=["doc_id", "text"])
+
+
 @query("scan_text_zst", _ZST_TEXT_ORACLE, tag="scan")
 def scan_text_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``.zst`` text-shard round trip against REAL libzstd output: each
@@ -1440,31 +1465,12 @@ def scan_text_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     gzip — one frame is one decode unit, so corpora shard by file,
     exactly how the key processes them. Per-batch mapInPandas, zero
     shuffle."""
-    import pandas as pd
-
     d = load_table(spark, sf_dir, "documents").where(
         ~F.col("text").contains("|")
         & ~F.col("text").contains("\n")
         & ~F.col("text").contains("\r")
     ).select("doc_id", "text")
-
-    def roundtrip(batches):
-        for pdf in batches:
-            lines = "".join(
-                f"{int(i)}|{t}\n" for i, t in zip(pdf["doc_id"], pdf["text"])
-            ).encode("utf-8")
-            frame = zstd_compress_real(lines, level=9)
-            # concat-aware decode: real .jsonl.zst shards are often
-            # MULTI-frame (pzstd splits input across frames)
-            back = zstd_decompress_concat(frame)
-            rows = []
-            if back is not None:
-                for line in back.decode("utf-8").splitlines():
-                    did, _, text = line.partition("|")
-                    rows.append((int(did), text))
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
-
-    return d.mapInPandas(roundtrip, "doc_id long, text string")
+    return d.mapInPandas(_zst_batches, "doc_id long, text string")
 
 
 # ---------------------------------------------------------------------------

@@ -178,8 +178,9 @@ def main() -> None:
         "its first batch, and 32-way state over kilobyte streams was pure",
         "setup cost (stream_session_live 5.4 s -> 1.6 s, identical",
         "output). The Python datasource keys stay untrimmed: their cost",
-        "IS the operator under test (a per-row Python source). Current",
-        "per-key totals: artifacts/verify_times.json.",
+        "IS the operator under test (a per-row Python source).",
+        "`scripts/verify_all.py` writes the per-key totals to",
+        "artifacts/verify_times.json; the file is not committed.",
         "",
         "| category | query key | check | implementation |",
         "|---|---|---|---|",

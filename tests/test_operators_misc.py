@@ -70,6 +70,24 @@ def test_multimodal_decode_shape(spark, sf_dir):
     assert all(abs(sum(f) - 1.0) < 1e-9 for f in pdf["features"] if sum(f) > 0)
 
 
+
+def test_multimodal_decode_leaves_session_conf_alone(spark, sf_dir):
+    """Building the media decode keys leaves the session's Arrow batch
+    size alone: a session-wide set there used to change the batch size
+    of every Arrow key that ran after ``multimodal_decode``."""
+    from dynamic_spark_spark.llmops.multimodal import multimodal_decode
+
+    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, "4321")
+    try:
+        multimodal_decode(spark, sf_dir)
+        docs = load_table(spark, sf_dir, "documents")
+        decode_features(with_media_columns(docs))
+        assert spark.conf.get(conf_key) == "4321"
+    finally:
+        spark.conf.set(conf_key, prev)
+
 def test_image_header_parse_roundtrip():
     """parse_image_header recovers the exact dimensions encoded by the
     PNG/JPEG byte synthesizers — the parser reads real format structure

@@ -1530,7 +1530,7 @@ def test_raw_scan_never_drops_a_file():
     from dynamic_spark_spark.llmops import orc_raw
     from dynamic_spark_spark.llmops import parquet_raw as pr
     from dynamic_spark_spark.llmops.fixtures import (
-        UndecodableFileError,
+        UndecodableInputError,
         decode_batches,
     )
 
@@ -1568,7 +1568,7 @@ def test_raw_scan_never_drops_a_file():
             for frame in (got_empty, got_full):
                 assert [str(d) for d in frame.dtypes] == dtypes, fixture
         for cut in (len(full) // 2, len(full) - 3):
-            with pytest.raises(UndecodableFileError,
+            with pytest.raises(UndecodableInputError,
                                match=rf"'{fixture}'.*part-1\.parquet"):
                 scan("file:/d/part-1.parquet", full[:cut])
 
@@ -1594,10 +1594,176 @@ def test_raw_scan_never_drops_a_file():
     def boom(raw):
         raise KeyError("inner")
 
-    with pytest.raises(UndecodableFileError, match=r"'fx'.*part-9.*inner"):
+    with pytest.raises(UndecodableInputError, match=r"'fx'.*part-9.*inner"):
         list(decode_batches("fx", boom, False,
                             _one_file_batch("file:/d/part-9.bin", b"")))
 
+
+
+def test_row_map_never_drops_a_row():
+    """The one per-row map (``fixtures.map_batches``): a row whose
+    ``row_fn`` returns None or raises stops the map with an error naming
+    the key and the row's doc_id, the cause chained; ``[]`` is a row
+    with no output; fan-out keeps order; a 0-row batch gives an empty
+    frame with the schema's columns."""
+    import pandas as pd
+
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        map_batches,
+        schema_columns,
+    )
+
+    assert schema_columns(
+        "doc_id long, v array<double>, p decimal(10,2), m map<string,int>"
+    ) == ["doc_id", "v", "p", "m"]
+    cols = schema_columns("doc_id long, n long")
+    batch = pd.DataFrame({"doc_id": [7, 8, 9], "text": ["a", "bb", "ccc"]})
+
+    def run(row_fn, pdf=batch):
+        return list(map_batches("k", cols, row_fn, iter([pdf])))
+
+    (frame,) = run(lambda d, t: [(d, i) for i in range(len(t))])
+    assert frame.values.tolist() == [[7, 0], [8, 0], [8, 1], [9, 0],
+                                     [9, 1], [9, 2]]
+    (frame,) = run(lambda d, t: [] if d == 8 else [(d, len(t))])
+    assert frame.values.tolist() == [[7, 1], [9, 3]]
+    (frame,) = run(lambda d, t: None, batch.iloc[:0])
+    assert list(frame.columns) == cols and len(frame) == 0
+    # a nullable long stays exact (no float64 NaN widening)
+    big = (1 << 62) + 1
+    (frame,) = run(lambda d, t: [(d, None if d == 7 else big)])
+    assert frame["n"].tolist() == [None, big, big]
+
+    with pytest.raises(UndecodableInputError, match=r"'k'.*doc_id 8 did not"):
+        run(lambda d, t: None if d == 8 else [(d, 0)])
+
+    def boom(d, t):
+        if d == 9:
+            raise KeyError("inner")
+        return [(d, 0)]
+
+    with pytest.raises(UndecodableInputError,
+                       match=r"'k'.*doc_id 9.*inner") as err:
+        run(boom)
+    assert isinstance(err.value.__cause__, KeyError)
+    # an input without doc_id is named by the row's position
+    with pytest.raises(UndecodableInputError, match=r"row 1 of its batch"):
+        run(lambda v: None if v == "b" else [],
+            pd.DataFrame({"value": ["a", "b"]}))
+
+
+def test_archive_keys_refuse_a_short_walk(monkeypatch):
+    """The archive walkers skip a member they refuse and never raise, so
+    each archive key checks its walk against the members its own writer
+    put in: a walk that comes back short stops the key, naming it and
+    the doc_id."""
+    from functools import partial
+
+    import pandas as pd
+
+    from dynamic_spark_spark.llmops import containers as c
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        map_batches,
+    )
+
+    def tar_keys():
+        return [(getattr(c, f"{k}_member_walk"),
+                 getattr(c, f"{k}_archive_bytes"))
+                for k in ("tar", "tgz", "tbz", "txz", "tzst")]
+
+    for archive in (c.zip_archive_bytes, c.zip64_archive_bytes):
+        assert len(c._zip_rows(archive, 5, "hello")) == 3
+    for walk, archive in tar_keys():
+        assert len(c._tar_rows(walk, archive, 5, "hello")) == 3
+    assert len(c._longname_rows(5, "hello")) == 2
+    assert len(c._xlsx_rows(5, "hello")) == 4
+
+    # the last member skipped: a zip's half.txt, an xlsx's worksheet
+    real_zip, real_tar = c.zip_member_walk, c.tar_member_walk
+    monkeypatch.setattr(c, "zip_member_walk", lambda raw: real_zip(raw)[:-1])
+    monkeypatch.setattr(c, "tar_member_walk",
+                        lambda raw, cap=None: real_tar(raw)[:-1])
+    for archive in (c.zip_archive_bytes, c.zip64_archive_bytes):
+        assert c._zip_rows(archive, 5, "hello") is None
+    for walk, archive in tar_keys():
+        assert c._tar_rows(walk, archive, 5, "hello") is None
+    assert c._longname_rows(5, "hello") is None
+    assert c._xlsx_rows(5, "hello") is None
+    batch = pd.DataFrame({"doc_id": [4, 5], "text": ["hi", "hello"]})
+    with pytest.raises(UndecodableInputError,
+                       match=r"'scan_zip_members'.*doc_id 4"):
+        list(map_batches("scan_zip_members", ["doc_id"],
+                         partial(c._zip_rows, c.zip_archive_bytes),
+                         iter([batch])))
+
+
+def test_crawl_keys_refuse_an_undecodable_row(monkeypatch):
+    """The WARC/HTTP keys used to skip a capture whose gzip member,
+    HTTP payload or charset did not decode; now the row function
+    returns None (or the batch body raises) and the key stops."""
+    import pandas as pd
+
+    from dynamic_spark_spark.llmops import html
+    from dynamic_spark_spark.llmops.fixtures import UndecodableInputError
+
+    batch = pd.DataFrame({"doc_id": [3, 4, 5], "text": ["a b", "", "c"]})
+    assert len(html._warc_gzip_rows(4, "hello")) == 3
+    for d in range(10):
+        assert len(html._charset_rows(d, "héllo", "hllo")) == 1
+    (frame,) = html._http_payload_batches(iter([batch]))
+    assert frame["text"].tolist() == ["a b", "", "c"]
+
+    real_gzip = html.gzip_member_walk
+    monkeypatch.setattr(html, "gzip_member_walk",
+                        lambda raw: [b"\xff\xfe"] + real_gzip(raw))
+    assert html._warc_gzip_rows(4, "hello") is None
+    monkeypatch.setattr(html, "http_charset_decode", lambda body, ct: None)
+    assert html._charset_rows(0, "hello", "hello") is None
+    monkeypatch.setattr(html, "http_payload_decode", lambda raw: None)
+    assert html._charset_rows(0, "hello", "hello") is None
+    with pytest.raises(UndecodableInputError,
+                       match=r"'scan_warc_http_payloads'.*doc_id 3"):
+        list(html._http_payload_batches(iter([batch])))
+
+
+def test_batch_round_trips_refuse_a_short_walk(monkeypatch):
+    """The four keys that encode a whole Arrow batch into one stream and
+    walk it back (avro, protobuf, TFRecord, zstd text) raise when the
+    walk returns fewer rows than the batch wrote: a walker that stops at
+    bad framing returns what it decoded so far, and a zstd shard that
+    does not decode used to give an empty frame for the whole batch."""
+    import pandas as pd
+
+    from dynamic_spark_spark.llmops import avro_ocf, protowire, tfrecord, zstd
+    from dynamic_spark_spark.llmops.fixtures import UndecodableInputError
+
+    batch = pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a", "bb", "c"]})
+    cases = [
+        (avro_ocf, "avro_ocf_walk", avro_ocf._avro_batches,
+         "scan_avro_records"),
+        (protowire, "proto_stream_walk", protowire._proto_batches,
+         "scan_protobuf_stream"),
+        (tfrecord, "tfrecord_walk", tfrecord._tfrecord_batches,
+         "scan_tfrecord"),
+    ]
+    for mod, walker, body, key in cases:
+        (frame,) = body(iter([batch]))
+        assert frame["doc_id"].tolist() == [1, 2, 3], key
+        real = getattr(mod, walker)
+        monkeypatch.setattr(mod, walker,
+                            lambda raw, _real=real: _real(raw)[:-1])
+        with pytest.raises(UndecodableInputError,
+                           match=rf"'{key}'.*3 rows from doc_id 1.*to 2 rows"):
+            list(body(iter([batch])))
+
+    (frame,) = zstd._zst_batches(iter([batch]))
+    assert frame.values.tolist() == [[1, "a"], [2, "bb"], [3, "c"]]
+    monkeypatch.setattr(zstd, "zstd_decompress_concat", lambda raw: None)
+    with pytest.raises(UndecodableInputError,
+                       match=r"'scan_text_zst'.*to 0 rows"):
+        list(zstd._zst_batches(iter([batch])))
 
 def test_lz4_block_roundtrip_and_degrades():
     import os

@@ -465,3 +465,40 @@ def test_binary_file_scan_has_one_site():
                     and node.args[0].value == "binaryFile"):
                 sites.append(path.name)
     assert sites == ["fixtures.py"], sites
+
+
+def test_map_in_pandas_sites_pinned():
+    """Keys that decode row by row go through the one per-row map
+    (``fixtures.map_rows``), which refuses to drop a row silently. Only
+    these top-level functions under ``llmops/`` may still call
+    ``.mapInPandas(`` themselves: the two helpers, keys whose work is
+    one call per Arrow batch, and maps that are not a per-row decode."""
+    import ast
+    import pathlib
+
+    import dynamic_spark_spark.llmops as llmops
+
+    sites = []
+    for path in sorted(pathlib.Path(llmops.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            sites += [
+                (path.stem, getattr(top, "name", None))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"
+            ]
+    assert sites == [
+        ("avro_ocf", "scan_avro_records"),
+        ("embedding_ops", "embed_pca_project"),
+        ("embedding_ops", "embed_pca_project"),
+        ("fixtures", "scan_files"),
+        ("fixtures", "map_rows"),
+        ("html", "scan_warc_http_payloads"),
+        ("lz4_hadoop", "sink_text_lz4"),
+        ("protowire", "scan_protobuf_stream"),
+        ("similarity", "sim_topk_pq"),
+        ("tfrecord", "scan_tfrecord"),
+        ("tfrecord", "stream_tfrecord_ingest"),
+        ("zstd", "scan_text_zst"),
+    ], sites
