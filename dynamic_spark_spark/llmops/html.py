@@ -427,6 +427,10 @@ def warc_walk(blob: str):
 #: decoders' MAX_DECODE_PIXELS; a real WARC record is KBs–low-MBs).
 WARC_MEMBER_CAP = 4 << 20
 
+#: gzip members per capture: :func:`warc_gzip_blob` writes the request,
+#: response and metadata records as one member each
+WARC_GZIP_MEMBERS = 3
+
 
 def _warc_record_py(typ: str, doc_id: int, body: str) -> str:
     """Python twin of :func:`_warc_record` (the Column synthesizer) — used
@@ -502,9 +506,13 @@ _WARC_SCHEMA = (
 
 def _warc_gzip_rows(doc_id, text):
     """One document's records, walked out of its gzip-member capture;
-    None when a member does not decode as UTF-8 (refuse, don't guess)."""
+    None when the walk stops short of the capture's members or a member
+    does not decode as UTF-8 (refuse, don't guess)."""
+    members = gzip_member_walk(warc_gzip_blob(int(doc_id), text))
+    if len(members) != WARC_GZIP_MEMBERS:
+        return None
     rows = []
-    for member in gzip_member_walk(warc_gzip_blob(int(doc_id), text)):
+    for member in members:
         try:
             rec = member.decode("utf-8")
         except UnicodeDecodeError:
@@ -591,6 +599,35 @@ def _page_py(doc_id: int, text: str) -> str:
     )
 
 
+def _crawl_wet_row(doc_id, text):
+    """``pipeline_crawl_wet``'s ingest: the document's page, recovered from
+    the 200 response of its gzip-member capture. A full walk with no
+    decodable 200 response gives a null page, not a lost row; a walk that
+    stops short of the capture's members gives None."""
+    page = _page_py(int(doc_id), text)
+    members = gzip_member_walk(
+        warc_gzip_blob(int(doc_id), text, response_body=page)
+    )
+    if len(members) != WARC_GZIP_MEMBERS:
+        return None
+    html = None
+    for member in members:
+        try:
+            rec = member.decode("utf-8")
+        except UnicodeDecodeError:
+            continue
+        parsed = warc_walk(rec)
+        if not parsed or parsed[0][0] != "response":
+            continue
+        hdr_end = rec.find("\r\n\r\n")
+        payload = rec[hdr_end + 4 : -4]
+        http_split = payload.split("\r\n\r\n", 1)
+        if len(http_split) == 2 and http_split[0].startswith("HTTP/1.1 200"):
+            html = http_split[1]
+        break
+    return [(doc_id, text, html)]
+
+
 @query("pipeline_crawl_wet", _EXTRACT_ORACLE, tag="llm-text")
 def pipeline_crawl_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE crawl-to-WET pipeline as one key: each document's
@@ -607,29 +644,9 @@ def pipeline_crawl_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas (one WARC file per task on a real cluster); the
     extraction half stays whole-stage codegen; no shuffle anywhere."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def ingest(doc_id, text):
-        page = _page_py(int(doc_id), text)
-        raw = warc_gzip_blob(int(doc_id), text, response_body=page)
-        html = None  # no decodable 200 response: a null page, not a lost row
-        for member in gzip_member_walk(raw):
-            try:
-                rec = member.decode("utf-8")
-            except UnicodeDecodeError:
-                continue
-            parsed = warc_walk(rec)
-            if not parsed or parsed[0][0] != "response":
-                continue
-            hdr_end = rec.find("\r\n\r\n")
-            payload = rec[hdr_end + 4 : -4]
-            http_split = payload.split("\r\n\r\n", 1)
-            if len(http_split) == 2 and http_split[0].startswith("HTTP/1.1 200"):
-                html = http_split[1]
-            break
-        return [(doc_id, text, html)]
-
     recovered = map_rows(
-        d, "pipeline_crawl_wet", "doc_id long, text string, html string", ingest
+        d, "pipeline_crawl_wet", "doc_id long, text string, html string",
+        _crawl_wet_row,
     )
     return extract_from_html(recovered, F.col("html"))
 
@@ -651,12 +668,10 @@ def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     d = load_table(spark, sf_dir, "documents")
     src = tempfile.mkdtemp(prefix="dss_warcstream_src_")
-    ckpt = tempfile.mkdtemp(prefix="dss_warcstream_ckpt_")
-    name = "dss_warc_ingest"
     try:
         staged = d.select(_warc_blob().alias("value"))
         staged.write.mode("overwrite").parquet(src)
@@ -668,25 +683,13 @@ def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             " payload_len long, length_ok boolean",
             warc_walk,
         )
-        with drain_parallelism(spark, src=src):
-            q = (
-                parsed.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT CAST(regexp_extract(target_uri, '/d/([0-9]+)$', 1) AS BIGINT)"
-            f" AS doc_id, warc_type, target_uri, declared_len, payload_len,"
-            f" length_ok FROM {name}"
+        return drain(parsed, "stream_warc_ingest", src).selectExpr(
+            "CAST(regexp_extract(target_uri, '/d/([0-9]+)$', 1) AS BIGINT)"
+            " AS doc_id",
+            "warc_type", "target_uri", "declared_len", "payload_len", "length_ok",
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --- HTTP payload layer: what's INSIDE a crawl response record -------------

@@ -189,12 +189,10 @@ def stream_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = tempfile.mkdtemp(prefix="dss_tfrecstream_src_")
-    ckpt = tempfile.mkdtemp(prefix="dss_tfrecstream_ckpt_")
-    name = "dss_tfrecord_ingest"
     try:
         def stage(batches):
             for pdf in batches:
@@ -223,20 +221,6 @@ def stream_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         parsed = map_rows(
             stream, "stream_tfrecord_ingest", _TFRECORD_SCHEMA, parse
         )
-        with drain_parallelism(spark, src=src):
-            q = (
-                parsed.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT doc_id, rec_len, crc_ok, text FROM {name}"
-        )
+        return drain(parsed, "stream_tfrecord_ingest", src)
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -1443,7 +1443,9 @@ def _zst_batches(batches):
         back = zstd_decompress_concat(frame)
         rows = []
         if back is not None:
-            for line in back.decode("utf-8").splitlines():
+            # "\n" only: splitlines() also breaks at \x0b, \x0c, \x1c-\x1e,
+            # \x85, \u2028 and \u2029, which a document may hold
+            for line in back.decode("utf-8").split("\n")[:-1]:
                 did, _, text = line.partition("|")
                 rows.append((int(did), text))
         yield pd.DataFrame(require_rows("scan_text_zst", pdf, rows),

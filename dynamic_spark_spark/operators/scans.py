@@ -790,6 +790,8 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_SERIES_ROWS = 1000
 _STREAM_SERIES_CHUNK = 250
+#: seconds the series sink may take to fill before the key gives up
+_STREAM_SERIES_WAIT_S = 120
 
 
 @query(
@@ -810,10 +812,17 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully-drained memory sink equals a generate_series oracle — an
     exactly-once claim checked by value, not asserted. At scale the same
     contract backs any cursor-paginated external feed (the offset dict is
-    the cursor); per-batch work is bounded by the chunk size."""
+    the cursor); per-batch work is bounded by the chunk size.
+
+    It polls a ``processingTime`` query rather than calling
+    ``streaming.core.drain``: an ``availableNow`` drain of this reader
+    stops after its first chunk and still reports termination. A sink that
+    has not filled by ``_STREAM_SERIES_WAIT_S`` raises ``StreamDrainError``."""
     import time as _time
 
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    from dynamic_spark_spark.streaming.core import StreamDrainError
 
     rows, chunk = _STREAM_SERIES_ROWS, _STREAM_SERIES_CHUNK
 
@@ -863,10 +872,15 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.table(name).count() >= rows:
-                break
+        deadline = _time.monotonic() + _STREAM_SERIES_WAIT_S
+        while (seen := spark.table(name).count()) < rows:
+            if _time.monotonic() >= deadline:
+                raise StreamDrainError(
+                    f"stream drain of 'stream_python_datasource' (source"
+                    f" dss_series_stream) did not fill within"
+                    f" {_STREAM_SERIES_WAIT_S} s: {seen} of {rows} rows after"
+                    f" {len(q.recentProgress)} micro-batch(es)"
+                )
             _time.sleep(0.5)
     finally:
         q.stop()

@@ -147,43 +147,21 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism, so the stateful merge consumes (partitions × keys) partial
     rows instead of the event stream; the engine-managed state and its
     final totals are unchanged."""
-    import shutil
-    import tempfile
-
     from dynamic_spark_spark.streaming.core import (
-        drain_parallelism,
+        drain,
         file_stream,
         stateful_total_merge,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # The query drains fully (availableNow) into the in-memory sink before we
-    # return, so the staged source + checkpoint dirs are removed here — left
-    # behind they leak disk without bound under bench.py's warmup +
-    # median-of-3 protocol and repeated verify runs.
     src = _session_staged_src(spark, sf_dir, "state_src", ev)
-    ckpt = tempfile.mkdtemp(prefix="dss_state_ckpt_")
-    name = "dss_stateful_totals"
-    try:
-        with drain_parallelism(spark, src=src):
-            q = (
-                stateful_total_merge(file_stream(spark, src, ev.schema))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        # The memory sink holds its batches in driver memory — it stays
-        # queryable after the staging dirs are gone.
-        return spark.sql(
-            f"SELECT key AS event_type, MAX(n) AS n_events FROM {name} GROUP BY key"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    sink = drain(
+        stateful_total_merge(file_stream(spark, src, ev.schema)),
+        "stream_stateful_totals", src, mode="update",
+    )
+    return sink.groupBy(F.col("key").alias("event_type")).agg(
+        F.max("n").alias("n_events")
+    )
 
 
 @query("stream_dedup_live", tag="streaming")  # rows-only: live stream
@@ -194,42 +172,22 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark — the canonical streaming-ingest dedup stage. The batch
     analog of the semantics is ``distinct_rows``; this key proves the live
     stateful path end-to-end."""
-    import shutil
-    import tempfile
-
     from dynamic_spark_spark.streaming.core import (
-        drain_parallelism,
+        drain,
         file_stream,
         stateful_dedup,
     )
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     src = _session_staged_src(spark, sf_dir, "dedup_src", ev)
-    ckpt = tempfile.mkdtemp(prefix="dss_dedup_ckpt_")
-    name = "dss_stream_dedup"
-    try:
-        with drain_parallelism(spark, src=src):
-            q = (
-                stateful_dedup(
-                    file_stream(spark, src, ev.schema),
-                    ["user_id", "event_type"],
-                    ts_col="ts",
-                    watermark="1 hour",
-                )
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT event_type, COUNT(*) AS n_unique_users FROM {name} GROUP BY event_type"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    deduped = stateful_dedup(
+        file_stream(spark, src, ev.schema),
+        ["user_id", "event_type"],
+        ts_col="ts",
+        watermark="1 hour",
+    )
+    sink = drain(deduped, "stream_dedup_live", src)
+    return sink.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_users"))
 
 
 _HYPERTABLE_ORACLE = """
@@ -287,39 +245,22 @@ def stream_rollup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (complete mode into a memory sink), and the returned frame re-aggregates
     to hourly — proving the continuous-aggregate maintenance path live, not
     just its batch equivalence."""
-    import shutil
-    import tempfile
-
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     src = _session_staged_src(spark, sf_dir, "rollup_src", ev)
-    ckpt = tempfile.mkdtemp(prefix="dss_rollup_ckpt_")
-    name = "dss_rollup_minutely"
-    try:
-        minutely = (
-            file_stream(spark, src, ev.schema)
-            .groupBy(F.window("ts", "1 minute"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        with drain_parallelism(spark, src=src):
-            q = (
-                minutely.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT date_trunc('hour', window.start) AS hour_start, event_type,"
-            f" CAST(SUM(n) AS BIGINT) AS n_events, COUNT(*) AS n_minutes"
-            f" FROM {name} GROUP BY 1, 2"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    minutely = (
+        file_stream(spark, src, ev.schema)
+        .groupBy(F.window("ts", "1 minute"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    sink = drain(minutely, "stream_rollup_live", src, mode="complete")
+    return sink.groupBy(
+        F.date_trunc("hour", "window.start").alias("hour_start"), "event_type"
+    ).agg(
+        F.sum("n").cast("bigint").alias("n_events"),
+        F.count(F.lit(1)).alias("n_minutes"),
+    )
 
 
 _GAPFILL_ORACLE = f"""
@@ -418,10 +359,7 @@ def stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     expiry only ever drops rows the time bound already excludes — so the
     emitted set equals the batch interval join, verified exactly at
     sf0.001 and sf0.01."""
-    import shutil
-    import tempfile
-
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     ev = load_table(spark, sf_dir, "events")
     # Only two event types participate in the join — filter BEFORE the
@@ -432,49 +370,30 @@ def stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "ts"
     )
     src = _session_staged_src(spark, sf_dir, "ssj_src", src_df.coalesce(1))
-    ckpt = tempfile.mkdtemp(prefix="dss_ssj_ckpt_")
-    name = "dss_stream_stream_join"
-    try:
-        schema = src_df.schema
-        s1 = file_stream(spark, src, schema)
-        s2 = file_stream(spark, src, schema)
-        clicks = (
-            s1.where(F.col("event_type") == "click")
-            .select("user_id", F.col("ts").alias("c_ts"))
-            .withWatermark("c_ts", "1 hour")
-        )
-        purchases = (
-            s2.where(F.col("event_type") == "purchase")
-            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-            .withWatermark("p_ts", "1 hour")
-        )
-        joined = clicks.join(
-            purchases,
-            F.expr(
-                "user_id = p_user AND "
-                "p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"
-            ),
-        )
-        # A stream-stream join runs FOUR state stores per shuffle partition;
-        # size the partition count to the data (a few thousand rows at
-        # verification scale) instead of paying 32×4 store setups — the
-        # shared drain_parallelism rationale, at 4× the per-partition cost.
-        with drain_parallelism(spark, src=src):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT user_id, COUNT(*) AS n_pairs FROM {name} GROUP BY user_id"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    schema = src_df.schema
+    s1 = file_stream(spark, src, schema)
+    s2 = file_stream(spark, src, schema)
+    clicks = (
+        s1.where(F.col("event_type") == "click")
+        .select("user_id", F.col("ts").alias("c_ts"))
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        s2.where(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        F.expr(
+            "user_id = p_user AND "
+            "p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"
+        ),
+    )
+    # A stream-stream join runs FOUR state stores per shuffle partition, so
+    # the drain's data-sized width saves 4× what it saves an aggregation.
+    sink = drain(joined, "stream_stream_join_live", src)
+    return sink.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
 _UPSERT_ORACLE = """
@@ -504,9 +423,10 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.errors import AnalysisException
 
+    from dynamic_spark_spark.streaming.core import drain, file_stream
+
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     src = _session_staged_src(spark, sf_dir, "upsert_src", ev.repartition(2))
-    ckpt = tempfile.mkdtemp(prefix="dss_upsert_ckpt_")
     target = tempfile.mkdtemp(prefix="dss_upsert_tgt_") + "/t"
     try:
 
@@ -520,22 +440,10 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fresh = batch_df
             fresh.write.mode("append").parquet(target)
 
-        from dynamic_spark_spark.streaming.core import drain_parallelism
-
         # stateless stream, but each micro-batch's anti-join + write runs
-        # as batch jobs INSIDE the drain — scope their shuffle width too
-        with drain_parallelism(spark, src=src):
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
+        # as batch jobs INSIDE the drain, under its shuffle width
+        stream = file_stream(spark, src, ev.schema, maxFilesPerTrigger="1")
+        drain(stream, "stream_foreachbatch_upsert", src, foreach_batch=upsert)
         final = (
             spark.read.parquet(target)
             .groupBy("event_type")
@@ -554,7 +462,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = pd.DataFrame(rows, columns=final.schema.names)
         return spark.createDataFrame(pdf, schema=final.schema)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(target.rsplit("/", 1)[0], ignore_errors=True)
 
 
@@ -579,41 +486,23 @@ def stream_static_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink is aggregated per nation, and — because enrichment is stateless and
     deterministic — the whole live path is oracle-checked exactly, cents as
     integers."""
-    import shutil
-    import tempfile
-
-    from dynamic_spark_spark.streaming.core import file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     src = _session_staged_src(spark, sf_dir, "sstat_src", ev)
-    ckpt = tempfile.mkdtemp(prefix="dss_sstat_ckpt_")
-    name = "dss_stream_static"
-    try:
-        enriched = (
-            file_stream(spark, src, ev.schema)
-            .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-            .select(
-                "c_nationkey",
-                F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-            )
+    enriched = (
+        file_stream(spark, src, ev.schema)
+        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
+        .select(
+            "c_nationkey",
+            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         )
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
-        return spark.sql(
-            f"SELECT c_nationkey, COUNT(*) AS n_events,"
-            f" SUM(cents) AS value_cents FROM {name} GROUP BY c_nationkey"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
+    sink = drain(enriched, "stream_static_join_live", src)
+    return sink.groupBy("c_nationkey").agg(
+        F.count(F.lit(1)).alias("n_events"), F.sum("cents").alias("value_cents")
+    )
 
 
 _STREAM_DEDUP_GROUPS_ORACLE = """
@@ -635,42 +524,24 @@ def stream_dedup_groups_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch splits, so the live path is hash-checked exactly against the
     batch GROUP BY. Update-mode memory sink; the post-drain MAX picks each
     key's final state row."""
-    import shutil
-    import tempfile
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = _session_staged_src(spark, sf_dir, "dgroups_src", d)
-    ckpt = tempfile.mkdtemp(prefix="dss_dgroups_ckpt_")
-    name = "dss_dedup_groups"
-    try:
-        from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
-
-        agg = (
-            file_stream(spark, src, d.schema)
-            .select(F.md5("text").alias("digest"), "doc_id")
-            .groupBy("digest")
-            .agg(
-                F.min("doc_id").alias("keeper_doc_id"),
-                F.count(F.lit(1)).alias("n_copies"),
-            )
+    agg = (
+        file_stream(spark, src, d.schema)
+        .select(F.md5("text").alias("digest"), "doc_id")
+        .groupBy("digest")
+        .agg(
+            F.min("doc_id").alias("keeper_doc_id"),
+            F.count(F.lit(1)).alias("n_copies"),
         )
-        with drain_parallelism(spark, src=src):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.sql(
-            f"SELECT digest, MIN(keeper_doc_id) AS keeper_doc_id,"
-            f" MAX(n_copies) AS n_copies FROM {name} GROUP BY digest"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
+    sink = drain(agg, "stream_dedup_groups_live", src, mode="update")
+    return sink.groupBy("digest").agg(
+        F.min("keeper_doc_id").alias("keeper_doc_id"),
+        F.max("n_copies").alias("n_copies"),
+    )
 
 
 _SESSION_LIVE_ORACLE = """
@@ -716,47 +587,25 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a controlled two-file arrival. At scale a real deployment uses
     append mode into a durable sink with a watermark and lets the engine
     close sessions continuously."""
-    import shutil
-    import tempfile
-
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.llmops.fixtures import fixture_parallelism
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    from dynamic_spark_spark.llmops.fixtures import fixture_parallelism
-
     src = _session_staged_src(
         spark, sf_dir, "sess_src", ev.repartition(fixture_parallelism(spark))
     )
-    ckpt = tempfile.mkdtemp(prefix="dss_sess_ckpt_")
-    name = "dss_stream_session"
-    try:
-        agg = (
-            file_stream(spark, src, ev.schema)
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            )
+    agg = (
+        file_stream(spark, src, ev.schema)
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
         )
-        with drain_parallelism(spark, src=src):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).select(
-            "user_id", "session_start", "session_end", "n_events"
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
+    return drain(agg, "stream_session_live", src, mode="complete")
 
 
 #: custom-session geometry for the live arbitrary-state key: user slice,
@@ -815,11 +664,8 @@ def stream_custom_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     a live custom-state operator with an exact SQL twin, not a rows-only
     smoke check. Cross-batch state continuity is pinned separately in
     tests/test_streaming.py with a controlled two-file arrival."""
-    import shutil
-    import tempfile
-
     from dynamic_spark_spark.streaming.core import (
-        drain_parallelism,
+        drain,
         file_stream,
         stateful_sessions,
     )
@@ -830,36 +676,21 @@ def stream_custom_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "value")
     )
     src = _session_staged_src(spark, sf_dir, "csess_src", ev.coalesce(1))
-    ckpt = tempfile.mkdtemp(prefix="dss_csess_ckpt_")
-    name = "dss_stream_custom_session"
-    try:
-        out = stateful_sessions(
-            file_stream(spark, src, ev.schema),
-            gap_seconds=CUSTOM_SESS_GAP_S,
-            watermark=f"{CUSTOM_SESS_WM_S} seconds",
-        )
-        with drain_parallelism(spark, src=src):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).select(
-            "key",
-            "session_start",
-            "session_end",
-            "n_events",
-            F.floor(F.col("value_sum") * 1_000_000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("value_sum_fp"),
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    out = stateful_sessions(
+        file_stream(spark, src, ev.schema),
+        gap_seconds=CUSTOM_SESS_GAP_S,
+        watermark=f"{CUSTOM_SESS_WM_S} seconds",
+    )
+    sink = drain(out, "stream_custom_session_live", src)
+    return sink.select(
+        "key",
+        "session_start",
+        "session_end",
+        "n_events",
+        F.floor(F.col("value_sum") * 1_000_000 + F.lit(0.5))
+        .cast("bigint")
+        .alias("value_sum_fp"),
+    )
 
 
 _DEDUP_WW_ORACLE = """
@@ -881,36 +712,17 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     Drained availableNow from a single-file source, every key's duplicates
     fall inside one horizon, so the emitted set is exactly DISTINCT
     (user_id, event_type) — hash-checked against that oracle."""
-    import shutil
-    import tempfile
-
-    from dynamic_spark_spark.streaming.core import drain_parallelism, file_stream
+    from dynamic_spark_spark.streaming.core import drain, file_stream
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     src = _session_staged_src(spark, sf_dir, "dww_src", ev.coalesce(1))
-    ckpt = tempfile.mkdtemp(prefix="dss_dww_ckpt_")
-    name = "dss_dedup_ww"
-    try:
-        deduped = (
-            file_stream(spark, src, ev.schema)
-            .withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-        with drain_parallelism(spark, src=src):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    deduped = (
+        file_stream(spark, src, ev.schema)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return drain(deduped, "stream_dedup_within_watermark", src)
 
 
 _GAPFILL_INTERP_ORACLE = """

@@ -31,6 +31,15 @@ from pyspark.sql.streaming import StreamingQuery
 #: driver-side complete-mode sink materialization, not state parallelism.
 DRAIN_BYTES_PER_PARTITION = 1 << 20
 
+#: seconds a bounded drain may run before it is declared stuck
+DRAIN_TIMEOUT_S = 300
+
+
+class StreamDrainError(TimeoutError):
+    """A bounded drain did not finish: it timed out or its query failed.
+    Its sink holds only the micro-batches that completed, so the drain
+    raises instead of handing that partial answer back."""
+
 
 def _dir_bytes(path: str) -> int:
     import os
@@ -46,7 +55,7 @@ def _dir_bytes(path: str) -> int:
 
 
 @contextmanager
-def drain_parallelism(spark: SparkSession, n: int | None = None, src: str | None = None):
+def _drain_parallelism(spark: SparkSession, src: str):
     """Scope ``spark.sql.shuffle.partitions`` around a bounded drain,
     SIZED TO THE STAGED DATA. A stateful streaming query instantiates one
     state store (plus its checkpoint tree, commit files, and maintenance
@@ -56,25 +65,96 @@ def drain_parallelism(spark: SparkSession, n: int | None = None, src: str | None
     sf0.01: ``stream_session_live`` 5.4 s → 1.6 s,
     ``stream_stateful_totals`` 4.1 s → 1.3 s, identical output). But a
     CONSTANT small width would throttle the same keys under the 10×/100×
-    scale probes (review-hardened r8), so when ``src`` (the staged source
-    dir) is given the width derives from its byte size: one partition per
+    scale probes (review-hardened r8), so the width derives from the
+    staged source dir's byte size: one partition per
     ``DRAIN_BYTES_PER_PARTITION``, floor 4, capped at the session's core
     count — exactly how production sizes state parallelism to stream
     volume before first start. The final state is partition-count-
     invariant, which the oracle-checked live keys prove every round.
     Restores the previous value even when the drain dies; post-drain sink
     reads execute outside the scope at the session default."""
-    if n is None:
-        width = 4
-        if src is not None:
-            width = max(4, _dir_bytes(src) // DRAIN_BYTES_PER_PARTITION)
-        n = min(spark.sparkContext.defaultParallelism, width)
+    width = max(4, _dir_bytes(src) // DRAIN_BYTES_PER_PARTITION)
+    n = min(spark.sparkContext.defaultParallelism, width)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def await_drained(
+    q: StreamingQuery,
+    key: str,
+    timeout_s: float = DRAIN_TIMEOUT_S,
+    src: str | None = None,
+) -> None:
+    """Wait for an ``availableNow`` drain to terminate, or raise.
+    ``awaitTermination(timeout)`` returns False on timeout without raising,
+    and an unchecked call once read a partial memory sink as the answer on
+    a degraded box. A query still running at ``timeout_s`` is stopped; it
+    and a query that failed raise :class:`StreamDrainError` naming the key,
+    the staged source, the timeout and the micro-batches completed."""
+    from pyspark.errors import StreamingQueryException
+
+    where = f"{key!r} (source {src})" if src else repr(key)
+    try:
+        done = q.awaitTermination(timeout_s)
+    except StreamingQueryException as exc:
+        raise StreamDrainError(
+            f"stream drain of {where} failed after"
+            f" {len(q.recentProgress)} micro-batch(es)"
+        ) from exc
+    if not done:
+        batches = len(q.recentProgress)
+        q.stop()
+        raise StreamDrainError(
+            f"stream drain of {where} did not terminate within {timeout_s} s;"
+            f" {batches} micro-batch(es) completed"
+        )
+
+
+def drain(
+    stream_df: DataFrame,
+    key: str,
+    src: str,
+    mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> DataFrame | None:
+    """Drain a bounded stream to completion and return what it produced.
+    ``src`` is the staged source dir, which sizes the drain's shuffle width
+    (:func:`_drain_parallelism`). The query runs ``availableNow`` over a
+    fresh checkpoint (removed on the way out) into a memory sink named
+    after ``key``, returned as a DataFrame — or, with ``foreach_batch``,
+    hands each micro-batch to that callable and returns None. A drain that
+    times out or fails raises :class:`StreamDrainError`; the memory sink
+    holds its batches in driver memory, so it stays queryable after the
+    checkpoint is gone."""
+    import shutil
+    import tempfile
+
+    spark = stream_df.sparkSession
+    ckpt = tempfile.mkdtemp(prefix="dss_drain_ckpt_")
+    try:
+        with _drain_parallelism(spark, src):
+            writer = (
+                stream_df.writeStream.queryName(key)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+            )
+            if foreach_batch is None:
+                writer = writer.format("memory")
+            else:
+                writer = writer.foreachBatch(foreach_batch)
+            q = writer.start()
+            try:
+                await_drained(q, key, src=src)
+            finally:
+                q.stop()
+        return None if foreach_batch is not None else spark.table(key)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

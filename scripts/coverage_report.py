@@ -173,7 +173,7 @@ def main() -> None:
         "",
         "Verify-gate latency (r7 verdict #3, applied r8): the stateful",
         "live-stream drains now scope `spark.sql.shuffle.partitions` to 4",
-        "for the drain only (`streaming.core.drain_parallelism`) — a",
+        "for the drain only (inside `streaming.core.drain`) — a",
         "stateful query builds one state store per shuffle partition at",
         "its first batch, and 32-way state over kilobyte streams was pure",
         "setup cost (stream_session_live 5.4 s -> 1.6 s, identical",

@@ -38,7 +38,11 @@ from pyspark.sql import functions as F
 
 from dynamic_spark_spark.session import get_spark
 from dynamic_spark_spark.sources.readers import load_table
-from dynamic_spark_spark.streaming.core import file_stream, stateful_sessions
+from dynamic_spark_spark.streaming.core import (
+    await_drained,
+    file_stream,
+    stateful_sessions,
+)
 
 SFS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1")
 
@@ -54,13 +58,11 @@ def state_metrics(progresses) -> dict:
     return {"peak_state_rows": peak_rows, "rows_removed": total_removed, "batches": batches}
 
 
-def drain(q):
-    # a False return means the availableNow drain did NOT finish in time;
-    # partial state metrics must never masquerade as a completed drain
-    finished = q.awaitTermination(600)
+def drain(q, probe: str):
+    # partial state metrics must never masquerade as a completed drain:
+    # await_drained raises StreamDrainError unless the drain finished
+    await_drained(q, probe, timeout_s=600)
     q.stop()
-    if not finished:
-        raise TimeoutError("stream did not drain within 600 s — probe invalid")
     return [json.loads(p.json) for p in q.recentProgress]
 
 
@@ -83,7 +85,7 @@ def probe_sessions(spark, sf_dir: str, gap_s: int, wm: str, n_files: int) -> dic
             .option("checkpointLocation", ckpt)
             .start()
         )
-        prog = drain(q)
+        prog = drain(q, "custom_session_state")
         # stop the clock BEFORE the bookkeeping counts below — they launch
         # full Spark jobs and must not inflate the reported drain wall time
         wall_s = round(time.perf_counter() - t0, 2)
@@ -147,7 +149,7 @@ def probe_ssj(spark, sf_dir: str, n_files: int) -> dict:
                 .option("checkpointLocation", ckpt)
                 .start()
             )
-            prog = drain(q)
+            prog = drain(q, "stream_stream_join_state")
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         # stop the clock before side.count() — it launches a Spark job and

@@ -1701,7 +1701,8 @@ def test_archive_keys_refuse_a_short_walk(monkeypatch):
 
 def test_crawl_keys_refuse_an_undecodable_row(monkeypatch):
     """The WARC/HTTP keys used to skip a capture whose gzip member,
-    HTTP payload or charset did not decode; now the row function
+    HTTP payload or charset did not decode, and the gzip WARC keys kept
+    the members before a truncated or over-cap one; now the row function
     returns None (or the batch body raises) and the key stops."""
     import pandas as pd
 
@@ -1710,6 +1711,7 @@ def test_crawl_keys_refuse_an_undecodable_row(monkeypatch):
 
     batch = pd.DataFrame({"doc_id": [3, 4, 5], "text": ["a b", "", "c"]})
     assert len(html._warc_gzip_rows(4, "hello")) == 3
+    assert html._crawl_wet_row(4, "hello")[0][2] is not None
     for d in range(10):
         assert len(html._charset_rows(d, "héllo", "hllo")) == 1
     (frame,) = html._http_payload_batches(iter([batch]))
@@ -1717,8 +1719,12 @@ def test_crawl_keys_refuse_an_undecodable_row(monkeypatch):
 
     real_gzip = html.gzip_member_walk
     monkeypatch.setattr(html, "gzip_member_walk",
-                        lambda raw: [b"\xff\xfe"] + real_gzip(raw))
+                        lambda raw: [b"\xff\xfe"] + real_gzip(raw)[1:])
     assert html._warc_gzip_rows(4, "hello") is None
+    monkeypatch.setattr(html, "gzip_member_walk",
+                        lambda raw: real_gzip(raw)[:-1])
+    assert html._warc_gzip_rows(4, "hello") is None
+    assert html._crawl_wet_row(4, "hello") is None
     monkeypatch.setattr(html, "http_charset_decode", lambda body, ct: None)
     assert html._charset_rows(0, "hello", "hello") is None
     monkeypatch.setattr(html, "http_payload_decode", lambda raw: None)
@@ -1760,6 +1766,11 @@ def test_batch_round_trips_refuse_a_short_walk(monkeypatch):
 
     (frame,) = zstd._zst_batches(iter([batch]))
     assert frame.values.tolist() == [[1, "a"], [2, "bb"], [3, "c"]]
+    # characters str.splitlines() breaks at, besides "\n" and "\r"
+    odd = pd.DataFrame({"doc_id": [1, 2, 3], "text": [
+        "a\x0bb\x0cc", "\x1c\x1d\x1e", "d\x85e\u2028f\u2029"]})
+    (frame,) = zstd._zst_batches(iter([odd]))
+    assert frame.values.tolist() == odd.values.tolist()
     monkeypatch.setattr(zstd, "zstd_decompress_concat", lambda raw: None)
     with pytest.raises(UndecodableInputError,
                        match=r"'scan_text_zst'.*to 0 rows"):

@@ -467,6 +467,34 @@ def test_binary_file_scan_has_one_site():
     assert sites == ["fixtures.py"], sites
 
 
+def test_stream_drain_has_one_site():
+    """Every bounded drain goes through ``streaming.core.drain``, which
+    refuses a sink whose query did not terminate: under the package only
+    ``streaming/core.py`` and ``stream_python_datasource`` (a polled
+    ``processingTime`` query) may call ``.writeStream`` or
+    ``.awaitTermination``."""
+    import ast
+    import pathlib
+
+    import dynamic_spark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Attribute)
+                        and node.attr in ("writeStream", "awaitTermination")):
+                    where = str(path.relative_to(root))
+                    if where != "streaming/core.py":
+                        where += "::" + getattr(top, "name", "?")
+                    sites.add(where)
+    assert sites == {
+        "streaming/core.py",
+        "operators/scans.py::stream_python_datasource",
+    }, sites
+
+
 def test_map_in_pandas_sites_pinned():
     """Keys that decode row by row go through the one per-row map
     (``fixtures.map_rows``), which refuses to drop a row silently. Only

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dynamic_spark_spark.sources.readers import load_table
 from dynamic_spark_spark.streaming.core import (
+    await_drained,
     file_stream,
     kafka_stream,
     micro_batch_transform,
@@ -23,21 +24,9 @@ from dynamic_spark_spark.streaming.core import (
 )
 
 
-def _await_drained(q, timeout: int = 120, total: int = 900) -> None:
-    """Wait for an ``availableNow`` drain to actually terminate before the
-    test reads the sink. ``awaitTermination(timeout)`` returns False on
-    timeout without raising; the old unchecked form silently read a partial
-    memory table on a degraded box (the r13 driver gate failure). Keep
-    waiting up to ``total`` seconds and fail loudly otherwise."""
-    import time
-
-    deadline = time.monotonic() + total
-    while not q.awaitTermination(timeout):
-        if time.monotonic() >= deadline:
-            q.stop()
-            raise AssertionError(
-                f"stream query {q.name!r} did not terminate within {total}s"
-            )
+#: tests wait up to 15 minutes for a drain: on a degraded box a slow
+#: drain is not the failure under test, a partial sink read would be
+_TEST_DRAIN_S = 900
 
 
 def _events_stream(spark, sf_dir):
@@ -62,7 +51,7 @@ def test_micro_batch_transform_contract(spark, sf_dir):
             seen[r["event_type"]] = seen.get(r["event_type"], 0) + r["n"]
 
     q = micro_batch_transform(stream, transform, sink=sink)
-    _await_drained(q, 120)
+    await_drained(q, "micro_batch_transform", timeout_s=_TEST_DRAIN_S)
     expected = {r["event_type"]: r["n"] for r in transform(batch).collect()}
     assert seen == expected
 
@@ -77,7 +66,7 @@ def test_windowed_counts_stream(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drained(q, 120)
+    await_drained(q, "win_counts", timeout_s=_TEST_DRAIN_S)
     got = spark.table("win_counts")
     # watermark finalizes all but the trailing windows; compare totals loosely
     batch_windows = (
@@ -96,7 +85,7 @@ def test_stateful_dedup_stream(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drained(q, 120)
+    await_drained(q, "dedup_out", timeout_s=_TEST_DRAIN_S)
     got = spark.table("dedup_out")
     n_users = batch.select("user_id").distinct().count()
     assert got.count() == n_users
@@ -112,7 +101,7 @@ def test_sessionized_stream_runs(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drained(q, 120)
+    await_drained(q, "sessions_out", timeout_s=_TEST_DRAIN_S)
     assert spark.table("sessions_out").columns == ["user_id", "session_start", "n_events"]
 
 
@@ -137,7 +126,7 @@ def test_stateful_running_totals_stream(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    _await_drained(q, 120)
+    await_drained(q, "running_totals", timeout_s=_TEST_DRAIN_S)
 
     batch = {
         r["event_type"]: r["n"]
@@ -244,7 +233,7 @@ def test_stateful_sessions_event_time_timer(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    _await_drained(q, 300)
+    await_drained(q, "dss_custom_sessions", timeout_s=_TEST_DRAIN_S)
     q.stop()
     got = {
         (r["key"], r["session_start"], r["session_end"], r["n_events"], r["value_sum"])
@@ -316,7 +305,7 @@ def test_transform_with_state_totals(spark, sf_dir):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        _await_drained(q, 300)
+        await_drained(q, "dss_tws_totals", timeout_s=_TEST_DRAIN_S)
         q.stop()
         got = {
             r["key"]: r["n"]
@@ -367,7 +356,7 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        _await_drained(q, 300)
+        await_drained(q, "dss_restart_counts", timeout_s=_TEST_DRAIN_S)
         q.stop()
 
     run_round()
@@ -435,7 +424,7 @@ def test_session_window_merges_across_batches(spark, tmp_path):
         .option("checkpointLocation", str(ckpt))
         .start()
     )
-    _await_drained(q, 300)
+    await_drained(q, "dss_session_merge", timeout_s=_TEST_DRAIN_S)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     q.stop()
     got = {
@@ -512,18 +501,18 @@ def test_stateful_total_merge_nonstring_key_schema(spark):
 def test_drain_parallelism_sizes_to_staged_bytes(spark, tmp_path):
     """r8 review hardening: the drain width derives from the staged source
     size — kilobyte verification drains get the floor (4), scale-probe-
-    sized staging gets the full session width, an explicit n wins, and the
-    previous setting is restored even on failure."""
+    sized staging gets the full session width, and the previous setting
+    is restored even on failure."""
     from dynamic_spark_spark.streaming.core import (
         DRAIN_BYTES_PER_PARTITION,
-        drain_parallelism,
+        _drain_parallelism,
     )
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     small = tmp_path / "small"
     small.mkdir()
     (small / "part-0").write_bytes(b"x" * 1024)
-    with drain_parallelism(spark, src=str(small)):
+    with _drain_parallelism(spark, str(small)):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
@@ -533,15 +522,69 @@ def test_drain_parallelism_sizes_to_staged_bytes(spark, tmp_path):
     # session core count whatever SPARK_GRAFT_CPUS the session runs with
     cores = spark.sparkContext.defaultParallelism
     (big / "part-0").write_bytes(b"\0" * ((cores + 8) * DRAIN_BYTES_PER_PARTITION))
-    with drain_parallelism(spark, src=str(big)):
+    with _drain_parallelism(spark, str(big)):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
 
-    with drain_parallelism(spark, n=7):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-
     try:
-        with drain_parallelism(spark, src=str(small)):
+        with _drain_parallelism(spark, str(small)):
             raise RuntimeError("boom")
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_drain_refuses_a_partial_or_failed_sink(spark, sf_dir, monkeypatch, tmp_path):
+    """``streaming.core.drain`` never hands back a partial sink: a query
+    that fails, or that has not terminated at the drain timeout (here
+    ``awaitTermination`` is patched to report a timeout), raises
+    StreamDrainError naming the key, and the checkpoint dir is gone."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming import StreamingQuery
+
+    from dynamic_spark_spark.registry import load_all_queries
+    from dynamic_spark_spark.streaming.core import StreamDrainError, drain
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    failing = file_stream(spark, src, "id long").select(
+        F.coalesce(F.raise_error(F.lit("boom")).cast("long"), "id").alias("id")
+    )
+    with pytest.raises(StreamDrainError, match=r"'drain_boom' \(source .*\) failed") as err:
+        drain(failing, "drain_boom", src)
+    assert isinstance(err.value.__cause__, StreamingQueryException)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        lambda self, timeout=None: False)
+    with pytest.raises(StreamDrainError,
+                       match=r"'stream_dedup_live'.*did not terminate within 300 s"):
+        load_all_queries()["stream_dedup_live"](spark, sf_dir)
+    ckpts = [d for d in made if os.path.basename(d).startswith("dss_drain_ckpt_")]
+    assert len(ckpts) == 2 and not any(os.path.exists(d) for d in ckpts), ckpts
+
+
+def test_python_datasource_refuses_a_partial_sink(spark, sf_dir, monkeypatch):
+    """stream_python_datasource polls its sink until the whole series has
+    arrived; a sink still short at the deadline raises StreamDrainError
+    instead of being returned. The sink's count is pinned at one chunk and
+    the deadline at 0 s, so the test waits for nothing."""
+    from dynamic_spark_spark.operators import scans
+    from dynamic_spark_spark.streaming.core import StreamDrainError
+
+    monkeypatch.setattr(scans, "_STREAM_SERIES_WAIT_S", 0)
+    monkeypatch.setattr(type(spark.range(0)), "count",
+                        lambda self: scans._STREAM_SERIES_CHUNK)
+    with pytest.raises(StreamDrainError,
+                       match=r"'stream_python_datasource'.*250 of 1000 rows"):
+        scans.stream_python_datasource(spark, sf_dir)
+    assert not spark.streams.active
