@@ -10,10 +10,11 @@ the way down and reads actual COLUMN VALUES out of an ORC file:
       then data region — ORC spec §'Stripes')
     → chunk-framed decompression (3-byte ``(len << 1) | is_original``
       headers, ORC spec §'Compression') over NONE / ZLIB (raw DEFLATE)
-      / SNAPPY / LZ4 / ZSTD — the last three through THIS REPO'S own
-      pure-Python decoders, so reading a default-written Spark 4 file
-      (zstd codec) exercises the RFC 8878 tier inside a second
-      container format
+      / SNAPPY / LZ4 / ZSTD, each chunk through :func:`codecs.decompress`:
+      ZLIB in the stdlib's zlib, SNAPPY in libsnappy, LZ4 and ZSTD in
+      this repo's pure-Python decoders — so reading a default-written
+      Spark 4 file (zstd codec) exercises the RFC 8878 tier inside a
+      second container format
     → PRESENT stream (byte-RLE over MSB-first bit-packed booleans)
     → DATA stream: integer Run-Length Encoding v2, all four
       sub-encodings — SHORT_REPEAT, DIRECT, PATCHED_BASE, DELTA
@@ -88,6 +89,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.codecs import ORC, decompress
 from dynamic_spark_spark.llmops.fixtures import (
     fixture_parallelism,
     scan_files,
@@ -357,38 +359,9 @@ def byte_rle_bools(data: bytes, count: int):
 # compression: ORC chunk framing over zlib/snappy/lz4/zstd
 # ---------------------------------------------------------------------------
 
-#: CompressionKind enum (orc_proto.proto): NONE ZLIB SNAPPY LZO LZ4 ZSTD
-_COMP_NONE, _COMP_ZLIB, _COMP_SNAPPY, _COMP_LZO, _COMP_LZ4, _COMP_ZSTD = range(6)
-
-
-def _orc_chunk_decode(chunk: bytes, kind: int, cap: int):
-    """One compressed chunk → bytes or None. ZLIB is raw DEFLATE;
-    SNAPPY/LZ4(block)/ZSTD(frame) route through THIS REPO'S pure-Python
-    decoders — reading a default-written Spark ORC file exercises the
-    zstd tier end to end. LZO is refused (no implementation — refuse,
-    don't guess)."""
-    if kind == _COMP_ZLIB:
-        import zlib
-
-        try:
-            d = zlib.decompressobj(wbits=-15)
-            out = d.decompress(chunk, cap + 1)
-        except zlib.error:
-            return None
-        return out if len(out) <= cap else None
-    if kind == _COMP_SNAPPY:
-        from dynamic_spark_spark.llmops.parquet_raw import snappy_decompress
-
-        return snappy_decompress(chunk, cap)
-    if kind == _COMP_LZ4:
-        from dynamic_spark_spark.llmops.lz4_hadoop import lz4_block_decompress
-
-        return lz4_block_decompress(chunk, cap)
-    if kind == _COMP_ZSTD:
-        from dynamic_spark_spark.llmops.zstd import zstd_decompress
-
-        return zstd_decompress(chunk, cap)
-    return None
+#: CompressionKind NONE: streams are not chunk-framed (the other kinds
+#: are :data:`codecs.ORC`)
+_COMP_NONE = 0
 
 
 def _orc_stream_bytes(data: bytes, kind: int, cap: int = ORC_VALUE_CAP):
@@ -414,7 +387,7 @@ def _orc_stream_bytes(data: bytes, kind: int, cap: int = ORC_VALUE_CAP):
         if orig:
             out += chunk
         else:
-            dec = _orc_chunk_decode(chunk, kind, cap - len(out))
+            dec = decompress(ORC.get(kind), chunk, None, cap - len(out))
             if dec is None:
                 return None
             out += dec

@@ -8,10 +8,13 @@ of a Spark-written, snappy-compressed parquet file:
       FLBA type_length)
     → row groups → column-chunk metadata
     → page headers (Thrift compact, at their byte offsets)
-    → page decompression: SNAPPY (pure-Python tag walk — parquet's
-      default codec), GZIP (stdlib), ZSTD and LZ4_RAW (this repo's own
-      decoders — a zstd-parquet lakehouse table reads with no native
-      codec anywhere)
+    → page decompression through :func:`codecs.decompress`, which
+      holds the output to the header's exact uncompressed size: SNAPPY
+      (parquet's default codec) in libsnappy, GZIP in the stdlib's
+      zlib, ZSTD and LZ4_RAW in this repo's own decoders (a
+      zstd-parquet lakehouse table reads with no native codec). The
+      pure-Python :func:`snappy_decompress` below is kept as the
+      reference the tests hold libsnappy's answers to
     → definition levels (RLE/bit-packed hybrid, OPTIONAL columns only —
       REQUIRED columns carry no def-levels block, parquet-format.md)
     → REPETITION levels (r12): ``list<scalar>`` columns decode through
@@ -93,6 +96,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_spark_spark.llmops.codecs import PARQUET, decompress
 from dynamic_spark_spark.llmops.fixtures import (
     fixture_parallelism,
     scan_files,
@@ -129,7 +133,9 @@ def snappy_decompress(src: bytes, cap: int = PAGE_CAP):
     """Pure-Python snappy decode (google/snappy format_description.txt,
     public): varint preamble with the uncompressed length, then a tag
     stream of literals and 1/2/4-byte-offset copies. Returns None for
-    malformed input; never raises."""
+    malformed input; never raises. The reference the tests compare the
+    libsnappy path of :func:`codecs.decompress` against; page decode
+    does not call it."""
     try:
         total = 0
         shift = 0
@@ -280,37 +286,6 @@ def _rle_bitpacked_bools(data: bytes, bit_width: int, count: int):
         return out
     except IndexError:
         return None
-
-
-def _codec_decompress(codec: int, body: bytes, uncompressed: int):
-    """Parquet CompressionCodec enum → page bytes. SNAPPY/ZSTD/LZ4_RAW
-    route through this repo's own pure-Python decoders (a zstd-parquet
-    lakehouse table reads with no native codec anywhere); GZIP is the
-    stdlib's zlib with the gzip wrapper. LZO/BROTLI/legacy-LZ4 (Hadoop
-    4-byte-framed, deprecated by parquet-format) are refused — refuse,
-    don't guess."""
-    cap = max(uncompressed, 1)
-    if codec == 0:  # UNCOMPRESSED
-        return body
-    if codec == 1:  # SNAPPY
-        return snappy_decompress(body, cap)
-    if codec == 2:  # GZIP: full member (header + deflate + trailer)
-        import zlib
-
-        try:
-            out = zlib.decompressobj(wbits=31).decompress(body, cap + 1)
-        except zlib.error:
-            return None
-        return out if len(out) <= cap else None
-    if codec == 6:  # ZSTD: one frame per page
-        from dynamic_spark_spark.llmops.zstd import zstd_decompress
-
-        return zstd_decompress(body, cap)
-    if codec == 7:  # LZ4_RAW: one lz4 block per page
-        from dynamic_spark_spark.llmops.lz4_hadoop import lz4_block_decompress
-
-        return lz4_block_decompress(body, cap)
-    return None  # LZO/BROTLI/legacy LZ4: out of scope — refuse, don't guess
 
 
 # ---------------------------------------------------------------------------
@@ -935,8 +910,8 @@ def _page_values(pg: _Page, raw: bytes, codec: int, typ: int,
     if len(body) < pg.comp:
         return None
     if pg.ptype == 0:  # v1: whole page compressed together
-        data = _codec_decompress(codec, body, pg.uncomp)
-        if data is None or len(data) != pg.uncomp:
+        data = decompress(PARQUET.get(codec), body, pg.uncomp, PAGE_CAP)
+        if data is None:
             return None
         if optional:
             if len(data) < 4:
@@ -958,11 +933,9 @@ def _page_values(pg: _Page, raw: bytes, codec: int, typ: int,
         want = pg.uncomp - lv
         if want < 0:
             return None
-        if pg.v2_comp:
-            data = _codec_decompress(codec, vals_comp, want)
-        else:
-            data = vals_comp
-        if data is None or len(data) != want:
+        data = decompress(PARQUET.get(codec) if pg.v2_comp
+                          else "uncompressed", vals_comp, want, PAGE_CAP)
+        if data is None:
             return None
         if optional and pg.v2_dl:
             levels = _rle_bitpacked_bools(
@@ -1070,8 +1043,8 @@ def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
     rep_w = leaf.max_rep.bit_length()
     def_w = leaf.max_def.bit_length()
     if pg.ptype == 0:  # v1: whole page compressed together
-        data = _codec_decompress(codec, body, pg.uncomp)
-        if data is None or len(data) != pg.uncomp:
+        data = decompress(PARQUET.get(codec), body, pg.uncomp, PAGE_CAP)
+        if data is None:
             return None
         pos = 0
         reps = [0] * pg.n_vals
@@ -1114,11 +1087,9 @@ def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
         want = pg.uncomp - lv
         if want < 0:
             return None
-        if pg.v2_comp:
-            payload = _codec_decompress(codec, body[lv:], want)
-        else:
-            payload = body[lv:]
-        if payload is None or len(payload) != want:
+        payload = decompress(PARQUET.get(codec) if pg.v2_comp
+                             else "uncompressed", body[lv:], want, PAGE_CAP)
+        if payload is None:
             return None
     else:
         return None
@@ -1214,8 +1185,9 @@ def _collect_column_levels(raw: bytes, chunks, path: str, leaf: _Leaf):
                 body = raw[pg.body : pg.body + pg.comp]
                 if len(body) < pg.comp:
                     return None
-                data = _codec_decompress(codec, body, pg.uncomp)
-                if data is None or len(data) != pg.uncomp:
+                data = decompress(PARQUET.get(codec), body, pg.uncomp,
+                                  PAGE_CAP)
+                if data is None:
                     return None
                 dictionary = _plain_decode(leaf.typ, data, pg.n_vals,
                                            leaf.tlen)
@@ -1808,8 +1780,8 @@ def _decode_chunk_values(raw: bytes, codec: int, num_values: int,
             body = raw[pg.body : pg.body + pg.comp]
             if len(body) < pg.comp:
                 return None
-            data = _codec_decompress(codec, body, pg.uncomp)
-            if data is None or len(data) != pg.uncomp:
+            data = decompress(PARQUET.get(codec), body, pg.uncomp, PAGE_CAP)
+            if data is None:
                 return None
             dictionary = _plain_decode(typ, data, pg.n_vals, tlen)
             if dictionary is None:
@@ -2417,8 +2389,9 @@ def _page_index_inner(raw: bytes, column: str):
             body = raw[pg.body : pg.body + pg.comp]
             if len(body) < pg.comp:
                 return None
-            data = _codec_decompress(ch["codec"], body, pg.uncomp)
-            if data is None or len(data) != pg.uncomp:
+            data = decompress(PARQUET.get(ch["codec"]), body, pg.uncomp,
+                              PAGE_CAP)
+            if data is None:
                 return None
             dictionary = _plain_decode(typ, data, pg.n_vals, tlen)
             if dictionary is None:
@@ -2827,15 +2800,24 @@ def scan_parquet_raw_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RAW_NUMERIC_COLUMNS = ("l_orderkey", "l_linenumber", "l_quantity",
-                        "price_f32", "is_return")
+#: column → numpy dtype of its Spark type in the key's schema
+_RAW_NUMERIC_COLUMNS = {"l_orderkey": "int64", "l_linenumber": "int32",
+                        "l_quantity": "float64", "price_f32": "float64",
+                        "is_return": "bool"}
 
 
 def _decode_raw_numeric(raw: bytes):
+    """The five columns as typed arrays: ``_row_aligned`` proves every
+    column is null-free, so no value needs an object slot."""
+    import numpy as np
+
     got = [read_parquet_column(raw, c) for c in _RAW_NUMERIC_COLUMNS]
     if not _row_aligned(raw, *got):
         return None
-    return pd.DataFrame(dict(zip(_RAW_NUMERIC_COLUMNS, got)))
+    return pd.DataFrame({
+        c: np.array(v, dtype=t)
+        for (c, t), v in zip(_RAW_NUMERIC_COLUMNS.items(), got)
+    })
 
 
 #: long-form identity oracle shared by the parquet and ORC nested keys

@@ -9,7 +9,7 @@ Usage: PYTHONPATH=. python scripts/verify_all.py [sf_dir] [--prefix N]
 --prefix N checks only the first N keys in driver verification order — the
 exact window the per-round gate will sample — for a fast pre-flight.
 
---workers N (default 2) shards the keys round-robin across N worker
+--workers N (default 4) shards the keys round-robin across N worker
 PROCESSES, each with its own SparkSession and DuckDB connection. Processes,
 not threads, because keys legitimately mutate session-scoped state
 (scoped_conf shuffle-partition overrides, dynamic partitionOverwriteMode,

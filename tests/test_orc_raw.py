@@ -120,11 +120,11 @@ def test_orc_column_refusals():
 
 def test_orc_all_codecs_and_strings_match_pyarrow():
     """The chunk-framed compression layer across every supported codec —
-    zlib (raw DEFLATE), snappy/lz4/zstd through this repo's own
-    pure-Python decoders — for integer, string (DIRECT_V2 and
-    DICTIONARY_V2, as liborc picks), and nullable columns. Spark 4
-    writes ORC with zstd by default, so the zstd leg is what
-    default-written production files look like."""
+    zlib (raw DEFLATE) in the stdlib, snappy in libsnappy, lz4/zstd
+    through this repo's own pure-Python decoders — for integer, string
+    (DIRECT_V2 and DICTIONARY_V2, as liborc picks), and nullable
+    columns. Spark 4 writes ORC with zstd by default, so the zstd leg
+    is what default-written production files look like."""
     import pyarrow as pa
     from pyarrow import orc
 

@@ -1548,7 +1548,8 @@ def test_raw_scan_never_drops_a_file():
         ("rawnested", pr._decode_raw_nested, nested,
          [[1, 2], [[0.5], [1.5, 2.5]]], 3, ["int64", "int32", "object"]),
         ("rawnum", pr._decode_raw_numeric, numeric,
-         [[1, 2], [1, 2], [1.0, 2.0], [0.5, 1.5], [True, False]], 2, None),
+         [[1, 2], [1, 2], [1.0, 2.0], [0.5, 1.5], [True, False]], 2,
+         ["int64", "int32", "float64", "float64", "bool"]),
         # an empty file may carry no footer min/max
         ("rawdict", pr._decode_raw_dict, {"doc_id": pa.int64()}, [[5, 9]],
          2, None),
@@ -1942,6 +1943,136 @@ def test_snappy_decompress_contract():
         m[pos] ^= 0xFF
         read_parquet_int64_column(bytes(m), "doc_id")  # must not raise
     assert time.monotonic() - t0 < 15.0
+
+    # the runtime path (libsnappy in codecs.decompress) gives the pure
+    # reference's answer on every prefix and byte mutation of the file's
+    # own page stream: the same bytes, or None from both
+    from dynamic_spark_spark.llmops.codecs import decompress
+    from dynamic_spark_spark.llmops.parquet_raw import (
+        PAGE_CAP,
+        _footer_walk,
+        _parse_page_header,
+    )
+    from dynamic_spark_spark.llmops.protowire import _uvarint_enc
+
+    def same(stream, size=None, cap=PAGE_CAP):
+        want = snappy_decompress(stream, cap)
+        if size is not None and want is not None and len(want) != size:
+            want = None
+        assert decompress("snappy", stream, size, cap) == want, stream[:8]
+        return want
+
+    (_codec, _n, page_off, _path), = _footer_walk(raw)[1]
+    pg = _parse_page_header(raw, page_off)
+    stream = raw[pg.body : pg.body + pg.comp]
+    page = same(stream, pg.uncomp)
+    assert page is not None and len(page) == pg.uncomp
+    for hand_made in (hand, hand2, b"", bytes([255] * 6),
+                      b"\xff\xff\xff\xff\x0fx"):
+        same(hand_made)
+    t0 = time.monotonic()
+    for cut in range(len(stream)):
+        same(stream[:cut])
+        same(stream[:cut], pg.uncomp)
+    for pos in range(len(stream)):
+        for flip in (0x01, 0x80, 0xFF):
+            m = bytearray(stream)
+            m[pos] ^= flip
+            same(bytes(m))
+            same(bytes(m), pg.uncomp)
+    assert time.monotonic() - t0 < 15.0
+    # a preamble 1 larger than the tags produce
+    assert same(bytes([6]) + hand[1:]) is None
+    preamble = len(_uvarint_enc(pg.uncomp))
+    assert same(_uvarint_enc(pg.uncomp + 1) + stream[preamble:]) is None
+    # a page header whose uncompressed_page_size is 1 more than the
+    # stream's preamble: pyarrow asked for that size pads the output
+    # instead of failing, so the size must be refused before the call
+    assert same(stream, pg.uncomp + 1) is None
+    # output past the cap
+    assert same(stream, None, pg.uncomp - 1) is None
+    # the empty stream
+    assert decompress("snappy", b"\x00", 0, PAGE_CAP) == b""
+    assert same(b"\x00", 0) == b""
+
+
+def _data_page(compression: str = "gzip"):
+    """A one-column int64 parquet file → ``(raw, page, optional, values)``
+    for its single data page."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops.parquet_raw import (
+        _footer_walk,
+        _parse_page_header,
+    )
+
+    values = list(range(0, 3000, 3))
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"doc_id": values}), buf,
+                   compression=compression, use_dictionary=False)
+    raw = buf.getvalue()
+    schema, chunks = _footer_walk(raw)[:2]
+    (_codec, _n, page_off, _path), = chunks
+    return raw, _parse_page_header(raw, page_off), \
+        schema["doc_id"].optional, values
+
+
+def test_parquet_gzip_page_refuses_a_cut_trailer():
+    """A GZIP page whose 8-byte CRC-32/ISIZE trailer is cut by 1-8 bytes
+    still inflates to the full page; it is refused, so the member's
+    checksum is always checked."""
+    from dynamic_spark_spark.llmops.parquet_raw import _T_INT64, _page_values
+
+    raw, pg, optional, values = _data_page()
+    assert _page_values(pg, raw, 2, _T_INT64, optional, None) == values
+    comp = pg.comp
+    for cut in range(1, 9):
+        pg.comp = comp - cut
+        assert _page_values(pg, raw, 2, _T_INT64, optional, None) is None, cut
+
+
+@pytest.mark.parametrize("compression", ["gzip", "zstd", "snappy", "lz4"])
+def test_parquet_page_refuses_trailing_junk(compression):
+    """Bytes after the compressed stream inside the page body (after the
+    gzip member, the zstd frame, the snappy or lz4 block) are refused,
+    not left unread."""
+    from dynamic_spark_spark.llmops.parquet_raw import (
+        _T_INT64,
+        _footer_walk,
+        _page_values,
+    )
+
+    raw, pg, optional, values = _data_page(compression)
+    codec = _footer_walk(raw)[1][0][0]
+    assert _page_values(pg, raw, codec, _T_INT64, optional, None) == values
+    end = pg.body + pg.comp
+    for junk in (b"\x00", b"junk", bytes(9)):
+        pg.comp = end - pg.body + len(junk)
+        got = _page_values(pg, raw[:end] + junk, codec, _T_INT64, optional,
+                           None)
+        assert got is None, junk
+
+
+def test_orc_zlib_chunk_refuses_a_cut_stream():
+    """An ORC ZLIB chunk (raw DEFLATE) cut in half inflates to a prefix
+    of the stream without error; it is refused, like junk after the
+    stream's end."""
+    from dynamic_spark_spark.llmops.orc_raw import _orc_stream_bytes
+
+    payload = b"".join(b"row %d of the stream\n" % i for i in range(2000))
+    c = zlib.compressobj(wbits=-15)
+    chunk = c.compress(payload) + c.flush()
+
+    def framed(ch: bytes) -> bytes:
+        return (len(ch) << 1).to_bytes(3, "little") + ch
+
+    assert _orc_stream_bytes(framed(chunk), 1) == payload
+    assert _orc_stream_bytes(framed(chunk[: len(chunk) // 2]), 1) is None
+    assert _orc_stream_bytes(framed(chunk[:-1]), 1) is None
+    assert _orc_stream_bytes(framed(chunk + b"\x00"), 1) is None
 
 
 def test_parquet_dict_tier_matches_pyarrow():

@@ -495,6 +495,29 @@ def test_stream_drain_has_one_site():
     }, sites
 
 
+def test_codec_calls_have_one_site():
+    """One runtime path per codec: under the package only
+    ``llmops/codecs.py`` builds a ``pyarrow.Codec``, and nothing calls
+    the pure ``snappy_decompress``, which is kept as the test reference
+    for libsnappy."""
+    import ast
+    import pathlib
+
+    import dynamic_spark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                if name in ("Codec", "snappy_decompress"):
+                    sites.add((str(path.relative_to(root)), name))
+    assert sites == {("llmops/codecs.py", "Codec")}, sites
+
+
 def test_map_in_pandas_sites_pinned():
     """Keys that decode row by row go through the one per-row map
     (``fixtures.map_rows``), which refuses to drop a row silently. Only
