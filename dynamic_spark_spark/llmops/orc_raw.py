@@ -1,7 +1,9 @@
 """ORC DATA-path read from raw bytes — no ORC library anywhere.
 
-The raw-parquet twin (:mod:`parquet_raw`): :mod:`protowire` already
-audits ORC's postscript/footer metadata; this module walks the rest of
+The raw-parquet twin (:mod:`parquet_raw`): ORC's postscript and footer
+are protobuf, read through :func:`protowire.proto_fields` by ONE tail
+parse (:func:`parse_orc_meta`, which the ``scan_orc_footer`` audit and
+every reader here share, once per read); this module walks the rest of
 the way down and reads actual COLUMN VALUES out of an ORC file:
 
     postscript → file footer (type tree, stripe directory)
@@ -84,6 +86,7 @@ vectorized ORC read and a parquet copy of the same data disagree at
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -404,78 +407,81 @@ _INT_KINDS = {2, 3, 4}  # SHORT, INT, LONG
 _STR_KINDS = {7, 8, 16, 17}  # STRING, BINARY, VARCHAR, CHAR
 
 
-def _orc_tail(raw: bytes):
-    """Postscript + footer → (footer bytes decompressed, compression
-    kind) or None. Unlike the metadata-audit tier
-    (:func:`protowire.parse_orc_tail`, which stays NONE-only by its
-    documented scope), this walk decompresses chunk-framed footers so
-    DEFAULT-written Spark files (zstd since Spark 4) are readable."""
+class OrcMeta(NamedTuple):
+    """An ORC file's tail, parsed once: the postscript's
+    ``compression`` kind and the Metadata section's ``(start, end)``
+    byte range (None when the writer wrote none), and from the footer
+    ``num_rows`` (numberOfRows), the ``stripes`` as ``(offset,
+    index_len, data_len, footer_len, rows)``, the ``types`` as ``(kind,
+    subtypes, field_names)`` with a STRUCT root, ``stride``
+    (rowIndexStride, None when absent) and ``file_stats`` (the
+    per-column ColumnStatistics blobs in column-id order)."""
+
+    compression: int
+    metadata: tuple | None
+    num_rows: int | None
+    stripes: list
+    types: list
+    stride: int | None
+    file_stats: list
+
+
+def parse_orc_meta(raw: bytes):
+    """The one parse of an ORC file's tail (ORC spec §'Postscript' /
+    'Footer'): the 1-byte postscript length at the very end, the
+    uncompressed protobuf postscript (footerLength, compression kind,
+    metadataLength, ``ORC`` magic in field 8000), then the footer —
+    chunk-framed by the file codec unless compression is NONE, so
+    DEFAULT-written Spark files (zstd since Spark 4) read too — →
+    :class:`OrcMeta`, or None for anything malformed (no magic, a
+    footer that overruns the file or fails to decompress, a stripe
+    entry missing one of its five fields, a type tree without a STRUCT
+    root). Never raises."""
     if not raw or len(raw) < 4:
         return None
     ps_len = raw[-1]
     if ps_len == 0 or 1 + ps_len > len(raw):
         return None
-    ps = raw[-1 - ps_len : -1]
-    footer_len = None
-    compression = 0
-    magic_ok = False
-    for fid, wt, val in proto_fields(ps):
-        if fid == 1 and wt == 0:
-            footer_len = val
-        elif fid == 2 and wt == 0:
-            compression = val
-        elif fid == 8000 and wt == 2:
-            magic_ok = val == b"ORC"
-    if not magic_ok or footer_len is None:
+    try:
+        footer_len = meta_len = None
+        comp = _COMP_NONE
+        magic_ok = False
+        for fid, wt, val in proto_fields(raw[-1 - ps_len : -1]):
+            if fid == 1 and wt == 0:
+                footer_len = val
+            elif fid == 2 and wt == 0:
+                comp = val
+            elif fid == 5 and wt == 0:
+                meta_len = val
+            elif fid == 8000 and wt == 2:
+                magic_ok = val == b"ORC"
+        if not magic_ok or footer_len is None:
+            return None
+        start = len(raw) - 1 - ps_len - footer_len
+        if start < 0:
+            return None
+        footer = _orc_stream_bytes(raw[start : start + footer_len], comp)
+        if footer is None:
+            return None
+        metadata = (start - meta_len, start) if meta_len else None
+        return _orc_footer(footer, comp, metadata)
+    except Exception:
         return None
-    start = len(raw) - 1 - ps_len - footer_len
-    if start < 0:
-        return None
-    footer = _orc_stream_bytes(raw[start : start + footer_len], compression)
-    if footer is None:
-        return None
-    return footer, compression
 
 
-def _packed_uvarints(blob: bytes):
-    out = []
-    pos = 0
-    while pos < len(blob):
-        v, pos = _uvarint_dec(blob, pos)
-        out.append(v)
-    return out
-
-
-def _orc_footer_meta(raw: bytes):
-    """Footer → ``(compression, stripes_meta, types)`` where
-    stripes_meta entries are ``(offset, index_len, data_len, footer_len,
-    rows)`` and types entries ``(kind, subtypes, field_names)``, or
-    None. Raises freely — the public entry points catch."""
-    tail = _orc_tail(raw)
-    if tail is None:
-        return None
-    footer, comp = tail
+def _orc_footer(footer: bytes, comp: int, metadata):
+    num_rows = stride = None
     stripes = []
     types = []
+    file_stats = []
     for fid, wt, val in proto_fields(footer):
         if fid == 3 and wt == 2:  # StripeInformation
-            off = ilen = dlen = flen = rows = None
-            for sfid, swt, sval in proto_fields(val):
-                if swt != 0:
-                    continue
-                if sfid == 1:
-                    off = sval
-                elif sfid == 2:
-                    ilen = sval
-                elif sfid == 3:
-                    dlen = sval
-                elif sfid == 4:
-                    flen = sval
-                elif sfid == 5:
-                    rows = sval
-            if None in (off, ilen, dlen, flen, rows):
+            fields = {sfid: sval for sfid, swt, sval in proto_fields(val)
+                      if swt == 0}
+            entry = tuple(fields.get(k) for k in range(1, 6))
+            if None in entry:
                 return None
-            stripes.append((off, ilen, dlen, flen, rows))
+            stripes.append(entry)
         elif fid == 4 and wt == 2:  # Type
             kind = 0
             subtypes: list[int] = []
@@ -490,9 +496,36 @@ def _orc_footer_meta(raw: bytes):
                 elif tfid == 3 and twt == 2:
                     names.append(tval.decode("utf-8"))
             types.append((kind, subtypes, names))
+        elif fid == 6 and wt == 0:
+            num_rows = val
+        elif fid == 7 and wt == 2:  # ColumnStatistics
+            file_stats.append(val)
+        elif fid == 8 and wt == 0:
+            stride = val
     if not types or types[0][0] != 12:  # root must be STRUCT
         return None
-    return comp, stripes, types
+    return OrcMeta(comp, metadata, num_rows, stripes, types, stride,
+                   file_stats)
+
+
+def _packed_uvarints(blob: bytes):
+    out = []
+    pos = 0
+    while pos < len(blob):
+        v, pos = _uvarint_dec(blob, pos)
+        out.append(v)
+    return out
+
+
+def parse_orc_tail(raw: bytes):
+    """An ORC file's row counts from its tail: ``(number_of_rows,
+    [stripe_rows])`` projected from :func:`parse_orc_meta`, or None
+    when the tail does not parse or carries no numberOfRows. Never
+    raises."""
+    meta = parse_orc_meta(raw)
+    if meta is None or meta.num_rows is None:
+        return None
+    return meta.num_rows, [st[4] for st in meta.stripes]
 
 
 def _orc_gather_streams(raw: bytes, comp: int, stripe_meta, col_ids,
@@ -559,19 +592,19 @@ def _orc_gather_streams(raw: bytes, comp: int, stripe_meta, col_ids,
     return got
 
 
-def _orc_column_stripes(raw: bytes, column: str,
+def _orc_column_stripes(raw: bytes, meta, column: str,
                         want_index: bool = False):
-    """Shared walk: footer type tree + stripe directory + per-stripe
-    stream gathering for ONE flat column. Returns ``(type_kind,
-    [stripe dict])`` where each stripe dict carries ``rows``,
-    ``encoding``, and the column's DECOMPRESSED streams (``present``,
-    ``data``, ``length``, ``dict_data``; plus ``row_index`` /
-    ``bloom_utf8`` when ``want_index``), or None. Raises freely — the
-    public entry points catch."""
-    meta = _orc_footer_meta(raw)
+    """Shared walk over the file's :class:`OrcMeta` (None refuses):
+    type tree + stripe directory + per-stripe stream gathering for ONE
+    flat column. Returns ``(type_kind, [stripe dict])`` where each
+    stripe dict carries ``rows``, ``encoding``, and the column's
+    DECOMPRESSED streams (``present``, ``data``, ``length``,
+    ``dict_data``; plus ``row_index`` / ``bloom_utf8`` when
+    ``want_index``), or None. Raises freely — the public entry points
+    catch."""
     if meta is None:
         return None
-    comp, stripes, types = meta
+    comp, stripes, types = meta.compression, meta.stripes, meta.types
     root_kind, root_subs, root_names = types[0]
     if column not in root_names:
         return None
@@ -617,7 +650,7 @@ def read_orc_int_column(raw: bytes, column: str):
     nulls exist) → RLEv2 DATA. Returns non-null values in row order, or
     None. Never raises."""
     try:
-        walked = _orc_column_stripes(raw, column)
+        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
         if walked is None or (walked[0] not in _INT_KINDS
                               and walked[0] != 15):  # 15 = DATE, epoch days
             return None
@@ -656,7 +689,7 @@ def read_orc_column(raw: bytes, column: str):
     STRING/BINARY/VARCHAR/CHAR through the string tiers. Returns
     non-null values in row order, or None. Never raises."""
     try:
-        walked = _orc_column_stripes(raw, column)
+        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
         if walked is None:
             return None
         kind = walked[0]
@@ -754,7 +787,7 @@ def read_orc_string_column(raw: bytes, column: str):
     stripe by observed cardinality. Returns non-null ``bytes`` values
     in row order, or None. Never raises."""
     try:
-        walked = _orc_column_stripes(raw, column)
+        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
         if walked is None or walked[0] not in _STR_KINDS:
             return None
         return _string_values_from_stripes(walked[1])
@@ -859,10 +892,10 @@ def _shape_checked_delegate(raw: bytes, column: str, want_kind: int,
     general recursive reader (r12 review: they began as parallel
     implementations the tests proved identical): verify the column is
     the promised kind with scalar-only children, then delegate."""
-    meta = _orc_footer_meta(raw)
+    meta = parse_orc_meta(raw)
     if meta is None:
         return None
-    _comp, _stripes, types = meta
+    types = meta.types
     _rk, root_subs, root_names = types[0]
     if column not in root_names:
         return None
@@ -876,7 +909,7 @@ def _shape_checked_delegate(raw: bytes, column: str, want_kind: int,
         c >= len(types) or types[c][1] for c in subs
     ):
         return None  # compound children: refused by THIS entry point
-    return read_orc_nested_column(raw, column)
+    return _nested_inner(raw, meta, column)
 
 
 def read_orc_struct_column(raw: bytes, column: str):
@@ -1052,31 +1085,34 @@ def read_orc_nested_column(raw: bytes, column: str):
     every level. UNION refuses. Returns one entry per row or None;
     never raises."""
     try:
-        meta = _orc_footer_meta(raw)
-        if meta is None:
-            return None
-        comp, stripes, types = meta
-        _rk, root_subs, root_names = types[0]
-        if column not in root_names:
-            return None
-        col_id = root_subs[root_names.index(column)]
-        if col_id >= len(types):
-            return None
-        ids = _orc_subtree_ids(types, col_id)
-        if ids is None:
-            return None
-        rows_out: list = []
-        for sm in stripes:
-            g = _orc_gather_streams(raw, comp, sm, set(ids))
-            if g is None:
-                return None
-            got = _orc_node_values(g, types, col_id, g["rows"])
-            if got is None:
-                return None
-            rows_out.extend(got)
-        return rows_out
+        return _nested_inner(raw, parse_orc_meta(raw), column)
     except Exception:
         return None
+
+
+def _nested_inner(raw: bytes, meta, column: str):
+    if meta is None:
+        return None
+    types = meta.types
+    _rk, root_subs, root_names = types[0]
+    if column not in root_names:
+        return None
+    col_id = root_subs[root_names.index(column)]
+    if col_id >= len(types):
+        return None
+    ids = _orc_subtree_ids(types, col_id)
+    if ids is None:
+        return None
+    rows_out: list = []
+    for sm in meta.stripes:
+        g = _orc_gather_streams(raw, meta.compression, sm, set(ids))
+        if g is None:
+            return None
+        got = _orc_node_values(g, types, col_id, g["rows"])
+        if got is None:
+            return None
+        rows_out.extend(got)
+    return rows_out
 
 
 def read_orc_list_column(raw: bytes, column: str):
@@ -1105,24 +1141,6 @@ def read_orc_list_column(raw: bytes, column: str):
 def _zz(u: int) -> int:
     """protobuf sint zigzag → signed (stats min/max are sint64)."""
     return (u >> 1) ^ -(u & 1)
-
-
-def _orc_footer_extras(raw: bytes):
-    """Footer → ``(row_index_stride, file_stats)`` where ``file_stats``
-    is the list of per-column ColumnStatistics blobs in column-id order
-    (Footer fields 8 and 7 — orc_proto.proto), or None."""
-    tail = _orc_tail(raw)
-    if tail is None:
-        return None
-    footer, _comp = tail
-    stride = None
-    stats = []
-    for fid, wt, val in proto_fields(footer):
-        if fid == 8 and wt == 0:
-            stride = val
-        elif fid == 7 and wt == 2:
-            stats.append(val)
-    return stride, stats
 
 
 def _parse_orc_statistics(blob: bytes, kind: int):
@@ -1187,44 +1205,29 @@ def _parse_orc_statistics(blob: bytes, kind: int):
     return n, has_null, (mn, mn_bound), (mx, mx_bound)
 
 
-def _orc_stripe_stats(raw: bytes):
+def _orc_stripe_stats(raw: bytes, meta: OrcMeta):
     """The Metadata section (PostScript.metadataLength, field 5 —
-    sandwiched between the stripes and the footer) → one list of
-    per-column ColumnStatistics blobs PER STRIPE, or None when the
-    writer wrote NO metadata section (mlen absent/0). A section the
-    PostScript ADVERTISES but that fails to decompress/parse — or
-    parses to zero StripeStatistics — raises instead: 'absent' and
-    'erased by tampering' must not look the same to the audit (a
-    one-byte flip of the outer protobuf tag would otherwise skip the
-    whole stripe tier silently). This is the middle level of ORC's
-    three-tier statistics story (row group → stripe → file); planners
-    use it to skip whole stripes without touching them."""
-    if not raw or len(raw) < 4:
-        return None
-    ps_len = raw[-1]
-    if ps_len == 0 or 1 + ps_len > len(raw):
-        return None
-    ps = raw[-1 - ps_len : -1]
-    flen = mlen = None
-    comp = 0
-    for fid, wt, val in proto_fields(ps):
-        if fid == 1 and wt == 0:
-            flen = val
-        elif fid == 2 and wt == 0:
-            comp = val
-        elif fid == 5 and wt == 0:
-            mlen = val
-    if flen is None or not mlen:
+    sandwiched between the stripes and the footer; its bounds come from
+    ``meta``) → one list of per-column ColumnStatistics blobs PER
+    STRIPE, or None when the writer wrote NO metadata section
+    (metadataLength absent/0). A section the PostScript ADVERTISES but
+    that fails to decompress/parse — or parses to zero StripeStatistics
+    — raises instead: 'absent' and 'erased by tampering' must not look
+    the same to the audit (a one-byte flip of the outer protobuf tag
+    would otherwise skip the whole stripe tier silently). This is the
+    middle level of ORC's three-tier statistics story (row group →
+    stripe → file); planners use it to skip whole stripes without
+    touching them."""
+    if meta.metadata is None:
         return None  # genuinely absent: the writer wrote no section
-    end = len(raw) - 1 - ps_len - flen
-    start = end - mlen
+    start, end = meta.metadata
     if start < 0:
         raise ValueError("metadata section overruns the file")
-    meta = _orc_stream_bytes(raw[start:end], comp)
-    if meta is None:
+    section = _orc_stream_bytes(raw[start:end], meta.compression)
+    if section is None:
         raise ValueError("metadata section fails to decompress")
     stripes = []
-    for fid, wt, val in proto_fields(meta):
+    for fid, wt, val in proto_fields(section):
         if fid == 1 and wt == 2:  # StripeStatistics
             cols = [
                 v for f2, w2, v in proto_fields(val) if f2 == 1 and w2 == 2
@@ -1316,7 +1319,11 @@ def read_orc_row_index(raw: bytes, column: str):
     Scope: SHORT/INT/LONG, FLOAT/DOUBLE, STRING/VARCHAR/CHAR, DATE —
     the kinds whose index order the audit can reproduce."""
     try:
-        return _row_index_inner(raw, column)
+        meta = parse_orc_meta(raw)
+        walked = _orc_column_stripes(raw, meta, column, want_index=True)
+        if walked is None:
+            return None
+        return _row_index_inner(raw, meta, column, walked)
     except Exception:
         return None
 
@@ -1353,18 +1360,14 @@ def _stripe_row_streams(kind: int, stripes):
     return out
 
 
-def _row_index_inner(raw: bytes, column: str, walked=None, streams=None):
-    if walked is None:
-        walked = _orc_column_stripes(raw, column, want_index=True)
-    if walked is None:
-        return None
+def _row_index_inner(raw: bytes, meta: OrcMeta, column: str, walked,
+                     streams=None):
     kind, stripes = walked
     if kind not in _INT_KINDS | {5, 6, 7, 15, 16, 17}:
         return None
-    extras = _orc_footer_extras(raw)
-    if extras is None or extras[0] is None or not extras[0]:
+    stride, file_stats = meta.stride, meta.file_stats
+    if not stride:
         return None
-    stride, file_stats = extras
     if streams is None:
         streams = _stripe_row_streams(kind, stripes)
     if streams is None or len(streams) != len(stripes):
@@ -1402,11 +1405,7 @@ def _row_index_inner(raw: bytes, column: str, walked=None, streams=None):
                     "min": s_min, "max": s_max})
     # the file-level statistics make the same claims about the whole
     # column — hold them to the same standard
-    meta = _orc_footer_meta(raw)
-    if meta is None:
-        return None
-    _comp, _stripes, types = meta
-    root_subs, root_names = types[0][1], types[0][2]
+    root_subs, root_names = meta.types[0][1], meta.types[0][2]
     col_id = root_subs[root_names.index(column)]
     # per-stripe actuals computed ONCE feed both the stripe tier and
     # the file tier — no flattened whole-column copy (the streams are
@@ -1427,7 +1426,7 @@ def _row_index_inner(raw: bytes, column: str, walked=None, streams=None):
     # tier planners use to skip whole stripes) — audited per stripe
     # when the writer emitted a metadata section (an ADVERTISED but
     # unparseable section raises inside _orc_stripe_stats → refusal)
-    sstats = _orc_stripe_stats(raw)
+    sstats = _orc_stripe_stats(raw, meta)
     if sstats is not None:
         if len(sstats) != len(streams):
             return None
@@ -1621,23 +1620,20 @@ def read_orc_bloom_filter(raw: bytes, column: str):
     None on a missing stream, count mismatch, or any false negative.
     Never raises."""
     try:
-        return _bloom_inner(raw, column)
+        meta = parse_orc_meta(raw)
+        walked = _orc_column_stripes(raw, meta, column, want_index=True)
+        return None if walked is None else _bloom_inner(meta, walked)
     except Exception:
         return None
 
 
-def _bloom_inner(raw: bytes, column: str, walked=None, streams=None):
-    if walked is None:
-        walked = _orc_column_stripes(raw, column, want_index=True)
-    if walked is None:
-        return None
+def _bloom_inner(meta: OrcMeta, walked, streams=None):
     kind, stripes = walked
     if kind not in _INT_KINDS | {7, 16, 17}:
         return None
-    extras = _orc_footer_extras(raw)
-    if extras is None or extras[0] is None or not extras[0]:
+    stride = meta.stride
+    if not stride:
         return None
-    stride = extras[0]
     if streams is None:
         streams = _stripe_row_streams(kind, stripes)
     if streams is None or len(streams) != len(stripes):
@@ -1680,14 +1676,15 @@ def read_orc_index_and_bloom(raw: bytes, column: str):
     Returns ``(row_index_audit, bloom_audit)`` or None if EITHER
     refuses. Never raises."""
     try:
-        walked = _orc_column_stripes(raw, column, want_index=True)
+        meta = parse_orc_meta(raw)
+        walked = _orc_column_stripes(raw, meta, column, want_index=True)
         if walked is None:
             return None
         streams = _stripe_row_streams(walked[0], walked[1])
         if streams is None:
             return None
-        idx = _row_index_inner(raw, column, walked=walked, streams=streams)
-        bloom = _bloom_inner(raw, column, walked=walked, streams=streams)
+        idx = _row_index_inner(raw, meta, column, walked, streams)
+        bloom = _bloom_inner(meta, walked, streams)
         if idx is None or bloom is None:
             return None
         return idx, bloom
@@ -1696,8 +1693,58 @@ def read_orc_index_and_bloom(raw: bytes, column: str):
 
 
 # ---------------------------------------------------------------------------
-# registered key
+# registered keys
 # ---------------------------------------------------------------------------
+
+_ORC_FOOTER_ORACLE = """
+SELECT doc_id % 8 AS p,
+  CAST(COUNT(*) AS BIGINT) AS footer_rows,
+  CAST(COUNT(*) AS BIGINT) AS stripe_rows
+FROM documents GROUP BY doc_id % 8
+"""
+
+
+@query("scan_orc_footer", _ORC_FOOTER_ORACLE, tag="scan")
+def scan_orc_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Raw-bytes ORC metadata audit — the protobuf twin of the parquet
+    footer key: ORC's postscript and footer are protobuf messages, so
+    the generic tag-dispatch iterator (:func:`protowire.proto_fields`)
+    reads the second columnar format's metadata with no ORC library,
+    through the same one tail parse (:func:`parse_orc_meta`) every raw
+    ORC reader here uses. The key writes the documents table
+    partitioned by ``doc_id % 8`` (compression NONE; the parse reads
+    chunk-framed footers too), re-scans the files as binary, and sums
+    both the footer ``numberOfRows`` and the per-stripe row counts per
+    partition value against closed-form counts — one hash match proves
+    the postscript walk, the magic/compression validation, and the
+    nested StripeInformation decode together. The only shuffle carries
+    8 partition aggregates."""
+
+    def write(path: str) -> None:
+        d = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text", (F.col("doc_id") % 8).alias("p")
+        )
+        d.repartition(8, "p").write.mode("overwrite").option(
+            "compression", "none"
+        ).partitionBy("p").orc(path)
+
+    out = staged_fixture_dir(spark, sf_dir, "orcfooter", write)
+    per_file = scan_files(spark, "orcfooter", out, "*.orc",
+                          "p long, footer_rows long, stripe_rows long",
+                          _decode_orc_footer, partitioned=True)
+    return per_file.groupBy("p").agg(
+        F.sum("footer_rows").alias("footer_rows"),
+        F.sum("stripe_rows").alias("stripe_rows"),
+    )
+
+
+def _decode_orc_footer(raw: bytes, p: int):
+    parsed = parse_orc_tail(raw)
+    if parsed is None:
+        return None
+    return pd.DataFrame({"p": [p], "footer_rows": [parsed[0]],
+                         "stripe_rows": [sum(parsed[1])]})
+
 
 _ORC_COLUMN_ORACLE = """
 SELECT doc_id, (doc_id * 37) % 99991 AS val FROM documents

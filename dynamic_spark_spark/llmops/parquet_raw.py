@@ -1,11 +1,12 @@
 """Parquet DATA-path read from raw bytes — no parquet library anywhere.
 
-The footer audit (:mod:`parquet_footer`) proves the metadata layer; this
+The footer audit (:mod:`parquet_footer`) proves the metadata layer and
+owns its one parse, :func:`parquet_footer.parse_parquet_meta`; this
 module walks the rest of the way down and reads actual COLUMN VALUES out
 of a Spark-written, snappy-compressed parquet file:
 
-    footer (Thrift compact) → schema tree (physical types, repetition,
-      FLBA type_length)
+    footer (Thrift compact, parsed once per read) → schema tree
+      (physical types, repetition, FLBA type_length)
     → row groups → column-chunk metadata
     → page headers (Thrift compact, at their byte offsets)
     → page decompression through :func:`codecs.decompress`, which
@@ -105,7 +106,8 @@ from dynamic_spark_spark.llmops.fixtures import (
 )
 from dynamic_spark_spark.llmops.parquet_footer import (
     _Compact,
-    parse_parquet_footer,
+    _Leaf,
+    parse_parquet_meta,
 )
 from dynamic_spark_spark.llmops.protowire import _uvarint_dec, _zigzag_dec
 from dynamic_spark_spark.llmops.zstd import xxh64
@@ -289,308 +291,6 @@ def _rle_bitpacked_bools(data: bytes, bit_width: int, count: int):
 
 
 # ---------------------------------------------------------------------------
-# footer walk: schema tree + column-chunk inventory (shared by all readers)
-# ---------------------------------------------------------------------------
-
-
-class _Leaf:
-    """One leaf column from the schema tree, with the Dremel level
-    bookkeeping the data pages are encoded against: ``max_def``/
-    ``max_rep`` (every optional-or-repeated ancestor bumps def, every
-    repeated ancestor bumps rep) and ``rep_def`` — the definition level
-    OF the (single) repeated ancestor, the threshold that separates
-    "this slot is an element" (def >= rep_def) from "the list is empty
-    or null" (def < rep_def). ``flat`` marks the columns the scalar
-    readers accept (no repeated ancestor, depth 1); ``listlike`` marks
-    the ONE nested shape the list reader accepts (exactly one repeated
-    ancestor, scalar leaf — the standard 3-level LIST and the legacy
-    2-level form both reduce to it). ``converted`` is the legacy
-    ConvertedType annotation (DATE=6, TIMESTAMP_MILLIS=9,
-    TIMESTAMP_MICROS=10) the temporal tier dispatches on. ``elem_def``
-    is the definition level OF the element node (the child of the
-    repeated ancestor on this leaf's path — the leaf itself for
-    ``list<scalar>``, the struct group for ``list<struct>``): a slot
-    whose def is below it is a NULL ELEMENT, at-or-above it the element
-    exists and per-leaf defs distinguish field-null from value."""
-
-    __slots__ = ("typ", "optional", "tlen", "max_def", "max_rep",
-                 "rep_def", "flat", "listlike", "converted", "elem_def",
-                 "rep_defs", "logical")
-
-    def __init__(self, typ, optional, tlen, max_def, max_rep, rep_def,
-                 flat, listlike, converted, elem_def, rep_defs,
-                 logical=None) -> None:
-        self.typ = typ
-        self.optional = optional
-        self.tlen = tlen
-        self.max_def = max_def
-        self.max_rep = max_rep
-        self.rep_def = rep_def
-        self.flat = flat
-        self.listlike = listlike
-        self.converted = converted
-        self.elem_def = elem_def
-        #: def level of EVERY repeated ancestor, outermost first — the
-        #: per-level thresholds the multi-level (list<list<...>>)
-        #: assembly nests by; rep_def == rep_defs[-1] when any
-        self.rep_defs = rep_defs
-        #: which LogicalType union member is set (SchemaElement field
-        #: 10; r13) — the tag only, no parameters: FLOAT16=15 is what
-        #: the value decode dispatches on (fp16 has NO legacy
-        #: ConvertedType, so ``converted`` can't carry it)
-        self.logical = logical
-
-
-class _Tree:
-    """One PHYSICAL schema-tree node — what the full record assembly
-    (:func:`read_parquet_record_column`) walks: groups keep their
-    children in declaration order, and every node carries the def/rep
-    levels accumulated on its path so boundary decisions (null vs
-    empty vs value) read directly off the node."""
-
-    __slots__ = ("name", "typ", "rep", "d", "r", "children", "tlen",
-                 "conv", "scale", "path", "logical")
-
-    def __init__(self, name, typ, rep, d, r, tlen, conv, scale,
-                 path, logical=None) -> None:
-        self.name = name
-        self.typ = typ
-        self.rep = rep or 0
-        self.d = d
-        self.r = r
-        self.children: list = []
-        self.tlen = tlen
-        self.conv = conv
-        self.scale = scale
-        self.path = path
-        self.logical = logical  # LogicalType union tag (FLOAT16=15)
-
-
-def _parse_schema(c: _Compact):
-    """Parse FileMetaData.schema (list<SchemaElement>, depth-first) into
-    ``({dotted_path: _Leaf}, [root-child _Tree nodes])``. The scalar
-    readers accept ``flat`` leaves only (flat REQUIRED columns carry NO
-    levels, flat OPTIONAL carry def levels only — parquet-format.md);
-    the list reader accepts ``listlike`` leaves; the record assembly
-    walks the tree; everything else is refused explicitly instead of
-    misparsed."""
-    size, etype = c.list_header()
-    if etype != 12:
-        return None
-    elems = []
-    for _ in range(size):
-        typ = rep = nch = None
-        tlen = 0
-        conv = None
-        scale = 0
-        name = None
-        logical = None
-        last = 0
-        while True:
-            fid, wtype = c.field_header(last)
-            if wtype == 0:
-                break
-            last = fid
-            if fid == 1 and wtype == 5:
-                typ = c.zigzag()
-            elif fid == 2 and wtype == 5:
-                tlen = c.zigzag()
-            elif fid == 3 and wtype == 5:
-                rep = c.zigzag()
-            elif fid == 4 and wtype == 8:
-                ln = c.varint()
-                name = c.data[c.pos : c.pos + ln].decode("utf-8")
-                c.pos += ln
-            elif fid == 5 and wtype == 5:
-                nch = c.zigzag()
-            elif fid == 6 and wtype == 5:
-                conv = c.zigzag()
-            elif fid == 7 and wtype == 5:
-                scale = c.zigzag()
-            elif fid == 10 and wtype == 12:
-                # LogicalType (r13): a thrift union — exactly one member
-                # struct is set; its FIELD ID is the tag (FLOAT16=15,
-                # the one type with no legacy ConvertedType twin).
-                # Record the tag, skip the member's parameters.
-                lt_last = 0
-                while True:
-                    lfid, lwtype = c.field_header(lt_last)
-                    if lwtype == 0:
-                        break
-                    lt_last = lfid
-                    if logical is None:
-                        logical = lfid
-                    c.skip(lwtype, 0)
-            else:
-                c.skip(wtype, 0)
-        elems.append((typ, rep, name, nch or 0, tlen, conv, scale,
-                      logical))
-    schema: dict[str, _Leaf] = {}
-    roots: list[_Tree] = []
-    if not elems:
-        return schema, roots
-    # depth-first walk: the root's num_children frames the tree; each
-    # stack entry carries [children_left, path, def_level, rep_level,
-    # rep_def, elem_def, is_repeated_node] where rep_def is the
-    # definition level of the NEAREST repeated ancestor so far (0 when
-    # none) and elem_def the def level of that ancestor's direct child
-    # on this path (the element node)
-    # stack frames additionally carry [8] the parent _Tree node (None
-    # for root children) so the physical tree builds alongside the walk
-    stack: list[list] = [[elems[0][3], [], 0, 0, 0, 0, False, (), None]]
-    i = 1
-    while i < len(elems):
-        while stack and stack[-1][0] == 0:
-            stack.pop()
-        if not stack:
-            break
-        typ, rep, name, nch, tlen, conv, scale, logical = elems[i]
-        i += 1
-        stack[-1][0] -= 1
-        path = stack[-1][1] + [name or ""]
-        d, r, rd, ed, rds = (stack[-1][2], stack[-1][3], stack[-1][4],
-                             stack[-1][5], stack[-1][7])
-        if rep == 1:  # OPTIONAL
-            d += 1
-        elif rep == 2:  # REPEATED
-            d += 1
-            r += 1
-            rd = d  # this node IS the repeated ancestor from here down
-            rds = rds + (d,)
-        if rep == 2:
-            ed = d  # a repeated LEAF is its own element; a repeated
-            #         GROUP's children refine this below
-        elif stack[-1][6]:  # direct child of a single-child repeated
-            ed = d  # group: the LIST element node
-        tnode = _Tree(name or "", typ, rep, d, r, tlen, conv, scale,
-                      ".".join(path), logical)
-        parent = stack[-1][8]
-        if parent is None:
-            roots.append(tnode)
-        else:
-            parent.children.append(tnode)
-        if nch:
-            # a repeated group with ONE child is the 3-level LIST shape
-            # (the child is the element node and sets elem_def); with
-            # MANY children it is itself the element (the MAP/key_value
-            # shape — element-null is impossible, elem_def stays at the
-            # repeated node's level)
-            stack.append(
-                [nch, path, d, r, rd, ed, rep == 2 and nch == 1, rds,
-                 tnode]
-            )
-        else:
-            flat = r == 0 and len(path) == 1 and typ is not None
-            listlike = r == 1 and typ is not None
-            schema[".".join(path)] = _Leaf(
-                typ, rep == 1, tlen, d, r, rd, flat, listlike, conv, ed,
-                rds, logical,
-            )
-    return schema, roots
-
-
-def _footer_walk(raw: bytes):
-    """Footer → ``(schema, chunks, tree)`` where chunks are ``(codec,
-    num_values, first_page_offset, dotted_path)`` in file order and
-    ``tree`` the root-child :class:`_Tree` nodes, or None on malformed
-    input."""
-    if not raw or len(raw) < 12 or raw[:4] != b"PAR1" or raw[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack("<I", raw[-8:-4])
-    start = len(raw) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    c = _Compact(raw, start)
-    schema: dict = {}
-    tree: list = []
-    chunks = []
-    last_fid = 0
-    while True:
-        fid, wtype = c.field_header(last_fid)
-        if wtype == 0:
-            break
-        last_fid = fid
-        if fid == 2 and wtype == 9:  # schema: list<SchemaElement>
-            got = _parse_schema(c)
-            if got is None:
-                return None
-            schema, tree = got
-        elif fid == 4 and wtype == 9:  # row_groups
-            size, etype = c.list_header()
-            if etype != 12:
-                return None
-            for _ in range(size):
-                rg_last = 0
-                while True:
-                    rfid, rtype = c.field_header(rg_last)
-                    if rtype == 0:
-                        break
-                    rg_last = rfid
-                    if rfid == 1 and rtype == 9:  # columns: list<ColumnChunk>
-                        csize, cetype = c.list_header()
-                        if cetype != 12:
-                            return None
-                        for _ in range(csize):
-                            chunk = _parse_column_chunk(c)
-                            if chunk is not None:
-                                chunks.append(chunk)
-                    else:
-                        c.skip(rtype, 0)
-        else:
-            c.skip(wtype, 0)
-    return schema, chunks, tree
-
-
-def _parse_column_chunk(c: _Compact):
-    """ColumnChunk → (codec, num_values, data_page_offset, dotted path)
-    or None when fields are missing."""
-    codec = num_values = page_off = None
-    dict_off = None
-    path = None
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
-        if fid == 3 and wtype == 12:  # meta_data: ColumnMetaData
-            m_last = 0
-            while True:
-                mfid, mtype = c.field_header(m_last)
-                if mtype == 0:
-                    break
-                m_last = mfid
-                if mfid == 3 and mtype == 9:  # path_in_schema
-                    size, etype = c.list_header()
-                    parts = []
-                    for _ in range(size):
-                        ln = c.varint()
-                        parts.append(
-                            c.data[c.pos : c.pos + ln].decode("utf-8")
-                        )
-                        c.pos += ln
-                    path = ".".join(parts)
-                elif mfid == 4 and mtype == 5:
-                    codec = c.zigzag()
-                elif mfid == 5 and mtype == 6:
-                    num_values = c.zigzag()
-                elif mfid == 9 and mtype == 6:
-                    page_off = c.zigzag()
-                elif mfid == 11 and mtype == 6:
-                    dict_off = c.zigzag()
-                else:
-                    c.skip(mtype, 0)
-        else:
-            c.skip(wtype, 0)
-    if codec is None or num_values is None or page_off is None:
-        return None
-    # a dictionary page sits BEFORE data_page_offset when present; the
-    # reader starts at the dict page so it can build (or refuse) it
-    start = dict_off if dict_off is not None else page_off
-    return codec, num_values, start, path
-
-
-# ---------------------------------------------------------------------------
 # page headers (v1 + v2 + dictionary)
 # ---------------------------------------------------------------------------
 
@@ -623,12 +323,7 @@ def _parse_page_header(raw: bytes, pos: int):
     """PageHeader at ``pos`` → :class:`_Page` or None."""
     c = _Compact(raw, pos)
     p = _Page()
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
+    for fid, wtype in c.fields():
         if fid == 1 and wtype == 5:
             p.ptype = c.zigzag()
         elif fid == 2 and wtype == 5:
@@ -638,12 +333,7 @@ def _parse_page_header(raw: bytes, pos: int):
         elif fid == 4 and wtype == 5:
             p.crc = c.zigzag()
         elif fid == 5 and wtype == 12:  # DataPageHeader (v1)
-            d_last = 0
-            while True:
-                dfid, dtype = c.field_header(d_last)
-                if dtype == 0:
-                    break
-                d_last = dfid
+            for dfid, dtype in c.fields():
                 if dfid == 1 and dtype == 5:
                     p.n_vals = c.zigzag()
                 elif dfid == 2 and dtype == 5:
@@ -651,23 +341,13 @@ def _parse_page_header(raw: bytes, pos: int):
                 else:
                     c.skip(dtype, 0)
         elif fid == 7 and wtype == 12:  # DictionaryPageHeader
-            d_last = 0
-            while True:
-                dfid, dtype = c.field_header(d_last)
-                if dtype == 0:
-                    break
-                d_last = dfid
+            for dfid, dtype in c.fields():
                 if dfid == 1 and dtype == 5:
                     p.n_vals = c.zigzag()
                 else:
                     c.skip(dtype, 0)
         elif fid == 8 and wtype == 12:  # DataPageHeaderV2
-            d_last = 0
-            while True:
-                dfid, dtype = c.field_header(d_last)
-                if dtype == 0:
-                    break
-                d_last = dfid
+            for dfid, dtype in c.fields():
                 if dfid == 1 and dtype == 5:
                     p.n_vals = c.zigzag()
                 elif dfid == 2 and dtype == 5:
@@ -1105,6 +785,20 @@ def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
     return reps, defs, vals
 
 
+def _guarded(inner, raw: bytes, meta, column: str, *args):
+    """``inner(raw, meta, column, *args)`` for a file whose metadata
+    parsed once into ``meta`` (:func:`parse_parquet_meta`); None when it
+    did not, or when the read raises — the never-raise contract of every
+    public reader. The multi-column keys call it once per column with
+    one ``meta``."""
+    if meta is None:
+        return None
+    try:
+        return inner(raw, meta, column, *args)
+    except Exception:
+        return None
+
+
 def read_parquet_list_column(raw: bytes, column: str):
     """Read every ROW of a ``list<scalar>`` column straight from the
     file bytes — the repetition-level tier (the one parquet concept the
@@ -1124,13 +818,10 @@ def read_parquet_list_column(raw: bytes, column: str):
     Dictionary/PLAIN/DELTA/BYTE_STREAM_SPLIT payloads all route through
     the shared value decoder. Returns the per-row list or None; never
     raises."""
-    try:
-        return _read_list_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_read_list_inner, raw, parse_parquet_meta(raw), column)
 
 
-def _read_list_inner(raw: bytes, column: str):
+def _read_list_inner(raw: bytes, meta, column: str):
     """Shape-gated delegate onto the full record assembly (r12 judge
     order #7 — the depth-1 row loop duplicated the Dremel bookkeeping
     :func:`_assemble_records` already does). The gate keeps this entry
@@ -1144,10 +835,7 @@ def _read_list_inner(raw: bytes, column: str):
     refuses here (route it to :func:`read_parquet_record_column`)
     instead of silently dropping the struct layer and misreading
     field-null as element-null."""
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks, tree = walked
+    schema, chunks, tree = meta.schema, meta.chunks, meta.tree
     chains = _leaf_chains(tree, column)
     if chains is None or len(chains) != 1:
         return None  # multi-leaf (list<struct>): out of scope — refuse
@@ -1170,13 +858,14 @@ def _collect_column_levels(raw: bytes, chunks, path: str, leaf: _Leaf):
     reps_all: list[int] = []
     defs_all: list[int] = []
     vals_all: list = []
-    for codec, num_values, page_off, cpath in chunks:
-        if cpath != path:
+    for ch in chunks:
+        if ch.path != path:
             continue
+        codec = ch.codec
         dictionary = None
         got = 0
-        pos = page_off
-        while got < num_values:
+        pos = ch.first_page
+        while got < ch.num_values:
             pg = _parse_page_header(raw, pos)
             if pg is None:
                 return None
@@ -1222,13 +911,10 @@ def read_parquet_nested_column(raw: bytes, column: str):
     anything at-or-above the last threshold a null element. Returns one
     entry per row (nested ``None | list``), or None. One leaf only
     (lists of structs go through the struct assembly). Never raises."""
-    try:
-        return _read_nested_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_read_nested_inner, raw, parse_parquet_meta(raw), column)
 
 
-def _read_nested_inner(raw: bytes, column: str):
+def _read_nested_inner(raw: bytes, meta, column: str):
     """Shape-gated delegate onto the full record assembly (r13 — the
     same consolidation r12 judge order #7 prescribed for the depth-1
     list reader, and the same move the ORC side already made: the
@@ -1241,10 +927,7 @@ def _read_nested_inner(raw: bytes, column: str):
     refuse here, exactly the lattice-shape validation the r12 review
     added, now derived from one interpreter instead of a second
     def-ladder bookkeeping pass."""
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks, tree = walked
+    schema, chunks, tree = meta.schema, meta.chunks, meta.tree
     chains = _leaf_chains(tree, column)
     if chains is None or len(chains) != 1:
         return None  # multi-leaf: lists of structs, out of scope here
@@ -1506,10 +1189,7 @@ def read_parquet_record_column(raw: bytes, column: str):
     conventions as the ORC recursive reader, which makes the two
     formats' outputs directly comparable for the same data. Returns one
     entry per row or None; never raises."""
-    try:
-        return _read_record_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_read_record_inner, raw, parse_parquet_meta(raw), column)
 
 
 def _leaf_chains(tree, column: str):
@@ -1553,11 +1233,8 @@ def _leaf_chains(tree, column: str):
     return leaf_chains
 
 
-def _read_record_inner(raw: bytes, column: str):
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks, tree = walked
+def _read_record_inner(raw: bytes, meta, column: str):
+    schema, chunks, tree = meta.schema, meta.chunks, meta.tree
     leaf_chains = _leaf_chains(tree, column)
     if leaf_chains is None:
         return None
@@ -1655,13 +1332,10 @@ def read_parquet_struct_column(raw: bytes, column: str):
     struct with a null field, below it a null struct. Returns one
     entry per row — None or ``{field: value | None}`` — or None.
     Nested groups below the struct refuse. Never raises."""
-    try:
-        return _read_struct_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_read_struct_inner, raw, parse_parquet_meta(raw), column)
 
 
-def _read_struct_inner(raw: bytes, column: str):
+def _read_struct_inner(raw: bytes, meta, column: str):
     """Shape-gated delegate onto the record assembly (r13): exactly one
     STRUCT level of scalar fields — each leaf's steps must be
     STRUCT → FIELD → VALUE. List/map-typed and nested-group fields
@@ -1671,10 +1345,7 @@ def _read_struct_inner(raw: bytes, column: str):
     per-row falls out of the shared-container conflict rules in
     :func:`_apply_entry` (a None boundary one leaf wrote refuses any
     other leaf's descend-or-value at the same slot)."""
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks, tree = walked
+    schema, chunks, tree = meta.schema, meta.chunks, meta.tree
     chains = _leaf_chains(tree, column)
     if not chains:
         return None
@@ -1705,13 +1376,11 @@ def read_parquet_list_struct_column(raw: bytes, column: str):
     of ``None | {field: value | None}`` — or None. Refused: nested
     lists (max_rep > 1), non-scalar fields, leaves disagreeing on the
     repeated node. Never raises."""
-    try:
-        return _read_list_struct_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_read_list_struct_inner, raw, parse_parquet_meta(raw),
+                    column)
 
 
-def _read_list_struct_inner(raw: bytes, column: str):
+def _read_list_struct_inner(raw: bytes, meta, column: str):
     """Shape-gated delegate onto the record assembly (r13): every
     leaf's steps must be LIST → STRUCT → FIELD → VALUE — one shared
     repeated node (shared by construction: the chains come from one
@@ -1724,10 +1393,7 @@ def _read_list_struct_inner(raw: bytes, column: str):
     :func:`_apply_entry`/:func:`_assemble_records` (record-count
     disagreement, a None boundary vs a descend, a double-written value
     slot all refuse)."""
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks, tree = walked
+    schema, chunks, tree = meta.schema, meta.chunks, meta.tree
     chains = _leaf_chains(tree, column)
     if chains is None or len(chains) < 2:
         return None  # a single leaf is list<scalar>: use the list reader
@@ -1752,24 +1418,22 @@ def read_parquet_column(raw: bytes, column: str):
     encodings, v1 AND v2 data pages, REQUIRED and OPTIONAL repetition.
     Repeated/nested paths and unknown encodings are refused explicitly.
     Returns non-null values in row order, or None. Never raises."""
-    try:
-        return _read_general_inner(raw, column, allow_dict=True)
-    except Exception:
-        return None
+    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
+                    True)
 
 
-def _decode_chunk_values(raw: bytes, codec: int, num_values: int,
-                         page_off: int, typ: int, optional: bool,
+def _decode_chunk_values(raw: bytes, ch, typ: int, optional: bool,
                          tlen: int, allow_dict: bool):
     """One column chunk's non-null values in row order — the page walk
     (dictionary page → data pages, routed by each page's declared
     encoding) shared by the general flat reader and the bloom-filter
     audit (which needs PER-CHUNK values: one filter per chunk)."""
+    codec = ch.codec
     dictionary = None
     got = 0
-    pos = page_off
+    pos = ch.first_page
     values: list = []
-    while got < num_values:
+    while got < ch.num_values:
         pg = _parse_page_header(raw, pos)
         if pg is None:
             return None
@@ -1795,14 +1459,9 @@ def _decode_chunk_values(raw: bytes, codec: int, num_values: int,
     return values
 
 
-def _read_general_inner(raw: bytes, column: str, allow_dict: bool,
-                        only_type: int | None = None, walked=None):
-    if walked is None:  # callers that already walked the footer pass it
-        walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema, chunks = walked[0], walked[1]
-    info = schema.get(column)
+def _read_general_inner(raw: bytes, meta, column: str, allow_dict: bool,
+                        only_type: int | None = None):
+    info = meta.schema.get(column)
     if info is None:
         return None
     typ, optional, tlen = info.typ, info.optional, info.tlen
@@ -1816,11 +1475,10 @@ def _read_general_inner(raw: bytes, column: str, allow_dict: bool,
     if only_type is not None and typ != only_type:
         return None
     values: list = []
-    for codec, num_values, page_off, path in chunks:
-        if path != column:
+    for ch in meta.chunks:
+        if ch.path != column:
             continue
-        got = _decode_chunk_values(raw, codec, num_values, page_off, typ,
-                                   optional, tlen, allow_dict)
+        got = _decode_chunk_values(raw, ch, typ, optional, tlen, allow_dict)
         if got is None:
             return None
         values.extend(got)
@@ -1846,36 +1504,31 @@ def read_parquet_int64_column(raw: bytes, column: str):
     PLAIN int64. Dictionary chunks and v2 pages are refused by THIS
     entry point (the tier keeps its refusal semantics under test);
     :func:`read_parquet_column` is the general reader. Never raises."""
-    try:
-        walked = _footer_walk(raw)
-        if walked is None:
-            return None
-        schema, chunks = walked[0], walked[1]
-        info = schema.get(column)
-        if info is None:
-            return None
-        typ, optional = info.typ, info.optional
-        if not info.flat or typ != _T_INT64:
-            return None
-        values: list[int] = []
-        for codec, num_values, page_off, path in chunks:
-            if path != column:
-                continue
-            got = 0
-            pos = page_off
-            while got < num_values:
-                pg = _parse_page_header(raw, pos)
-                if pg is None or pg.ptype != 0 or pg.enc != 0:
-                    return None  # dict pages / v2 / non-PLAIN: refused here
-                pos = pg.body + pg.comp
-                vals = _page_values(pg, raw, codec, _T_INT64, optional, None)
-                if vals is None:
-                    return None
-                values.extend(vals)
-                got += pg.n_vals
-        return values
-    except Exception:
+    return _guarded(_int64_plain_inner, raw, parse_parquet_meta(raw), column)
+
+
+def _int64_plain_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
+    if info is None or not info.flat or info.typ != _T_INT64:
         return None
+    values: list[int] = []
+    for ch in meta.chunks:
+        if ch.path != column:
+            continue
+        got = 0
+        pos = ch.first_page
+        while got < ch.num_values:
+            pg = _parse_page_header(raw, pos)
+            if pg is None or pg.ptype != 0 or pg.enc != 0:
+                return None  # dict pages / v2 / non-PLAIN: refused here
+            pos = pg.body + pg.comp
+            vals = _page_values(pg, raw, ch.codec, _T_INT64, info.optional,
+                                None)
+            if vals is None:
+                return None
+            values.extend(vals)
+            got += pg.n_vals
+    return values
 
 
 def read_parquet_int64_column_dict(raw: bytes, column: str):
@@ -1886,11 +1539,8 @@ def read_parquet_int64_column_dict(raw: bytes, column: str):
     dictionary size threshold) are routed by the page's declared values
     encoding. Returns non-null int64 values in row order. Never
     raises."""
-    try:
-        return _read_general_inner(raw, column, allow_dict=True,
-                                   only_type=_T_INT64)
-    except Exception:
-        return None
+    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
+                    True, _T_INT64)
 
 
 # ConvertedType enum values (parquet.thrift) the temporal tier reads
@@ -1909,25 +1559,21 @@ def read_parquet_timestamp_column(raw: bytes, column: str):
     nanosecond logical types are refused — a plain INT64 column is not
     a timestamp just because the caller hoped so. Returns non-null
     epoch-micros ints in row order, or None. Never raises."""
-    try:
-        walked = _footer_walk(raw)
-        if walked is None:
-            return None
-        info = walked[0].get(column)
-        if info is None or not info.flat:
-            return None
-        if info.typ == _T_INT96 or (
-            info.typ == _T_INT64 and info.converted == _CONV_TS_MICROS
-        ):
-            return _read_general_inner(raw, column, allow_dict=True,
-                                       walked=walked)
-        if info.typ == _T_INT64 and info.converted == _CONV_TS_MILLIS:
-            got = _read_general_inner(raw, column, allow_dict=True,
-                                      walked=walked)
-            return None if got is None else [v * 1000 for v in got]
+    return _guarded(_timestamp_inner, raw, parse_parquet_meta(raw), column)
+
+
+def _timestamp_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
+    if info is None or not info.flat:
         return None
-    except Exception:
-        return None
+    if info.typ == _T_INT96 or (
+        info.typ == _T_INT64 and info.converted == _CONV_TS_MICROS
+    ):
+        return _read_general_inner(raw, meta, column, True)
+    if info.typ == _T_INT64 and info.converted == _CONV_TS_MILLIS:
+        got = _read_general_inner(raw, meta, column, True)
+        return None if got is None else [v * 1000 for v in got]
+    return None
 
 
 def read_parquet_date_column(raw: bytes, column: str):
@@ -1936,19 +1582,16 @@ def read_parquet_date_column(raw: bytes, column: str):
     annotation (what Spark, parquet-mr, and pyarrow all write).
     Unannotated INT32 is refused. Returns non-null epoch-day ints in
     row order, or None. Never raises."""
-    try:
-        walked = _footer_walk(raw)
-        if walked is None:
-            return None
-        info = walked[0].get(column)
-        if info is None or not info.flat:
-            return None
-        if info.typ == _T_INT32 and info.converted == _CONV_DATE:
-            return _read_general_inner(raw, column, allow_dict=True,
-                                       walked=walked)
+    return _guarded(_date_inner, raw, parse_parquet_meta(raw), column)
+
+
+def _date_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
+    if info is None or not info.flat:
         return None
-    except Exception:
-        return None
+    if info.typ == _T_INT32 and info.converted == _CONV_DATE:
+        return _read_general_inner(raw, meta, column, True)
+    return None
 
 
 def read_parquet_binary_column(raw: bytes, column: str):
@@ -1958,11 +1601,8 @@ def read_parquet_binary_column(raw: bytes, column: str):
     the same bit-width/RLE index runs as the int64 tier. Returns the
     list of non-null ``bytes`` values in row order, or None. Never
     raises."""
-    try:
-        return _read_general_inner(raw, column, allow_dict=True,
-                                   only_type=_T_BYTE_ARRAY)
-    except Exception:
-        return None
+    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
+                    True, _T_BYTE_ARRAY)
 
 
 def read_parquet_footer_minmax(raw: bytes, column: str):
@@ -1973,10 +1613,7 @@ def read_parquet_footer_minmax(raw: bytes, column: str):
     column — the metadata a pruning reader trusts, read here
     independently so it can be AUDITED against the data. Returns
     (min, max) or None."""
-    try:
-        return _minmax_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_minmax_inner, raw, parse_parquet_meta(raw), column)
 
 
 def _decode_stat(typ: int, vb: bytes):
@@ -1987,222 +1624,28 @@ def _decode_stat(typ: int, vb: bytes):
     return None
 
 
-def _minmax_inner(raw: bytes, column: str):
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema = walked[0]
-    info = schema.get(column)
+def _minmax_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
     if info is None or not info.flat:
         return None
-    typ = info.typ
-    (flen,) = struct.unpack("<I", raw[-8:-4])
-    start = len(raw) - 8 - flen
-    c = _Compact(raw, start)
     mn = mx = None
-    last_fid = 0
-    while True:
-        fid, wtype = c.field_header(last_fid)
-        if wtype == 0:
-            break
-        last_fid = fid
-        if fid != 4 or wtype != 9:
-            c.skip(wtype, 0)
+    for ch in meta.chunks:
+        if ch.path != column or ch.stat_min is None or ch.stat_max is None:
             continue
-        size, etype = c.list_header()
-        if etype != 12:
-            return None
-        for _ in range(size):
-            rg_last = 0
-            while True:
-                rfid, rtype = c.field_header(rg_last)
-                if rtype == 0:
-                    break
-                rg_last = rfid
-                if rfid != 1 or rtype != 9:
-                    c.skip(rtype, 0)
-                    continue
-                csize, cetype = c.list_header()
-                for _ in range(csize):
-                    got = _chunk_stats(c)
-                    if got is None:
-                        continue
-                    path, raw_mn, raw_mx = got
-                    if path != column or raw_mn is None or raw_mx is None:
-                        continue
-                    cmn = _decode_stat(typ, raw_mn)
-                    cmx = _decode_stat(typ, raw_mx)
-                    if cmn is None or cmx is None:
-                        continue
-                    mn = cmn if mn is None else min(mn, cmn)
-                    mx = cmx if mx is None else max(mx, cmx)
+        cmn = _decode_stat(info.typ, ch.stat_min)
+        cmx = _decode_stat(info.typ, ch.stat_max)
+        if cmn is None or cmx is None:
+            continue
+        mn = cmn if mn is None else min(mn, cmn)
+        mx = cmx if mx is None else max(mx, cmx)
     if mn is None:
         return None
     return mn, mx
 
 
-def _chunk_stats(c: _Compact):
-    """One ColumnChunk → (path, min_value bytes, max_value bytes); the
-    caller decodes per the schema's physical type."""
-    path = None
-    mn = mx = None
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
-        if fid == 3 and wtype == 12:
-            m_last = 0
-            while True:
-                mfid, mtype = c.field_header(m_last)
-                if mtype == 0:
-                    break
-                m_last = mfid
-                if mfid == 3 and mtype == 9:
-                    size, _etype = c.list_header()
-                    parts = []
-                    for _ in range(size):
-                        ln = c.varint()
-                        parts.append(
-                            c.data[c.pos : c.pos + ln].decode("utf-8")
-                        )
-                        c.pos += ln
-                    path = ".".join(parts)
-                elif mfid == 12 and mtype == 12:  # Statistics
-                    s_last = 0
-                    while True:
-                        sfid, stype = c.field_header(s_last)
-                        if stype == 0:
-                            break
-                        s_last = sfid
-                        if sfid in (5, 6) and stype == 8:  # max_value/min_value
-                            ln = c.varint()
-                            vb = c.data[c.pos : c.pos + ln]
-                            c.pos += ln
-                            if sfid == 5:
-                                mx = vb
-                            else:
-                                mn = vb
-                        else:
-                            c.skip(stype, 0)
-                else:
-                    c.skip(mtype, 0)
-        else:
-            c.skip(wtype, 0)
-    return path, mn, mx
-
-
 # ---------------------------------------------------------------------------
 # page index (OffsetIndex / ColumnIndex — PARQUET-922, parquet.thrift)
 # ---------------------------------------------------------------------------
-
-
-def _index_walk(raw: bytes):
-    """Footer → one dict per ColumnChunk with the fields the page-index
-    audit needs: the dotted column path, codec, ``num_values``, the
-    dictionary/data page offsets, and the ColumnChunk's
-    ``offset_index_offset/length`` + ``column_index_offset/length``
-    (fields 4–7 — the pointers parquet-mr writes beside the footer so a
-    reader can prune pages without touching them). File order. None on
-    malformed input."""
-    if not raw or len(raw) < 12 or raw[:4] != b"PAR1" or raw[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack("<I", raw[-8:-4])
-    start = len(raw) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    c = _Compact(raw, start)
-    out = []
-    last_fid = 0
-    while True:
-        fid, wtype = c.field_header(last_fid)
-        if wtype == 0:
-            break
-        last_fid = fid
-        if fid != 4 or wtype != 9:
-            c.skip(wtype, 0)
-            continue
-        size, etype = c.list_header()
-        if etype != 12:
-            return None
-        for _ in range(size):
-            rg_last = 0
-            while True:
-                rfid, rtype = c.field_header(rg_last)
-                if rtype == 0:
-                    break
-                rg_last = rfid
-                if rfid != 1 or rtype != 9:
-                    c.skip(rtype, 0)
-                    continue
-                csize, cetype = c.list_header()
-                if cetype != 12:
-                    return None
-                for _ in range(csize):
-                    got = _chunk_index_info(c)
-                    if got is None:
-                        return None
-                    out.append(got)
-    return out
-
-
-def _chunk_index_info(c: _Compact):
-    """One ColumnChunk → the index-audit dict (see :func:`_index_walk`)."""
-    info = {
-        "path": None, "codec": None, "num_values": None,
-        "data_off": None, "dict_off": None,
-        "oi_off": None, "oi_len": None, "ci_off": None, "ci_len": None,
-        "bloom_off": None, "bloom_len": None,
-    }
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
-        if fid == 4 and wtype == 6:
-            info["oi_off"] = c.zigzag()
-        elif fid == 5 and wtype == 5:
-            info["oi_len"] = c.zigzag()
-        elif fid == 6 and wtype == 6:
-            info["ci_off"] = c.zigzag()
-        elif fid == 7 and wtype == 5:
-            info["ci_len"] = c.zigzag()
-        elif fid == 3 and wtype == 12:  # meta_data: ColumnMetaData
-            m_last = 0
-            while True:
-                mfid, mtype = c.field_header(m_last)
-                if mtype == 0:
-                    break
-                m_last = mfid
-                if mfid == 3 and mtype == 9:  # path_in_schema
-                    size, _etype = c.list_header()
-                    parts = []
-                    for _ in range(size):
-                        ln = c.varint()
-                        parts.append(
-                            c.data[c.pos : c.pos + ln].decode("utf-8")
-                        )
-                        c.pos += ln
-                    info["path"] = ".".join(parts)
-                elif mfid == 4 and mtype == 5:
-                    info["codec"] = c.zigzag()
-                elif mfid == 5 and mtype == 6:
-                    info["num_values"] = c.zigzag()
-                elif mfid == 9 and mtype == 6:
-                    info["data_off"] = c.zigzag()
-                elif mfid == 11 and mtype == 6:
-                    info["dict_off"] = c.zigzag()
-                elif mfid == 14 and mtype == 6:
-                    info["bloom_off"] = c.zigzag()
-                elif mfid == 15 and mtype == 5:
-                    info["bloom_len"] = c.zigzag()
-                else:
-                    c.skip(mtype, 0)
-        else:
-            c.skip(wtype, 0)
-    return info
 
 
 def _parse_offset_index(buf: bytes):
@@ -2211,12 +1654,7 @@ def _parse_offset_index(buf: bytes):
     size`` INCLUDES the page header (parquet.thrift PageLocation)."""
     c = _Compact(buf, 0)
     locs = None
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
+    for fid, wtype in c.fields():
         if fid == 1 and wtype == 9:  # page_locations: list<PageLocation>
             size, etype = c.list_header()
             if etype != 12:
@@ -2224,12 +1662,7 @@ def _parse_offset_index(buf: bytes):
             locs = []
             for _ in range(size):
                 off = csz = fri = None
-                pl_last = 0
-                while True:
-                    pfid, ptype = c.field_header(pl_last)
-                    if ptype == 0:
-                        break
-                    pl_last = pfid
+                for pfid, ptype in c.fields():
                     if pfid == 1 and ptype == 6:
                         off = c.zigzag()
                     elif pfid == 2 and ptype == 5:
@@ -2257,12 +1690,7 @@ def _parse_column_index(buf: bytes):
     null_pages = mins = maxs = None
     boundary = None
     null_counts = None
-    last = 0
-    while True:
-        fid, wtype = c.field_header(last)
-        if wtype == 0:
-            break
-        last = fid
+    for fid, wtype in c.fields():
         if fid == 1 and wtype == 9:  # null_pages: list<bool>
             size, etype = c.list_header()
             if etype not in (1, 2):
@@ -2329,18 +1757,11 @@ def read_parquet_page_index(raw: bytes, column: str):
     whose index order the audit can reproduce); FLOAT16/UINT and
     non-flat columns are refused, NaN values are excluded from the
     float comparison exactly as writers exclude them."""
-    try:
-        return _page_index_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_page_index_inner, raw, parse_parquet_meta(raw), column)
 
 
-def _page_index_inner(raw: bytes, column: str):
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema = walked[0]
-    info = schema.get(column)
+def _page_index_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
     if info is None or not info.flat:
         return None
     typ, optional, tlen = info.typ, info.optional, info.tlen
@@ -2355,23 +1776,14 @@ def _page_index_inner(raw: bytes, column: str):
         # negative mantissa's two's-complement bytes start 0xFF…),
         # not the unsigned-byte order this audit checks — refuse
         return None
-    chunks = _index_walk(raw)
-    if chunks is None:
-        return None
     out = []
-    for ch in chunks:
-        if ch["path"] != column:
+    for ch in meta.chunks:
+        if ch.path != column:
             continue
-        if (ch["oi_off"] is None or ch["oi_len"] is None
-                or ch["ci_off"] is None or ch["ci_len"] is None
-                or ch["codec"] is None or ch["num_values"] is None):
+        if None in (ch.oi_off, ch.oi_len, ch.ci_off, ch.ci_len):
             return None
-        oi = _parse_offset_index(
-            raw[ch["oi_off"] : ch["oi_off"] + ch["oi_len"]]
-        )
-        ci = _parse_column_index(
-            raw[ch["ci_off"] : ch["ci_off"] + ch["ci_len"]]
-        )
+        oi = _parse_offset_index(raw[ch.oi_off : ch.oi_off + ch.oi_len])
+        ci = _parse_column_index(raw[ch.ci_off : ch.ci_off + ch.ci_len])
         if oi is None or ci is None or not oi:
             return None
         null_pages, mins, maxs, _boundary, null_counts = ci
@@ -2382,14 +1794,14 @@ def _page_index_inner(raw: bytes, column: str):
         if null_counts is not None and len(null_counts) != n_pages:
             return None
         dictionary = None
-        if ch["dict_off"] is not None:
-            pg = _parse_page_header(raw, ch["dict_off"])
+        if ch.dict_off is not None:
+            pg = _parse_page_header(raw, ch.dict_off)
             if pg is None or pg.ptype != 2:
                 return None
             body = raw[pg.body : pg.body + pg.comp]
             if len(body) < pg.comp:
                 return None
-            data = decompress(PARQUET.get(ch["codec"]), body, pg.uncomp,
+            data = decompress(PARQUET.get(ch.codec), body, pg.uncomp,
                               PAGE_CAP)
             if data is None:
                 return None
@@ -2411,7 +1823,7 @@ def _page_index_inner(raw: bytes, column: str):
             if (pg.body - off) + pg.comp != csz:
                 return None
             prev_fri, prev_nvals = fri, pg.n_vals
-            vals = _page_values(pg, raw, ch["codec"], typ, optional,
+            vals = _page_values(pg, raw, ch.codec, typ, optional,
                                 dictionary, tlen)
             if vals is None:
                 return None
@@ -2442,7 +1854,7 @@ def _page_index_inner(raw: bytes, column: str):
                 mn_all = lo if mn_all is None else min(mn_all, lo)
                 mx_all = hi if mx_all is None else max(mx_all, hi)
             rows += pg.n_vals
-        if rows != ch["num_values"]:
+        if rows != ch.num_values:
             return None
         out.append(
             {"pages": n_pages, "rows": rows, "min": mn_all, "max": mx_all}
@@ -2471,23 +1883,12 @@ def _parse_bloom_header(raw: bytes, off: int):
     c = _Compact(raw, off)
     num_bytes = None
     alg = hashk = compk = None
-    last = 0
-    while True:
-        fid, wt = c.field_header(last)
-        if wt == 0:
-            break
-        last = fid
+    for fid, wt in c.fields():
         if fid == 1 and wt == 5:
             num_bytes = c.zigzag()
         elif fid in (2, 3, 4) and wt == 12:  # the three unions
-            inner_last = 0
             variant = None
-            while True:
-                ifid, iwt = c.field_header(inner_last)
-                if iwt == 0:
-                    break
-                inner_last = ifid
-                variant = ifid
+            for variant, iwt in c.fields():
                 c.skip(iwt, 0)
             if fid == 2:
                 alg = variant
@@ -2556,46 +1957,30 @@ def read_parquet_bloom_filter(raw: bytes, column: str):
     that are not fully dictionary-encoded (the dictionary already
     answers membership exactly) — absent filters refuse, so callers
     pick fixtures accordingly."""
-    try:
-        return _pq_bloom_inner(raw, column)
-    except Exception:
-        return None
+    return _guarded(_pq_bloom_inner, raw, parse_parquet_meta(raw), column)
 
 
-def _pq_bloom_inner(raw: bytes, column: str):
-    walked = _footer_walk(raw)
-    if walked is None:
-        return None
-    schema = walked[0]
-    info = schema.get(column)
+def _pq_bloom_inner(raw: bytes, meta, column: str):
+    info = meta.schema.get(column)
     if info is None or not info.flat:
         return None
     typ, optional, tlen = info.typ, info.optional, info.tlen
-    chunks = _index_walk(raw)
-    if chunks is None:
-        return None
     out = []
-    for ch in chunks:
-        if ch["path"] != column:
+    for ch in meta.chunks:
+        if ch.path != column:
             continue
-        if ch["bloom_off"] is None or ch["codec"] is None \
-                or ch["num_values"] is None:
+        if ch.bloom_off is None:
             return None
-        hdr = _parse_bloom_header(raw, ch["bloom_off"])
+        hdr = _parse_bloom_header(raw, ch.bloom_off)
         if hdr is None:
             return None
         num_bytes, start = hdr
-        if ch["bloom_len"] is not None and (
-            start - ch["bloom_off"]
-        ) + num_bytes != ch["bloom_len"]:
+        if ch.bloom_len is not None and (
+            start - ch.bloom_off
+        ) + num_bytes != ch.bloom_len:
             return None  # the footer's length claim must match the header
         bitset = raw[start : start + num_bytes]
-        page_off = (ch["dict_off"] if ch["dict_off"] is not None
-                    else ch["data_off"])
-        if page_off is None:
-            return None
-        vals = _decode_chunk_values(raw, ch["codec"], ch["num_values"],
-                                    page_off, typ, optional, tlen, True)
+        vals = _decode_chunk_values(raw, ch, typ, optional, tlen, True)
         if vals is None:
             return None
         if typ in (_T_FLOAT, _T_DOUBLE) and any(v != v for v in vals):
@@ -2691,9 +2076,10 @@ def scan_parquet_raw_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_raw_dict(raw: bytes):
-    vals = read_parquet_int64_column_dict(raw, "doc_id")
+    meta = parse_parquet_meta(raw)
+    vals = _guarded(_read_general_inner, raw, meta, "doc_id", True, _T_INT64)
     # a file with no rows may carry no min/max at all
-    stats = read_parquet_footer_minmax(raw, "doc_id") if vals else (0, 0)
+    stats = _guarded(_minmax_inner, raw, meta, "doc_id") if vals else (0, 0)
     if vals is None or stats is None:
         return None
     return pd.DataFrame({"doc_id": vals, "stats_min": stats[0],
@@ -2731,23 +2117,24 @@ def scan_parquet_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_raw_table(raw: bytes):
-    ids = read_parquet_int64_column_dict(raw, "doc_id")
-    texts = read_parquet_binary_column(raw, "text")
-    if not _row_aligned(raw, ids, texts):
+    meta = parse_parquet_meta(raw)
+    ids = _guarded(_read_general_inner, raw, meta, "doc_id", True, _T_INT64)
+    texts = _guarded(_read_general_inner, raw, meta, "text", True,
+                     _T_BYTE_ARRAY)
+    if not _row_aligned(meta, ids, texts):
         return None  # nulls anywhere would misalign the zip
     return pd.DataFrame({"doc_id": ids,
                          "text": [t.decode("utf-8") for t in texts]})
 
 
-def _row_aligned(raw: bytes, *columns) -> bool:
+def _row_aligned(meta, *columns) -> bool:
     """Alignment guard of the multi-column keys: the flat readers return
     NON-NULL values only, so zipping columns is row-faithful iff every
     column decoded and its length equals the footer's row count — not
     just each other's (equal null COUNTS in different rows would
     otherwise zip values from different source rows)."""
-    footer = parse_parquet_footer(raw)
-    return footer is not None and all(
-        c is not None and len(c) == footer[0] for c in columns
+    return meta is not None and all(
+        c is not None and len(c) == meta.num_rows for c in columns
     )
 
 
@@ -2811,8 +2198,10 @@ def _decode_raw_numeric(raw: bytes):
     column is null-free, so no value needs an object slot."""
     import numpy as np
 
-    got = [read_parquet_column(raw, c) for c in _RAW_NUMERIC_COLUMNS]
-    if not _row_aligned(raw, *got):
+    meta = parse_parquet_meta(raw)
+    got = [_guarded(_read_general_inner, raw, meta, c, True)
+           for c in _RAW_NUMERIC_COLUMNS]
+    if not _row_aligned(meta, *got):
         return None
     return pd.DataFrame({
         c: np.array(v, dtype=t)
@@ -2896,12 +2285,13 @@ def scan_parquet_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_raw_nested(raw: bytes):
-    ids = read_parquet_column(raw, "vec_id")
+    meta = parse_parquet_meta(raw)
+    ids = _guarded(_read_general_inner, raw, meta, "vec_id", True)
     # the list reader returns one entry PER ROW (nulls included), so
     # its length always equals the footer row count; vec_id is
     # non-null-only and needs the anchor
-    lists = read_parquet_list_column(raw, "embedding")
-    if not _row_aligned(raw, ids, lists):
+    lists = _guarded(_read_list_inner, raw, meta, "embedding")
+    if not _row_aligned(meta, ids, lists):
         return None
     return explode_list_rows(ids, lists)
 
@@ -2958,10 +2348,11 @@ def scan_parquet_raw_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_raw_temporal(raw: bytes):
-    ids = read_parquet_column(raw, "l_orderkey")
-    ts_us = read_parquet_timestamp_column(raw, "ship_ts")
-    days = read_parquet_date_column(raw, "ship_date")
-    if not _row_aligned(raw, ids, ts_us, days):
+    meta = parse_parquet_meta(raw)
+    ids = _guarded(_read_general_inner, raw, meta, "l_orderkey", True)
+    ts_us = _guarded(_timestamp_inner, raw, meta, "ship_ts")
+    days = _guarded(_date_inner, raw, meta, "ship_date")
+    if not _row_aligned(meta, ids, ts_us, days):
         return None
     return pd.DataFrame({
         "l_orderkey": pd.Series(ids, dtype="int64"),
@@ -3017,20 +2408,20 @@ def scan_parquet_raw_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_pageindex(raw: bytes, p: int):
-    chunks = read_parquet_page_index(raw, "doc_id")
+    meta = parse_parquet_meta(raw)
+    chunks = _guarded(_page_index_inner, raw, meta, "doc_id")
     if chunks is None:
-        return _no_rows(raw, ["p", "idx_min", "idx_max", "idx_rows"])
+        return _no_rows(meta, ["p", "idx_min", "idx_max", "idx_rows"])
     return pd.DataFrame(
         [(p, ch["min"], ch["max"], ch["rows"]) for ch in chunks],
         columns=["p", "idx_min", "idx_max", "idx_rows"],
     )
 
 
-def _no_rows(raw: bytes, columns: list):
+def _no_rows(meta, columns: list):
     """The empty frame for a file whose footer reports 0 rows (it has
     no index or filter to audit), else None."""
-    footer = parse_parquet_footer(raw)
-    if footer is None or footer[0]:
+    if meta is None or meta.num_rows:
         return None
     return pd.DataFrame(columns=columns)
 
@@ -3078,8 +2469,9 @@ def scan_parquet_raw_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_bloom(raw: bytes, p: int):
-    chunks = read_parquet_bloom_filter(raw, "doc_id")
+    meta = parse_parquet_meta(raw)
+    chunks = _guarded(_pq_bloom_inner, raw, meta, "doc_id")
     if chunks is None:
-        return _no_rows(raw, ["p", "bloom_rows"])
+        return _no_rows(meta, ["p", "bloom_rows"])
     return pd.DataFrame({"p": [p],
                          "bloom_rows": [sum(ch["checked"] for ch in chunks)]})

@@ -235,110 +235,3 @@ def proto_fields(msg: bytes):
         else:
             raise ValueError(f"wire type {wtype}")
         yield fid, wtype, val
-
-
-def parse_orc_tail(raw: bytes):
-    """Parse an ORC file's tail from raw bytes (ORC spec §'Postscript'/
-    'Footer', public): the 1-byte postscript length at the very end, the
-    UNCOMPRESSED protobuf postscript (footerLength, compression kind,
-    ``ORC`` magic in field 8000), then the footer protobuf —
-    ``numberOfRows`` (field 6) and each StripeInformation's row count
-    (field 5 inside the field-3 list). Only compression NONE is in
-    scope (the footer is otherwise chunk-framed by the file codec —
-    refuse, don't guess). Returns ``(number_of_rows, [stripe_rows])``
-    or None. Never raises."""
-    try:
-        if not raw or len(raw) < 4:
-            return None
-        ps_len = raw[-1]
-        if ps_len == 0 or 1 + ps_len > len(raw):
-            return None
-        ps = raw[-1 - ps_len : -1]
-        footer_len = compression = None
-        magic_ok = False
-        for fid, wt, val in proto_fields(ps):
-            if fid == 1 and wt == 0:
-                footer_len = val
-            elif fid == 2 and wt == 0:
-                compression = val
-            elif fid == 8000 and wt == 2:
-                magic_ok = val == b"ORC"
-        if not magic_ok or footer_len is None:
-            return None
-        if compression not in (None, 0):
-            return None  # compressed footer: out of scope
-        start = len(raw) - 1 - ps_len - footer_len
-        if start < 0:
-            return None
-        footer = raw[start : start + footer_len]
-        nrows = None
-        stripe_rows: list[int] = []
-        for fid, wt, val in proto_fields(footer):
-            if fid == 6 and wt == 0:
-                nrows = val
-            elif fid == 3 and wt == 2:
-                for sfid, swt, sval in proto_fields(val):
-                    if sfid == 5 and swt == 0:
-                        stripe_rows.append(sval)
-        if nrows is None:
-            return None
-        return nrows, stripe_rows
-    except Exception:
-        return None
-
-
-_ORC_FOOTER_ORACLE = """
-SELECT doc_id % 8 AS p,
-  CAST(COUNT(*) AS BIGINT) AS footer_rows,
-  CAST(COUNT(*) AS BIGINT) AS stripe_rows
-FROM documents GROUP BY doc_id % 8
-"""
-
-
-@query("scan_orc_footer", _ORC_FOOTER_ORACLE, tag="scan")
-def scan_orc_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-bytes ORC metadata audit — the protobuf twin of the parquet
-    footer key, and the payoff of the GENERIC wire walker: ORC's
-    postscript and footer are protobuf messages, so the same
-    tag-dispatch iterator that ingests event streams reads the second
-    columnar format's metadata with no ORC library. The key writes the
-    documents table partitioned by ``doc_id % 8`` (compression NONE so
-    the footer is plain protobuf), re-scans the files as binary, and
-    sums both the footer ``numberOfRows`` and the per-stripe row counts
-    per partition value against closed-form counts — one hash match
-    proves the postscript walk, the magic/compression validation, and
-    the nested StripeInformation decode together. The only shuffle
-    carries 8 partition aggregates."""
-    from pyspark.sql import functions as F
-
-    from dynamic_spark_spark.llmops.fixtures import (
-        scan_files,
-        staged_fixture_dir,
-    )
-
-    def write(path: str) -> None:
-        d = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", (F.col("doc_id") % 8).alias("p")
-        )
-        d.repartition(8, "p").write.mode("overwrite").option(
-            "compression", "none"
-        ).partitionBy("p").orc(path)
-
-    out = staged_fixture_dir(spark, sf_dir, "orcfooter", write)
-    per_file = scan_files(spark, "orcfooter", out, "*.orc",
-                          "p long, footer_rows long, stripe_rows long",
-                          _decode_orc_footer, partitioned=True)
-    return per_file.groupBy("p").agg(
-        F.sum("footer_rows").alias("footer_rows"),
-        F.sum("stripe_rows").alias("stripe_rows"),
-    )
-
-
-def _decode_orc_footer(raw: bytes, p: int):
-    import pandas as pd
-
-    parsed = parse_orc_tail(raw)
-    if parsed is None:
-        return None
-    return pd.DataFrame({"p": [p], "footer_rows": [parsed[0]],
-                         "stripe_rows": [sum(parsed[1])]})

@@ -773,6 +773,7 @@ def test_orc_int_column_refuses_dictionary_encoding():
 
     from dynamic_spark_spark.llmops.orc_raw import (
         _orc_column_stripes,
+        parse_orc_meta,
         read_orc_int_column,
     )
 
@@ -783,7 +784,8 @@ def test_orc_int_column_refuses_dictionary_encoding():
     # sanity: reads fine as written
     assert read_orc_int_column(bytes(raw), "i") == list(range(100))
     # a stripe dict reporting DICTIONARY encoding must refuse
-    kind, stripes = _orc_column_stripes(bytes(raw), "i")
+    kind, stripes = _orc_column_stripes(bytes(raw), parse_orc_meta(bytes(raw)),
+                                        "i")
     for st in stripes:
         st["encoding"] = 1  # DICTIONARY
     from dynamic_spark_spark.llmops.orc_raw import _int_values_from_stripes

@@ -20,6 +20,7 @@ from dynamic_spark_spark.llmops.orc_raw import (
     _parse_bloom_index,
     orc_bloom_long_hash,
     orc_murmur3_hash64,
+    parse_orc_meta,
     read_orc_bloom_filter,
     read_orc_row_index,
 )
@@ -95,7 +96,8 @@ def test_rowindex_tamper_stats_refused():
     t = pa.table({"x": pa.array(range(20000), pa.int64())})
     raw = _write(t, compression="uncompressed")
     assert read_orc_row_index(raw, "x") is not None
-    stripes = _orc_column_stripes(raw, "x", want_index=True)[1]
+    stripes = _orc_column_stripes(raw, parse_orc_meta(raw), "x",
+                                  want_index=True)[1]
     # the uncompressed ROW_INDEX stream sits verbatim in the file: find
     # it and flip bytes — each flip must either refuse or leave the
     # audited answer intact (a flip may land in unparsed padding)
@@ -122,7 +124,7 @@ def test_stripe_stats_audited_and_tamper_refused():
 
     t = pa.table({"x": pa.array(range(20000), pa.int64())})
     raw = _write(t, compression="uncompressed")
-    sstats = _orc_stripe_stats(raw)
+    sstats = _orc_stripe_stats(raw, parse_orc_meta(raw))
     assert sstats is not None and len(sstats) >= 1
     assert read_orc_row_index(raw, "x") is not None
     blob = sstats[0][1]  # column id 1 = x
@@ -175,7 +177,8 @@ def test_bloom_zero_false_negatives_and_fp_sanity():
         assert sum(d["checked"] for d in audit) == 30000
     # absent values mostly test negative (fpp 0.05): the filter is not
     # just all-ones
-    stripes = _orc_column_stripes(raw, "x", want_index=True)[1]
+    stripes = _orc_column_stripes(raw, parse_orc_meta(raw), "x",
+                                  want_index=True)[1]
     k, bits = _parse_bloom_index(stripes[0]["bloom_utf8"])[0]
     fp = sum(
         1 for v in range(10**9, 10**9 + 200)
@@ -188,7 +191,8 @@ def test_bloom_tamper_cleared_bit_refused():
     t = pa.table({"x": pa.array(range(20000), pa.int64())})
     raw = _write(t, compression="uncompressed", bloom_filter_columns=[1])
     assert read_orc_bloom_filter(raw, "x") is not None
-    stripes = _orc_column_stripes(raw, "x", want_index=True)[1]
+    stripes = _orc_column_stripes(raw, parse_orc_meta(raw), "x",
+                                  want_index=True)[1]
     bf = stripes[0]["bloom_utf8"]
     off = raw.find(bf)
     assert off > 0

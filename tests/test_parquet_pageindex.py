@@ -16,8 +16,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
 from dynamic_spark_spark.llmops.parquet_raw import (
-    _index_walk,
     read_parquet_column,
     read_parquet_page_index,
 )
@@ -130,8 +130,8 @@ def test_pageindex_tamper_min_value_refused():
     t = pa.table({"x": pa.array(range(10000), pa.int64())})
     raw = _write(t, data_page_size=2048, use_dictionary=False)
     assert read_parquet_page_index(raw, "x") is not None
-    chunks = _index_walk(raw)
-    ci_off, ci_len = chunks[0]["ci_off"], chunks[0]["ci_len"]
+    chunks = parse_parquet_meta(raw).chunks
+    ci_off, ci_len = chunks[0].ci_off, chunks[0].ci_len
     for delta in range(ci_len):
         b = bytearray(raw)
         b[ci_off + delta] ^= 0x40
@@ -145,8 +145,8 @@ def test_pageindex_tamper_min_value_refused():
 def test_pageindex_tamper_offset_index_refused():
     t = pa.table({"x": pa.array(range(10000), pa.int64())})
     raw = _write(t, data_page_size=2048, use_dictionary=False)
-    chunks = _index_walk(raw)
-    oi_off, oi_len = chunks[0]["oi_off"], chunks[0]["oi_len"]
+    chunks = parse_parquet_meta(raw).chunks
+    oi_off, oi_len = chunks[0].oi_off, chunks[0].oi_len
     for delta in range(oi_len):
         b = bytearray(raw)
         b[oi_off + delta] ^= 0x40
@@ -164,10 +164,10 @@ def test_page_crc_detects_body_corruption():
     # flip one byte inside the first data page's body: the per-page
     # CRC-32 must refuse the page (and therefore the column and the
     # index audit built on it)
-    chunks = _index_walk(raw)
-    x_chunk = next(c for c in chunks if c["path"] == "x")
-    start = (x_chunk["dict_off"] if x_chunk["dict_off"] is not None
-             else x_chunk["data_off"])
+    chunks = parse_parquet_meta(raw).chunks
+    x_chunk = next(c for c in chunks if c.path == "x")
+    start = (x_chunk.dict_off if x_chunk.dict_off is not None
+             else x_chunk.data_off)
     b = bytearray(raw)
     b[start + 40] ^= 0xFF  # past the ~30-byte header, inside the body
     assert read_parquet_column(bytes(b), "x") is None
@@ -240,8 +240,9 @@ def test_parquet_bloom_sparkwritten(spark, tmp_path):
     # no filter was requested for s: honest refusal
     assert read_parquet_bloom_filter(raw, "s") is None
     # fp sanity: absent values mostly test negative (ndv-sized filter)
-    ch = next(c for c in _index_walk(raw) if c["path"] == "doc_id")
-    nb, start = _parse_bloom_header(raw, ch["bloom_off"])
+    ch = next(c for c in parse_parquet_meta(raw).chunks
+              if c.path == "doc_id")
+    nb, start = _parse_bloom_header(raw, ch.bloom_off)
     bits = raw[start : start + nb]
     fp = sum(
         1 for v in range(10**9, 10**9 + 300)
@@ -287,9 +288,9 @@ def test_pageindex_sparkwritten(spark, tmp_path):
     rows, gmin, gmax = _global(audit)
     assert (rows, gmin, gmax) == (30000, 0, 29999)
     # parquet-mr wrote crc fields: corruption inside a page body refuses
-    chunks = _index_walk(raw)
-    dc = next(c for c in chunks if c["path"] == "doc_id")
-    start = dc["dict_off"] if dc["dict_off"] is not None else dc["data_off"]
+    chunks = parse_parquet_meta(raw).chunks
+    dc = next(c for c in chunks if c.path == "doc_id")
+    start = dc.dict_off if dc.dict_off is not None else dc.data_off
     b = bytearray(raw)
     b[start + 60] ^= 0x01
     assert read_parquet_page_index(bytes(b), "doc_id") is None

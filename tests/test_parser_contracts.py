@@ -290,7 +290,7 @@ def _more_parsers():
             "dynamic_spark_spark.llmops.html", fromlist=["html"]
         ).http_payload_decode(raw),
         "parse_parquet_footer": PF.parse_parquet_footer,
-        "parse_orc_tail": PW.parse_orc_tail,
+        "parse_orc_tail": ORC.parse_orc_tail,
         "read_parquet_int64": lambda raw: PR.read_parquet_int64_column(raw, "doc_id"),
         "read_parquet_dict": lambda raw: PR.read_parquet_int64_column_dict(raw, "doc_id"),
         "read_parquet_general": lambda raw: PR.read_parquet_column(raw, "doc_id"),
@@ -1601,6 +1601,179 @@ def test_raw_scan_never_drops_a_file():
 
 
 
+def test_parquet_chunk_without_a_required_field_refuses_the_file():
+    """A ColumnChunk whose metadata lacks a field parquet.thrift marks
+    required refuses the whole file: one flipped field header (field 7
+    read as field 8, so ``data_page_offset`` lands on field 10) must not
+    leave the readers one row group short. The flat readers return
+    None, the footer projection refuses, and both keys' scans stop with
+    an error naming the file."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        decode_batches,
+    )
+    from dynamic_spark_spark.llmops.parquet_footer import (
+        parse_parquet_footer,
+        parse_parquet_meta,
+    )
+    from dynamic_spark_spark.llmops.protowire import _uvarint_enc
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"doc_id": pa.array(range(100), pa.int64())}),
+                   buf, row_group_size=50, use_dictionary=False)
+    good = buf.getvalue()
+    assert pr.read_parquet_column(good, "doc_id") == list(range(100))
+    assert pr.read_parquet_int64_column(good, "doc_id") == list(range(100))
+
+    # the second chunk's ColumnMetaData fields 5, 6, 7 and 9 (i64s):
+    # num_values, total_uncompressed/compressed_size, data_page_offset
+    col = pq.read_metadata(io.BytesIO(good)).row_group(1).column(0)
+
+    def i64(header: int, v: int) -> bytes:
+        return bytes([header]) + _uvarint_enc(v << 1)
+
+    run = (i64(0x16, col.num_values)
+           + i64(0x16, col.total_uncompressed_size)
+           + i64(0x16, col.total_compressed_size)
+           + i64(0x26, col.data_page_offset))
+    footer = len(good) - 8 - struct.unpack("<I", good[-8:-4])[0]
+    assert good[footer:].count(run) == 1
+    field7 = good.rindex(run) + len(i64(0x16, col.num_values)) + len(
+        i64(0x16, col.total_uncompressed_size))
+    assert good[field7] == 0x16
+    bad = good[:field7] + b"\x26" + good[field7 + 1:]
+    with pytest.raises(Exception):
+        pq.read_table(io.BytesIO(bad))
+
+    assert parse_parquet_meta(bad) is None
+    assert parse_parquet_footer(bad) is None
+    assert pr.read_parquet_column(bad, "doc_id") is None
+    assert pr.read_parquet_int64_column(bad, "doc_id") is None
+    for fixture, decode in (("rawcol", pr._decode_raw_column),
+                            ("rawdict", pr._decode_raw_dict)):
+        (frame,) = decode_batches(
+            fixture, decode, False, _one_file_batch("file:/d/part-0", good)
+        )
+        assert frame["doc_id"].tolist() == list(range(100)), fixture
+        with pytest.raises(UndecodableInputError,
+                           match=rf"'{fixture}'.*part-1"):
+            list(decode_batches(fixture, decode, False,
+                                _one_file_batch("file:/d/part-1", bad)))
+
+
+#: parquet.thrift CompressionCodec → pyarrow's name for it
+_PARQUET_CODEC_NAMES = {0: "UNCOMPRESSED", 1: "SNAPPY", 2: "GZIP",
+                        6: "ZSTD"}
+
+
+@pytest.mark.parametrize("version", ["1.0", "2.0"])
+@pytest.mark.parametrize("compression", ["none", "snappy", "gzip", "zstd"])
+def test_parquet_meta_matches_pyarrow(compression, version):
+    """The one footer parse against pyarrow's own reading of the same
+    metadata, chunk by chunk: row counts, path, codec, value count, page
+    offsets, Statistics min/max and the page-index pointers, across
+    row-group sizes, dictionary on/off and page index on/off."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+    from dynamic_spark_spark.llmops.parquet_raw import _decode_stat
+
+    n = 1000
+    table = pa.table({
+        "i": pa.array([None if i % 7 == 0 else i * 3 - 500
+                       for i in range(n)], pa.int64()),
+        "d": pa.array([i / 8 for i in range(n)], pa.float64()),
+        "s": pa.array([f"s{i % 37}" for i in range(n)]),
+    })
+    for rg_size in (n, 300, 64):
+        for use_dict in (True, False):
+            for page_index in (True, False):
+                case = (rg_size, use_dict, page_index)
+                buf = io.BytesIO()
+                pq.write_table(table, buf, row_group_size=rg_size,
+                               use_dictionary=use_dict,
+                               compression=compression,
+                               data_page_version=version,
+                               write_page_index=page_index)
+                raw = buf.getvalue()
+                meta = parse_parquet_meta(raw)
+                md = pq.read_metadata(io.BytesIO(raw))
+                assert meta.num_rows == md.num_rows, case
+                assert meta.row_group_rows == [
+                    md.row_group(r).num_rows
+                    for r in range(md.num_row_groups)
+                ], case
+                want = [md.row_group(r).column(c)
+                        for r in range(md.num_row_groups)
+                        for c in range(md.num_columns)]
+                assert len(meta.chunks) == len(want), case
+                for ch, col in zip(meta.chunks, want):
+                    assert ch.path == col.path_in_schema, case
+                    assert _PARQUET_CODEC_NAMES[ch.codec] == \
+                        col.compression, case
+                    assert ch.num_values == col.num_values, case
+                    assert ch.data_off == col.data_page_offset, case
+                    assert ch.dict_off == col.dictionary_page_offset, case
+                    typ = meta.schema[ch.path].typ
+                    stats = col.statistics
+                    assert stats is not None and stats.has_min_max, case
+                    assert _decode_stat(typ, ch.stat_min) == \
+                        stats.min_raw, case
+                    assert _decode_stat(typ, ch.stat_max) == \
+                        stats.max_raw, case
+                    assert (ch.oi_off is not None) == \
+                        col.has_offset_index, case
+                    assert (ch.ci_off is not None) == \
+                        col.has_column_index, case
+
+
+def test_orc_meta_matches_pyarrow():
+    """The one ORC tail parse against ``pyarrow.orc.ORCFile`` on the
+    same files, under every codec the reader decodes."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.orc as po
+
+    from dynamic_spark_spark.llmops.orc_raw import (
+        _orc_stripe_stats,
+        parse_orc_meta,
+    )
+
+    names = {0: "UNCOMPRESSED", 1: "ZLIB", 2: "SNAPPY", 4: "LZ4",
+             5: "ZSTD"}
+    rng = np.random.default_rng(0)
+    table = pa.table({"a": rng.integers(-2**40, 2**40, 20000),
+                      "s": [f"v{i}" for i in rng.integers(0, 911, 20000)]})
+    for compression in names.values():
+        for stride in (1000, 10000):
+            buf = io.BytesIO()
+            po.write_table(table, buf, compression=compression,
+                           stripe_size=4096, row_index_stride=stride)
+            raw = buf.getvalue()
+            meta = parse_orc_meta(raw)
+            f = po.ORCFile(io.BytesIO(raw))
+            case = (compression, stride)
+            assert meta.num_rows == f.nrows, case
+            assert len(meta.stripes) == f.nstripes > 1, case
+            assert sum(st[4] for st in meta.stripes) == f.nrows, case
+            assert names[meta.compression] == f.compression, case
+            assert meta.stride == f.row_index_stride, case
+            assert len(_orc_stripe_stats(raw, meta)) == \
+                f.nstripe_statistics, case
+            assert [t[2] for t in meta.types[:1]] == [["a", "s"]], case
+            assert len(meta.file_stats) == len(meta.types), case
+
+
 def test_row_map_never_drops_a_row():
     """The one per-row map (``fixtures.map_batches``): a row whose
     ``row_fn`` returns None or raises stops the map with an error naming
@@ -1948,9 +2121,9 @@ def test_snappy_decompress_contract():
     # reference's answer on every prefix and byte mutation of the file's
     # own page stream: the same bytes, or None from both
     from dynamic_spark_spark.llmops.codecs import decompress
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
     from dynamic_spark_spark.llmops.parquet_raw import (
         PAGE_CAP,
-        _footer_walk,
         _parse_page_header,
     )
     from dynamic_spark_spark.llmops.protowire import _uvarint_enc
@@ -1962,8 +2135,8 @@ def test_snappy_decompress_contract():
         assert decompress("snappy", stream, size, cap) == want, stream[:8]
         return want
 
-    (_codec, _n, page_off, _path), = _footer_walk(raw)[1]
-    pg = _parse_page_header(raw, page_off)
+    (chunk,) = parse_parquet_meta(raw).chunks
+    pg = _parse_page_header(raw, chunk.first_page)
     stream = raw[pg.body : pg.body + pg.comp]
     page = same(stream, pg.uncomp)
     assert page is not None and len(page) == pg.uncomp
@@ -2004,20 +2177,18 @@ def _data_page(compression: str = "gzip"):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dynamic_spark_spark.llmops.parquet_raw import (
-        _footer_walk,
-        _parse_page_header,
-    )
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+    from dynamic_spark_spark.llmops.parquet_raw import _parse_page_header
 
     values = list(range(0, 3000, 3))
     buf = io.BytesIO()
     pq.write_table(pa.table({"doc_id": values}), buf,
                    compression=compression, use_dictionary=False)
     raw = buf.getvalue()
-    schema, chunks = _footer_walk(raw)[:2]
-    (_codec, _n, page_off, _path), = chunks
-    return raw, _parse_page_header(raw, page_off), \
-        schema["doc_id"].optional, values
+    meta = parse_parquet_meta(raw)
+    (chunk,) = meta.chunks
+    return raw, _parse_page_header(raw, chunk.first_page), \
+        meta.schema["doc_id"].optional, values
 
 
 def test_parquet_gzip_page_refuses_a_cut_trailer():
@@ -2039,14 +2210,11 @@ def test_parquet_page_refuses_trailing_junk(compression):
     """Bytes after the compressed stream inside the page body (after the
     gzip member, the zstd frame, the snappy or lz4 block) are refused,
     not left unread."""
-    from dynamic_spark_spark.llmops.parquet_raw import (
-        _T_INT64,
-        _footer_walk,
-        _page_values,
-    )
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+    from dynamic_spark_spark.llmops.parquet_raw import _T_INT64, _page_values
 
     raw, pg, optional, values = _data_page(compression)
-    codec = _footer_walk(raw)[1][0][0]
+    codec = parse_parquet_meta(raw).chunks[0].codec
     assert _page_values(pg, raw, codec, _T_INT64, optional, None) == values
     end = pg.body + pg.comp
     for junk in (b"\x00", b"junk", bytes(9)):
@@ -2153,13 +2321,15 @@ def test_tzst_member_walk_contract():
 
 def test_orc_tail_parse_contract():
     """The generic protobuf walk must read a pyarrow-written ORC tail
-    (an independent writer), and degrade on truncation/mutation."""
+    (an independent writer) under every codec — the footer is
+    chunk-framed unless compression is NONE — and degrade on
+    truncation/mutation."""
     import io
     import time
 
     import pyarrow as pa
 
-    from dynamic_spark_spark.llmops.protowire import parse_orc_tail
+    from dynamic_spark_spark.llmops.orc_raw import parse_orc_tail
 
     try:
         from pyarrow import orc as pa_orc
@@ -2167,25 +2337,27 @@ def test_orc_tail_parse_contract():
         import pytest as _pytest
 
         _pytest.skip("pyarrow.orc unavailable")
-    buf = io.BytesIO()
     table = pa.table({"a": list(range(777))})
-    pa_orc.write_table(table, buf, compression="UNCOMPRESSED")
-    raw = buf.getvalue()
-    parsed = parse_orc_tail(raw)
-    assert parsed is not None
-    nrows, stripes = parsed
-    assert nrows == 777 and sum(stripes) == 777
+    for compression in ("UNCOMPRESSED", "ZLIB", "SNAPPY", "ZSTD", "LZ4"):
+        buf = io.BytesIO()
+        pa_orc.write_table(table, buf, compression=compression)
+        raw = buf.getvalue()
+        parsed = parse_orc_tail(raw)
+        assert parsed is not None, compression
+        nrows, stripes = parsed
+        assert nrows == 777 and sum(stripes) == 777, compression
+
+        t0 = time.monotonic()
+        for cut in range(1, len(raw), 53):
+            parse_orc_tail(raw[:cut])  # must not raise
+        for pos in range(max(0, len(raw) - 300), len(raw), 3):
+            m = bytearray(raw)
+            m[pos] ^= 0xFF
+            parse_orc_tail(bytes(m))  # must not raise
+        assert time.monotonic() - t0 < 10.0, compression
 
     assert parse_orc_tail(b"") is None
     assert parse_orc_tail(None) is None
-    t0 = time.monotonic()
-    for cut in range(1, len(raw), 53):
-        parse_orc_tail(raw[:cut])  # must not raise
-    for pos in range(max(0, len(raw) - 300), len(raw), 3):
-        m = bytearray(raw)
-        m[pos] ^= 0xFF
-        parse_orc_tail(bytes(m))  # must not raise
-    assert time.monotonic() - t0 < 10.0
 
 
 def test_parquet_binary_column_matches_pyarrow():

@@ -553,3 +553,96 @@ def test_map_in_pandas_sites_pinned():
         ("tfrecord", "stream_tfrecord_ingest"),
         ("zstd", "scan_text_zst"),
     ], sites
+
+
+def test_columnar_metadata_has_one_parse_per_format():
+    """One metadata parse per columnar format: under the package only
+    ``parquet_footer.parse_parquet_meta`` checks the ``PAR1`` magic and
+    unpacks the footer length (``raw[-8:-4]``), and only
+    ``orc_raw.parse_orc_meta`` reads the ORC postscript length byte
+    (``raw[-1]``)."""
+    import ast
+    import pathlib
+
+    import dynamic_spark_spark as pkg
+
+    def is_minus(node, value):
+        return (isinstance(node, ast.UnaryOp)
+                and isinstance(node.op, ast.USub)
+                and isinstance(node.operand, ast.Constant)
+                and node.operand.value == value)
+
+    root = pathlib.Path(pkg.__file__).parent
+    parquet, orc = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            site = (str(path.relative_to(root)), getattr(top, "name", None))
+            for node in ast.walk(top):
+                if isinstance(node, ast.Constant) and node.value == b"PAR1":
+                    parquet.add(site)
+                elif isinstance(node, ast.Subscript):
+                    sl = node.slice
+                    if (isinstance(sl, ast.Slice) and is_minus(sl.lower, 8)
+                            and is_minus(sl.upper, 4)):
+                        parquet.add(site)
+                    elif (is_minus(sl, 1) and isinstance(node.value, ast.Name)
+                          and node.value.id == "raw"):
+                        orc.add(site)
+    assert parquet == {("llmops/parquet_footer.py", "parse_parquet_meta")}, \
+        parquet
+    assert orc == {("llmops/orc_raw.py", "parse_orc_meta")}, orc
+
+
+def test_columnar_readers_parse_each_file_once(monkeypatch):
+    """The benchmarked multi-column decode and the audits parse their file's
+    metadata exactly once: ``_decode_raw_numeric`` (five columns plus
+    the row-count anchor), the page-index and Statistics audits, and
+    the combined ORC row-index + bloom audit."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.orc as po
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops import orc_raw
+    from dynamic_spark_spark.llmops import parquet_footer as pf
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+
+    calls = []
+
+    def counted(module, name):
+        real = getattr(module, name)
+
+        def parse(raw):
+            calls.append(name)
+            return real(raw)
+
+        monkeypatch.setattr(module, name, parse)
+
+    for module in (pf, pr):
+        counted(module, "parse_parquet_meta")
+    counted(orc_raw, "parse_orc_meta")
+
+    def parses(read, *args):
+        calls.clear()
+        got = read(*args)
+        assert got is not None, read
+        return len(calls)
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array([1, 2, 3], pa.int64()),
+        "l_linenumber": pa.array([1, 2, 3], pa.int32()),
+        "l_quantity": pa.array([1.0, 2.0, 3.0], pa.float64()),
+        "price_f32": pa.array([0.5, 1.5, 2.5], pa.float32()),
+        "is_return": pa.array([True, False, True]),
+    }), buf, row_group_size=2, write_page_index=True)
+    raw = buf.getvalue()
+    assert parses(pr._decode_raw_numeric, raw) == 1
+    assert parses(pr.read_parquet_page_index, raw, "l_orderkey") == 1
+    assert parses(pr.read_parquet_footer_minmax, raw, "l_orderkey") == 1
+
+    buf = io.BytesIO()
+    po.write_table(pa.table({"x": pa.array(range(5000), pa.int64())}), buf,
+                   row_index_stride=1000, bloom_filter_columns=[1])
+    assert parses(orc_raw.read_orc_index_and_bloom, buf.getvalue(), "x") == 1

@@ -224,10 +224,10 @@ def test_inline_repeated_zero_occurrence_is_empty_list():
     empty branch. Pinned at step level (no current writer emits the
     legacy spelling) for both the repeated leaf and the repeated
     group."""
+    from dynamic_spark_spark.llmops.parquet_footer import _Tree
     from dynamic_spark_spark.llmops.parquet_raw import (
         _apply_entry,
         _record_steps,
-        _Tree,
         _UNSET,
     )
 
@@ -470,22 +470,21 @@ def test_float16_nonconforming_carrier_refuses(monkeypatch):
     buf = io.BytesIO()
     pq.write_table(t, buf)
     raw = buf.getvalue()
-    real = praw._footer_walk
+    real = praw.parse_parquet_meta
 
     def fake(raw_):
-        got = real(raw_)
-        if got is None:
+        meta = real(raw_)
+        if meta is None:
             return None
-        schema, chunks, tree = got
-        for leaf in schema.values():
+        for leaf in meta.schema.values():
             if leaf.logical == praw._LOGICAL_FLOAT16:
                 leaf.tlen = 4  # lie: FLBA(4) under a FLOAT16 tag
-        for node in tree:
+        for node in meta.tree:
             if node.logical == praw._LOGICAL_FLOAT16:
                 node.tlen = 4
-        return schema, chunks, tree
+        return meta
 
-    monkeypatch.setattr(praw, "_footer_walk", fake)
+    monkeypatch.setattr(praw, "parse_parquet_meta", fake)
     assert praw.read_parquet_column(raw, "x") is None
     assert praw.read_parquet_record_column(raw, "x") is None
 
@@ -1329,9 +1328,9 @@ def test_record_assembly_conversions_and_compat_rules(spark, sf_dir):
     import pyarrow.orc as po
 
     from dynamic_spark_spark.llmops.orc_raw import read_orc_nested_column
+    from dynamic_spark_spark.llmops.parquet_footer import _Tree
     from dynamic_spark_spark.llmops.parquet_raw import (
         _record_steps,
-        _Tree,
         read_parquet_column,
     )
 
