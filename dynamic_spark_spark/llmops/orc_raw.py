@@ -3,8 +3,10 @@
 The raw-parquet twin (:mod:`parquet_raw`): ORC's postscript and footer
 are protobuf, read through :func:`protowire.proto_fields` by ONE tail
 parse (:func:`parse_orc_meta`, which the ``scan_orc_footer`` audit and
-every reader here share, once per read); this module walks the rest of
-the way down and reads actual COLUMN VALUES out of an ORC file:
+every reader here share; a multi-column decode parses its file once and
+passes the record to each column's read through
+:func:`parquet_raw._guarded`); this module walks the rest of the way
+down and reads actual COLUMN VALUES out of an ORC file:
 
     postscript → file footer (type tree, stripe directory)
     → per-stripe StripeFooter (stream directory, column encodings)
@@ -97,6 +99,11 @@ from dynamic_spark_spark.llmops.fixtures import (
     fixture_parallelism,
     scan_files,
     staged_fixture_dir,
+)
+from dynamic_spark_spark.llmops.parquet_raw import (
+    NESTED_LONG_ORACLE,
+    _guarded,
+    explode_list_rows,
 )
 from dynamic_spark_spark.llmops.protowire import (
     _uvarint_dec,
@@ -649,14 +656,15 @@ def read_orc_int_column(raw: bytes, column: str):
     three through this repo's own decoders) → byte-RLE PRESENT (when
     nulls exist) → RLEv2 DATA. Returns non-null values in row order, or
     None. Never raises."""
-    try:
-        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
-        if walked is None or (walked[0] not in _INT_KINDS
-                              and walked[0] != 15):  # 15 = DATE, epoch days
-            return None
-        return _int_values_from_stripes(walked[1])
-    except Exception:
+    return _guarded(_int_inner, raw, parse_orc_meta(raw), column)
+
+
+def _int_inner(raw: bytes, meta, column: str):
+    walked = _orc_column_stripes(raw, meta, column)
+    if walked is None or (walked[0] not in _INT_KINDS
+                          and walked[0] != 15):  # 15 = DATE, epoch days
         return None
+    return _int_values_from_stripes(walked[1])
 
 
 def _int_values_from_stripes(stripes):
@@ -688,27 +696,28 @@ def read_orc_column(raw: bytes, column: str):
     two's-complement byte-RLE, FLOAT/DOUBLE as little-endian IEEE, and
     STRING/BINARY/VARCHAR/CHAR through the string tiers. Returns
     non-null values in row order, or None. Never raises."""
-    try:
-        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
-        if walked is None:
-            return None
-        kind = walked[0]
-        if kind in _INT_KINDS or kind == 15:  # SHORT/INT/LONG/DATE
-            return _int_values_from_stripes(walked[1])
-        if kind in _STR_KINDS:
-            return _string_values_from_stripes(walked[1])
-        values: list = []
-        for st in walked[1]:
-            pc = _stripe_present_count(st)
-            if pc is None:
-                return None
-            got = _other_scalar_stripe_values(kind, st, pc[0])
-            if got is None:
-                return None
-            values.extend(got)
-        return values
-    except Exception:
+    return _guarded(_column_inner, raw, parse_orc_meta(raw), column)
+
+
+def _column_inner(raw: bytes, meta, column: str):
+    walked = _orc_column_stripes(raw, meta, column)
+    if walked is None:
         return None
+    kind = walked[0]
+    if kind in _INT_KINDS or kind == 15:  # SHORT/INT/LONG/DATE
+        return _int_values_from_stripes(walked[1])
+    if kind in _STR_KINDS:
+        return _string_values_from_stripes(walked[1])
+    values: list = []
+    for st in walked[1]:
+        pc = _stripe_present_count(st)
+        if pc is None:
+            return None
+        got = _other_scalar_stripe_values(kind, st, pc[0])
+        if got is None:
+            return None
+        values.extend(got)
+    return values
 
 
 def _other_scalar_stripe_values(kind: int, st: dict, n_present: int):
@@ -786,13 +795,14 @@ def read_orc_string_column(raw: bytes, column: str):
     unsigned indexes into it — both forms orc-core emits, chosen per
     stripe by observed cardinality. Returns non-null ``bytes`` values
     in row order, or None. Never raises."""
-    try:
-        walked = _orc_column_stripes(raw, parse_orc_meta(raw), column)
-        if walked is None or walked[0] not in _STR_KINDS:
-            return None
-        return _string_values_from_stripes(walked[1])
-    except Exception:
+    return _guarded(_string_inner, raw, parse_orc_meta(raw), column)
+
+
+def _string_inner(raw: bytes, meta, column: str):
+    walked = _orc_column_stripes(raw, meta, column)
+    if walked is None or walked[0] not in _STR_KINDS:
         return None
+    return _string_values_from_stripes(walked[1])
 
 
 def _string_values_from_stripes(stripes):
@@ -886,15 +896,12 @@ def _child_scalar_values(g: dict, child_id: int, child_kind: int,
     return out
 
 
-def _shape_checked_delegate(raw: bytes, column: str, want_kind: int,
-                            n_children=None):
+def _shape_checked_inner(raw: bytes, meta, column: str, want_kind: int,
+                         n_children=None):
     """The dedicated compound entry points are SHAPE CONTRACTS over the
     general recursive reader (r12 review: they began as parallel
     implementations the tests proved identical): verify the column is
     the promised kind with scalar-only children, then delegate."""
-    meta = parse_orc_meta(raw)
-    if meta is None:
-        return None
     types = meta.types
     _rk, root_subs, root_names = types[0]
     if column not in root_names:
@@ -920,10 +927,8 @@ def read_orc_struct_column(raw: bytes, column: str):
     None for a null struct, else ``{field: value | None}`` — or None.
     Nested compound children refuse (use :func:`read_orc_nested_column`
     for those). Never raises."""
-    try:
-        return _shape_checked_delegate(raw, column, 12)
-    except Exception:
-        return None
+    return _guarded(_shape_checked_inner, raw, parse_orc_meta(raw), column,
+                    12)
 
 
 def read_orc_map_column(raw: bytes, column: str):
@@ -935,10 +940,8 @@ def read_orc_map_column(raw: bytes, column: str):
     ``{"key": k, "value": v}`` preserving entry order — or None.
     Compound keys/values refuse (use :func:`read_orc_nested_column`).
     Never raises."""
-    try:
-        return _shape_checked_delegate(raw, column, 11, n_children=2)
-    except Exception:
-        return None
+    return _guarded(_shape_checked_inner, raw, parse_orc_meta(raw), column,
+                    11, 2)
 
 
 def _orc_subtree_ids(types, col_id, depth=0):
@@ -1084,15 +1087,10 @@ def read_orc_nested_column(raw: bytes, column: str):
     maps as ``{"key", "value"}`` entry lists, null slots as None at
     every level. UNION refuses. Returns one entry per row or None;
     never raises."""
-    try:
-        return _nested_inner(raw, parse_orc_meta(raw), column)
-    except Exception:
-        return None
+    return _guarded(_nested_inner, raw, parse_orc_meta(raw), column)
 
 
 def _nested_inner(raw: bytes, meta, column: str):
-    if meta is None:
-        return None
     types = meta.types
     _rk, root_subs, root_names = types[0]
     if column not in root_names:
@@ -1127,10 +1125,8 @@ def read_orc_list_column(raw: bytes, column: str):
     Returns one entry per row — None / ``[]`` / the element list with
     None slots — or None. Compound children refuse by contract (use
     :func:`read_orc_nested_column`). Never raises."""
-    try:
-        return _shape_checked_delegate(raw, column, 10, n_children=1)
-    except Exception:
-        return None
+    return _guarded(_shape_checked_inner, raw, parse_orc_meta(raw), column,
+                    10, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1675,21 +1671,21 @@ def read_orc_index_and_bloom(raw: bytes, column: str):
     dominates the cost, so the combined key pays it once, not twice.
     Returns ``(row_index_audit, bloom_audit)`` or None if EITHER
     refuses. Never raises."""
-    try:
-        meta = parse_orc_meta(raw)
-        walked = _orc_column_stripes(raw, meta, column, want_index=True)
-        if walked is None:
-            return None
-        streams = _stripe_row_streams(walked[0], walked[1])
-        if streams is None:
-            return None
-        idx = _row_index_inner(raw, meta, column, walked, streams)
-        bloom = _bloom_inner(meta, walked, streams)
-        if idx is None or bloom is None:
-            return None
-        return idx, bloom
-    except Exception:
+    return _guarded(_index_and_bloom_inner, raw, parse_orc_meta(raw), column)
+
+
+def _index_and_bloom_inner(raw: bytes, meta, column: str):
+    walked = _orc_column_stripes(raw, meta, column, want_index=True)
+    if walked is None:
         return None
+    streams = _stripe_row_streams(walked[0], walked[1])
+    if streams is None:
+        return None
+    idx = _row_index_inner(raw, meta, column, walked, streams)
+    bloom = _bloom_inner(meta, walked, streams)
+    if idx is None or bloom is None:
+        return None
+    return idx, bloom
 
 
 # ---------------------------------------------------------------------------
@@ -1785,8 +1781,9 @@ def scan_orc_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_orc_column(raw: bytes):
-    ids = read_orc_int_column(raw, "doc_id")
-    vals = read_orc_int_column(raw, "val")
+    meta = parse_orc_meta(raw)
+    ids = _guarded(_int_inner, raw, meta, "doc_id")
+    vals = _guarded(_int_inner, raw, meta, "val")
     if ids is None or vals is None or len(ids) != len(vals):
         return None
     return pd.DataFrame({"doc_id": ids, "val": vals})
@@ -1823,8 +1820,9 @@ def scan_orc_raw_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_orc_table(raw: bytes):
-    ids = read_orc_int_column(raw, "doc_id")
-    texts = read_orc_string_column(raw, "text")
+    meta = parse_orc_meta(raw)
+    ids = _guarded(_int_inner, raw, meta, "doc_id")
+    texts = _guarded(_string_inner, raw, meta, "text")
     if ids is None or texts is None or len(ids) != len(texts):
         return None
     return pd.DataFrame({"doc_id": ids,
@@ -1923,12 +1921,6 @@ def _svarint_unbounded(data: bytes, pos: int):
         shift += 7
 
 
-from dynamic_spark_spark.llmops.parquet_raw import (  # noqa: E402
-    NESTED_LONG_ORACLE,
-    explode_list_rows,
-)
-
-
 @query("scan_orc_raw_nested", NESTED_LONG_ORACLE, tag="scan")
 def scan_orc_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ORC compound-type tier on the corpus' own nested table — the
@@ -1960,8 +1952,9 @@ def scan_orc_raw_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_orc_nested(raw: bytes):
-    ids = read_orc_int_column(raw, "vec_id")
-    lists = read_orc_list_column(raw, "embedding")
+    meta = parse_orc_meta(raw)
+    ids = _guarded(_int_inner, raw, meta, "vec_id")
+    lists = _guarded(_shape_checked_inner, raw, meta, "embedding", 10, 1)
     if ids is None or lists is None or len(ids) != len(lists):
         return None  # vec_id nulls would misalign the zip
     return explode_list_rows(ids, lists)
@@ -2082,9 +2075,10 @@ def scan_orc_raw_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_orc_struct_map(raw: bytes):
-    ids = read_orc_int_column(raw, "doc_id")
-    structs = read_orc_nested_column(raw, "s")
-    maps = read_orc_nested_column(raw, "m")
+    meta = parse_orc_meta(raw)
+    ids = _guarded(_int_inner, raw, meta, "doc_id")
+    structs = _guarded(_nested_inner, raw, meta, "s")
+    maps = _guarded(_nested_inner, raw, meta, "m")
     if (ids is None or structs is None or maps is None
             or not (len(ids) == len(structs) == len(maps))):
         return None
@@ -2166,11 +2160,12 @@ def scan_orc_raw_rowindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _decode_orc_rowindex(raw: bytes, p: int):
     cols = ["p", "idx_min", "idx_max", "idx_rows"]
-    both = read_orc_index_and_bloom(raw, "doc_id")
+    meta = parse_orc_meta(raw)
+    both = _guarded(_index_and_bloom_inner, raw, meta, "doc_id")
     if both is None:
         # a file with no rows has no index to audit
-        return pd.DataFrame(columns=cols) if read_orc_int_column(
-            raw, "doc_id") == [] else None
+        return pd.DataFrame(columns=cols) if _guarded(
+            _int_inner, raw, meta, "doc_id") == [] else None
     idx, bloom = both
     if len(bloom) != len(idx) or any(
         b["filters"] != d["entries"] for b, d in zip(bloom, idx)

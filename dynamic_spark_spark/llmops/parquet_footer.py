@@ -148,13 +148,14 @@ class ParquetChunk:
     always set — the parse refuses a chunk without them. The rest are
     None when the writer left them out: ``dict_off`` (dictionary page),
     ``stat_min``/``stat_max`` (Statistics ``min_value``/``max_value``
-    bytes, PLAIN per the physical type), ``oi_off``/``oi_len`` and
+    bytes, PLAIN per the physical type), ``stat_nulls`` (Statistics
+    ``null_count``), ``oi_off``/``oi_len`` and
     ``ci_off``/``ci_len`` (OffsetIndex/ColumnIndex), and
     ``bloom_off``/``bloom_len`` (split-block bloom filter)."""
 
     __slots__ = ("path", "codec", "num_values", "data_off", "dict_off",
-                 "stat_min", "stat_max", "oi_off", "oi_len", "ci_off",
-                 "ci_len", "bloom_off", "bloom_len")
+                 "stat_min", "stat_max", "stat_nulls", "oi_off", "oi_len",
+                 "ci_off", "ci_len", "bloom_off", "bloom_len")
 
     def __init__(self) -> None:
         for name in self.__slots__:
@@ -288,7 +289,9 @@ def _column_meta(c: _Compact, ch: ParquetChunk) -> None:
             )
         elif fid == 12 and wtype == 12:  # statistics: Statistics
             for sfid, stype in c.fields():
-                if sfid == 5 and stype == 8:  # max_value
+                if sfid == 3 and stype == 6:  # null_count
+                    ch.stat_nulls = c.zigzag()
+                elif sfid == 5 and stype == 8:  # max_value
                     ch.stat_max = c.binary()
                 elif sfid == 6 and stype == 8:  # min_value
                     ch.stat_min = c.binary()

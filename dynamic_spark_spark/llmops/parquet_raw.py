@@ -1611,8 +1611,10 @@ def read_parquet_footer_minmax(raw: bytes, column: str):
     6/5, PLAIN bytes decoded per the column's PHYSICAL TYPE from the
     schema tree — int32/int64/float/double/byte-array) for the named
     column — the metadata a pruning reader trusts, read here
-    independently so it can be AUDITED against the data. Returns
-    (min, max) or None."""
+    independently so it can be AUDITED against the data. A chunk that
+    holds non-null values but whose min/max is missing or does not
+    decode refuses the file: skipping it would report a narrower range
+    than the data holds. Returns (min, max) or None."""
     return _guarded(_minmax_inner, raw, parse_parquet_meta(raw), column)
 
 
@@ -1630,12 +1632,14 @@ def _minmax_inner(raw: bytes, meta, column: str):
         return None
     mn = mx = None
     for ch in meta.chunks:
-        if ch.path != column or ch.stat_min is None or ch.stat_max is None:
-            continue
+        if ch.path != column or ch.num_values in (0, ch.stat_nulls):
+            continue  # another column's chunk, or no non-null value
+        if ch.stat_min is None or ch.stat_max is None:
+            return None
         cmn = _decode_stat(info.typ, ch.stat_min)
         cmx = _decode_stat(info.typ, ch.stat_max)
         if cmn is None or cmx is None:
-            continue
+            return None
         mn = cmn if mn is None else min(mn, cmn)
         mx = cmx if mx is None else max(mx, cmx)
     if mn is None:

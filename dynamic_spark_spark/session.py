@@ -14,9 +14,57 @@ but safe at cluster scale because AQE re-coalesces.
 from __future__ import annotations
 
 import os
+import sys
 import warnings
 
 from pyspark.sql import SparkSession
+
+
+def reread_zips_only_when_changed() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive's
+    directory only when the archive changed on disk.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. Before CPython 3.13 each ``zipimporter`` then re-reads
+    its archive's whole central directory, and a warm worker holds a
+    dozen or more of them over ``pyspark.zip`` and the py4j zip: about
+    0.15 s of CPU per task for archives that never change. Here each
+    archive is stamped with ``(st_mtime_ns, st_size, st_ino)`` when it
+    is read; an invalidation with the same stamp reuses the directory
+    already read. A changed archive, or one ``stat`` cannot see, is
+    re-read as before. Installed once per process, on import of this
+    module: a worker imports it when it unpickles any package-level
+    function, such as the raw-scan and per-row shells of
+    :mod:`llmops.fixtures`."""
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(reread, "stamps"):
+        return  # 3.13+ re-reads lazily already; or installed before
+    stamps: dict = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None \
+                and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        if stamp is not None and self.archive in zipimport._zip_directory_cache:
+            stamps[self.archive] = stamp
+        else:
+            stamps.pop(self.archive, None)
+
+    invalidate_caches.stamps = stamps
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+reread_zips_only_when_changed()
 
 # Runtime-settable confs applied to any session we are handed (the driver
 # constructs its own SparkSession for verification, so everything here must be

@@ -2482,6 +2482,51 @@ def test_parquet_raw_stats_typed():
     assert read_parquet_footer_minmax(raw, "s") == (b"apple", b"pear")
 
 
+def test_parquet_minmax_refuses_a_chunk_without_stats():
+    """A row group whose Statistics carry no usable min/max refuses the
+    file instead of narrowing the range to the other row groups, and
+    ``scan_parquet_raw_dict``'s scan stops on it; an all-null chunk,
+    which has no min/max to give, is skipped."""
+    import io
+    import struct
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        decode_batches,
+    )
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+
+    def two_row_groups(values) -> bytes:
+        buf = io.BytesIO()
+        pq.write_table(pa.table({"doc_id": pa.array(values, pa.int64())}),
+                       buf, row_group_size=2)
+        return buf.getvalue()
+
+    raw = two_row_groups([5, 6, 7, 1_234_567])
+    assert pr.read_parquet_footer_minmax(raw, "doc_id") == (5, 1_234_567)
+    # In the second chunk's Statistics, turn the max_value header (field 5,
+    # compact delta 2 → 0x28) into field 4: max_value is then skipped and
+    # min_value is read as the max, so the chunk has no min.
+    (flen,) = struct.unpack("<I", raw[-8:-4])
+    at = raw.rindex(b"\x28\x08" + struct.pack("<q", 1_234_567))
+    assert at > len(raw) - 8 - flen
+    raw = raw[:at] + b"\x18" + raw[at + 1:]
+    chunks = parse_parquet_meta(raw).chunks
+    assert chunks[0].stat_min is not None and chunks[1].stat_min is None
+    assert pr.read_parquet_footer_minmax(raw, "doc_id") is None
+    with pytest.raises(UndecodableInputError, match="'rawdict'.*part-0"):
+        list(decode_batches("rawdict", pr._decode_raw_dict, False,
+                            _one_file_batch("file:/d/part-0.parquet", raw)))
+
+    raw = two_row_groups([None, None, 3, 4])
+    assert parse_parquet_meta(raw).chunks[0].stat_nulls == 2
+    assert pr.read_parquet_footer_minmax(raw, "doc_id") == (3, 4)
+
+
 def test_parquet_raw_nested_and_repeated_refused():
     """Nested and repeated paths are refused explicitly (None), never
     misparsed — rep-levels blocks are out of the flat readers' scope."""

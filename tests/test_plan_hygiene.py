@@ -596,8 +596,9 @@ def test_columnar_metadata_has_one_parse_per_format():
 def test_columnar_readers_parse_each_file_once(monkeypatch):
     """The benchmarked multi-column decode and the audits parse their file's
     metadata exactly once: ``_decode_raw_numeric`` (five columns plus
-    the row-count anchor), the page-index and Statistics audits, and
-    the combined ORC row-index + bloom audit."""
+    the row-count anchor), the page-index and Statistics audits, the
+    combined ORC row-index + bloom audit, and every multi-column ORC
+    decode (a 0-row file's row-index fallback included)."""
     import io
 
     import pyarrow as pa
@@ -646,3 +647,27 @@ def test_columnar_readers_parse_each_file_once(monkeypatch):
     po.write_table(pa.table({"x": pa.array(range(5000), pa.int64())}), buf,
                    row_index_stride=1000, bloom_filter_columns=[1])
     assert parses(orc_raw.read_orc_index_and_bloom, buf.getvalue(), "x") == 1
+
+    def orc(columns: dict) -> bytes:
+        buf = io.BytesIO()
+        po.write_table(pa.table(columns), buf)
+        return buf.getvalue()
+
+    ids = pa.array([1, 2, 3], pa.int64())
+    assert parses(orc_raw._decode_orc_column,
+                  orc({"doc_id": ids, "val": ids})) == 1
+    assert parses(orc_raw._decode_orc_table,
+                  orc({"doc_id": ids, "text": ["a", "b", "c"]})) == 1
+    assert parses(orc_raw._decode_orc_nested, orc({
+        "vec_id": ids,
+        "embedding": pa.array([[1.0], [], None], pa.list_(pa.float64())),
+    })) == 1
+    assert parses(orc_raw._decode_orc_struct_map, orc({
+        "doc_id": ids,
+        "s": pa.array([{"lang": "en", "nchars": 4}, None,
+                       {"lang": None, "nchars": 2}]),
+        "m": pa.array([[("a", 1.0)], [], None],
+                      pa.map_(pa.string(), pa.float64())),
+    })) == 1
+    empty = orc({"doc_id": pa.array([], pa.int64())})
+    assert parses(orc_raw._decode_orc_rowindex, empty, 0) == 1

@@ -56,6 +56,30 @@ def test_program_with_dependency_pyfile(spark):
     )
     assert out == [0, 3, 6, 9, 12]
 
+    # a .zip shipped once the workers are warm (and have imported the
+    # package, which stamps the archives they hold) still imports in a
+    # later job: a new archive on the path is read, not served from a stamp
+    import zipfile
+
+    from dynamic_spark_spark.llmops.fixtures import map_rows
+
+    warm = map_rows(spark.range(8), "warm", "id long", lambda i: [(i,)])
+    assert warm.count() == 8
+    zdep = os.path.join(d, "dss_test_zipdep.zip")
+    with zipfile.ZipFile(zdep, "w") as z:
+        z.writestr("dss_test_zipdep.py", "def quadruple(x):\n    return 4 * x\n")
+    assert add_py_files(spark, [zdep]) == [zdep]
+    out = run_program(
+        spark,
+        "def main(spark):\n"
+        "    from pyspark.sql.types import LongType\n"
+        "    import dss_test_zipdep\n"
+        "    quad_udf = F.udf(dss_test_zipdep.quadruple, LongType())\n"
+        "    df = spark.range(5).select(quad_udf('id').alias('q'))\n"
+        "    return sorted(r['q'] for r in df.collect())\n",
+    )
+    assert out == [0, 4, 8, 12, 16]
+
 
 def test_add_py_files_missing(spark):
     with pytest.raises(FileNotFoundError):
