@@ -72,6 +72,16 @@ of a Spark-written, snappy-compressed parquet file:
       PLAIN encoding, multiply-shift block pick, eight salted word
       probes — via :func:`read_parquet_bloom_filter`.
 
+The flat page walk is numpy from page to frame: :func:`_rle_hybrid`
+decodes levels and dictionary indices run by run, :func:`_plain_decode`
+reads fixed-width values in place with ``np.frombuffer``, a dictionary
+page gathers by index array, and :func:`_read_general_inner` hands the
+scans one typed array per column (dtypes in :data:`_DTYPES`; string and
+FLBA cells as ``bytes`` in object arrays). No value becomes a Python
+object on the way: the public ``read_parquet_*`` readers make their
+lists with one ``.tolist()`` at their boundary, and the record assembly,
+which walks levels entry by entry, takes one list per page stream.
+
 Out of scope, refused explicitly: LZO/BROTLI/legacy-LZ4 codecs.
 
 Every layer is an independent re-implementation forced to agree with
@@ -93,6 +103,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,7 +139,15 @@ _T_BYTE_ARRAY = 6
 _T_FIXED = 7
 
 _FIXED_WIDTH = {_T_INT32: "i", _T_INT64: "q", _T_FLOAT: "f", _T_DOUBLE: "d"}
-_TYPE_BYTES = {_T_INT32: 4, _T_INT64: 8, _T_FLOAT: 4, _T_DOUBLE: 8}
+
+#: numpy dtype of each physical type's decoded values: little-endian
+#: numbers, INT96 as epoch micros, and ``bytes`` cells in object arrays
+_DTYPES = {
+    _T_BOOLEAN: np.dtype(bool), _T_INT32: np.dtype("<i4"),
+    _T_INT64: np.dtype("<i8"), _T_INT96: np.dtype("<i8"),
+    _T_FLOAT: np.dtype("<f4"), _T_DOUBLE: np.dtype("<f8"),
+    _T_BYTE_ARRAY: np.dtype(object), _T_FIXED: np.dtype(object),
+}
 
 
 def snappy_decompress(src: bytes, cap: int = PAGE_CAP):
@@ -204,38 +223,30 @@ def snappy_decompress(src: bytes, cap: int = PAGE_CAP):
 
 #: powers of two for the vectorized bit-unpack below (int64 so the
 #: matmul accumulates without overflow for every legal bit width ≤ 32)
-_POW2 = None
+_POW2 = np.int64(1) << np.arange(32, dtype=np.int64)
 
 
-def _pow2():
-    global _POW2
-    if _POW2 is None:
-        import numpy as np
+def _rle_hybrid(data: bytes, bit_width: int, count: int):
+    """Decode ``count`` values of the RLE/bit-packed hybrid (parquet
+    encodings.md) at any width up to 32: definition and repetition
+    levels, dictionary indices and RLE booleans. Returns an int64 array
+    or None.
 
-        _POW2 = (np.int64(1) << np.arange(32, dtype=np.int64))
-    return _POW2
-
-
-def _rle_bitpacked_bools(data: bytes, bit_width: int, count: int):
-    """Decode the RLE/bit-packed hybrid (parquet encodings.md) for the
-    small bit widths definition levels and dictionary indices use.
-    Returns a list of ints or None.
-
-    The bit-packed branch is vectorized (r13): the original decoded by
-    shifting one arbitrary-precision int per value, which is O(run²) —
-    a single 320k-value packed run took 3.3 s; ``np.unpackbits`` with
-    ``bitorder='little'`` yields the same LSB-first bitstream, and a
-    (values × bit_width) reshape against the powers-of-two vector
-    recovers the values in one matmul (~2 ms). Definition levels of
-    EVERY optional column and all dictionary indices pass through
-    here, so this is the raw-audit tier's hottest loop."""
+    No value passes through a Python int. The loop reads only run
+    headers: an RLE run becomes one ``np.full``, and the bytes of every
+    bit-packed run are joined and unpacked together — ``np.unpackbits``
+    with ``bitorder='little'`` (the same LSB-first bitstream the writer
+    packed) reshaped to (values × bit_width) and recovered in one matmul
+    against the powers of two. Definition levels of EVERY optional
+    column and all dictionary indices pass through here, so this is the
+    raw-audit tier's hottest loop; its Python cost is per run, not per
+    value."""
     if bit_width == 0:
-        return [0] * count
+        return np.zeros(count, np.int64)
     if bit_width > 32:
         return None  # beyond the format's level/index widths: corrupt
-    import numpy as np
-
-    out: list[int] = []
+    runs = []  # (RLE value, or None for a bit-packed run; values taken)
+    packed = []  # the bit-packed runs' bytes, in stream order
     pos = 0
     byte_w = (bit_width + 7) // 8
     mask = (1 << bit_width) - 1
@@ -254,40 +265,40 @@ def _rle_bitpacked_bools(data: bytes, bit_width: int, count: int):
                 shift += 7
             if header & 1:  # bit-packed run: (header>>1) groups of 8
                 nvals = (header >> 1) * 8
-                nbytes = (nvals * bit_width + 7) // 8
-                chunk = data[pos : pos + nbytes]
-                if len(chunk) < nbytes:
+                nbytes = nvals * bit_width // 8
+                if pos + nbytes > len(data):
                     return None  # truncated run: refuse, don't zero-fill
+                packed.append(data[pos : pos + nbytes])
                 pos += nbytes
                 take = min(nvals, count - n)
-                if nvals >= 64:
-                    bits = np.unpackbits(
-                        np.frombuffer(chunk, dtype=np.uint8),
-                        bitorder="little",
-                    )
-                    vals = bits[: nvals * bit_width].reshape(
-                        nvals, bit_width
-                    ) @ _pow2()[:bit_width]
-                    out.extend(vals[:take].tolist())
-                else:  # tiny run: the int path beats numpy call overhead
-                    bits_i = int.from_bytes(chunk, "little")
-                    out.extend(
-                        (bits_i >> (i * bit_width)) & mask
-                        for i in range(take)
-                    )
-                n += take
+                runs.append((None, take))
             else:  # RLE run
                 run = header >> 1
                 if run > count:  # lying run length
                     return None
+                if pos + byte_w > len(data):
+                    return None  # the run's value is cut off
                 val = int.from_bytes(data[pos : pos + byte_w], "little") & mask
                 pos += byte_w
                 take = min(run, count - n)
-                out.extend([val] * take)
-                n += take
-        return out
+                runs.append((val, take))
+            n += take
     except IndexError:
         return None
+    # only the stream's last run may hold more values than it gives, so
+    # each bit-packed run's values start where the previous one's ended
+    unpacked = np.unpackbits(
+        np.frombuffer(b"".join(packed), np.uint8), bitorder="little"
+    ).reshape(-1, bit_width) @ _POW2[:bit_width]
+    parts = []
+    at = 0
+    for val, take in runs:
+        if val is None:
+            parts.append(unpacked[at : at + take])
+            at += take
+        else:
+            parts.append(np.full(take, val, np.int64))
+    return _concat(parts, _T_INT64)
 
 
 # ---------------------------------------------------------------------------
@@ -513,27 +524,24 @@ def _delta_byte_array(buf: bytes, pos: int, expect: int | None = None):
 
 def _plain_decode(typ: int, buf: bytes, count: int, tlen: int = 0):
     """Decode ``count`` PLAIN values of a physical type from the front
-    of ``buf``: BOOLEAN is bit-packed LSB-first; INT32/INT64/FLOAT/
-    DOUBLE are little-endian fixed-width; BYTE_ARRAY is length-prefixed;
-    FIXED_LEN_BYTE_ARRAY slices ``tlen``-byte cells (decimal/UUID
-    physical storage). Returns a list or None."""
+    of ``buf`` into an array of the type's :data:`_DTYPES` dtype:
+    BOOLEAN is bit-packed LSB-first; INT32/INT64/FLOAT/DOUBLE are
+    little-endian fixed-width, read in place with ``np.frombuffer``;
+    BYTE_ARRAY is length-prefixed; FIXED_LEN_BYTE_ARRAY slices
+    ``tlen``-byte cells (decimal/UUID physical storage). Returns the
+    array or None."""
     if typ == _T_BOOLEAN:
         need = (count + 7) // 8
         if len(buf) < need:
             return None
-        import numpy as np
-
-        # vectorized LSB-first unpack (r13) — the giant-int shift loop
-        # was O(count²), same pathology as _rle_bitpacked_bools
-        bits = np.unpackbits(
-            np.frombuffer(buf[:need], dtype=np.uint8), bitorder="little"
-        )[:count]
-        return bits.astype(bool).tolist()
+        return np.unpackbits(
+            np.frombuffer(buf, np.uint8, need), bitorder="little"
+        )[:count].astype(bool)
     if typ in _FIXED_WIDTH:
-        w = _TYPE_BYTES[typ]
-        if len(buf) < w * count:
+        dt = _DTYPES[typ]
+        if len(buf) < dt.itemsize * count:
             return None
-        return list(struct.unpack(f"<{count}{_FIXED_WIDTH[typ]}", buf[: w * count]))
+        return np.frombuffer(buf, dt, count)
     if typ == _T_BYTE_ARRAY:
         out = []
         pos = 0
@@ -546,11 +554,13 @@ def _plain_decode(typ: int, buf: bytes, count: int, tlen: int = 0):
                 return None
             out.append(buf[pos : pos + ln])
             pos += ln
-        return out
+        return np.array(out, object)
     if typ == _T_FIXED and tlen > 0:
         if len(buf) < tlen * count:
             return None
-        return [buf[i * tlen : (i + 1) * tlen] for i in range(count)]
+        # an opaque tlen-byte void cell converts to bytes whole (an
+        # ``S`` dtype would strip trailing NULs)
+        return np.frombuffer(buf, f"V{tlen}", count).astype(object)
     if typ == _T_INT96:
         # Spark's DEFAULT timestamp physical type (parquet-mr Impala
         # legacy): 12-byte cells — 8 LE bytes of nanos-within-day, then
@@ -559,13 +569,8 @@ def _plain_decode(typ: int, buf: bytes, count: int, tlen: int = 0):
         # the UTC instant, so no timezone enters the arithmetic.
         if len(buf) < 12 * count:
             return None
-        import numpy as np
-
-        # vectorized 12-byte cell split (r13): view the nanos and JDN
-        # lanes separately instead of slicing per cell
-        cells = np.frombuffer(buf[: 12 * count], dtype=np.uint8).reshape(
-            count, 12
-        )
+        # the nanos and JDN lanes of the (count × 12) cells, viewed apart
+        cells = np.frombuffer(buf, np.uint8, 12 * count).reshape(count, 12)
         nanos = np.ascontiguousarray(cells[:, :8]).view("<u8").ravel()
         jday = np.ascontiguousarray(cells[:, 8:]).view("<u4").ravel()
         if (nanos >= 86_400_000_000_000).any():
@@ -573,16 +578,24 @@ def _plain_decode(typ: int, buf: bytes, count: int, tlen: int = 0):
         if (jday > 100_000_000).any():
             return None  # JDN beyond year ~268000 AD: corrupt (and
             #              would overflow the int64 lane below)
-        micros = (jday.astype(np.int64) - 2440588) * 86_400_000_000 + (
+        return (jday.astype(np.int64) - 2440588) * 86_400_000_000 + (
             nanos // 1000
         ).astype(np.int64)
-        return micros.tolist()
     return None
+
+
+def _concat(parts: list, typ: int):
+    """One array of a physical type's values from its page or chunk
+    arrays: the only part itself, their concatenation, or an empty array
+    of the type's dtype when there is none."""
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.empty(0, _DTYPES[typ])
 
 
 def _page_values(pg: _Page, raw: bytes, codec: int, typ: int,
                  optional: bool, dictionary, tlen: int = 0):
-    """Decode one DATA page (v1 or v2) → list of non-null values or
+    """Decode one DATA page (v1 or v2) → array of non-null values or
     None. Definition levels are consumed ONLY for optional columns
     (REQUIRED pages carry no def-levels block — the r10 ADVICE defect);
     the payload branch follows the page's declared values encoding."""
@@ -597,10 +610,10 @@ def _page_values(pg: _Page, raw: bytes, codec: int, typ: int,
             if len(data) < 4:
                 return None
             (dlen,) = struct.unpack("<I", data[:4])
-            levels = _rle_bitpacked_bools(data[4 : 4 + dlen], 1, pg.n_vals)
+            levels = _rle_hybrid(data[4 : 4 + dlen], 1, pg.n_vals)
             if levels is None:
                 return None
-            n_present = sum(levels)
+            n_present = int(np.count_nonzero(levels))
             payload = data[4 + dlen :]
         else:
             n_present = pg.n_vals
@@ -618,12 +631,10 @@ def _page_values(pg: _Page, raw: bytes, codec: int, typ: int,
         if data is None:
             return None
         if optional and pg.v2_dl:
-            levels = _rle_bitpacked_bools(
-                body[pg.v2_rl : lv], 1, pg.n_vals
-            )
+            levels = _rle_hybrid(body[pg.v2_rl : lv], 1, pg.n_vals)
             if levels is None:
                 return None
-            n_present = sum(levels)
+            n_present = int(np.count_nonzero(levels))
             if pg.n_vals - n_present != pg.v2_nulls:
                 return None  # header num_nulls disagrees with levels
         else:
@@ -639,20 +650,15 @@ def _decode_value_payload(enc: int, typ: int, payload: bytes,
                           n_present: int, dictionary, tlen: int = 0):
     """Decode ``n_present`` values from a page's value payload per the
     page's declared encoding — shared by the flat and nested page
-    walks. Returns a list or None."""
+    walks. Returns an array of the type's :data:`_DTYPES` dtype or
+    None."""
     if enc in (2, 8):  # PLAIN_DICTIONARY / RLE_DICTIONARY
         if dictionary is None or not payload:
             return None
-        bit_width = payload[0]
-        if bit_width > 32:
-            return None
-        idxs = _rle_bitpacked_bools(payload[1:], bit_width, n_present)
-        if idxs is None:
-            return None
-        try:
-            return [dictionary[i] for i in idxs]
-        except IndexError:
+        idxs = _rle_hybrid(payload[1:], payload[0], n_present)
+        if idxs is None or (len(idxs) and idxs.max() >= len(dictionary)):
             return None  # index outside the dictionary: corrupt
+        return dictionary[idxs]
     if enc == 0:  # PLAIN
         return _plain_decode(typ, payload, n_present, tlen)
     if enc == 3 and typ == _T_BOOLEAN:
@@ -662,22 +668,20 @@ def _decode_value_payload(enc: int, typ: int, payload: bytes,
         (ln,) = struct.unpack("<I", payload[:4])
         if 4 + ln > len(payload):
             return None
-        bits = _rle_bitpacked_bools(payload[4 : 4 + ln], 1, n_present)
-        if bits is None:
-            return None
-        return [bool(x) for x in bits]
+        bits = _rle_hybrid(payload[4 : 4 + ln], 1, n_present)
+        return None if bits is None else bits.astype(bool)
     if enc == 5 and typ in (_T_INT32, _T_INT64):  # DELTA_BINARY_PACKED
         got = _delta_binary_packed(payload, 0,
                                    bits=32 if typ == _T_INT32 else 64,
                                    expect=n_present)
         if got is None or len(got[0]) < n_present:
             return None
-        return got[0][:n_present]
+        return np.array(got[0][:n_present], _DTYPES[typ])
     if enc == 6 and typ == _T_BYTE_ARRAY:  # DELTA_LENGTH_BYTE_ARRAY
         got = _delta_length_byte_array(payload, 0, expect=n_present)
         if got is None or len(got[0]) < n_present:
             return None
-        return got[0][:n_present]
+        return np.array(got[0][:n_present], object)
     if enc == 7 and (
         typ == _T_BYTE_ARRAY or (typ == _T_FIXED and tlen > 0)
     ):  # DELTA_BYTE_ARRAY — encodings.md supports FLBA too (r13); the
@@ -686,21 +690,18 @@ def _decode_value_payload(enc: int, typ: int, payload: bytes,
         if got is None or len(got[0]) < n_present:
             return None
         vals = got[0][:n_present]
-        if typ == _T_FIXED and any(len(v) != tlen for v in vals):
+        if typ == _T_FIXED and set(map(len, vals)) - {tlen}:
             return None  # ragged cells under a fixed-length type: corrupt
-        return vals
+        return np.array(vals, object)
     if enc == 9 and (typ in _FIXED_WIDTH or (typ == _T_FIXED and tlen)):
         # BYTE_STREAM_SPLIT (encodings.md): the K-byte values are
         # transposed — all 1st bytes, then all 2nd bytes, ... — so FP
         # pages compress better; undo the transpose then decode PLAIN
-        w = _TYPE_BYTES.get(typ, tlen)
+        w = _DTYPES[typ].itemsize if typ in _FIXED_WIDTH else tlen
         if len(payload) < w * n_present:
             return None
-        import numpy as np
-
-        # vectorized un-transpose (r13): byte j of value i lives at
-        # payload[j*n + i] — a (w × n) reshape transposed back is the
-        # PLAIN byte order
+        # byte j of value i lives at payload[j*n + i] — a (w × n)
+        # reshape transposed back is the PLAIN byte order
         joined = np.frombuffer(
             payload[: w * n_present], dtype=np.uint8
         ).reshape(w, n_present).T.tobytes()
@@ -712,38 +713,38 @@ def _decode_value_payload(enc: int, typ: int, payload: bytes,
 def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
                         dictionary):
     """One DATA page of a REPEATED column → ``(rep_levels, def_levels,
-    values)`` or None. v1 pages carry both level runs length-prefixed
-    inside the compressed body (repetition levels FIRST —
-    parquet-format.md 'Data Pages'); v2 pages store them raw before the
-    (separately compressed) values, sized by the header's
-    repetition/definition_levels_byte_length fields."""
+    values)`` lists or None. v1 pages carry both level runs
+    length-prefixed inside the compressed body (repetition levels FIRST
+    — parquet-format.md 'Data Pages'); v2 pages store them raw before
+    the (separately compressed) values, sized by the header's
+    repetition/definition_levels_byte_length fields. The levels are
+    checked as arrays; the record assembly walks them per entry, so each
+    stream leaves as one list."""
     body = raw[pg.body : pg.body + pg.comp]
     if len(body) < pg.comp:
         return None
     rep_w = leaf.max_rep.bit_length()
     def_w = leaf.max_def.bit_length()
+    reps = np.zeros(pg.n_vals, np.int64)
+    defs = np.full(pg.n_vals, leaf.max_def, np.int64)
     if pg.ptype == 0:  # v1: whole page compressed together
         data = decompress(PARQUET.get(codec), body, pg.uncomp, PAGE_CAP)
         if data is None:
             return None
         pos = 0
-        reps = [0] * pg.n_vals
         if rep_w:
             if len(data) < 4:
                 return None
             (ln,) = struct.unpack("<I", data[:4])
-            reps = _rle_bitpacked_bools(data[4 : 4 + ln], rep_w, pg.n_vals)
+            reps = _rle_hybrid(data[4 : 4 + ln], rep_w, pg.n_vals)
             if reps is None:
                 return None
             pos = 4 + ln
-        defs = [leaf.max_def] * pg.n_vals
         if def_w:
             if len(data) < pos + 4:
                 return None
             (ln,) = struct.unpack("<I", data[pos : pos + 4])
-            defs = _rle_bitpacked_bools(
-                data[pos + 4 : pos + 4 + ln], def_w, pg.n_vals
-            )
+            defs = _rle_hybrid(data[pos + 4 : pos + 4 + ln], def_w, pg.n_vals)
             if defs is None:
                 return None
             pos += 4 + ln
@@ -752,16 +753,12 @@ def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
         lv = pg.v2_rl + pg.v2_dl
         if lv > len(body):
             return None
-        reps = [0] * pg.n_vals
         if rep_w:
-            reps = _rle_bitpacked_bools(body[: pg.v2_rl], rep_w, pg.n_vals)
+            reps = _rle_hybrid(body[: pg.v2_rl], rep_w, pg.n_vals)
             if reps is None:
                 return None
-        defs = [leaf.max_def] * pg.n_vals
         if def_w:
-            defs = _rle_bitpacked_bools(
-                body[pg.v2_rl : lv], def_w, pg.n_vals
-            )
+            defs = _rle_hybrid(body[pg.v2_rl : lv], def_w, pg.n_vals)
             if defs is None:
                 return None
         want = pg.uncomp - lv
@@ -773,16 +770,14 @@ def _page_levels_values(pg: _Page, raw: bytes, codec: int, leaf: _Leaf,
             return None
     else:
         return None
-    if any(r > leaf.max_rep for r in reps) or any(
-        d > leaf.max_def for d in defs
-    ):
+    if (reps > leaf.max_rep).any() or (defs > leaf.max_def).any():
         return None  # levels outside the schema's lattice: corrupt
-    n_present = sum(1 for d in defs if d == leaf.max_def)
+    n_present = int(np.count_nonzero(defs == leaf.max_def))
     vals = _decode_value_payload(pg.enc, leaf.typ, payload, n_present,
                                  dictionary, leaf.tlen)
     if vals is None:
         return None
-    return reps, defs, vals
+    return reps.tolist(), defs.tolist(), vals.tolist()
 
 
 def _guarded(inner, raw: bytes, meta, column: str, *args):
@@ -1275,7 +1270,7 @@ def _assemble_records(raw: bytes, schema, chunks, leaf_chains):
         reps, defs, vals = got
         if len(reps) != len(defs):
             return None
-        cnt = sum(1 for r in reps if r == 0)
+        cnt = reps.count(0)
         if nrec is None:
             nrec = cnt
         elif cnt != nrec:
@@ -1418,21 +1413,28 @@ def read_parquet_column(raw: bytes, column: str):
     encodings, v1 AND v2 data pages, REQUIRED and OPTIONAL repetition.
     Repeated/nested paths and unknown encodings are refused explicitly.
     Returns non-null values in row order, or None. Never raises."""
-    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
-                    True)
+    return _listed(_guarded(_read_general_inner, raw, parse_parquet_meta(raw),
+                            column, True))
+
+
+def _listed(values):
+    """A flat read's array as the list the public readers return, or
+    None: the one ``.tolist()`` of a value's way from page to caller."""
+    return None if values is None else values.tolist()
 
 
 def _decode_chunk_values(raw: bytes, ch, typ: int, optional: bool,
                          tlen: int, allow_dict: bool):
-    """One column chunk's non-null values in row order — the page walk
-    (dictionary page → data pages, routed by each page's declared
-    encoding) shared by the general flat reader and the bloom-filter
-    audit (which needs PER-CHUNK values: one filter per chunk)."""
+    """One column chunk's non-null values in row order as one array —
+    the page walk (dictionary page → data pages, routed by each page's
+    declared encoding) shared by the general flat reader and the
+    bloom-filter audit (which needs PER-CHUNK values: one filter per
+    chunk)."""
     codec = ch.codec
     dictionary = None
     got = 0
     pos = ch.first_page
-    values: list = []
+    pages = []
     while got < ch.num_values:
         pg = _parse_page_header(raw, pos)
         if pg is None:
@@ -1454,9 +1456,9 @@ def _decode_chunk_values(raw: bytes, ch, typ: int, optional: bool,
         vals = _page_values(pg, raw, codec, typ, optional, dictionary, tlen)
         if vals is None:
             return None
-        values.extend(vals)
+        pages.append(vals)
         got += pg.n_vals
-    return values
+    return _concat(pages, typ)
 
 
 def _read_general_inner(raw: bytes, meta, column: str, allow_dict: bool,
@@ -1474,14 +1476,15 @@ def _read_general_inner(raw: bytes, meta, column: str, allow_dict: bool,
         return None
     if only_type is not None and typ != only_type:
         return None
-    values: list = []
+    chunks = []
     for ch in meta.chunks:
         if ch.path != column:
             continue
         got = _decode_chunk_values(raw, ch, typ, optional, tlen, allow_dict)
         if got is None:
             return None
-        values.extend(got)
+        chunks.append(got)
+    values = _concat(chunks, typ)
     if info.logical == _LOGICAL_FLOAT16:
         # FLOAT16 (r13): FLBA(2) cells are IEEE half floats — surface
         # floats here like FLOAT/DOUBLE do, not raw 2-byte cells. The
@@ -1490,11 +1493,12 @@ def _read_general_inner(raw: bytes, meta, column: str, allow_dict: bool,
         # (r13 review finding #4)
         if typ != _T_FIXED or tlen != 2:
             return None
-        return [struct.unpack("<e", v)[0] for v in values]
+        return np.frombuffer(b"".join(values), "<f2").astype(np.float64)
+    # UINT_32/UINT_64: the same bits, read unsigned
     if info.converted == _CONV_UINT_32 and typ == _T_INT32:
-        return [v & 0xFFFFFFFF for v in values]
+        return values.view(np.uint32)
     if info.converted == _CONV_UINT_64 and typ == _T_INT64:
-        return [v & 0xFFFFFFFFFFFFFFFF for v in values]
+        return values.view(np.uint64)
     return values
 
 
@@ -1504,14 +1508,15 @@ def read_parquet_int64_column(raw: bytes, column: str):
     PLAIN int64. Dictionary chunks and v2 pages are refused by THIS
     entry point (the tier keeps its refusal semantics under test);
     :func:`read_parquet_column` is the general reader. Never raises."""
-    return _guarded(_int64_plain_inner, raw, parse_parquet_meta(raw), column)
+    return _listed(_guarded(_int64_plain_inner, raw, parse_parquet_meta(raw),
+                            column))
 
 
 def _int64_plain_inner(raw: bytes, meta, column: str):
     info = meta.schema.get(column)
     if info is None or not info.flat or info.typ != _T_INT64:
         return None
-    values: list[int] = []
+    pages = []
     for ch in meta.chunks:
         if ch.path != column:
             continue
@@ -1526,9 +1531,9 @@ def _int64_plain_inner(raw: bytes, meta, column: str):
                                 None)
             if vals is None:
                 return None
-            values.extend(vals)
+            pages.append(vals)
             got += pg.n_vals
-    return values
+    return _concat(pages, _T_INT64)
 
 
 def read_parquet_int64_column_dict(raw: bytes, column: str):
@@ -1539,8 +1544,8 @@ def read_parquet_int64_column_dict(raw: bytes, column: str):
     dictionary size threshold) are routed by the page's declared values
     encoding. Returns non-null int64 values in row order. Never
     raises."""
-    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
-                    True, _T_INT64)
+    return _listed(_guarded(_read_general_inner, raw, parse_parquet_meta(raw),
+                            column, True, _T_INT64))
 
 
 # ConvertedType enum values (parquet.thrift) the temporal tier reads
@@ -1559,7 +1564,12 @@ def read_parquet_timestamp_column(raw: bytes, column: str):
     nanosecond logical types are refused — a plain INT64 column is not
     a timestamp just because the caller hoped so. Returns non-null
     epoch-micros ints in row order, or None. Never raises."""
-    return _guarded(_timestamp_inner, raw, parse_parquet_meta(raw), column)
+    return _listed(_guarded(_timestamp_inner, raw, parse_parquet_meta(raw),
+                            column))
+
+
+#: the largest TIMESTAMP_MILLIS magnitude whose micros still fit int64
+_MILLIS_MAX = (2**63 - 1) // 1000
 
 
 def _timestamp_inner(raw: bytes, meta, column: str):
@@ -1572,7 +1582,9 @@ def _timestamp_inner(raw: bytes, meta, column: str):
         return _read_general_inner(raw, meta, column, True)
     if info.typ == _T_INT64 and info.converted == _CONV_TS_MILLIS:
         got = _read_general_inner(raw, meta, column, True)
-        return None if got is None else [v * 1000 for v in got]
+        if got is None or ((got > _MILLIS_MAX) | (got < -_MILLIS_MAX)).any():
+            return None  # ×1000 would leave int64: refuse, never wrap
+        return got * 1000
     return None
 
 
@@ -1582,7 +1594,8 @@ def read_parquet_date_column(raw: bytes, column: str):
     annotation (what Spark, parquet-mr, and pyarrow all write).
     Unannotated INT32 is refused. Returns non-null epoch-day ints in
     row order, or None. Never raises."""
-    return _guarded(_date_inner, raw, parse_parquet_meta(raw), column)
+    return _listed(_guarded(_date_inner, raw, parse_parquet_meta(raw),
+                            column))
 
 
 def _date_inner(raw: bytes, meta, column: str):
@@ -1601,8 +1614,8 @@ def read_parquet_binary_column(raw: bytes, column: str):
     the same bit-width/RLE index runs as the int64 tier. Returns the
     list of non-null ``bytes`` values in row order, or None. Never
     raises."""
-    return _guarded(_read_general_inner, raw, parse_parquet_meta(raw), column,
-                    True, _T_BYTE_ARRAY)
+    return _listed(_guarded(_read_general_inner, raw, parse_parquet_meta(raw),
+                            column, True, _T_BYTE_ARRAY))
 
 
 def read_parquet_footer_minmax(raw: bytes, column: str):
@@ -1619,7 +1632,7 @@ def read_parquet_footer_minmax(raw: bytes, column: str):
 
 
 def _decode_stat(typ: int, vb: bytes):
-    if typ in _FIXED_WIDTH and len(vb) == _TYPE_BYTES[typ]:
+    if typ in _FIXED_WIDTH and len(vb) == _DTYPES[typ].itemsize:
         return struct.unpack(f"<{_FIXED_WIDTH[typ]}", vb)[0]
     if typ == _T_BYTE_ARRAY:
         return vb
@@ -1836,10 +1849,10 @@ def _page_index_inner(raw: bytes, meta, column: str):
                 return None
             if null_pages[i]:
                 # a null page carries no values and empty stat bytes
-                if vals or mins[i] or maxs[i]:
+                if len(vals) or mins[i] or maxs[i]:
                     return None
             else:
-                if not vals:
+                if not len(vals):
                     return None
                 lo = _decode_stat(typ, mins[i])
                 hi = _decode_stat(typ, maxs[i])
@@ -1847,9 +1860,9 @@ def _page_index_inner(raw: bytes, meta, column: str):
                     return None
                 cmp_vals = vals
                 if typ in (_T_FLOAT, _T_DOUBLE):
-                    cmp_vals = [v for v in vals if v == v]  # drop NaN
-                if cmp_vals:
-                    amn, amx = min(cmp_vals), max(cmp_vals)
+                    cmp_vals = vals[~np.isnan(vals)]  # drop NaN
+                if len(cmp_vals):
+                    amn, amx = cmp_vals.min(), cmp_vals.max()
                     if typ == _T_BYTE_ARRAY:
                         if not (lo <= amn and hi >= amx):
                             return None
@@ -1987,7 +2000,7 @@ def _pq_bloom_inner(raw: bytes, meta, column: str):
         vals = _decode_chunk_values(raw, ch, typ, optional, tlen, True)
         if vals is None:
             return None
-        if typ in (_T_FLOAT, _T_DOUBLE) and any(v != v for v in vals):
+        if typ in (_T_FLOAT, _T_DOUBLE) and np.isnan(vals).any():
             # the writer hashed the value's ORIGINAL plain bytes; a
             # non-canonical NaN does not bit-round-trip through a
             # Python float, so its repacked hash could miss the filter
@@ -1995,7 +2008,7 @@ def _pq_bloom_inner(raw: bytes, meta, column: str):
             # rather than mis-report them
             return None
         checked = 0
-        for v in vals:
+        for v in vals.tolist():
             pb = _bloom_plain_bytes(typ, v, tlen)
             if pb is None:
                 return None
@@ -2043,7 +2056,7 @@ def scan_parquet_raw_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_raw_column(raw: bytes):
-    vals = read_parquet_int64_column(raw, "doc_id")
+    vals = _guarded(_int64_plain_inner, raw, parse_parquet_meta(raw), "doc_id")
     return None if vals is None else pd.DataFrame({"doc_id": vals})
 
 
@@ -2083,7 +2096,8 @@ def _decode_raw_dict(raw: bytes):
     meta = parse_parquet_meta(raw)
     vals = _guarded(_read_general_inner, raw, meta, "doc_id", True, _T_INT64)
     # a file with no rows may carry no min/max at all
-    stats = _guarded(_minmax_inner, raw, meta, "doc_id") if vals else (0, 0)
+    stats = (_guarded(_minmax_inner, raw, meta, "doc_id")
+             if vals is not None and len(vals) else (0, 0))
     if vals is None or stats is None:
         return None
     return pd.DataFrame({"doc_id": vals, "stats_min": stats[0],
@@ -2198,17 +2212,17 @@ _RAW_NUMERIC_COLUMNS = {"l_orderkey": "int64", "l_linenumber": "int32",
 
 
 def _decode_raw_numeric(raw: bytes):
-    """The five columns as typed arrays: ``_row_aligned`` proves every
-    column is null-free, so no value needs an object slot."""
-    import numpy as np
-
+    """The five columns as the page walk's typed arrays: ``_row_aligned``
+    proves every column is null-free, so no value needs an object slot.
+    Only the float column is widened (exactly); a cast that could change
+    a value raises."""
     meta = parse_parquet_meta(raw)
     got = [_guarded(_read_general_inner, raw, meta, c, True)
            for c in _RAW_NUMERIC_COLUMNS]
     if not _row_aligned(meta, *got):
         return None
     return pd.DataFrame({
-        c: np.array(v, dtype=t)
+        c: v.astype(t, casting="safe", copy=False)
         for (c, t), v in zip(_RAW_NUMERIC_COLUMNS.items(), got)
     })
 
@@ -2297,7 +2311,7 @@ def _decode_raw_nested(raw: bytes):
     lists = _guarded(_read_list_inner, raw, meta, "embedding")
     if not _row_aligned(meta, ids, lists):
         return None
-    return explode_list_rows(ids, lists)
+    return explode_list_rows(ids.tolist(), lists)
 
 
 _RAW_TEMPORAL_ORACLE = """

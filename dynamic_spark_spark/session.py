@@ -156,6 +156,10 @@ def positive_int_env(name: str, default: int) -> int:
     return value
 
 
+#: the directory this package was imported from
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "dynamic-spark-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a tuned local session.
 
@@ -171,5 +175,9 @@ def get_spark(app_name: str = "dynamic-spark-spark", cpus: int | None = None) ->
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from a daemon that has imported this package
+        # (daemon.py), found on the path this package was imported from
+        .config("spark.python.daemon.module", "dynamic_spark_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return tune(builder.getOrCreate())

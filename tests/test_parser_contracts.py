@@ -1601,6 +1601,137 @@ def test_raw_scan_never_drops_a_file():
 
 
 
+def _first_data_page(values, **write_kw):
+    """An uncompressed one-column pyarrow file of int64 ``doc_id`` (no
+    page checksums, so a patched page still parses) and the header
+    offset and header of its first data page."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+    from dynamic_spark_spark.llmops.parquet_raw import _parse_page_header
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"doc_id": pa.array(values, pa.int64())}), buf,
+                   compression="none", **write_kw)
+    raw = buf.getvalue()
+    pos = parse_parquet_meta(raw).chunks[0].first_page
+    pg = _parse_page_header(raw, pos)
+    while pg.ptype == 2:  # the dictionary page
+        pos = pg.body + pg.comp
+        pg = _parse_page_header(raw, pos)
+    return raw, pos, pg
+
+
+def _patched(raw: bytes, at: int, old: bytes, new: bytes) -> bytes:
+    assert raw[at : at + len(old)] == old and len(new) == len(old)
+    return raw[:at] + new + raw[at + len(old):]
+
+
+def test_flat_page_walk_refuses_corrupt_pages():
+    """The array page walk keeps every refusal: a dictionary index past
+    the dictionary, a truncated bit-packed run, an RLE run longer than
+    the page, a PLAIN payload shorter than its levels claim, and a v2
+    ``num_nulls`` that disagrees with the levels. Each patched file
+    reads as None and stops the scan with an error naming it; the
+    unpatched file reads in full."""
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        decode_batches,
+    )
+
+    def scan(raw):
+        return list(decode_batches("rawdict", pr._decode_raw_dict, False,
+                                   _one_file_batch("file:/d/part-0", raw)))
+
+    cases = []
+    # levels: one RLE run of 120 ones; indices at bit width 2: runs of
+    # 40 × 0, 1 and 2, the last one's value patched to 3
+    values = [5] * 40 + [9] * 40 + [11] * 40
+    raw, _, pg = _first_data_page(values)
+    cases.append(("index past the dictionary", values, raw,
+                  _patched(raw, pg.body + 7, bytes.fromhex("02500050015002"),
+                           bytes.fromhex("02500050015003"))))
+    # indices at bit width 1: one bit-packed run of 5 groups of 8,
+    # patched to claim 6
+    values = [5, 9] * 20
+    raw, _, pg = _first_data_page(values)
+    cases.append(("truncated bit-packed run", values, raw,
+                  _patched(raw, pg.body + 6, b"\x01\x0b", b"\x01\x0d")))
+    # levels: one RLE run of 40 ones, patched to a run of 63
+    values = list(range(40))
+    raw, _, pg = _first_data_page(values, use_dictionary=False)
+    cases.append(("RLE run longer than the page", values, raw,
+                  _patched(raw, pg.body + 4, b"\x50\x01", b"\x7e\x01")))
+    # levels: alternating 1/0, patched to all ones: 40 values claimed,
+    # 20 in the PLAIN payload
+    values = [1, None] * 20
+    raw, _, pg = _first_data_page(values, use_dictionary=False)
+    cases.append(("short PLAIN payload", values, raw,
+                  _patched(raw, pg.body + 5, b"\x55" * 5, b"\xff" * 5)))
+    # DataPageHeaderV2 num_values 40, num_nulls 20 → 21, num_rows 40
+    raw, pos, pg = _first_data_page(values, use_dictionary=False,
+                                    data_page_version="2.0")
+    at = raw.index(bytes.fromhex("155015281550"), pos, pg.body) + 3
+    cases.append(("v2 num_nulls against the levels", values, raw,
+                  _patched(raw, at, b"\x28", b"\x2a")))
+
+    for name, values, good, bad in cases:
+        present = [v for v in values if v is not None]
+        assert pr.read_parquet_column(good, "doc_id") == present, name
+        (frame,) = scan(good)
+        assert frame["doc_id"].tolist() == present, name
+        assert pr.read_parquet_column(bad, "doc_id") is None, name
+        with pytest.raises(UndecodableInputError, match=r"'rawdict'.*part-0"):
+            scan(bad)
+
+
+def test_timestamp_millis_past_int64_micros_is_refused():
+    """TIMESTAMP_MILLIS reads ×1000 into epoch micros: a value whose
+    micros leave int64 is refused, never wrapped, by the reader and by
+    the temporal key's scan; the largest values that fit read
+    exactly."""
+    import pyarrow as pa
+
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import (
+        UndecodableInputError,
+        decode_batches,
+    )
+
+    def table(ms):
+        return _parquet_bytes({
+            "l_orderkey": pa.array(range(len(ms)), pa.int64()),
+            "ship_ts": pa.array(ms, pa.timestamp("ms")),
+            "ship_date": pa.array([0] * len(ms), pa.date32()),
+        })
+
+    def scan(raw):
+        return list(decode_batches(
+            "rawtemporal", pr._decode_raw_temporal, False,
+            _one_file_batch("file:/d/part-0", raw),
+        ))
+
+    lim = (2**63 - 1) // 1000
+    good = table([lim, -lim, 7])
+    assert pr.read_parquet_timestamp_column(good, "ship_ts") == [
+        lim * 1000, -lim * 1000, 7000,
+    ]
+    (frame,) = scan(good)
+    assert frame["ship_ts"].astype("int64").tolist() == [
+        lim * 1000, -lim * 1000, 7000,
+    ]
+    for ms in (lim + 1, -lim - 1, 2**62):
+        bad = table([7, ms])
+        assert pr.read_parquet_timestamp_column(bad, "ship_ts") is None, ms
+        with pytest.raises(UndecodableInputError,
+                           match=r"'rawtemporal'.*part-0"):
+            scan(bad)
+
+
 def test_parquet_chunk_without_a_required_field_refuses_the_file():
     """A ColumnChunk whose metadata lacks a field parquet.thrift marks
     required refuses the whole file: one flipped field header (field 7
@@ -2198,7 +2329,7 @@ def test_parquet_gzip_page_refuses_a_cut_trailer():
     from dynamic_spark_spark.llmops.parquet_raw import _T_INT64, _page_values
 
     raw, pg, optional, values = _data_page()
-    assert _page_values(pg, raw, 2, _T_INT64, optional, None) == values
+    assert _page_values(pg, raw, 2, _T_INT64, optional, None).tolist() == values
     comp = pg.comp
     for cut in range(1, 9):
         pg.comp = comp - cut
@@ -2215,7 +2346,8 @@ def test_parquet_page_refuses_trailing_junk(compression):
 
     raw, pg, optional, values = _data_page(compression)
     codec = parse_parquet_meta(raw).chunks[0].codec
-    assert _page_values(pg, raw, codec, _T_INT64, optional, None) == values
+    assert _page_values(pg, raw, codec, _T_INT64, optional,
+                        None).tolist() == values
     end = pg.body + pg.comp
     for junk in (b"\x00", b"junk", bytes(9)):
         pg.comp = end - pg.body + len(junk)

@@ -671,3 +671,73 @@ def test_columnar_readers_parse_each_file_once(monkeypatch):
     })) == 1
     empty = orc({"doc_id": pa.array([], pa.int64())})
     assert parses(orc_raw._decode_orc_rowindex, empty, 0) == 1
+
+
+def test_flat_page_walk_builds_no_python_lists():
+    """The flat parquet page walk stays in numpy from page to frame: the
+    functions it runs through call no ``.tolist()`` and hold no
+    comprehension over values. ``_decode_raw_numeric`` may loop over
+    its five columns, nothing else."""
+    import ast
+    import pathlib
+
+    from dynamic_spark_spark.llmops import parquet_raw
+
+    walk = {"_rle_hybrid", "_plain_decode", "_decode_value_payload",
+            "_page_values", "_decode_chunk_values", "_read_general_inner",
+            "_decode_raw_numeric"}
+    comps = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+    found, bad = set(), []
+    tree = ast.parse(pathlib.Path(parquet_raw.__file__).read_text())
+    for top in tree.body:
+        if not isinstance(top, ast.FunctionDef) or top.name not in walk:
+            continue
+        found.add(top.name)
+        for node in ast.walk(top):
+            if (isinstance(node, ast.Attribute) and node.attr == "tolist"):
+                bad.append((top.name, "tolist", node.lineno))
+            elif isinstance(node, comps) and not all(
+                "_RAW_NUMERIC_COLUMNS" in ast.unparse(g.iter)
+                for g in node.generators
+            ):
+                bad.append((top.name, type(node).__name__, node.lineno))
+    assert found == walk, walk - found
+    assert bad == [], bad
+
+
+def test_raw_numeric_scan_yields_typed_columns():
+    """``decode_batches`` over ``_decode_raw_numeric`` yields the key's
+    Spark types as numpy columns (int64, int32, float64, float64, bool)
+    with no object column, from dictionary and PLAIN pages over several
+    row groups, and the values pyarrow reads."""
+    import io
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_spark_spark.llmops import parquet_raw as pr
+    from dynamic_spark_spark.llmops.fixtures import decode_batches
+
+    n = 5000
+    i = np.arange(n)
+    table = pa.table({
+        "l_orderkey": pa.array(i * 7919, pa.int64()),
+        "l_linenumber": pa.array(i % 7 + 1, pa.int32()),
+        "l_quantity": pa.array((i % 50 + 1).astype(float), pa.float64()),
+        "price_f32": pa.array(i / 7, pa.float32()),
+        "is_return": pa.array(i % 3 == 0, pa.bool_()),
+    })
+    buf = io.BytesIO()
+    pq.write_table(table, buf, row_group_size=1800, data_page_size=4096,
+                   dictionary_pagesize_limit=2048)
+    batch = iter([pd.DataFrame({"path": ["file:/d/part-0.parquet"],
+                                "content": [buf.getvalue()]})])
+    (frame,) = decode_batches("rawnum", pr._decode_raw_numeric, False, batch)
+    assert [str(d) for d in frame.dtypes] == [
+        "int64", "int32", "float64", "float64", "bool",
+    ]
+    want = table.to_pandas()
+    want["price_f32"] = want["price_f32"].astype("float64")
+    pd.testing.assert_frame_equal(frame, want)

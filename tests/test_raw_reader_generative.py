@@ -1415,3 +1415,120 @@ def test_record_assembly_conversions_and_compat_rules(spark, sf_dir):
     child = _Tree("e", 1, 1, 2, 0, 0, None, 0, "x.e")
     bad.children = [child]
     assert _record_steps([bad, child]) is None
+
+
+#: column → (arrow type, numpy dtype of the flat page walk's array)
+_WALK_TYPES = {
+    "b": (pa.bool_(), "bool"),
+    "i32": (pa.int32(), "int32"),
+    "i64": (pa.int64(), "int64"),
+    "f32": (pa.float32(), "float32"),
+    "f64": (pa.float64(), "float64"),
+    "ts96": (pa.timestamp("us"), "int64"),
+}
+
+
+def _walk_table(n: int, nulls: str):
+    """One column per physical type, with no, some or only null rows;
+    a value set small enough that dictionary pages stay dictionary."""
+    import numpy as np
+
+    rng = np.random.default_rng(n)
+    i = rng.integers(-500, 500, n)
+    valid = {"none": np.ones(n, bool), "all": np.zeros(n, bool),
+             "mixed": rng.random(n) < 0.6}[nulls]
+    cols = {
+        "b": i % 3 == 0, "i32": i.astype(np.int32), "i64": i * 2**40,
+        "f32": (i / 8).astype(np.float32), "f64": i / 3,
+        # after the epoch: pyarrow writes an earlier INT96 instant with
+        # negative nanos-of-day, a cell the reader refuses
+        "ts96": np.abs(i) * 86_400_000_123,
+    }
+    return pa.table({
+        c: pa.array(cols[c], _WALK_TYPES[c][0], mask=~valid) for c in cols
+    })
+
+
+def _assert_walk_matches_pyarrow(raw: bytes, columns) -> None:
+    """``_read_general_inner``'s array for each column has the walk's
+    dtype and exactly pyarrow's non-null values."""
+    import numpy as np
+
+    from dynamic_spark_spark.llmops.parquet_footer import parse_parquet_meta
+    from dynamic_spark_spark.llmops.parquet_raw import _read_general_inner
+
+    meta = parse_parquet_meta(raw)
+    table = pq.read_table(io.BytesIO(raw), coerce_int96_timestamp_unit="us")
+    for c in columns:
+        got = _read_general_inner(raw, meta, c, True)
+        want = table.column(c).drop_null()
+        if pa.types.is_timestamp(want.type):
+            want = want.cast(pa.int64())
+        assert got is not None, c
+        assert got.dtype == np.dtype(_WALK_TYPES[c][1]), (c, got.dtype)
+        np.testing.assert_array_equal(got, want.to_numpy(), err_msg=c)
+
+
+def test_flat_page_walk_matches_pyarrow_arrays():
+    """The flat page walk against pyarrow, array for array: every
+    numeric physical type (INT96 written as Spark's legacy timestamps)
+    × dictionary on/off × v1/v2 pages × four codecs × no, mixed and
+    only nulls, over several pages and row groups per column."""
+    for nulls in ("none", "mixed", "all"):
+        table = _walk_table(3000, nulls)
+        for use_dict in (True, False):
+            for version in ("1.0", "2.0"):
+                for comp in ("none", "snappy", "gzip", "zstd"):
+                    buf = io.BytesIO()
+                    pq.write_table(
+                        table, buf, use_dictionary=use_dict,
+                        data_page_version=version, compression=comp,
+                        data_page_size=2048, row_group_size=1100,
+                        use_deprecated_int96_timestamps=True,
+                    )
+                    raw = buf.getvalue()
+                    meta = pq.read_metadata(io.BytesIO(raw))
+                    assert meta.num_row_groups == 3
+                    assert meta.schema.column(5).physical_type == "INT96"
+                    _assert_walk_matches_pyarrow(raw, _WALK_TYPES)
+
+
+def test_flat_page_walk_spark_plain_fallback(spark):
+    """parquet-mr's mid-chunk PLAIN fallback on a Spark-written file: a
+    column whose values turn high-cardinality outgrows the dictionary
+    page, so one chunk holds dictionary-coded pages and then PLAIN
+    pages; the walk's arrays still equal pyarrow's, for every numeric
+    type Spark writes, with INT96 timestamps and nulls."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from tests.conftest import dss_mkdtemp
+
+    i = F.col("id")
+    df = spark.range(6000).select(
+        F.when(i % 7 == 0, None).otherwise(i % 2 == 0).alias("b"),
+        (i % 500).cast("int").alias("i32"),
+        # 50 values, then new ones past the 4 KiB dictionary page
+        F.when(i % 11 == 0, None).when(i < 3000, i % 50)
+        .otherwise(i * 2**33).alias("i64"),
+        (i / 4).cast("float").alias("f32"),
+        (i / 3).alias("f64"),
+        F.timestamp_micros(i * 3_600_000_017).alias("ts96"),
+    )
+    out = dss_mkdtemp("dss_walk_")
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        df.coalesce(1).write.mode("overwrite").option(
+            "parquet.dictionary.page.size", "4096"
+        ).option("parquet.page.size", "8192").parquet(out)
+    finally:
+        spark.conf.set(conf, prev)
+    (path,) = glob.glob(out + "/*.parquet")
+    raw = open(path, "rb").read()
+    meta = pq.read_metadata(io.BytesIO(raw))
+    encodings = set(meta.row_group(0).column(2).encodings)
+    assert {"PLAIN", "PLAIN_DICTIONARY"} <= encodings, encodings
+    _assert_walk_matches_pyarrow(raw, _WALK_TYPES)

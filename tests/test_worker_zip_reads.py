@@ -117,3 +117,58 @@ def test_warm_worker_task_rereads_no_zip():
     (pid1, _), (pid2, reads) = got["first"], got["second"]
     assert pid1 == pid2, "the second job ran in a new Python worker"
     assert reads == 0
+
+
+_CLOSURE_PROBE = """
+import json
+
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+
+from dynamic_spark_spark.session import get_spark
+
+
+def probe(x: pd.Series) -> pd.Series:
+    import gc, importlib, os, zipimport
+
+    real = zipimport._read_directory
+    read = []
+
+    def counted(archive):
+        read.append(archive)
+        return real(archive)
+
+    zipimport._read_directory = counted
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    got = [os.getpid(), len(read), gc.get_freeze_count()]
+    return pd.Series([json.dumps(got)] * len(x))
+
+
+spark = get_spark("zip-probe", cpus=1)
+df = spark.range(1).select(pandas_udf(probe, "string")("id"))
+first, second = (json.loads(df.collect()[0][0]) for _ in range(2))
+print(json.dumps({"first": first, "second": second}))
+spark.stop()
+"""
+
+
+def test_closure_udf_worker_rereads_no_zip():
+    """Two jobs of a pandas UDF pickled by value, which imports nothing
+    of the package, on a ``local[1]`` session: its worker forks from the
+    package's daemon (``spark.python.daemon.module``), so the reused
+    worker re-reads no zip directory in the second job, and the modules
+    the daemon imported sit in the collector's frozen generation."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _CLOSURE_PROBE], capture_output=True,
+        text=True, timeout=300, cwd=ROOT, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    (pid1, _, _), (pid2, reads, frozen) = got["first"], got["second"]
+    assert pid1 == pid2, "the second job ran in a new Python worker"
+    assert reads == 0
+    assert frozen > 10_000
